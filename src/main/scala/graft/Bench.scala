@@ -1,5 +1,7 @@
 package graft
 
+import scala.util.control.NonFatal
+
 import org.apache.spark.sql.SparkSession
 
 /** Benchmark main (driver contract): runs the headline queries on
@@ -272,11 +274,14 @@ object Bench {
     * (BASELINE.md "Calibration", round-17 row). */
   val IoProbeFrozenSec = 0.21
 
-  /** One I/O probe measurement: best-of-2 of the fixed write + scan. */
-  def calibrateIo(spark: SparkSession, cpus: Int): Double = {
+  /** One I/O probe measurement: best-of-2 of the fixed write + scan,
+    * None when the probe fails (the bench reports `io_load_factor: null`
+    * and goes on). The probe dir sits under the per-process scratch root
+    * and is deleted whether or not the probe succeeds. */
+  def calibrateIo(spark: SparkSession, cpus: Int): Option[Double] = {
     import org.apache.spark.sql.functions.expr
     val dir = s"${graft.core.Fs.scratchRoot}/bench_io_probe"
-    val reps = (1 to 2).map { _ =>
+    try Some((1 to 2).map { _ =>
       val t0 = System.nanoTime()
       spark.range(0L, IoProbeRows, 1L, cpus)
         .select(expr("id"), expr("xxhash64(id)").as("h"))
@@ -284,9 +289,15 @@ object Bench {
       spark.read.parquet(dir).agg(expr("bit_xor(h)"))
         .write.format("noop").mode("overwrite").save()
       (System.nanoTime() - t0) / 1e9
-    }
-    graft.core.Fs.deleteTree(dir)
-    reps.min
+    }.min)
+    catch { case NonFatal(e) =>
+      System.err.println(s"[bench] I/O probe failed: $e")
+      None
+    } finally
+      try graft.core.Fs.deleteTree(dir)
+      catch { case NonFatal(e) =>
+        System.err.println(s"[bench] I/O probe dir $dir not deleted: $e")
+      }
   }
 
   /** One probe measurement: best-of-3 of the fixed work, on the same
@@ -463,8 +474,13 @@ object Bench {
     val suspectSegments = segments.indices
       .filter(i => probeSuspect(i) || probeSuspect(i + 1))
     val loadFactor = probes.sum / probes.length / CalibrationFrozenSec
-    val ioLoadFactor = ioProbes.sum / ioProbes.length / IoProbeFrozenSec
     def r3(v: Double) = math.rint(v * 1000) / 1000
+    // null when any I/O probe failed: a mean over the survivors would
+    // hide the segments the failure left unbracketed
+    val ioLoadFactor =
+      if (ioProbes.forall(_.isDefined))
+        r3(ioProbes.flatten.sum / ioProbes.length / IoProbeFrozenSec).toString
+      else "null"
 
     val qjson = results.map(c => "\"" + c.name + "\":" + c.sec)
       .mkString("{", ",", "}")
@@ -492,9 +508,9 @@ object Bench {
       s""""segment_factors":${segFactors.map(r3).mkString("[", ",", "]")},""" +
       s""""probe_retries":${probeRetries.mkString("[", ",", "]")},""" +
       s""""suspect_segments":${suspectSegments.mkString("[", ",", "]")},""" +
-      s""""io_probe_sec":${ioProbes.map(r3).mkString("[", ",", "]")},""" +
+      s""""io_probe_sec":${ioProbes.map(_.fold("null")(r3(_).toString)).mkString("[", ",", "]")},""" +
       s""""io_frozen_sec":$IoProbeFrozenSec,""" +
-      s""""io_load_factor":${r3(ioLoadFactor)}}"""
+      s""""io_load_factor":$ioLoadFactor}"""
     val full = s"""{"metric":"total","value":$total,"unit":"sec",""" +
       s""""queries":$qjson,"queries_normalized":$njson,""" +
       s""""reruns":$rerunJson,"task_metrics":$tmJson,""" +
@@ -521,7 +537,7 @@ object Bench {
     val calibSlim =
       s"""{"frozen_sec":$CalibrationFrozenSec,""" +
       s""""load_factor":${r3(loadFactor)},""" +
-      s""""io_load_factor":${r3(ioLoadFactor)},""" +
+      s""""io_load_factor":$ioLoadFactor,""" +
       s""""probe_retries":${probeRetries.mkString("[", ",", "]")},""" +
       s""""suspect_segments":${suspectSegments.mkString("[", ",", "]")}}"""
     println(s"""{"metric":"total","value":$total,"unit":"sec",""" +

@@ -26,6 +26,13 @@ final case class RunContext(task: Task, pipeline: Pipeline, config: Config) {
   * paths are canonicalized by [[SidecarFs.canon]] — address one tree in
   * ONE spelling per session (`/x` vs `file:/x` are distinct keys, like
   * two symlinked spellings before).
+  *
+  * Under a task dir, the child `data` is reserved for the task's field
+  * store ([[Task.dataPath]]) and discovery never walks it: a `task.yml`
+  * below it is not a task, and a scan costs O(tasks), not O(stored
+  * fields × versions × input ids). A child task named `data` is not
+  * supported (it would share its dir with the parent's field store,
+  * which the parent's `reset()` deletes).
   */
 final class Batch(val spark: SparkSession) {
 
@@ -56,9 +63,9 @@ final class Batch(val spark: SparkSession) {
     * (repype/batch.py:214-221). Discovered paths are re-spelled as
     * children of the CALLER's root (listStatus qualifies them), so task
     * keys match what `task(path)` lookups construct. */
-  def load(root: HPath): Unit = {
+  def load(root: HPath): Unit = SidecarFs.withConf {
     val croot = SidecarFs.canon(root)
-    SidecarFs.findFilesNamed(croot.toString, "task.yml")
+    SidecarFs.findFilesNamed(croot.toString, "task.yml", Task.DataDir)
       .foreach(p => task(SidecarFs.rebase(croot, p.getParent)))
   }
 
@@ -73,7 +80,8 @@ final class Batch(val spark: SparkSession) {
       }
 
   /** Only the contexts whose task is pending (repype/batch.py:231-235). */
-  def pendingContexts: List[RunContext] = contexts.filter(_.pending.nonEmpty)
+  def pendingContexts: List[RunContext] =
+    SidecarFs.withConf(contexts.filter(_.pending.nonEmpty))
 
   /** Run contexts sequentially; abort on first failure
     * (repype/batch.py:249-307). Returns true iff all tasks succeeded. */

@@ -27,18 +27,40 @@ import org.apache.hadoop.fs.{FileContext, FileSystem, Options, Path}
   *
   * These are METADATA operations — a handful of round-trips per
   * append/compaction cycle, never per row — so per-call FileSystem
-  * resolution (cached by scheme+authority inside Hadoop) is fine.
+  * resolution (cached by scheme+authority inside Hadoop) is fine. The
+  * conf copy each call makes is not free; a caller making many calls in
+  * a row (the task-tree scan) shares one through [[withConf]].
   */
 object SidecarFs {
 
   /** The session's Hadoop conf when a session is up (the normal case —
     * every lifecycle entry point takes or derives a SparkSession), else
-    * a default conf (unit tests of pure path logic). */
+    * a default conf (unit tests of pure path logic). Inside [[withConf]]
+    * it is the conf that scope built; outside, a fresh one per call. */
   def hadoopConf: Configuration =
+    Option(scopedConf.get).getOrElse(sessionConf)
+
+  private def sessionConf: Configuration =
     org.apache.spark.sql.SparkSession.getActiveSession
       .orElse(org.apache.spark.sql.SparkSession.getDefaultSession)
       .map(_.sessionState.newHadoopConf())
       .getOrElse(new Configuration())
+
+  private val scopedConf = new ThreadLocal[Configuration]
+
+  /** Run `body` with ONE Hadoop conf shared by every sidecar call it
+    * makes on this thread. Building the conf copies the whole session
+    * conf, and a task-tree scan makes a few such calls per task, so
+    * `Batch.load` / `Batch.pendingContexts` build it once per call. The
+    * conf lives only as long as `body` and is never reused by a later
+    * scope, so a session conf change between two calls still takes
+    * effect. A nested scope uses the outer one's conf. */
+  def withConf[A](body: => A): A =
+    if (scopedConf.get != null) body
+    else {
+      scopedConf.set(sessionConf)
+      try body finally scopedConf.remove()
+    }
 
   /** The path's filesystem with client-side checksumming unwrapped:
     * LocalFileSystem maintains a `.crc` sibling per file, which litters
@@ -127,19 +149,24 @@ object SidecarFs {
   }
 
   /** Every file named `name` under `root`, recursively, path-sorted —
-    * the task-tree discovery walk. Task trees are small by construction
-    * (human-curated directories), so a driver-side recursive listing is
-    * the right shape; this is never a data-directory scan. */
-  def findFilesNamed(root: String, name: String): Seq[Path] = {
+    * the task-tree discovery walk. A directory that holds `name` is a
+    * task dir, and its child `reserved` (the task's field store,
+    * `Task.dataPath`) is never walked: under a task dir, that name
+    * belongs to the store, so the walk lists directories the user made,
+    * never the store's field / version / input-id tree. One listing per
+    * directory; a child that vanishes between its parent's listing and
+    * its own counts as empty. */
+  def findFilesNamed(root: String, name: String, reserved: String): Seq[Path] = {
     val r = new Path(root)
     val fs = fsOf(r)
-    def walk(d: Path): Seq[Path] =
-      if (!fs.exists(d)) Seq.empty
-      else fs.listStatus(d).toSeq.flatMap { st =>
-        if (st.isDirectory) walk(st.getPath)
-        else if (st.getPath.getName == name) Seq(st.getPath)
-        else Seq.empty
-      }
+    def walk(d: Path): Seq[Path] = {
+      val (dirs, files) =
+        try fs.listStatus(d).toSeq.partition(_.isDirectory)
+        catch { case _: java.io.FileNotFoundException => (Nil, Nil) }
+      val found = files.map(_.getPath).filter(_.getName == name)
+      val sub = if (found.isEmpty) dirs else dirs.filterNot(_.getPath.getName == reserved)
+      found ++ sub.flatMap(st => walk(st.getPath))
+    }
     walk(r).sortBy(_.toString)
   }
 

@@ -58,7 +58,7 @@ final class Task(
   }
 
   // -- artifact paths (repype/task.py:217-262) -----------------------------
-  def dataPath: HPath = new HPath(path, "data")
+  def dataPath: HPath = new HPath(path, Task.DataDir)
   def digestTaskFilepath: HPath = new HPath(path, ".task.json")
   def digestShaFilepath: HPath = new HPath(path, ".sha.json")
   def timesFilepath: HPath = new HPath(path, "times.csv")
@@ -402,6 +402,12 @@ final class Task(
   }
 
   override def toString: String = s"""<Task "$path">"""
+}
+
+object Task {
+  /** Name of a task dir's field-store child ([[Task.dataPath]]), which
+    * task discovery never walks (see [[Batch]]). */
+  val DataDir = "data"
 }
 
 /** Registry of stage factories — the offline replacement for the

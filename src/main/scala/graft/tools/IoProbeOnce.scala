@@ -16,7 +16,8 @@ object IoProbeOnce {
       .config("spark.sql.session.timeZone", "UTC")
       .config("spark.ui.enabled", "false").getOrCreate()
     spark.sparkContext.setLogLevel("ERROR")
-    val vals = (1 to reps).map(_ => graft.Bench.calibrateIo(spark, cpus.toInt))
+    val vals = (1 to reps).flatMap(_ => graft.Bench.calibrateIo(spark, cpus.toInt))
+    require(vals.nonEmpty, "every I/O probe failed")
     println(f"IOPROBE cpus=$cpus reps=${vals.map(v => f"$v%.3f").mkString(",")} min=${vals.min}%.3f")
     spark.stop()
   }

@@ -35,4 +35,15 @@ class BenchSpec extends AnyFunSuite {
     // a query with no freeze cannot trigger (nothing to compare to)
     assert(!Bench.cellNeedsRerun("no_such_query", 100.0))
   }
+
+  test("the I/O probe leaves no probe dir behind and reports a failed " +
+      "probe as None instead of throwing") {
+    val spark = SparkSpec.spark
+    val dir = java.nio.file.Paths.get(graft.core.Fs.scratchRoot, "bench_io_probe")
+    assert(Bench.calibrateIo(spark, 2).exists(_ > 0))
+    assert(!java.nio.file.Files.exists(dir))
+    // zero slices: spark.range rejects the probe's plan
+    assert(Bench.calibrateIo(spark, 0).isEmpty)
+    assert(!java.nio.file.Files.exists(dir))
+  }
 }

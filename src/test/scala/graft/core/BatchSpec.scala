@@ -5,6 +5,28 @@ import java.nio.file.Files
 import graft.SparkSpec
 import graft.operators.DefaultStages
 
+/** `file:` under its own scheme, counting `listStatus` calls: pins how
+  * many listings task discovery makes (registered like
+  * [[graft.llm.MockSchemeFs]]). */
+class ListCountingFs extends org.apache.hadoop.fs.RawLocalFileSystem {
+  override def getUri: java.net.URI = java.net.URI.create("listcountfs:///")
+  override def listStatus(f: org.apache.hadoop.fs.Path): Array[org.apache.hadoop.fs.FileStatus] = {
+    ListCountingFs.lists.incrementAndGet()
+    super.listStatus(f)
+  }
+}
+
+object ListCountingFs {
+  val lists = new java.util.concurrent.atomic.AtomicInteger
+}
+
+/** `file:` under a scheme that only one spec registers, and only through
+  * the session conf — so no Hadoop FileSystem cache entry can stand in
+  * for a conf that missed the registration. */
+class SessionConfFs extends org.apache.hadoop.fs.RawLocalFileSystem {
+  override def getUri: java.net.URI = java.net.URI.create("sessionconffs:///")
+}
+
 /** Mirrors tests/test_batch.py: discovery, parent linking, contexts,
   * pending transitions, run + abort-on-failure, status events. */
 class BatchSpec extends SparkSpec {
@@ -15,7 +37,7 @@ class BatchSpec extends SparkSpec {
     Files.writeString(dir.resolve("task.yml"), yaml)
   }
 
-  private def miniSpec(where: String) =
+  private def miniSpec(where: String, inputIds: Seq[Int] = Seq(1)) =
     s"""runnable: true
        |pipeline: [scan-region, count-region]
        |config:
@@ -23,7 +45,7 @@ class BatchSpec extends SparkSpec {
        |    path: $sfDir
        |  count-region:
        |    sql: "SELECT count(*) AS n FROM region WHERE $where"
-       |input_ids: [1]
+       |input_ids: [${inputIds.mkString(", ")}]
        |""".stripMargin
 
   private def register(): Unit = {
@@ -46,6 +68,75 @@ class BatchSpec extends SparkSpec {
       == batch.task(root.resolve("a")))
     // contexts: only runnable tasks (a and its child b inherit runnable)
     assert(batch.contexts.map(_.task.path.getName).toSet == Set("a", "b"))
+  }
+
+  test("discovery walks the task tree, never a task's data/ field store") {
+    val root = tempDir("discover")
+    writeSpec(root.resolve("group/t"), "runnable: false\n")
+    // task-like names next to a plain file named like the store manifest
+    writeSpec(root.resolve("group/t/exp_v2"), "config: {}\n")
+    Files.writeString(root.resolve("group/t/current"), "{}")
+    // under a task dir, data/ is the field store: never a task
+    writeSpec(root.resolve("group/t/data"), "config: {}\n")
+    writeSpec(root.resolve("group/t/data/x"), "config: {}\n")
+    // a data/ dir that is not under a task dir is walked as usual
+    writeSpec(root.resolve("data/u"), "runnable: false\n")
+    val batch = new Batch(spark)
+    batch.load(root)
+    assert(batch.tasks.keySet.map(p => root.relativize(
+      java.nio.file.Paths.get(p.toString)).toString)
+      == Set("group/t", "group/t/exp_v2", "data/u"))
+  }
+
+  test("a scan's listings do not grow with input ids or stored versions") {
+    register()
+    val hc = spark.sparkContext.hadoopConfiguration
+    hc.set("fs.listcountfs.impl", classOf[ListCountingFs].getName)
+    try {
+      /** Listings of a `load` of a stored root → child tree, after
+        * `cycles` config edits each followed by a run of both tasks. */
+      def listings(inputIds: Seq[Int], cycles: Int): Int = {
+        val dir = tempDir("listings")
+        val root = "listcountfs://" + dir
+        writeSpec(dir.resolve("t/c"), "config: {}\n")
+        for (i <- 1 to cycles) {
+          writeSpec(dir.resolve("t"), miniSpec(s"r_regionkey >= $i", inputIds))
+          val b = new Batch(spark)
+          b.load(root)
+          assert(b.pendingContexts.size == 2)
+          assert(b.run())
+        }
+        ListCountingFs.lists.set(0)
+        val b = new Batch(spark)
+        b.load(root)
+        val n = ListCountingFs.lists.get
+        assert(b.tasks.size == 2 && b.pendingContexts.isEmpty)
+        n
+      }
+      // one listing per directory: the root, t and t/c
+      assert(listings(Seq(1, 2), 1) == 3)
+      assert(listings(1 to 8, 1) == 3)
+      assert(listings(Seq(1, 2), 3) == 3)
+    } finally hc.unset("fs.listcountfs.impl")
+  }
+
+  test("load and pendingContexts see a session conf set between two calls") {
+    register()
+    val local = tempDir("conf-file")
+    writeSpec(local.resolve("t"), miniSpec("true"))
+    val first = new Batch(spark)
+    first.load("file:" + local)
+    assert(first.pendingContexts.size == 1)
+    val dir = tempDir("conf-scheme")
+    writeSpec(dir.resolve("t"), miniSpec("true"))
+    writeSpec(dir.resolve("t/c"), "config: {}\n")
+    // set through the session conf only, after the first load
+    withSQLConf("fs.sessionconffs.impl" -> classOf[SessionConfFs].getName) {
+      val second = new Batch(spark)
+      second.load("sessionconffs://" + dir)
+      assert(second.tasks.size == 2)
+      assert(second.pendingContexts.map(_.pending) == List("incomplete", "incomplete"))
+    }
   }
 
   test("run executes pending tasks, transitions to not-pending") {
