@@ -2,8 +2,6 @@ package graft
 
 import org.apache.hadoop.fs.{Path => HPath}
 
-import org.apache.spark.sql.SparkSession
-
 import graft.core.{Batch, SidecarFs, Status, StatusTailer}
 import graft.operators.DefaultStages
 
@@ -17,6 +15,21 @@ import graft.operators.DefaultStages
   * live (progress bars and stage lines included), not post-hoc.
   */
 object GraftCli {
+
+  /** Run `targets`, streaming status events through `<root>/status.jsonl`
+    * to stdout live as they happen (shared with the TUI). */
+  def runLive(batch: Batch, root: HPath, targets: List[graft.core.RunContext],
+              showIntermediate: Boolean = true): Boolean = {
+    val statusPath = new HPath(root, "status.jsonl")
+    val status = Status.create(statusPath)
+    val tailer = new StatusTailer(statusPath,
+      s => { System.out.print(s); System.out.flush() },
+      showIntermediate = showIntermediate)
+    tailer.start()
+    try batch.run(Some(targets), Some(status))
+    finally { tailer.stop(); status.close() }
+  }
+
   def main(args: Array[String]): Unit = {
     var path: Option[String] = None
     var run = false
@@ -41,15 +54,7 @@ object GraftCli {
       "usage: GraftCli <root> [--run|--reset] [--yes] [--task <path>]... [--task-dir <dir>]...")
     require(!(run && reset), "--run and --reset are mutually exclusive")
 
-    val spark = SparkSession.builder()
-      .master(sys.env.getOrElse("SPARK_GRAFT_MASTER", "local[32]"))
-      .appName("graft")
-      .config("spark.sql.shuffle.partitions",
-        sys.env.getOrElse("SPARK_GRAFT_CPUS", "32"))
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = SparkEntry.session("graft")
     DefaultStages.registerAll()
 
     // the root may be scheme-qualified (file:/…, hdfs://…, s3a://…) —
@@ -95,19 +100,11 @@ object GraftCli {
       println(s"DRY RUN — ${selected.size} pending task(s):")
       selected.foreach(c => println(s"  ${c.task.path} (${c.pending})"))
     } else {
-      val statusPath = new HPath(root, "status.jsonl")
-      val status = Status.create(statusPath)
       // GRAFT_CLI_INTERMEDIATE=0 mutes in-flight \r lines (the reference's
       // REPYPE_CLI_INTERMEDIATE, repype/cli.py:113-116) — for dumb
       // terminals and log capture
-      val tailer = new StatusTailer(statusPath,
-        s => { System.out.print(s); System.out.flush() },
-        showIntermediate =
-          sys.env.getOrElse("GRAFT_CLI_INTERMEDIATE", "1") != "0")
-      tailer.start()
-      val ok =
-        try batch.run(Some(selected), Some(status))
-        finally { tailer.stop(); status.close() }
+      val ok = runLive(batch, root, selected,
+        showIntermediate = sys.env.getOrElse("GRAFT_CLI_INTERMEDIATE", "1") != "0")
       if (!ok) { spark.stop(); sys.exit(1) }
     }
     spark.stop()

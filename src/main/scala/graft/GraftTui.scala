@@ -2,9 +2,7 @@ package graft
 
 import org.apache.hadoop.fs.{Path => HPath}
 
-import org.apache.spark.sql.SparkSession
-
-import graft.core.{Batch, SidecarFs, Status, StatusTailer}
+import graft.core.{Batch, SidecarFs}
 import graft.operators.DefaultStages
 import graft.tui.TuiModel
 
@@ -65,19 +63,12 @@ object GraftTui {
     require(args.nonEmpty, "usage: GraftTui <task-tree-root>")
     val root = SidecarFs.canon(args(0))
 
-    val spark = SparkSession.builder()
-      .master(sys.env.getOrElse("SPARK_GRAFT_MASTER", "local[32]"))
-      .appName("graft-tui")
-      .config("spark.sql.shuffle.partitions",
-        sys.env.getOrElse("SPARK_GRAFT_CPUS", "32"))
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
+    val spark = SparkEntry.session("graft-tui")
+    // log lines on the terminal would corrupt the full-screen UI
     spark.sparkContext.setLogLevel("ERROR")
     DefaultStages.registerAll()
 
-    var batch = new Batch(spark)
-    batch.load(root)
+    var batch: Batch = null
     var queued = Set.empty[HPath]
     var cursor = 0
     var message = ""
@@ -87,6 +78,7 @@ object GraftTui {
       batch.load(root)
       queued = queued.filter(p => batch.tasks.contains(p))
     }
+    reload()
 
     def rows = TuiModel.rows(batch, root, queued)
 
@@ -127,14 +119,7 @@ object GraftTui {
             if (targets.isEmpty) message = "nothing pending to run"
             else {
               val ok = suspended {
-                val statusPath = new HPath(root, "status.jsonl")
-                val status = Status.create(statusPath)
-                val tailer = new StatusTailer(statusPath,
-                  s => { print(s); Console.flush() })
-                tailer.start()
-                val r =
-                  try batch.run(Some(targets), Some(status))
-                  finally { tailer.stop(); status.close() }
+                val r = GraftCli.runLive(batch, root, targets)
                 println(s"\n${if (r) "Done" else "FAILED"} — press Enter")
                 scala.io.StdIn.readLine()
                 r

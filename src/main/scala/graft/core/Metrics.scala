@@ -15,47 +15,23 @@ import scala.collection.concurrent.TrieMap
   */
 object Metrics {
 
-  // JSON string escape (same contract as Verify's): backslash, quote, and
-  // ALL control chars — an input id or field name with a quote in it must
-  // not produce malformed metrics.json
-  private def jsonString(s: String): String = "\"" + s.flatMap {
-    case '"'  => "\\\""
-    case '\\' => "\\\\"
-    case '\n' => "\\n"
-    case '\r' => "\\r"
-    case '\t' => "\\t"
-    case c if c < ' ' => f"\\u${c.toInt}%04x"
-    case c => c.toString
-  } + "\""
-
   final case class Totals(
       var jobs: Long = 0, var tasks: Long = 0,
       var inputRecords: Long = 0, var inputBytes: Long = 0,
       var shuffleReadBytes: Long = 0, var shuffleWriteBytes: Long = 0,
       var spillBytes: Long = 0, var cpuTimeNs: Long = 0) {
-    /** Field name → pre-rendered JSON value, the single source the JSON
-      * serialization builds from (no string surgery downstream). */
-    def fields: Seq[(String, String)] = Seq(
-      "jobs" -> jobs.toString, "tasks" -> tasks.toString,
-      "input_records" -> inputRecords.toString,
-      "input_bytes" -> inputBytes.toString,
-      "shuffle_read_bytes" -> shuffleReadBytes.toString,
-      "shuffle_write_bytes" -> shuffleWriteBytes.toString,
-      "spill_bytes" -> spillBytes.toString,
-      "cpu_time_ns" -> cpuTimeNs.toString)
-    def json: String = jsonObject(fields)
+    /** metrics.json field name → value. */
+    def toMap: Map[String, Long] = Map(
+      "jobs" -> jobs, "tasks" -> tasks,
+      "input_records" -> inputRecords, "input_bytes" -> inputBytes,
+      "shuffle_read_bytes" -> shuffleReadBytes,
+      "shuffle_write_bytes" -> shuffleWriteBytes,
+      "spill_bytes" -> spillBytes, "cpu_time_ns" -> cpuTimeNs)
   }
-
-  /** One JSON object from (name, rendered-value) pairs — the only place
-    * object syntax is assembled. */
-  private def jsonObject(fields: Seq[(String, String)]): String =
-    fields.map { case (k, v) => s"${jsonString(k)}: $v" }
-      .mkString("{", ", ", "}")
 
   /** Scheduler listener aggregating task metrics per job-group id. */
   final class GroupListener extends SparkListener {
     private val byGroup = TrieMap.empty[String, Totals]
-    private val jobToGroup = TrieMap.empty[Int, String]
     private val stageToGroup = TrieMap.empty[Int, String]
 
     override def onJobStart(jobStart: SparkListenerJobStart): Unit = {
@@ -63,7 +39,6 @@ object Metrics {
         .flatMap(p => Option(p.getProperty("spark.jobGroup.id")))
         .getOrElse("")
       if (group.nonEmpty) {
-        jobToGroup(jobStart.jobId) = group
         jobStart.stageIds.foreach(sid => stageToGroup(sid) = group)
         byGroup.getOrElseUpdate(group, Totals()).jobs += 1
       }
@@ -146,7 +121,7 @@ object Metrics {
   private val activeCaptures = new java.util.concurrent.atomic.AtomicInteger(0)
 
   /** Run `body` with a listener attached; afterwards write the job
-    * group's totals to `out` (pretty-small JSON), including any per-stage
+    * group's totals to `out` (canonical JSON), including any per-stage
     * observed row counts registered during the run. The listener bus is
     * asynchronous — wait for it to drain before reading. */
   def capture[T](spark: SparkSession, group: String, out: HPath)(body: => T): T = {
@@ -166,12 +141,10 @@ object Metrics {
       val rows = StageRows.drain(group,
         includeUngrouped = activeCaptures.get == 1)
       activeCaptures.decrementAndGet()
-      val rowsField =
-        if (rows.isEmpty) Seq.empty
-        else Seq("rows_out" -> jsonObject(
-          rows.toSeq.sorted.map { case (k, v) => (k, v.toString) }))
+      val rowsField: Map[String, Any] =
+        if (rows.isEmpty) Map.empty else Map("rows_out" -> rows)
       SidecarFs.writeStringAtomic(out.toString,
-        jsonObject(listener.totals(group).fields ++ rowsField) + "\n")
+        Json.canonical(listener.totals(group).toMap ++ rowsField) + "\n")
     }
   }
 }

@@ -632,7 +632,7 @@ object SourceQueries {
     // Arrow IPC files (Feather v2) — the zero-copy columnar interchange
     // at every dataloader/featurestore boundary, via Arrow CORE (ships
     // with Spark; pyarrow reads/writes the same bytes, validated both
-    // directions — tools/ArrowProbe). Write the embeddings table
+    // directions — ArrowIoSpec). Write the embeddings table
     // widened to the FULL supported type surface (long/int/double/bool/
     // string-with-nulls/binary/list<float>) as 4 IPC files
     // (partition-local batch writes, attempt-suffixed rename), read

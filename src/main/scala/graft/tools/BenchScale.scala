@@ -1,6 +1,6 @@
 package graft.tools
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
 /** Full-table scale synthesizer for the headline bench (BASELINE.md's
@@ -28,14 +28,7 @@ object BenchScale {
     val factor = if (args.length > 2) args(2).toInt else 10
     require(factor >= 1 && factor <= 25,
       s"factor must be in [1, 25] (Caesar period), got $factor")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = graft.SparkEntry.session("graft-benchscale")
 
     val fs = new java.io.File(out)
     if (new java.io.File(fs, s"_DONE_benchscale_v1_x$factor").exists()) {

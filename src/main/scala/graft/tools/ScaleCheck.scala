@@ -215,14 +215,7 @@ object ScaleCheck {
     val factors =
       if (args.length > 3) args(3).split(",").toSeq.map(_.toInt)
       else Seq(1, 3, 10)
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = graft.SparkEntry.session("graft-scalecheck")
     val listener = new ShuffleListener
     spark.sparkContext.addSparkListener(listener)
     // per-invocation id stride for q_ingest_loop_pq (see its comment)

@@ -10,6 +10,18 @@ class SparkEntrySpec extends AnyFunSuite {
     assert(SparkEntry.oracleSql.keySet.subsetOf(SparkEntry.queries.keySet))
   }
 
+  test("session master: SPARK_GRAFT_MASTER, then spark-submit's " +
+      "spark.master, then local[SPARK_GRAFT_CPUS]") {
+    assert(SparkEntry.master(Map.empty, Map.empty) === "local[32]")
+    assert(SparkEntry.master(Map("SPARK_GRAFT_CPUS" -> "8"), Map.empty)
+      === "local[8]")
+    assert(SparkEntry.master(
+      Map("SPARK_GRAFT_MASTER" -> "local[2]", "SPARK_GRAFT_CPUS" -> "8"),
+      Map("spark.master" -> "yarn")) === "local[2]")
+    assert(SparkEntry.master(Map("SPARK_GRAFT_CPUS" -> "8"),
+      Map("spark.master" -> "yarn")) === "yarn")
+  }
+
   test("entry() returns rows on sf0.001 (the driver's t1 smoke gate)") {
     assert(SparkEntry.entry(SparkSpec.spark).count() > 0)
   }

@@ -9,7 +9,7 @@ import org.scalatest.funsuite.AnyFunSuite
   *    spec pins EXACT set equality with `SparkEntry.queries`, so a new
   *    operator without an appendix line (or a stale line after a
   *    rename) fails the build. Regenerate with
-  *    `sbt "runMain graft.tools.QueryNames"`.
+  *    `sbt "runMain graft.tools.Probe names"`.
   *  - Every §2 table row must carry at least one piece of RESOLVABLE
   *    evidence: a registered `q_*` query name, a ScalaTest suite that
   *    exists under src/test, or a source file that exists under

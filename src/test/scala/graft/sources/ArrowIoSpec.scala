@@ -14,7 +14,8 @@ import graft.SparkSpec
   * fidelity from the footer, multi-batch files, quarantine rules
   * (non-Arrow file empty; truncation keeps decoded batches; a
   * schema-mismatched file never positionally transposes), and the loud
-  * refusal beyond the type surface. */
+  * refusal beyond the type surface — and pyarrow interop in both
+  * directions when pyarrow is importable. */
 class ArrowIoSpec extends SparkSpec {
 
   test("roundtrip preserves every supported type, null markers, and " +
@@ -254,5 +255,73 @@ class ArrowIoSpec extends SparkSpec {
     val after = ArrowIo.readArrow(spark, dir).select("id")
       .collect().map(_.getLong(0)).sorted.toSeq
     assert(after === (100L to 104L).toSeq)
+  }
+
+  /** Run a python3 snippet with args; (exit code, stdout + stderr). */
+  private def python(script: String, args: String*): (Int, String) = {
+    val p = new ProcessBuilder((Seq("python3", "-c", script) ++ args): _*)
+      .redirectErrorStream(true).start()
+    val out = new String(p.getInputStream.readAllBytes(), "UTF-8")
+    (p.waitFor(), out)
+  }
+
+  test("pyarrow reads a Spark-written file and Spark reads a pyarrow-" +
+      "written one (timestamp-micros, decimal(14,4), array<float>)") {
+    assume(scala.util.Try(python("import pyarrow")._1 == 0).getOrElse(false),
+      "pyarrow not importable")
+    val schema = StructType(Seq(
+      StructField("id", LongType, nullable = false),
+      StructField("ts", TimestampType, nullable = true),
+      StructField("amt", DecimalType(14, 4), nullable = true),
+      StructField("vec", ArrayType(FloatType, containsNull = false),
+        nullable = true)))
+    val rows = Seq(
+      Row(1L, new java.sql.Timestamp(1000L), new java.math.BigDecimal("0.2500"),
+        Seq(0.5f, 1.5f)),
+      Row(2L, null, new java.math.BigDecimal("-12.0001"), Seq(2.5f)),
+      Row(3L, new java.sql.Timestamp(-2000L), null, null))
+    val sparkDir = tempDir("arrow_to_pyarrow").toString
+    ArrowIo.writeArrow(spark.createDataFrame(
+      spark.sparkContext.parallelize(rows, 2), schema), sparkDir, numFiles = 2)
+    val (readCode, readOut) = python(
+      """import glob, sys, pyarrow as pa, pyarrow.ipc as ipc
+        |t = pa.concat_tables([ipc.open_file(f).read_all() for f in
+        |     sorted(glob.glob(sys.argv[1] + "/*.arrow"))]).sort_by("id")
+        |assert t.schema.field("ts").type == pa.timestamp("us", tz="UTC"), t.schema
+        |assert t.schema.field("amt").type == pa.decimal128(14, 4), t.schema
+        |assert t.schema.field("vec").type.value_type == pa.float32(), t.schema
+        |ts = t.column("ts").cast(pa.int64()).to_pylist()
+        |print("ROWS", t.column("id").to_pylist(), ts,
+        |      [None if a is None else str(a) for a in t.column("amt").to_pylist()],
+        |      t.column("vec").to_pylist())
+        |""".stripMargin, sparkDir)
+    assert(readCode === 0, readOut)
+    assert(readOut.trim === "ROWS [1, 2, 3] [1000000, None, -2000000] " +
+      "['0.2500', '-12.0001', None] [[0.5, 1.5], [2.5], None]")
+
+    val pyDir = tempDir("pyarrow_to_arrow")
+    val (writeCode, writeOut) = python(
+      """import decimal, sys, pyarrow as pa, pyarrow.ipc as ipc
+        |schema = pa.schema([pa.field("id", pa.int64(), nullable=False),
+        |                    ("ts", pa.timestamp("us", tz="UTC")),
+        |                    ("amt", pa.decimal128(14, 4)),
+        |                    ("vec", pa.list_(pa.float32()))])
+        |t = pa.table({"id": [7, 8],
+        |              "ts": [1234567, None],
+        |              "amt": [decimal.Decimal("3.1416"), None],
+        |              "vec": [[0.25, -1.0], None]}, schema=schema)
+        |with ipc.new_file(sys.argv[1] + "/part_00000.arrow", schema) as w:
+        |    w.write_table(t)
+        |""".stripMargin, pyDir.toString)
+    assert(writeCode === 0, writeOut)
+    val back = ArrowIo.readArrow(spark, pyDir.toString).orderBy("id").collect()
+    assert(back.map(_.getLong(0)).toSeq === Seq(7L, 8L))
+    val ts = new java.sql.Timestamp(1234L)
+    ts.setNanos(234567000)
+    assert(back(0).getTimestamp(1) === ts)
+    assert(back(0).getDecimal(2) === new java.math.BigDecimal("3.1416"))
+    assert(back(0).getAs[scala.collection.Seq[Float]]("vec").toSeq
+      === Seq(0.25f, -1.0f))
+    assert(back(1).isNullAt(1) && back(1).isNullAt(2) && back(1).isNullAt(3))
   }
 }
