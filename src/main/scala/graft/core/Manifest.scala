@@ -33,6 +33,12 @@ package graft.core
   * no manifest; `resolve` falls back to the plain name, and the first
   * versioned publish migrates it.
   *
+  * A version dir's writer records the dataset's schema inside it
+  * (`_schema.json`, see [[Stored]]) before publishing it, so a reader
+  * that resolves through the manifest opens the version without a
+  * schema-inference job. [[names]] lists directories only, so the
+  * record never reads as a logical name.
+  *
   * Reference anchor: repype/task.py:280-287 (compute_sha — artifact
   * identity tracked in small sidecar metadata, not directory layout).
   */

@@ -11,7 +11,10 @@ import scala.jdk.CollectionConverters._
   *
   * Results are a Parquet field store (one dataset per persistent field,
   * partitioned by `input_id`) instead of the reference's dill.gz blob
-  * (repype/task.py:514-515) — columnar, splittable, 100 TB-safe. Staleness
+  * (repype/task.py:514-515) — columnar, splittable, 100 TB-safe. Each
+  * `input_id=<id>` dir carries a `_schema.json` record written by
+  * [[Stored]] with the data, so [[load]] opens it without a Spark job;
+  * a dir stored before records existed loads with inference. Staleness
   * digests (`.sha.json` / `.task.json`) and the stage×input `times.csv`
   * follow the reference layout (repype/task.py:489-534), driving the same
   * incremental-recompute semantics: `isPending`, first-diverging-stage
@@ -271,13 +274,16 @@ final class Task(
           .write.mode("overwrite").partitionBy("input_id")
           .parquet(target.toString)
         // a 0-row input produces no partition directory — write it
-        // per-input so load()'s per-id existence contract holds
-        for ((id, df) <- perInput
-             if !SidecarFs.exists(inputDir(id).toString))
-          df.write.mode("overwrite").parquet(inputDir(id).toString)
+        // per-input so load()'s per-id existence contract holds; every
+        // input dir gets its own schema record either way
+        for ((id, df) <- perInput) {
+          val dir = inputDir(id).toString
+          if (SidecarFs.exists(dir)) Stored.recordSchema(dir, df.schema)
+          else Stored.write(df, dir)
+        }
       } else
         for ((id, df) <- perInput)
-          df.write.mode("overwrite").parquet(inputDir(id).toString)
+          Stored.write(df, inputDir(id).toString)
       Manifest.publish(dataPath.toString, field, vdir)
     }
     SidecarFs.writeStringAtomic(digestTaskFilepath.toString,
@@ -317,7 +323,7 @@ final class Task(
         val dir = fieldDir(f, id)
         require(SidecarFs.exists(dir.toString),
           s"Loaded data is inconsistent with task specification: missing $dir")
-        f -> spark.read.parquet(dir.toString)
+        f -> Stored.read(spark, dir.toString)
       }.toMap
     }.toMap
   }
@@ -350,7 +356,11 @@ final class Task(
     val times = new Benchmark(timesFilepath)
     val doPickup = pickupTask.isDefined
     if (doPickup) {
-      data = pickupTask.get.load(Some(pipeline))
+      // only this task's ids: a child may narrow its parent's input_ids,
+      // and an id the pickup source lacks arrives with an empty chunk, so
+      // Pipeline.extraStages re-runs its upstream stages
+      val own = inputIds.toSet
+      data = pickupTask.get.load(Some(pipeline)).filter { case (id, _) => own(id) }
       times.setAll(pickupTask.get.times)
     }
     val firstStage = if (doPickup) firstDiverging else None

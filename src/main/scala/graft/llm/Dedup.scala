@@ -3,6 +3,8 @@ package graft.llm
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 
+import graft.core.Stored
+
 /** Deduplication operators for large-scale text corpora.
   *
   * Scale design (100 TB): every signature (MinHash, SimHash) is computed
@@ -482,23 +484,22 @@ object Dedup {
     IndexManifest.reset(path) // a fresh write supersedes any old manifest
     val sigs = Caches.track(
       minhashSignatures(history, numHashes, shingleSize, textCol, idCol))
-    writeBandRows(sigs, bands, numHashes / bands, s"$path/bands",
-      maxBucketSize, "overwrite")
-    sigs.write.mode("overwrite").parquet(s"$path/sigs")
-    Seq((numHashes, bands, shingleSize,
+    Stored.write(bandRows(sigs, bands, numHashes / bands, maxBucketSize),
+      s"$path/bands", "band")
+    Stored.write(sigs, s"$path/sigs")
+    Stored.write(Seq((numHashes, bands, shingleSize,
         if (maxBucketSize == Int.MaxValue) -1 else maxBucketSize))
-      .toDF("num_hashes", "bands", "shingle_size", "max_bucket_size")
-      .write.mode("overwrite").parquet(s"$path/meta")
+      .toDF("num_hashes", "bands", "shingle_size", "max_bucket_size"),
+      s"$path/meta")
   }
 
-  /** The capped band-bucket write shared by [[writeMinhashIndex]]
+  /** The capped band-bucket rows shared by [[writeMinhashIndex]]
     * (overwrite) and [[appendToMinhashIndex]] (append): hot buckets keep
-    * their minimum representative, rows land in band=N partition dirs
-    * range-distributed + sorted by bucket for row-group pruning.
-    * `bandsDir` is the already-RESOLVED live bands directory. */
-  private def writeBandRows(sigs: DataFrame, bands: Int, r: Int,
-                            bandsDir: String, maxBucketSize: Int,
-                            mode: String): Unit = {
+    * their minimum representative; written `partitionBy("band")`, rows
+    * land in band=N partition dirs range-distributed + sorted by bucket
+    * for row-group pruning. */
+  private def bandRows(sigs: DataFrame, bands: Int, r: Int,
+                       maxBucketSize: Int): DataFrame = {
     val w = org.apache.spark.sql.expressions.Window
       .partitionBy(col("band"), col("bucket"))
     // ONE exchange, not two (r16, guide §2.4): the range repartition
@@ -516,7 +517,6 @@ object Dedup {
       .filter(col("bsz") <= maxBucketSize || col("doc_id") === col("rep"))
       .select(col("band"), col("bucket"), col("doc_id").as("hist_id"))
       .sortWithinPartitions(col("band"), col("bucket"))
-      .write.mode(mode).partitionBy("band").parquet(bandsDir)
   }
 
   /** APPEND a batch to a persisted index ([[writeMinhashIndex]]) — the
@@ -540,8 +540,9 @@ object Dedup {
       readMinhashIndexMeta(spark, indexPath)
     val sigs = Caches.track(
       minhashSignatures(batch, numHashes, shingleSize, textCol, idCol))
-    writeBandRows(sigs, bands, numHashes / bands,
-      IndexManifest.resolve(indexPath, "bands"), maxBucketSize, "append")
+    bandRows(sigs, bands, numHashes / bands, maxBucketSize)
+      .write.mode("append").partitionBy("band")
+      .parquet(IndexManifest.resolve(indexPath, "bands"))
     sigs.write.mode("append")
       .parquet(IndexManifest.resolve(indexPath, "sigs"))
   }
@@ -550,7 +551,7 @@ object Dedup {
     * own meta — the no-drift rule every reader and maintainer follows. */
   private def readMinhashIndexMeta(spark: org.apache.spark.sql.SparkSession,
                                    indexPath: String): (Int, Int, Int, Int) = {
-    val meta = spark.read.parquet(s"$indexPath/meta").collect()
+    val meta = Stored.read(spark, s"$indexPath/meta").collect()
     require(meta.length == 1, s"malformed index meta at $indexPath/meta")
     val rawCap = meta.head.getAs[Int]("max_bucket_size")
     (meta.head.getAs[Int]("num_hashes"), meta.head.getAs[Int]("bands"),
@@ -593,17 +594,19 @@ object Dedup {
     // BEFORE matching: the match must never see this batch's own rows
     // (it would flag every survivor as its own duplicate and drop it)
     purgeKeyedFiles(indexPath, batchKey)
+    // the index's meta is read once for the match and the append
+    val meta = readMinhashIndexMeta(batch.sparkSession, indexPath)
     // every action completes inside this call, so the signature caches
     // the match and append track must not outlive it — one leaked
     // cache per micro-batch is unbounded over a long-running crawl
     Caches.scoped(batch.sparkSession) {
-      val dup = incrementalMinhashMatchesIndexed(batch, indexPath, textCol,
-          idCol)
+      val dup = matchesIndexed(batch, indexPath, meta, textCol, idCol)
         .filter(col("est_jaccard") >= threshold)
         .select(col("batch_id")).distinct()
       val survivors = batch.join(dup, batch(idCol) === dup("batch_id"),
         "left_anti")
-      appendBatchFileSets(survivors, indexPath, batchKey, textCol, idCol)
+      appendBatchFileSets(survivors, indexPath, meta, batchKey, textCol,
+        idCol)
     }
     graft.core.SidecarFs.mkdirs(s"$indexPath/ingest_commits")
     graft.core.SidecarFs.createMarker(marker)
@@ -802,7 +805,7 @@ object Dedup {
       val fin = s"$indexPath/tombstones/req-$key"
       if (!graft.core.SidecarFs.exists(fin)) {
         val staging = s"$indexPath/tombstones/.staging-req-$key"
-        del.coalesce(1).write.mode("overwrite").parquet(staging)
+        Stored.write(del.coalesce(1), staging)
         graft.core.SidecarFs.renameOverwrite(staging, fin)
       }
     } finally del.unpersist(blocking = false)
@@ -825,7 +828,7 @@ object Dedup {
     val dirs = tombstoneDirs(indexPath)
     if (dirs.isEmpty) None
     else Some(dirs
-      .map(d => spark.read.parquet(d)
+      .map(d => Stored.read(spark, d)
         .select(col("del_id").cast("string").as("del_id")))
       .reduce(_.unionByName(_))
       .distinct())
@@ -904,16 +907,15 @@ object Dedup {
     * File moves are local-rename cheap; on object stores they are
     * copies of the batch's own (delta-sized) data. */
   private def appendBatchFileSets(survivors: DataFrame, indexPath: String,
+                                  meta: (Int, Int, Int, Int),
                                   batchKey: String, textCol: String,
                                   idCol: String): Unit = {
-    val spark = survivors.sparkSession
-    val (numHashes, bands, shingleSize, maxBucketSize) =
-      readMinhashIndexMeta(spark, indexPath)
+    val (numHashes, bands, shingleSize, maxBucketSize) = meta
     val stage = s"$indexPath/ingest_staging/$batchKey"
     val sigs = Caches.track(
       minhashSignatures(survivors, numHashes, shingleSize, textCol, idCol))
-    writeBandRows(sigs, bands, numHashes / bands, s"$stage/bands",
-      maxBucketSize, "overwrite")
+    bandRows(sigs, bands, numHashes / bands, maxBucketSize)
+      .write.mode("overwrite").partitionBy("band").parquet(s"$stage/bands")
     sigs.write.mode("overwrite").parquet(s"$stage/sigs")
     moveKeyedFiles(s"$stage/sigs", IndexManifest.resolve(indexPath, "sigs"),
       batchKey)
@@ -979,18 +981,14 @@ object Dedup {
     // ids into the rewrite's filters, clear exactly the snapshot after
     // publish (a crash in between re-applies idempotent tombstones)
     val tombDirs = tombstoneDirs(indexPath)
-    val meta = spark.read.parquet(s"$indexPath/meta").collect()
-    require(meta.length == 1, s"malformed index meta at $indexPath/meta")
-    val rawCap = meta.head.getAs[Int]("max_bucket_size")
-    val cap = if (rawCap < 0) Int.MaxValue else rawCap
+    val (_, _, _, cap) = readMinhashIndexMeta(spark, indexPath)
     val w = org.apache.spark.sql.expressions.Window
       .partitionBy(col("band"), col("bucket"))
-    val bandsV = IndexManifest.nextVersionDir(indexPath, "bands")
-    exceptTombstoned(spark, indexPath, spark.read
-      .parquet(IndexManifest.resolve(indexPath, "bands"))
+    val bands = exceptTombstoned(spark, indexPath,
+      Stored.read(spark, IndexManifest.resolve(indexPath, "bands"))
       .select(col("band").cast("int").as("band"), col("bucket"),
         col("hist_id")), "hist_id")
-      // ONE exchange, not three (r16, guide §2.4 — the writeBandRows
+      // ONE exchange, not three (r16, guide §2.4 — the bandRows
       // discipline): the range repartition moves first and co-locates
       // equal (band, bucket) keys, so the dedup aggregates one-phase
       // and the hot-bucket window runs exchange-free on the same
@@ -1002,14 +1000,14 @@ object Dedup {
       .filter(col("bsz") <= cap || col("hist_id") === col("rep"))
       .select(col("band"), col("bucket"), col("hist_id"))
       .sortWithinPartitions(col("band"), col("bucket"))
-      .write.mode("overwrite").partitionBy("band")
-      .parquet(s"$indexPath/$bandsV")
-    val sigsV = IndexManifest.nextVersionDir(indexPath, "sigs")
-    exceptTombstoned(spark, indexPath, spark.read
-      .parquet(IndexManifest.resolve(indexPath, "sigs")), "doc_id")
+    val bandsV = IndexManifest.nextVersionDir(indexPath, "bands")
+    Stored.write(bands, s"$indexPath/$bandsV", "band")
+    val sigs = exceptTombstoned(spark, indexPath,
+      Stored.read(spark, IndexManifest.resolve(indexPath, "sigs")), "doc_id")
       .distinct()
       .coalesce(math.max(1, spark.sparkContext.defaultParallelism / 4))
-      .write.mode("overwrite").parquet(s"$indexPath/$sigsV")
+    val sigsV = IndexManifest.nextVersionDir(indexPath, "sigs")
+    Stored.write(sigs, s"$indexPath/$sigsV")
     IndexManifest.publish(indexPath, "bands", bandsV)
     IndexManifest.publish(indexPath, "sigs", sigsV)
     clearTombstones(tombDirs)
@@ -1103,13 +1101,6 @@ object Dedup {
         "pending_tombstone_batches", "compact", "compacted")
   }
 
-  /** Incremental dedup against a PERSISTED index ([[writeMinhashIndex]]):
-    * signature + banding parameters come from the index's own meta, the
-    * history signature pass is NOT re-paid, and per-batch cost is truly
-    * delta-sized — the candidate exchange carries batch bands plus the
-    * matching index rows, and the verify probes the stored signature
-    * table for candidate ids only. Same output contract as
-    * [[incrementalMinhashMatches]]: (batch_id, hist_id, est_jaccard). */
   /** Delete documents from a persisted MinHash index — the
     * right-to-be-forgotten lifecycle step (a takedown/GDPR request must
     * remove a document's SIGNATURES, not just the corpus row: a banded
@@ -1131,40 +1122,53 @@ object Dedup {
     // maintenance rewrite, every standing request folded in)
     val tombDirs = tombstoneDirs(indexPath)
     val del = broadcast(unionTombstoned(spark, indexPath, ids))
-    val bandsV = IndexManifest.nextVersionDir(indexPath, "bands")
-    spark.read.parquet(IndexManifest.resolve(indexPath, "bands"))
+    val bands = Stored.read(spark, IndexManifest.resolve(indexPath, "bands"))
       .select(col("band").cast("int").as("band"), col("bucket"),
         col("hist_id"))
       .join(del, col("hist_id").cast("string") === col("del_id"), "left_anti")
       .repartitionByRange(col("band"), col("bucket"))
       .sortWithinPartitions(col("band"), col("bucket"))
-      .write.mode("overwrite").partitionBy("band")
-      .parquet(s"$indexPath/$bandsV")
-    val sigsV = IndexManifest.nextVersionDir(indexPath, "sigs")
-    spark.read.parquet(IndexManifest.resolve(indexPath, "sigs"))
+    val bandsV = IndexManifest.nextVersionDir(indexPath, "bands")
+    Stored.write(bands, s"$indexPath/$bandsV", "band")
+    val sigs = Stored.read(spark, IndexManifest.resolve(indexPath, "sigs"))
       .join(del, col("doc_id").cast("string") === col("del_id"), "left_anti")
       .coalesce(math.max(1, spark.sparkContext.defaultParallelism / 4))
-      .write.mode("overwrite").parquet(s"$indexPath/$sigsV")
+    val sigsV = IndexManifest.nextVersionDir(indexPath, "sigs")
+    Stored.write(sigs, s"$indexPath/$sigsV")
     IndexManifest.publish(indexPath, "bands", bandsV)
     IndexManifest.publish(indexPath, "sigs", sigsV)
     clearTombstones(tombDirs)
   }
 
+  /** Incremental dedup against a PERSISTED index ([[writeMinhashIndex]]):
+    * signature + banding parameters come from the index's own meta, the
+    * history signature pass is NOT re-paid, and per-batch cost is truly
+    * delta-sized — the candidate exchange carries batch bands plus the
+    * matching index rows, and the verify probes the stored signature
+    * table for candidate ids only. Same output contract as
+    * [[incrementalMinhashMatches]]: (batch_id, hist_id, est_jaccard). */
   def incrementalMinhashMatchesIndexed(batch: DataFrame, indexPath: String,
                                        textCol: String = "text",
-                                       idCol: String = "doc_id"): DataFrame = {
+                                       idCol: String = "doc_id"): DataFrame =
+    matchesIndexed(batch, indexPath,
+      readMinhashIndexMeta(batch.sparkSession, indexPath), textCol, idCol)
+
+  /** [[incrementalMinhashMatchesIndexed]] with the index's meta already
+    * read (the ingest loop reads it once for the match and the append). */
+  private def matchesIndexed(batch: DataFrame, indexPath: String,
+                             meta: (Int, Int, Int, Int), textCol: String,
+                             idCol: String): DataFrame = {
     val spark = batch.sparkSession
-    val (numHashes, bands, shingleSize, _) =
-      readMinhashIndexMeta(spark, indexPath)
+    val (numHashes, bands, shingleSize, _) = meta
     // tombstoned history must not match (takedown during live ingest:
     // new copies of deleted content are NOVEL again, immediately —
     // consumption into the tiers happens at the next compaction)
-    val histBand = exceptTombstoned(spark, indexPath, spark.read
-      .parquet(IndexManifest.resolve(indexPath, "bands"))
+    val histBand = exceptTombstoned(spark, indexPath,
+      Stored.read(spark, IndexManifest.resolve(indexPath, "bands"))
       .select(col("band").cast("int").as("band"), col("bucket"),
         col("hist_id")), "hist_id")
-    val histSigs = exceptTombstoned(spark, indexPath, spark.read
-      .parquet(IndexManifest.resolve(indexPath, "sigs")), "doc_id")
+    val histSigs = exceptTombstoned(spark, indexPath,
+      Stored.read(spark, IndexManifest.resolve(indexPath, "sigs")), "doc_id")
     val batchSigs = Caches.track(
       minhashSignatures(batch, numHashes, shingleSize, textCol, idCol))
     matchBatchBands(histBand, histSigs, batchSigs, numHashes, bands)
@@ -1195,12 +1199,12 @@ object Dedup {
     // pending tombstones filter the STATIC sides (resolved at plan
     // time — a stream picks up later tombstones on restart, same as it
     // picks up a new manifest version)
-    val histBand = exceptTombstoned(spark, indexPath, spark.read
-      .parquet(IndexManifest.resolve(indexPath, "bands"))
+    val histBand = exceptTombstoned(spark, indexPath,
+      Stored.read(spark, IndexManifest.resolve(indexPath, "bands"))
       .select(col("band").cast("int").as("band"), col("bucket"),
         col("hist_id")), "hist_id")
-    val histSigs = exceptTombstoned(spark, indexPath, spark.read
-      .parquet(IndexManifest.resolve(indexPath, "sigs")), "doc_id")
+    val histSigs = exceptTombstoned(spark, indexPath,
+      Stored.read(spark, IndexManifest.resolve(indexPath, "sigs")), "doc_id")
       .select(col("doc_id").as("hist_id"), col("sig").as("sig2"))
     batchStream
       .select(col(idCol).as("batch_id"),

@@ -76,7 +76,16 @@ object Graphs {
     * inside the body (the per-round checkpoints and counts) plans under
     * the sweep width; a lazily returned frame is planned later under
     * the caller's own conf, which is exactly right — the sweep state is
-    * the thing that is node-sized, not the caller's downstream plan. */
+    * the thing that is node-sized, not the caller's downstream plan.
+    *
+    * Single-writer contract: the width is set on the SHARED session
+    * conf, so while a sweep runs, the session must have no other writer
+    * and no other planner — another thread's query on the same session
+    * plans at the sweep width, and two overlapping sweeps restore each
+    * other's value out of order. Run concurrent sweeps on separate
+    * sessions (`spark.newSession()`). The contract holds for as long
+    * as the width is applied through the session conf rather than by
+    * partitioning the sweep's join sides explicitly. */
   private def withSweepWidth[T](spark: org.apache.spark.sql.SparkSession,
                                 p: Int)(body: => T): T = {
     val key = "spark.sql.shuffle.partitions"

@@ -3,6 +3,8 @@ package graft.llm
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 
+import graft.core.Stored
+
 /** Similarity search over an `embedding: array<float>` column.
   *
   * Scale design: the brute-force path broadcasts the (small) query set and
@@ -268,13 +270,36 @@ object Similarity {
   }
 
   /** Centroid table of a persisted index as bounded driver state (nlist
-    * rows — the k-means contract). */
+    * rows — the k-means contract), collected and then put in cell order
+    * on the driver (a distributed sort of nlist rows costs jobs). */
   private def loadCentroids(spark: org.apache.spark.sql.SparkSession,
                             indexPath: String): Array[Array[Double]] =
-    spark.read.parquet(IndexManifest.resolve(indexPath, "centroids"))
-      .orderBy("cell")
+    Stored.read(spark, IndexManifest.resolve(indexPath, "centroids"))
       .collect()
+      .sortBy(_.getAs[Int]("cell"))
       .map(_.getAs[scala.collection.Seq[Double]]("centroid").toArray)
+
+  /** The stored form of a coarse quantizer: one (cell, centroid) row per
+    * cell, in one file. */
+  private def centroidsDf(spark: org.apache.spark.sql.SparkSession,
+                          centroids: Array[Array[Double]]): DataFrame = {
+    import spark.implicits._
+    centroids.toSeq.zipWithIndex
+      .map { case (c, i) => (i, c.toSeq) }
+      .toDF("cell", "centroid")
+      .coalesce(1)
+  }
+
+  /** The stored form of PQ codebooks: one (subspace, code, centroid) row
+    * per codeword, in one file. */
+  private def codebooksDf(spark: org.apache.spark.sql.SparkSession,
+                          pq: Pq): DataFrame = {
+    import spark.implicits._
+    pq.codebooks.zipWithIndex.flatMap { case (book, s) =>
+      book.zipWithIndex.map { case (c, j) => (s, j, c.toSeq) }
+    }.toDF("subspace", "code", "centroid")
+      .coalesce(1)
+  }
 
   def ivfTopK(corpus: DataFrame, queries: DataFrame, k: Int,
               nlist: Int, nprobe: Int, trainIters: Int = 3,
@@ -320,26 +345,22 @@ object Similarity {
     // via an Observation ON the postings write itself (the d2 column is
     // computed, observed, then dropped before the files land) — ZERO
     // extra passes over the corpus.
-    Seq((nlist, -1L, -1L))
-      .toDF("nlist", "build_n", "build_dist_sum_micro")
-      .coalesce(1).write.mode("overwrite").parquet(s"$path/meta")
-    centroids.toSeq.zipWithIndex
-      .map { case (c, i) => (i, c.toSeq) }
-      .toDF("cell", "centroid")
-      .coalesce(1).write.mode("overwrite").parquet(s"$path/centroids")
+    Stored.write(Seq((nlist, -1L, -1L))
+      .toDF("nlist", "build_n", "build_dist_sum_micro").coalesce(1),
+      s"$path/meta")
+    Stored.write(centroidsDf(spark, centroids), s"$path/centroids")
     val obs = org.apache.spark.sql.Observation("ivf_build_drift")
-    assignCells(corpus, centroids, vecCol, idCol)
+    Stored.write(assignCells(corpus, centroids, vecCol, idCol)
       .withColumn("d2_micro", assignDistMicroCol(col("c_vec"), centroids))
       .observe(obs, sum(col("d2_micro")).as("s"), count(lit(1)).as("n"))
-      .drop("d2_micro")
-      .write.mode("overwrite").partitionBy("cell").parquet(s"$path/postings")
+      .drop("d2_micro"), s"$path/postings", "cell")
     val m = obs.get
     val buildSum = m("s") match { case null => 0L; case v => v.asInstanceOf[Long] }
     val buildN = m("n").asInstanceOf[Long]
     val metaV = IndexManifest.nextVersionDir(path, "meta")
-    Seq((nlist, buildN, buildSum))
-      .toDF("nlist", "build_n", "build_dist_sum_micro")
-      .coalesce(1).write.mode("overwrite").parquet(s"$path/$metaV")
+    Stored.write(Seq((nlist, buildN, buildSum))
+      .toDF("nlist", "build_n", "build_dist_sum_micro").coalesce(1),
+      s"$path/$metaV")
     IndexManifest.publish(path, "meta", metaV)
   }
 
@@ -386,28 +407,49 @@ object Similarity {
                     indexPath: String,
                     maxDriftMicro: Long = 1250000L): DataFrame = {
     require(maxDriftMicro >= 0, "maxDriftMicro must be >= 0")
-    val meta = spark.read
-      .parquet(IndexManifest.resolve(indexPath, "meta")).collect()
+    import spark.implicits._
+    Seq(ivfDrift(spark, indexPath, ivfMetaRow(spark, indexPath),
+        maxDriftMicro))
+      .toDF("build_n", "n", "drift_micro", "rebuild")
+  }
+
+  /** The one IVF meta row, manifest-resolved. */
+  private def ivfMetaRow(spark: org.apache.spark.sql.SparkSession,
+                         indexPath: String): org.apache.spark.sql.Row = {
+    val meta = Stored.read(spark, IndexManifest.resolve(indexPath, "meta"))
+      .collect()
     require(meta.length == 1, s"malformed IVF index meta at $indexPath/meta")
-    val buildN = meta.head.getAs[Long]("build_n")
-    val buildSum = meta.head.getAs[Long]("build_dist_sum_micro")
-    if (buildN < 0L || buildSum < 0L) {
-      // preliminary meta = a build that crashed before its anchor write:
-      // the anchor is unknown, which is itself rebuild-pressure — report
-      // (-1, rebuild) rather than divide by a sentinel (the graph-index
-      // rule); the rebuild actuator restores the anchor
-      import spark.implicits._
-      return Seq((buildN, -1L, -1L, true))
-        .toDF("build_n", "n", "drift_micro", "rebuild")
-    }
+    meta.head
+  }
+
+  /** [[ivfIndexDrift]]'s (build_n, n, drift_micro, rebuild) from an
+    * already-read meta row. */
+  private def ivfDrift(spark: org.apache.spark.sql.SparkSession,
+                       indexPath: String, meta: org.apache.spark.sql.Row,
+                       maxDriftMicro: Long): (Long, Long, Long, Boolean) = {
+    val buildN = meta.getAs[Long]("build_n")
+    val buildSum = meta.getAs[Long]("build_dist_sum_micro")
+    // preliminary meta = a build that crashed before its anchor write:
+    // the anchor is unknown, which is itself rebuild-pressure — report
+    // (-1, rebuild) rather than divide by a sentinel (the graph-index
+    // rule); the rebuild actuator restores the anchor
+    if (buildN < 0L || buildSum < 0L) return (buildN, -1L, -1L, true)
     // pending tombstones are excluded like every read path (and like
     // the compaction that will drop them): logically-deleted far-out
     // vectors must not trigger a needless rebuild
     val (curSum, curN) = assignDistMicro(
       Dedup.exceptTombstoned(spark, indexPath,
-        spark.read.parquet(IndexManifest.resolve(indexPath, "postings")),
+        Stored.read(spark, IndexManifest.resolve(indexPath, "postings")),
         "cand_id"),
       loadCentroids(spark, indexPath))
+    driftRatio(buildN, buildSum, curN, curSum, maxDriftMicro)
+  }
+
+  /** The drift gauges' shared arithmetic: (build_n, n, drift_micro,
+    * rebuild) from the build anchor and the current sums. */
+  private def driftRatio(buildN: Long, buildSum: Long, curN: Long,
+                         curSum: Long,
+                         maxDriftMicro: Long): (Long, Long, Long, Boolean) = {
     val buildMean = if (buildN == 0) 0L else buildSum / buildN
     val curMean = if (curN == 0) 0L else curSum / curN
     // saturate the ratio at Long.MaxValue: an extreme-drift/tiny-anchor
@@ -419,9 +461,7 @@ object Similarity {
         (if (curMean == 0L) 1000000L
          else sat(BigInt(maxDriftMicro) + 1L))
       else sat(BigInt(curMean) * 1000000L / buildMean)
-    import spark.implicits._
-    Seq((buildN, curN, driftMicro, driftMicro > maxDriftMicro))
-      .toDF("build_n", "n", "drift_micro", "rebuild")
+    (buildN, curN, driftMicro, driftMicro > maxDriftMicro)
   }
 
   /** Close the measured-rebuild loop ([[ivfIndexDrift]] is the gauge,
@@ -453,50 +493,40 @@ object Similarity {
                                maxDriftMicro: Long = 1250000L,
                                trainIters: Int = 3,
                                trainFraction: Double = 1.0): DataFrame = {
+    require(maxDriftMicro >= 0, "maxDriftMicro must be >= 0")
     import spark.implicits._
-    val gauge = ivfIndexDrift(spark, indexPath, maxDriftMicro)
-      .collect().head
-    val trip = gauge.getAs[Boolean]("rebuild")
-    var rebuilt = trip
+    val meta = ivfMetaRow(spark, indexPath) // the gauge's and the rebuild's
+    val (gaugeN, gaugeCurN, gaugeDrift, trip) =
+      ivfDrift(spark, indexPath, meta, maxDriftMicro)
+    def report(rebuilt: Boolean): DataFrame =
+      Seq((gaugeN, gaugeCurN, gaugeDrift, trip, rebuilt))
+        .toDF("build_n", "n", "drift_micro", "rebuild", "rebuilt")
     // a -1 anchor can mean a build that crashed BEFORE its data tiers
     // landed: the gauge correctly reports rebuild-pressure, but there
     // is nothing to rebuild FROM — report, never crash mid-maintenance
     // (r15 advice; the report-never-crash contract)
     if (trip && !graft.core.SidecarFs.exists(
-        IndexManifest.resolve(indexPath, "postings"))) {
-      rebuilt = false
-      return Seq((gauge.getAs[Long]("build_n"), gauge.getAs[Long]("n"),
-          gauge.getAs[Long]("drift_micro"), trip, rebuilt))
-        .toDF("build_n", "n", "drift_micro", "rebuild", "rebuilt")
-    }
+        IndexManifest.resolve(indexPath, "postings")))
+      return report(rebuilt = false)
     if (trip) {
       Dedup.requireNoUncommittedIngest(indexPath,
         Dedup.ingestKeyedDirs(indexPath))
       val tombDirs = Dedup.tombstoneDirs(indexPath) // consumed below
-      val nlist = spark.read
-        .parquet(IndexManifest.resolve(indexPath, "meta"))
-        .collect().head.getAs[Int]("nlist")
+      val nlist = meta.getAs[Int]("nlist")
       val survivors = Dedup.exceptTombstoned(spark, indexPath,
-          spark.read.parquet(IndexManifest.resolve(indexPath, "postings"))
+          Stored.read(spark, IndexManifest.resolve(indexPath, "postings"))
             .select(col("cand_id"), col("c_vec")), "cand_id")
         .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
       if (survivors.count() == 0L) {
         // nothing to retrain from (total takedown): report no-op, never
         // crash mid-maintenance (the graph-rebuild rule)
         survivors.unpersist(blocking = false)
-        rebuilt = false
-        import spark.implicits._
-        return Seq((gauge.getAs[Long]("build_n"), gauge.getAs[Long]("n"),
-            gauge.getAs[Long]("drift_micro"), trip, rebuilt))
-          .toDF("build_n", "n", "drift_micro", "rebuild", "rebuilt")
+        return report(rebuilt = false)
       }
       val centroids = Clustering.trainCentroids(
         survivors, "cand_id", "c_vec", nlist, trainIters, trainFraction)
       val centV = IndexManifest.nextVersionDir(indexPath, "centroids")
-      centroids.toSeq.zipWithIndex
-        .map { case (c, i) => (i, c.toSeq) }
-        .toDF("cell", "centroid")
-        .coalesce(1).write.mode("overwrite").parquet(s"$indexPath/$centV")
+      Stored.write(centroidsDf(spark, centroids), s"$indexPath/$centV")
       // re-assignment pass doubles as the NEW build anchor (the
       // writeIvfIndex Observation trick — zero extra scans)
       val postV = IndexManifest.nextVersionDir(indexPath, "postings")
@@ -505,30 +535,26 @@ object Similarity {
       // double the anchor counts (caught by IndexHealthSpec)
       val obs = org.apache.spark.sql.Observation(
         s"ivf_rebuild_drift_$postV")
-      assignCells(survivors, centroids, "c_vec", "cand_id")
+      Stored.write(assignCells(survivors, centroids, "c_vec", "cand_id")
         .withColumn("d2_micro", assignDistMicroCol(col("c_vec"), centroids))
         .observe(obs, sum(col("d2_micro")).as("s"), count(lit(1)).as("n"))
-        .drop("d2_micro")
-        .write.mode("overwrite").partitionBy("cell")
-        .parquet(s"$indexPath/$postV")
+        .drop("d2_micro"), s"$indexPath/$postV", "cell")
       val m = obs.get
       val buildSum = m("s") match {
         case null => 0L; case v => v.asInstanceOf[Long]
       }
       val buildN = m("n").asInstanceOf[Long]
       val metaV = IndexManifest.nextVersionDir(indexPath, "meta")
-      Seq((nlist, buildN, buildSum))
-        .toDF("nlist", "build_n", "build_dist_sum_micro")
-        .coalesce(1).write.mode("overwrite").parquet(s"$indexPath/$metaV")
+      Stored.write(Seq((nlist, buildN, buildSum))
+        .toDF("nlist", "build_n", "build_dist_sum_micro").coalesce(1),
+        s"$indexPath/$metaV")
       IndexManifest.publishAll(indexPath, Map(
         "centroids" -> centV, "postings" -> postV, "meta" -> metaV))
       Dedup.clearTombstones(tombDirs)
       Dedup.pruneCommitMarkers(indexPath)
       survivors.unpersist(blocking = false)
     }
-    Seq((gauge.getAs[Long]("build_n"), gauge.getAs[Long]("n"),
-        gauge.getAs[Long]("drift_micro"), trip, rebuilt))
-      .toDF("build_n", "n", "drift_micro", "rebuild", "rebuilt")
+    report(rebuilt = trip)
   }
 
   /** APPEND new vectors to a persisted IVF index ([[writeIvfIndex]]) —
@@ -562,15 +588,14 @@ object Similarity {
     Dedup.requireNoUncommittedIngest(indexPath,
       Dedup.ingestKeyedDirs(indexPath))
     val tombDirs = Dedup.tombstoneDirs(indexPath) // consumed below
-    val postingsV = IndexManifest.nextVersionDir(indexPath, "postings")
-    Dedup.exceptTombstoned(spark, indexPath,
-      spark.read.parquet(IndexManifest.resolve(indexPath, "postings"))
+    val postings = Dedup.exceptTombstoned(spark, indexPath,
+      Stored.read(spark, IndexManifest.resolve(indexPath, "postings"))
       .select(col("cell").cast("int").as("cell"), col("cand_id"),
         col("c_vec"), col("c_norm")), "cand_id")
       .repartition(col("cell"))
       .sortWithinPartitions(col("cell"), col("cand_id"))
-      .write.mode("overwrite").partitionBy("cell")
-      .parquet(s"$indexPath/$postingsV")
+    val postingsV = IndexManifest.nextVersionDir(indexPath, "postings")
+    Stored.write(postings, s"$indexPath/$postingsV", "cell")
     IndexManifest.publish(indexPath, "postings", postingsV)
     Dedup.clearTombstones(tombDirs)
     Dedup.pruneCommitMarkers(indexPath)
@@ -595,15 +620,15 @@ object Similarity {
       Dedup.ingestKeyedDirs(indexPath))
     val tombDirs = Dedup.tombstoneDirs(indexPath)
     val del = broadcast(Dedup.unionTombstoned(spark, indexPath, ids))
-    val postingsV = IndexManifest.nextVersionDir(indexPath, "postings")
-    spark.read.parquet(IndexManifest.resolve(indexPath, "postings"))
+    val postings = Stored.read(spark,
+        IndexManifest.resolve(indexPath, "postings"))
       .select(col("cell").cast("int").as("cell"), col("cand_id"),
         col("c_vec"), col("c_norm"))
       .join(del, col("cand_id").cast("string") === col("del_id"), "left_anti")
       .repartition(col("cell"))
       .sortWithinPartitions(col("cell"), col("cand_id"))
-      .write.mode("overwrite").partitionBy("cell")
-      .parquet(s"$indexPath/$postingsV")
+    val postingsV = IndexManifest.nextVersionDir(indexPath, "postings")
+    Stored.write(postings, s"$indexPath/$postingsV", "cell")
     IndexManifest.publish(indexPath, "postings", postingsV)
     Dedup.clearTombstones(tombDirs)
   }
@@ -632,18 +657,19 @@ object Similarity {
     val livePostings = IndexManifest.resolve(indexPath, "postings")
     Dedup.listDirs(livePostings, "cell=").foreach(d =>
       Dedup.clearKeyedFiles(s"$livePostings/$d", batchKey))
+    // the frozen quantizer, read once for the match and the append
+    val centroids = loadCentroids(batch.sparkSession, indexPath)
     // scoped: the probe-table cache must not outlive the micro-batch
     // (same unbounded-crawl argument as the MinHash loop)
     Caches.scoped(batch.sparkSession) {
-      val dup = ivfTopKIndexed(batch, indexPath, k = 1, nprobe = nprobe,
-          vecCol = vecCol, idCol = idCol)
+      val dup = ivfTopKWith(batch, indexPath, centroids, k = 1,
+          nprobe = nprobe, vecCol = vecCol, idCol = idCol)
         .filter(col("cos_sim") >= minCos)
         .select(col("query_id")).distinct()
       val survivors = batch.join(dup, batch(idCol) === dup("query_id"),
         "left_anti")
       val stage = s"$indexPath/ingest_staging/$batchKey"
-      assignCells(survivors, loadCentroids(batch.sparkSession, indexPath),
-          vecCol, idCol)
+      assignCells(survivors, centroids, vecCol, idCol)
         .write.mode("overwrite").partitionBy("cell").parquet(stage)
       Dedup.listDirs(stage, "cell=").foreach { d =>
         Dedup.moveKeyedFiles(s"$stage/$d", s"$livePostings/$d", batchKey)
@@ -688,14 +714,8 @@ object Similarity {
     IndexManifest.reset(path) // a fresh write supersedes any old manifest
     val (cells, pq) = trainCoarseAndPq(corpus, nlist, m, ksub, trainIters,
       vecCol, idCol, trainFraction)
-    cells.toSeq.zipWithIndex
-      .map { case (c, i) => (i, c.toSeq) }
-      .toDF("cell", "centroid")
-      .coalesce(1).write.mode("overwrite").parquet(s"$path/centroids")
-    pq.codebooks.zipWithIndex.flatMap { case (book, s) =>
-      book.zipWithIndex.map { case (c, j) => (s, j, c.toSeq) }
-    }.toDF("subspace", "code", "centroid")
-      .coalesce(1).write.mode("overwrite").parquet(s"$path/codebooks")
+    Stored.write(centroidsDf(spark, cells), s"$path/centroids")
+    Stored.write(codebooksDf(spark, pq), s"$path/codebooks")
     // preliminary pq_meta BEFORE the data tiers (the writeIvfIndex /
     // graph-index crash rule), then the counted drift anchor publishes
     // atomically after the vectors land — collected via an Observation
@@ -707,23 +727,22 @@ object Similarity {
         .toDF("m", "ksub", "dsub", "has_vectors", "nlist",
           "build_n", "build_dist_sum_micro")
         .coalesce(1)
-    pqMetaDf(-1L, -1L).write.mode("overwrite").parquet(s"$path/pq_meta")
-    encodeIvfPq(corpus, cells, pq, vecCol, idCol).drop("cv")
-      .write.mode("overwrite").partitionBy("cell").parquet(s"$path/codes")
+    Stored.write(pqMetaDf(-1L, -1L), s"$path/pq_meta")
+    Stored.write(encodeIvfPq(corpus, cells, pq, vecCol, idCol).drop("cv"),
+      s"$path/codes", "cell")
     if (storeVectors) {
       val obs = org.apache.spark.sql.Observation("ivfpq_build_drift")
-      assignCells(corpus, cells, vecCol, idCol)
+      Stored.write(assignCells(corpus, cells, vecCol, idCol)
         .withColumn("d2_micro", assignDistMicroCol(col("c_vec"), cells))
         .observe(obs, sum(col("d2_micro")).as("s"), count(lit(1)).as("n"))
-        .drop("d2_micro")
-        .write.mode("overwrite").partitionBy("cell").parquet(s"$path/vectors")
+        .drop("d2_micro"), s"$path/vectors", "cell")
       val mm = obs.get
       val buildSum = mm("s") match {
         case null => 0L; case v => v.asInstanceOf[Long]
       }
       val metaV = IndexManifest.nextVersionDir(path, "pq_meta")
-      pqMetaDf(mm("n").asInstanceOf[Long], buildSum)
-        .write.mode("overwrite").parquet(s"$path/$metaV")
+      Stored.write(pqMetaDf(mm("n").asInstanceOf[Long], buildSum),
+        s"$path/$metaV")
       IndexManifest.publish(path, "pq_meta", metaV)
     }
   }
@@ -745,7 +764,16 @@ object Similarity {
                       maxDriftMicro: Long = 1250000L): DataFrame = {
     require(maxDriftMicro >= 0, "maxDriftMicro must be >= 0")
     import spark.implicits._
-    val meta = pqMetaRow(spark, indexPath)
+    Seq(ivfPqDrift(spark, indexPath, pqMetaRow(spark, indexPath),
+        maxDriftMicro))
+      .toDF("build_n", "n", "drift_micro", "rebuild")
+  }
+
+  /** [[ivfPqIndexDrift]]'s (build_n, n, drift_micro, rebuild) from an
+    * already-read pq_meta row. */
+  private def ivfPqDrift(spark: org.apache.spark.sql.SparkSession,
+                         indexPath: String, meta: org.apache.spark.sql.Row,
+                         maxDriftMicro: Long): (Long, Long, Long, Boolean) = {
     require(meta.getAs[Boolean]("has_vectors"),
       s"index at $indexPath was written with storeVectors=false — " +
         "the drift gauge measures the raw-vector tier; rebuild the " +
@@ -761,24 +789,13 @@ object Similarity {
     val buildSum =
       if (fields("build_dist_sum_micro"))
         meta.getAs[Long]("build_dist_sum_micro") else -1L
-    if (buildN < 0L || buildSum < 0L)
-      return Seq((buildN, -1L, -1L, true))
-        .toDF("build_n", "n", "drift_micro", "rebuild")
+    if (buildN < 0L || buildSum < 0L) return (buildN, -1L, -1L, true)
     val (curSum, curN) = assignDistMicro(
       Dedup.exceptTombstoned(spark, indexPath,
-        spark.read.parquet(IndexManifest.resolve(indexPath, "vectors")),
+        Stored.read(spark, IndexManifest.resolve(indexPath, "vectors")),
         "cand_id"),
       loadCentroids(spark, indexPath))
-    val buildMean = if (buildN == 0) 0L else buildSum / buildN
-    val curMean = if (curN == 0) 0L else curSum / curN
-    def sat(b: BigInt): Long =
-      if (b > BigInt(Long.MaxValue)) Long.MaxValue else b.toLong
-    val driftMicro =
-      if (buildMean == 0L)
-        (if (curMean == 0L) 1000000L else sat(BigInt(maxDriftMicro) + 1L))
-      else sat(BigInt(curMean) * 1000000L / buildMean)
-    Seq((buildN, curN, driftMicro, driftMicro > maxDriftMicro))
-      .toDF("build_n", "n", "drift_micro", "rebuild")
+    driftRatio(buildN, buildSum, curN, curSum, maxDriftMicro)
   }
 
   /** Close the measured-rebuild loop for IVF-PQ — the third actuator
@@ -797,108 +814,90 @@ object Similarity {
                                  maxDriftMicro: Long = 1250000L,
                                  trainIters: Int = 3,
                                  trainFraction: Double = 1.0): DataFrame = {
+    require(maxDriftMicro >= 0, "maxDriftMicro must be >= 0")
     import spark.implicits._
-    val gauge = ivfPqIndexDrift(spark, indexPath, maxDriftMicro)
-      .collect().head
-    val trip = gauge.getAs[Boolean]("rebuild")
-    var rebuilt = trip
+    val meta = pqMetaRow(spark, indexPath) // the gauge's and the rebuild's
+    val (gaugeN, gaugeCurN, gaugeDrift, trip) =
+      ivfPqDrift(spark, indexPath, meta, maxDriftMicro)
+    def report(rebuilt: Boolean): DataFrame =
+      Seq((gaugeN, gaugeCurN, gaugeDrift, trip, rebuilt))
+        .toDF("build_n", "n", "drift_micro", "rebuild", "rebuilt")
     // crashed-before-data-tiers build: rebuild-pressure with nothing to
     // rebuild from — report, never crash (the rebuildIvfIndexIfDrifted
     // rule)
     if (trip && !graft.core.SidecarFs.exists(
-        IndexManifest.resolve(indexPath, "vectors"))) {
-      rebuilt = false
-      return Seq((gauge.getAs[Long]("build_n"), gauge.getAs[Long]("n"),
-          gauge.getAs[Long]("drift_micro"), trip, rebuilt))
-        .toDF("build_n", "n", "drift_micro", "rebuild", "rebuilt")
+        IndexManifest.resolve(indexPath, "vectors")))
+      return report(rebuilt = false)
+    if (!trip) return report(rebuilt = false)
+    Dedup.requireNoUncommittedIngest(indexPath,
+      Dedup.ingestKeyedDirs(indexPath))
+    val tombDirs = Dedup.tombstoneDirs(indexPath) // consumed below
+    val m = meta.getAs[Int]("m")
+    val ksub = meta.getAs[Int]("ksub")
+    // pre-r15 pq_meta has no nlist column: infer it from the coarse
+    // quantizer itself (nlist IS the centroid count) instead of
+    // crashing a maintenance pass on an old index (r15 advice)
+    val nlist =
+      if (meta.schema.fieldNames.contains("nlist"))
+        meta.getAs[Int]("nlist")
+      else loadCentroids(spark, indexPath).length
+    val survivors = Dedup.exceptTombstoned(spark, indexPath,
+        Stored.read(spark, IndexManifest.resolve(indexPath, "vectors"))
+          .select(col("cand_id"), col("c_vec")), "cand_id")
+      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+    if (survivors.count() == 0L) {
+      survivors.unpersist(blocking = false)
+      return report(rebuilt = false)
     }
-    if (trip) {
-      Dedup.requireNoUncommittedIngest(indexPath,
-        Dedup.ingestKeyedDirs(indexPath))
-      val tombDirs = Dedup.tombstoneDirs(indexPath) // consumed below
-      val meta = pqMetaRow(spark, indexPath)
-      val m = meta.getAs[Int]("m")
-      val ksub = meta.getAs[Int]("ksub")
-      // pre-r15 pq_meta has no nlist column: infer it from the coarse
-      // quantizer itself (nlist IS the centroid count) instead of
-      // crashing a maintenance pass on an old index (r15 advice)
-      val nlist =
-        if (meta.schema.fieldNames.contains("nlist"))
-          meta.getAs[Int]("nlist")
-        else loadCentroids(spark, indexPath).length
-      val survivors = Dedup.exceptTombstoned(spark, indexPath,
-          spark.read.parquet(IndexManifest.resolve(indexPath, "vectors"))
-            .select(col("cand_id"), col("c_vec")), "cand_id")
-        .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-      if (survivors.count() == 0L) {
-        survivors.unpersist(blocking = false)
-        rebuilt = false
-      } else {
-        val (cells, pq) = trainCoarseAndPq(survivors, nlist, m, ksub,
-          trainIters, "c_vec", "cand_id", trainFraction)
-        val centV = IndexManifest.nextVersionDir(indexPath, "centroids")
-        cells.toSeq.zipWithIndex
-          .map { case (c, i) => (i, c.toSeq) }
-          .toDF("cell", "centroid")
-          .coalesce(1).write.mode("overwrite")
-          .parquet(s"$indexPath/$centV")
-        val bookV = IndexManifest.nextVersionDir(indexPath, "codebooks")
-        pq.codebooks.zipWithIndex.flatMap { case (book, s) =>
-          book.zipWithIndex.map { case (c, j) => (s, j, c.toSeq) }
-        }.toDF("subspace", "code", "centroid")
-          .coalesce(1).write.mode("overwrite")
-          .parquet(s"$indexPath/$bookV")
-        val codesV = IndexManifest.nextVersionDir(indexPath, "codes")
-        encodeIvfPq(survivors, cells, pq, "c_vec", "cand_id").drop("cv")
-          .write.mode("overwrite").partitionBy("cell")
-          .parquet(s"$indexPath/$codesV")
-        val vecsV = IndexManifest.nextVersionDir(indexPath, "vectors")
-        val obs = org.apache.spark.sql.Observation(
-          s"ivfpq_rebuild_drift_$vecsV")
-        // plain observed write (the repartitionByRange double-execution
-        // rule above)
-        assignCells(survivors, cells, "c_vec", "cand_id")
-          .withColumn("d2_micro", assignDistMicroCol(col("c_vec"), cells))
-          .observe(obs, sum(col("d2_micro")).as("s"), count(lit(1)).as("n"))
-          .drop("d2_micro")
-          .write.mode("overwrite").partitionBy("cell")
-          .parquet(s"$indexPath/$vecsV")
-        val mm = obs.get
-        val buildSum = mm("s") match {
-          case null => 0L; case v => v.asInstanceOf[Long]
-        }
-        val metaV = IndexManifest.nextVersionDir(indexPath, "pq_meta")
-        Seq((m, ksub, pq.dsub, true, nlist,
-            mm("n").asInstanceOf[Long], buildSum))
-          .toDF("m", "ksub", "dsub", "has_vectors", "nlist",
-            "build_n", "build_dist_sum_micro")
-          .coalesce(1).write.mode("overwrite")
-          .parquet(s"$indexPath/$metaV")
-        IndexManifest.publishAll(indexPath, Map(
-          "centroids" -> centV, "codebooks" -> bookV,
-          "codes" -> codesV, "vectors" -> vecsV, "pq_meta" -> metaV))
-        Dedup.clearTombstones(tombDirs)
-        Dedup.pruneCommitMarkers(indexPath)
-        survivors.unpersist(blocking = false)
-      }
+    val (cells, pq) = trainCoarseAndPq(survivors, nlist, m, ksub,
+      trainIters, "c_vec", "cand_id", trainFraction)
+    val centV = IndexManifest.nextVersionDir(indexPath, "centroids")
+    Stored.write(centroidsDf(spark, cells), s"$indexPath/$centV")
+    val bookV = IndexManifest.nextVersionDir(indexPath, "codebooks")
+    Stored.write(codebooksDf(spark, pq), s"$indexPath/$bookV")
+    val codesV = IndexManifest.nextVersionDir(indexPath, "codes")
+    Stored.write(encodeIvfPq(survivors, cells, pq, "c_vec", "cand_id")
+      .drop("cv"), s"$indexPath/$codesV", "cell")
+    val vecsV = IndexManifest.nextVersionDir(indexPath, "vectors")
+    val obs = org.apache.spark.sql.Observation(
+      s"ivfpq_rebuild_drift_$vecsV")
+    // plain observed write (the repartitionByRange double-execution
+    // rule above)
+    Stored.write(assignCells(survivors, cells, "c_vec", "cand_id")
+      .withColumn("d2_micro", assignDistMicroCol(col("c_vec"), cells))
+      .observe(obs, sum(col("d2_micro")).as("s"), count(lit(1)).as("n"))
+      .drop("d2_micro"), s"$indexPath/$vecsV", "cell")
+    val mm = obs.get
+    val buildSum = mm("s") match {
+      case null => 0L; case v => v.asInstanceOf[Long]
     }
-    Seq((gauge.getAs[Long]("build_n"), gauge.getAs[Long]("n"),
-        gauge.getAs[Long]("drift_micro"), trip, rebuilt))
-      .toDF("build_n", "n", "drift_micro", "rebuild", "rebuilt")
+    val metaV = IndexManifest.nextVersionDir(indexPath, "pq_meta")
+    Stored.write(Seq((m, ksub, pq.dsub, true, nlist,
+        mm("n").asInstanceOf[Long], buildSum))
+      .toDF("m", "ksub", "dsub", "has_vectors", "nlist",
+        "build_n", "build_dist_sum_micro").coalesce(1),
+      s"$indexPath/$metaV")
+    IndexManifest.publishAll(indexPath, Map(
+      "centroids" -> centV, "codebooks" -> bookV,
+      "codes" -> codesV, "vectors" -> vecsV, "pq_meta" -> metaV))
+    Dedup.clearTombstones(tombDirs)
+    Dedup.pruneCommitMarkers(indexPath)
+    survivors.unpersist(blocking = false)
+    report(rebuilt = true)
   }
 
-  /** (PQ, has_vectors) reconstructed from a persisted index's
-    * codebooks + meta — bounded driver state (m×ksub rows, KBs). */
   /** One pq_meta row, manifest-resolved (a rebuild publishes versioned
     * meta like every other tier). */
   private def pqMetaRow(spark: org.apache.spark.sql.SparkSession,
                         indexPath: String): org.apache.spark.sql.Row = {
-    val meta = spark.read
-      .parquet(IndexManifest.resolve(indexPath, "pq_meta")).collect()
+    val meta = Stored.read(spark, IndexManifest.resolve(indexPath, "pq_meta"))
+      .collect()
     require(meta.length == 1, s"malformed pq_meta at $indexPath/pq_meta")
     meta.head
   }
 
+  /** (PQ, has_vectors) reconstructed from a persisted index's
+    * codebooks + meta — bounded driver state (m×ksub rows, KBs). */
   private def loadPq(spark: org.apache.spark.sql.SparkSession,
                      indexPath: String): (Pq, Boolean) = {
     val meta = pqMetaRow(spark, indexPath)
@@ -906,7 +905,7 @@ object Similarity {
     val ksub = meta.getAs[Int]("ksub")
     val dsub = meta.getAs[Int]("dsub")
     val books = Array.fill(m)(Array.ofDim[Array[Double]](ksub))
-    spark.read.parquet(IndexManifest.resolve(indexPath, "codebooks"))
+    Stored.read(spark, IndexManifest.resolve(indexPath, "codebooks"))
       .collect().foreach { r =>
         books(r.getAs[Int]("subspace"))(r.getAs[Int]("code")) =
           r.getAs[scala.collection.Seq[Double]]("centroid").toArray
@@ -958,6 +957,8 @@ object Similarity {
     val spark = batch.sparkSession
     val marker = s"$indexPath/ingest_commits/$batchKey"
     if (graft.core.SidecarFs.exists(marker)) return // fully committed
+    // the frozen model state, read once for the match and the append
+    val cells = loadCentroids(spark, indexPath)
     val (pq, hasVectors) = loadPq(spark, indexPath)
     val liveCodes = IndexManifest.resolve(indexPath, "codes")
     val liveVecs = IndexManifest.resolve(indexPath, "vectors")
@@ -967,14 +968,13 @@ object Similarity {
       Dedup.listDirs(liveVecs, "cell=").foreach(d =>
         Dedup.clearKeyedFiles(s"$liveVecs/$d", batchKey))
     Caches.scoped(spark) {
-      val dup = ivfPqTopKIndexed(batch, indexPath, k = 1, nprobe = nprobe,
-          refine = refine, vecCol = vecCol, idCol = idCol,
-          adcOnly = !hasVectors)
+      val dup = ivfPqTopKWith(batch, indexPath, cells, pq, hasVectors,
+          k = 1, nprobe = nprobe, refine = refine, vecCol = vecCol,
+          idCol = idCol, adcOnly = !hasVectors)
         .filter(col("cos_sim") >= minCos)
         .select(col("query_id")).distinct()
       val survivors = batch.join(dup, batch(idCol) === dup("query_id"),
         "left_anti")
-      val cells = loadCentroids(spark, indexPath)
       val stage = s"$indexPath/ingest_staging/$batchKey"
       encodeIvfPq(survivors, cells, pq, vecCol, idCol).drop("cv")
         .write.mode("overwrite").partitionBy("cell").parquet(s"$stage/codes")
@@ -1007,26 +1007,24 @@ object Similarity {
     Dedup.requireNoUncommittedIngest(indexPath,
       Dedup.ingestKeyedDirs(indexPath))
     val tombDirs = Dedup.tombstoneDirs(indexPath) // consumed below
-    val codesV = IndexManifest.nextVersionDir(indexPath, "codes")
-    Dedup.exceptTombstoned(spark, indexPath,
-      spark.read.parquet(IndexManifest.resolve(indexPath, "codes"))
+    val codes = Dedup.exceptTombstoned(spark, indexPath,
+      Stored.read(spark, IndexManifest.resolve(indexPath, "codes"))
       .select(col("cell").cast("int").as("cell"), col("cand_id"),
         col("code"), col("c_norm")), "cand_id")
       .repartition(col("cell"))
       .sortWithinPartitions(col("cell"), col("cand_id"))
-      .write.mode("overwrite").partitionBy("cell")
-      .parquet(s"$indexPath/$codesV")
+    val codesV = IndexManifest.nextVersionDir(indexPath, "codes")
+    Stored.write(codes, s"$indexPath/$codesV", "cell")
     IndexManifest.publish(indexPath, "codes", codesV)
-    if (loadPq(spark, indexPath)._2) {
-      val vecsV = IndexManifest.nextVersionDir(indexPath, "vectors")
-      Dedup.exceptTombstoned(spark, indexPath,
-        spark.read.parquet(IndexManifest.resolve(indexPath, "vectors"))
+    if (pqMetaRow(spark, indexPath).getAs[Boolean]("has_vectors")) {
+      val vecs = Dedup.exceptTombstoned(spark, indexPath,
+        Stored.read(spark, IndexManifest.resolve(indexPath, "vectors"))
         .select(col("cell").cast("int").as("cell"), col("cand_id"),
           col("c_vec"), col("c_norm")), "cand_id")
         .repartition(col("cell"))
         .sortWithinPartitions(col("cell"), col("cand_id"))
-        .write.mode("overwrite").partitionBy("cell")
-        .parquet(s"$indexPath/$vecsV")
+      val vecsV = IndexManifest.nextVersionDir(indexPath, "vectors")
+      Stored.write(vecs, s"$indexPath/$vecsV", "cell")
       IndexManifest.publish(indexPath, "vectors", vecsV)
     }
     Dedup.clearTombstones(tombDirs)
@@ -1046,26 +1044,25 @@ object Similarity {
       Dedup.ingestKeyedDirs(indexPath))
     val tombDirs = Dedup.tombstoneDirs(indexPath)
     val del = broadcast(Dedup.unionTombstoned(spark, indexPath, ids))
-    val codesV = IndexManifest.nextVersionDir(indexPath, "codes")
-    spark.read.parquet(IndexManifest.resolve(indexPath, "codes"))
+    val codes = Stored.read(spark, IndexManifest.resolve(indexPath, "codes"))
       .select(col("cell").cast("int").as("cell"), col("cand_id"),
         col("code"), col("c_norm"))
       .join(del, col("cand_id").cast("string") === col("del_id"), "left_anti")
       .repartition(col("cell"))
       .sortWithinPartitions(col("cell"), col("cand_id"))
-      .write.mode("overwrite").partitionBy("cell")
-      .parquet(s"$indexPath/$codesV")
+    val codesV = IndexManifest.nextVersionDir(indexPath, "codes")
+    Stored.write(codes, s"$indexPath/$codesV", "cell")
     IndexManifest.publish(indexPath, "codes", codesV)
-    if (loadPq(spark, indexPath)._2) {
-      val vecsV = IndexManifest.nextVersionDir(indexPath, "vectors")
-      spark.read.parquet(IndexManifest.resolve(indexPath, "vectors"))
+    if (pqMetaRow(spark, indexPath).getAs[Boolean]("has_vectors")) {
+      val vecs = Stored.read(spark,
+          IndexManifest.resolve(indexPath, "vectors"))
         .select(col("cell").cast("int").as("cell"), col("cand_id"),
           col("c_vec"), col("c_norm"))
         .join(del, col("cand_id").cast("string") === col("del_id"), "left_anti")
         .repartition(col("cell"))
         .sortWithinPartitions(col("cell"), col("cand_id"))
-        .write.mode("overwrite").partitionBy("cell")
-        .parquet(s"$indexPath/$vecsV")
+      val vecsV = IndexManifest.nextVersionDir(indexPath, "vectors")
+      Stored.write(vecs, s"$indexPath/$vecsV", "cell")
       IndexManifest.publish(indexPath, "vectors", vecsV)
     }
     Dedup.clearTombstones(tombDirs)
@@ -1109,12 +1106,24 @@ object Similarity {
                        vecCol: String = "embedding",
                        idCol: String = "vec_id",
                        adcOnly: Boolean = false): DataFrame = {
+    val spark = queries.sparkSession
+    val (pq, hasVectors) = loadPq(spark, indexPath)
+    ivfPqTopKWith(queries, indexPath, loadCentroids(spark, indexPath), pq,
+      hasVectors, k, nprobe, refine, vecCol, idCol, adcOnly)
+  }
+
+  /** [[ivfPqTopKIndexed]] with the index's model state — centroids,
+    * codebooks, has_vectors — already loaded (the ingest loop loads it
+    * once for the match and the append). */
+  private def ivfPqTopKWith(queries: DataFrame, indexPath: String,
+                            cells: Array[Array[Double]], pq: Pq,
+                            hasVectors: Boolean, k: Int, nprobe: Int,
+                            refine: Int, vecCol: String, idCol: String,
+                            adcOnly: Boolean): DataFrame = {
     import org.apache.spark.sql.expressions.Window
     val spark = queries.sparkSession
-    val cells = loadCentroids(spark, indexPath)
     require(nprobe >= 1 && nprobe <= cells.length,
       s"nprobe must be in [1, nlist=${cells.length}], got $nprobe")
-    val (pq, hasVectors) = loadPq(spark, indexPath)
     require(hasVectors || adcOnly,
       s"index at $indexPath was written with storeVectors=false — " +
         "exact re-rank is impossible; query with adcOnly=true")
@@ -1128,7 +1137,7 @@ object Similarity {
     // candidates from codes, so the refine tier cannot resurface an id
     // filtered here
     val codes = Dedup.exceptTombstoned(spark, indexPath, pruneToProbed(
-      spark.read.parquet(IndexManifest.resolve(indexPath, "codes"))),
+      Stored.read(spark, IndexManifest.resolve(indexPath, "codes"))),
       "cand_id")
     if (adcOnly) {
       val w = Window.partitionBy(col("query_id"))
@@ -1144,7 +1153,7 @@ object Similarity {
     } else {
       val cand = ivfPqCandidates(codes, probed, pq, k * refine)
       val corpusVecs = pruneToProbed(
-          spark.read.parquet(IndexManifest.resolve(indexPath, "vectors")))
+          Stored.read(spark, IndexManifest.resolve(indexPath, "vectors")))
         .select(col("cand_id").as(idCol), col("c_vec").as(vecCol))
       rerankExact(cand, corpusVecs, queries, k, vecCol, idCol)
     }
@@ -1174,9 +1183,17 @@ object Similarity {
     * per-query top-k window. */
   def ivfTopKIndexed(queries: DataFrame, indexPath: String, k: Int,
                      nprobe: Int, vecCol: String = "embedding",
-                     idCol: String = "vec_id"): DataFrame = {
+                     idCol: String = "vec_id"): DataFrame =
+    ivfTopKWith(queries, indexPath,
+      loadCentroids(queries.sparkSession, indexPath), k, nprobe, vecCol, idCol)
+
+  /** [[ivfTopKIndexed]] with the index's centroids already loaded (the
+    * ingest loop loads them once for the match and the append). */
+  private def ivfTopKWith(queries: DataFrame, indexPath: String,
+                          centroids: Array[Array[Double]], k: Int,
+                          nprobe: Int, vecCol: String,
+                          idCol: String): DataFrame = {
     val spark = queries.sparkSession
-    val centroids = loadCentroids(spark, indexPath)
     require(nprobe >= 1 && nprobe <= centroids.length,
       s"nprobe must be in [1, nlist=${centroids.length}], got $nprobe")
     val probed = Caches.track( // consumed twice: cell collect + probe join
@@ -1185,9 +1202,9 @@ object Similarity {
       .map(_.getInt(0)).sorted // ≤ nlist values
     // pending tombstones (takedown during live ingest) must not
     // surface as neighbours; they leave the tiers at the next compaction
-    val postings = Dedup.exceptTombstoned(spark, indexPath, spark.read
-      .parquet(IndexManifest.resolve(indexPath, "postings"))
-      .filter(col("cell").isin(cells.map(c => c: Any).toSeq: _*)),
+    val postings = Dedup.exceptTombstoned(spark, indexPath,
+      Stored.read(spark, IndexManifest.resolve(indexPath, "postings"))
+        .filter(col("cell").isin(cells.map(c => c: Any).toSeq: _*)),
       "cand_id")
     rankProbed(postings, probed, k)
   }
@@ -1682,7 +1699,7 @@ object Similarity {
     // neither mine as an anchor nor surface as a mined partner
     def postings(path: String): DataFrame =
       Dedup.exceptTombstoned(spark, path,
-        spark.read.parquet(IndexManifest.resolve(path, "postings")),
+        Stored.read(spark, IndexManifest.resolve(path, "postings")),
         "cand_id")
     def knn(queryIdx: String, corpusIdx: String): DataFrame = {
       val centroids = loadCentroids(spark, corpusIdx)

@@ -33,6 +33,56 @@ abstract class SparkSpec extends AnyFunSuite {
   implicit def nioToHadoopPath(p: java.nio.file.Path): org.apache.hadoop.fs.Path =
     new org.apache.hadoop.fs.Path(p.toString)
 
+  /** `body`'s result and the number of Spark jobs it launched. */
+  def jobsIn[A](body: => A): (A, Int) = {
+    import org.apache.spark.graftshim.GraftSparkInternals.drainListenerBus
+    import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
+    val sc = spark.sparkContext
+    val jobs = new java.util.concurrent.atomic.AtomicInteger
+    val listener = new SparkListener {
+      override def onJobStart(e: SparkListenerJobStart): Unit =
+        jobs.incrementAndGet()
+    }
+    drainListenerBus(sc)
+    sc.addSparkListener(listener)
+    try {
+      val a = body
+      drainListenerBus(sc)
+      (a, jobs.get)
+    } finally sc.removeSparkListener(listener)
+  }
+
+  /** The stored dataset at `dir` carries a schema record equal to the
+    * data columns Spark infers (the rest being `name=value` partition
+    * columns), and a read with it has the schema and the rows of Spark's
+    * own inferring read. */
+  def assertReadsAsInferred(dir: String): Unit = {
+    import graft.core.{SidecarFs, Stored}
+    import org.apache.spark.sql.types.{DataType, StructType}
+    val record = SidecarFs.readString(s"$dir/${Stored.SchemaFile}")
+      .map(DataType.fromJson(_).asInstanceOf[StructType])
+    assert(record.isDefined, s"no record in $dir")
+    val inferred = spark.read.parquet(dir)
+    val (data, partitions) = inferred.schema.fields.splitAt(record.get.length)
+    assert(data.toSeq == record.get.fields.toSeq, dir)
+    assert(partitions.forall(p =>
+      SidecarFs.listNames(dir).exists(_.startsWith(s"${p.name}="))), dir)
+    val recorded = Stored.read(spark, dir)
+    assert(recorded.schema == inferred.schema, dir)
+    def rows(df: org.apache.spark.sql.DataFrame) =
+      df.collect().map(_.toString).sorted.toSeq
+    assert(rows(recorded) == rows(inferred), dir)
+  }
+
+  /** Delete every schema record under `root`: the layout of a store
+    * written before records existed. */
+  def dropSchemaRecords(root: String): Unit = {
+    val s = java.nio.file.Files.walk(java.nio.file.Paths.get(root))
+    try s.filter(_.getFileName.toString == graft.core.Stored.SchemaFile)
+      .forEach(p => java.nio.file.Files.delete(p))
+    finally s.close()
+  }
+
   /** Run `body` with SQL confs set, restoring prior values after. */
   def withSQLConf[A](pairs: (String, String)*)(body: => A): A = {
     val conf = spark.conf

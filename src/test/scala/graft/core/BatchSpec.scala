@@ -191,6 +191,75 @@ class BatchSpec extends SparkSpec {
     assert(!Files.exists(dir.resolve("metrics.json")))
   }
 
+  test("a child may narrow or widen its parent's input ids: it stores " +
+      "exactly its own ids and re-runs only what pickup cannot supply") {
+    import org.apache.spark.sql.DataFrame
+    import org.apache.spark.sql.functions.lit
+    import scala.jdk.CollectionConverters._
+    val ran = new java.util.concurrent.ConcurrentLinkedQueue[String]
+    StageRegistry.register("ids-scan", () => new Stage {
+      override def id = "ids-scan"
+      override def outputs = Set("rows")
+      def process(ctx: StageContext, in: Map[String, DataFrame], cfg: Config) = {
+        ran.add(s"scan/${ctx.inputId.render}")
+        Map("rows" -> ctx.spark.range(0, 3)
+          .withColumn("input", lit(ctx.inputId.render)))
+      }
+    })
+    StageRegistry.register("ids-tag", () => new Stage {
+      override def id = "ids-tag"
+      override def inputs = Set("rows")
+      override def outputs = Set("tagged")
+      def process(ctx: StageContext, in: Map[String, DataFrame], cfg: Config) = {
+        ran.add(s"tag/${ctx.inputId.render}")
+        Map("tagged" -> in("rows")
+          .withColumn("tag", lit(String.valueOf(cfg.get("tag", "a")))))
+      }
+    })
+    def spec(ids: Seq[Int], tag: String) =
+      s"""runnable: true
+         |pipeline: [ids-scan, ids-tag]
+         |config: {ids-tag: {tag: $tag}}
+         |input_ids: [${ids.mkString(", ")}]
+         |""".stripMargin
+    val root = tempDir("narrow-widen")
+    writeSpec(root.resolve("p"), spec(Seq(1, 2), "a"))
+    writeSpec(root.resolve("p/narrow"), spec(Seq(1), "b"))
+    writeSpec(root.resolve("q"), spec(Seq(1), "a"))
+    writeSpec(root.resolve("q/widen"), spec(Seq(1, 2), "b"))
+    val batch = new Batch(spark)
+    batch.load(root)
+    /** Runs the pending task `name`; the stage runs it made, sorted. */
+    def runOne(name: String): Seq[String] = {
+      ran.clear()
+      val ctx = batch.pendingContexts.find(_.task.path.getName == name).get
+      val status = Status.create(root.resolve(s"$name.jsonl"))
+      assert(batch.run(Some(List(ctx)), Some(status)),
+        Status.readEvents(root.resolve(s"$name.jsonl"))
+          .find(_.get("info").contains("error")).toString)
+      ran.asScala.toSeq.sorted
+    }
+    assert(runOne("p") == Seq("scan/1", "scan/2", "tag/1", "tag/2"))
+    // narrowing: input 1 picks up p's scan; p's input 2 is not this task's
+    assert(runOne("narrow") == Seq("tag/1"))
+    assert(runOne("q") == Seq("scan/1", "tag/1"))
+    // widening: input 2 is not in q's store, so its scan runs too
+    assert(runOne("widen") == Seq("scan/2", "tag/1", "tag/2"))
+    assert(batch.pendingContexts.isEmpty)
+    def stored(name: String): Map[String, Set[String]] = {
+      val t = batch.tasks.values.find(_.path.getName == name).get
+      Seq("rows", "tagged").map(f =>
+        f -> SidecarFs.listDirNames(t.fieldDataDir(f).toString).toSet).toMap
+    }
+    assert(stored("narrow").values.forall(_ == Set("input_id=1")))
+    assert(stored("widen").values.forall(_ == Set("input_id=1", "input_id=2")))
+    val narrow = batch.tasks.values.find(_.path.getName == "narrow").get
+    assert(narrow.times.shape == (2, 1))
+    val tags = narrow.load().apply(InputId(1))("tagged")
+      .select("tag").distinct().collect().map(_.getString(0)).toSeq
+    assert(tags == Seq("b"))
+  }
+
   test("run aborts on first failure and reports the failing stage") {
     register()
     StageRegistry.register("fail-stage", () => new Stage {

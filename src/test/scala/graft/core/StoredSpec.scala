@@ -1,0 +1,140 @@
+package graft.core
+
+import java.nio.file.Files
+
+import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.functions._
+
+import graft.SparkSpec
+
+/** The stored-dataset writer/reader pair ([[Stored]]) on the task field
+  * store: every input dir carries a schema record that reads back as
+  * Spark would infer it, loading a stored task launches no Spark job, and
+  * a store written before records existed still loads — and gains
+  * records at its next publish. The source scan keeps every store read of
+  * the task and index tiers on the one reader. */
+class StoredSpec extends SparkSpec {
+
+  // four fields of assorted shapes: non-nullable columns at the top level
+  // and nested, an array, a map, a struct — and one field that is empty
+  // for every input but 1
+  StageRegistry.register("stored-gen", () => new Stage {
+    override def id = "stored-gen"
+    override def outputs = Set("nums", "words", "nested", "first_only")
+    override def version = 1
+    def process(ctx: StageContext, in: Map[String, DataFrame],
+                config: Config): Map[String, DataFrame] = {
+      val id = ctx.inputId.render.toLong
+      val shift = config.get("shift", 0L) match {
+        case n: Number => n.doubleValue
+        case other => String.valueOf(other).toDouble
+      }
+      val nums = ctx.spark.range(0, 4 * id)
+        .select(col("id").as("n"), (col("id") * 0.5 + shift).as("x"))
+      Map(
+        "nums" -> nums,
+        "words" -> nums.select(concat(lit("w"), col("n")).as("w"),
+          array(col("n"), col("n") + 1).as("arr")),
+        "nested" -> nums.select(
+          struct(col("n"), map(lit("k"), col("x")).as("m")).as("s")),
+        "first_only" -> nums.filter(lit(id) === 1L))
+    }
+  })
+
+  private val fields = Seq("nums", "words", "nested", "first_only")
+
+  /** A runnable `stored-gen` task at `root/name`, run through [[Batch]]. */
+  private def runTask(root: java.nio.file.Path, name: String,
+                      inputIds: Seq[Int], shift: Int = 0): Task = {
+    val dir = root.resolve(name)
+    Files.createDirectories(dir)
+    Files.writeString(dir.resolve("task.yml"),
+      s"""runnable: true
+         |pipeline: [stored-gen]
+         |config: {stored-gen: {shift: $shift}}
+         |input_ids: [${inputIds.mkString(", ")}]
+         |""".stripMargin)
+    val batch = new Batch(spark)
+    batch.load(root)
+    assert(batch.run())
+    batch.task(dir).get
+  }
+
+  test("every stored input dir — batched, per-input and 0-row — reads " +
+      "back with its record as Spark infers it") {
+    val root = tempDir("stored-fields")
+    val batched = runTask(root, "batched", Seq(1, 2))
+    val single = runTask(root, "single", Seq(1))
+    // the layouts under test: one partitioned write per field for two
+    // homogeneous inputs (its 0-row input written on its own), one
+    // plain write per input dir for a single input
+    val nums = batched.fieldDataDir("nums").toString
+    assert(SidecarFs.exists(s"$nums/_SUCCESS"))
+    assert(!SidecarFs.exists(s"$nums/${Stored.SchemaFile}"))
+    assert(SidecarFs.exists(
+      s"${batched.fieldDir("first_only", InputId(2))}/_SUCCESS"))
+    assert(Stored.read(spark,
+      batched.fieldDir("first_only", InputId(2)).toString).count() == 0L)
+    assert(SidecarFs.exists(
+      s"${single.fieldDir("nums", InputId(1))}/_SUCCESS"))
+    for ((t, ids) <- Seq(batched -> Seq(1, 2), single -> Seq(1));
+         f <- fields; id <- ids)
+      assertReadsAsInferred(t.fieldDir(f, InputId(id)).toString)
+  }
+
+  test("Task.load of 4 fields × 2 inputs launches no Spark job (8 " +
+      "without records)") {
+    val t = runTask(tempDir("stored-load"), "t", Seq(1, 2))
+    val (loaded, jobs) = jobsIn(t.load(Some(t.createPipeline())))
+    assert(loaded.keySet == Set(InputId(1), InputId(2)))
+    assert(loaded.values.forall(_.keySet == fields.toSet))
+    assert(jobs == 0, s"$jobs jobs")
+    // without records, each of the 8 input dirs runs its own
+    // schema-inference job
+    dropSchemaRecords(t.dataPath.toString)
+    val (_, inferring) = jobsIn(t.load(Some(t.createPipeline())))
+    assert(inferring == 8, s"$inferring jobs")
+  }
+
+  test("a store written without records loads identically, and its next " +
+      "publish writes them") {
+    val root = tempDir("stored-legacy")
+    val t = runTask(root, "t", Seq(1, 2))
+    def snapshot() = t.load(Some(t.createPipeline())).toSeq.flatMap {
+      case (id, fs) => fs.toSeq.map { case (f, df) =>
+        (id, f) -> (df.schema, df.collect().map(_.toString).sorted.toSeq)
+      }
+    }.toMap
+    val recorded = snapshot()
+    dropSchemaRecords(t.dataPath.toString)
+    assert(snapshot() == recorded)
+    assert(!SidecarFs.exists(
+      s"${t.fieldDir("nums", InputId(1))}/${Stored.SchemaFile}"))
+    // a config edit re-runs the task: the new versions carry records
+    val rerun = runTask(root, "t", Seq(1, 2), shift = 1)
+    for (f <- fields; id <- Seq(1, 2))
+      assertReadsAsInferred(rerun.fieldDir(f, InputId(id)).toString)
+  }
+
+  test("source scan: task and index tiers read stored Parquet only " +
+      "through Stored.read") {
+    // any DataFrameReader use: `read.parquet(…)`, `read.schema(…)`,
+    // `read.format(…)`, `read.load(…)`, also split over lines
+    val reader = """\bread\s*\.\s*(parquet|schema|format|load|option)\s*\(""".r
+    def code(file: String): String =
+      Files.readString(java.nio.file.Paths.get(file))
+        .replaceAll("(?s)/\\*.*?\\*/", "")
+        .replaceAll("//[^\n]*", "")
+    val main = "src/main/scala/graft"
+    // the scan sees the one reader itself (it is not vacuous) ...
+    assert(reader.findAllIn(code(s"$main/core/Stored.scala")).size == 2)
+    // ... and nothing else in the files that own a field store or an
+    // index tier: a new bare read there would bring back one
+    // footer-sampling job per dataset opened
+    for (f <- Seq("core/Task.scala", "llm/Dedup.scala", "llm/Similarity.scala")) {
+      val hits = reader.findAllIn(code(s"$main/$f")).toSeq
+      assert(hits.isEmpty,
+        s"$f reads Parquet outside Stored.read: ${hits.mkString(", ")}")
+    }
+  }
+}

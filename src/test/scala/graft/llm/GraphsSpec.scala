@@ -323,6 +323,33 @@ class GraphsSpec extends SparkSpec {
     assert(spark.conf.get("spark.sql.shuffle.partitions") === cap.toString)
   }
 
+  test("pagerank (float) is width-tolerant: forcing the sweep to the " +
+      "session width moves ranks by at most 1e-12, the conf restored") {
+    import SparkSpec.spark.implicits._
+    val spark = SparkSpec.spark
+    val cap = spark.sessionState.conf.numShufflePartitions
+    // enough nodes and fan-in that the rank sums group differently at
+    // width 1 and at the cap; floating-point addition is not
+    // associative, so only a tolerance holds across widths
+    val rnd = new scala.util.Random(17)
+    val edges = (Seq.tabulate(60)(i => (i.toLong, ((i + 1) % 60).toLong)) ++
+      Seq.fill(240)((rnd.nextInt(60).toLong, rnd.nextInt(60).toLong)))
+      .toDF("src", "dst")
+    assert(Graphs.sweepPartitions(edges) === 1)
+    def run() = Graphs.pagerank(edges, iters = 8).collect()
+      .map(r => r.getLong(0) -> r.getDouble(1)).toMap
+    val narrow = run()
+    spark.conf.set("graft.sweep.targetPartitionBytes", "1")
+    val wide =
+      try run()
+      finally spark.conf.unset("graft.sweep.targetPartitionBytes")
+    assert(wide.keySet == narrow.keySet && narrow.size == 60)
+    for ((k, v) <- narrow)
+      assert(math.abs(wide(k) - v) <= 1e-12, s"node $k: ${wide(k)} vs $v")
+    assert(math.abs(wide.values.sum - 1.0) < 1e-9)
+    assert(spark.conf.get("spark.sql.shuffle.partitions") === cap.toString)
+  }
+
   test("reciprocity: mutual pairs count, one-way links do not, pure " +
       "sinks are absent, self-loops and duplicates ignored") {
     import SparkSpec.spark.implicits._
