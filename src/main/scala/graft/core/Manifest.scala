@@ -2,8 +2,9 @@ package graft.core
 
 /** Version-pointer manifest for directories of immutable dataset
   * versions — the publication mechanism shared by the persisted-index
-  * lifecycle ([[graft.llm.IndexManifest]] binds it to MinHash/IVF/IVF-PQ
-  * indexes) and the task field store ([[Task.store]]).
+  * lifecycle ([[graft.llm.IndexLifecycle]] drives it for the MinHash,
+  * IVF, IVF-PQ and k-NN-graph indexes) and the task field store
+  * ([[Task.store]]).
   *
   * Problem: maintenance rewrites a data subdir (`bands`, `sigs`, a task
   * field) wholesale. Swapping the fresh copy in via directory renames
@@ -28,6 +29,14 @@ package graft.core
   * manifest write is atomic, but two CONCURRENT publishes under the same
   * root are a caller error (last publish wins; both version dirs remain
   * until pruned).
+  *
+  * One read per call: a caller that opens several names reads `current`
+  * ONCE into a [[Snapshot]] and resolves every name from it. Resolving
+  * name by name re-reads the file each time, and a publish landing
+  * between two reads would pair one name's old version with another's
+  * new one (old codebooks with new codes) — the torn read the single
+  * atomic [[publishAll]] exists to prevent. Every public index call
+  * takes one snapshot; [[resolve]] is the one-name shorthand.
   *
   * Back-compat: a store written before versioning has plain subdirs and
   * no manifest; `resolve` falls back to the plain name, and the first
@@ -66,11 +75,21 @@ object Manifest {
       .filterNot(d => versionDirs.contains(d) || d.matches(".*_v\\d+"))
   }
 
-  /** Resolve logical subdir `name` under `root` to its live ABSOLUTE
-    * path: the manifest's entry when present, the plain name otherwise
-    * (pre-versioning stores). */
+  /** The name→dir map of `root` as ONE read of `current` saw it. */
+  final case class Snapshot(root: String, dirs: Map[String, String]) {
+
+    /** Logical subdir `name` to its live ABSOLUTE path at the snapshot:
+      * the manifest's entry when present, the plain name otherwise
+      * (pre-versioning stores). */
+    def resolve(name: String): String = s"$root/${dirs.getOrElse(name, name)}"
+  }
+
+  /** Read `current` once (an empty map when absent). */
+  def snapshot(root: String): Snapshot = Snapshot(root, readMap(root))
+
+  /** `snapshot(root).resolve(name)` — for a caller that opens one name. */
   def resolve(root: String, name: String): String =
-    s"$root/${readMap(root).getOrElse(name, name)}"
+    snapshot(root).resolve(name)
 
   /** A fresh version dirname for `name` (one past the largest existing
     * `name_v<N>` on disk — counting disk, not just the manifest, so an

@@ -5,7 +5,7 @@ import org.apache.spark.sql.types.{ArrayType, DataType, MapType, StructType}
 
 /** The writer/reader pair for the Parquet datasets graft keeps — task
   * fields ([[Task.store]] / [[Task.load]]) and the persisted-index tiers
-  * ([[graft.llm.Dedup]], [[graft.llm.Similarity]]).
+  * ([[graft.llm.Dedup]], [[graft.llm.Similarity]], [[graft.llm.GraphAnn]]).
   *
   * A bare `spark.read.parquet(dir)` must infer the schema, and Spark does
   * that with a footer-sampling JOB before any real work starts. The

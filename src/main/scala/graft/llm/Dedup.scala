@@ -3,7 +3,7 @@ package graft.llm
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 
-import graft.core.Stored
+import graft.core.{Manifest, SidecarFs, Stored}
 
 /** Deduplication operators for large-scale text corpora.
   *
@@ -466,7 +466,7 @@ object Dedup {
     *    caller's head.
     *
     * After compaction, `bands`/`sigs` become versioned directories
-    * resolved through a `current` manifest ([[IndexManifest]]) — every
+    * resolved through a `current` manifest ([[IndexLifecycle]]) — every
     * reader and the append path resolve through it, so a fresh index
     * (plain dirs, no manifest) and a compacted one read identically.
     *
@@ -481,7 +481,7 @@ object Dedup {
     require(numHashes % bands == 0, "numHashes must be divisible by bands")
     val spark = history.sparkSession
     import spark.implicits._
-    IndexManifest.reset(path) // a fresh write supersedes any old manifest
+    IndexLifecycle.reset(path) // a fresh write supersedes any old manifest
     val sigs = Caches.track(
       minhashSignatures(history, numHashes, shingleSize, textCol, idCol))
     Stored.write(bandRows(sigs, bands, numHashes / bands, maxBucketSize),
@@ -540,11 +540,11 @@ object Dedup {
       readMinhashIndexMeta(spark, indexPath)
     val sigs = Caches.track(
       minhashSignatures(batch, numHashes, shingleSize, textCol, idCol))
+    val snap = Manifest.snapshot(indexPath)
     bandRows(sigs, bands, numHashes / bands, maxBucketSize)
       .write.mode("append").partitionBy("band")
-      .parquet(IndexManifest.resolve(indexPath, "bands"))
-    sigs.write.mode("append")
-      .parquet(IndexManifest.resolve(indexPath, "sigs"))
+      .parquet(snap.resolve("bands"))
+    sigs.write.mode("append").parquet(snap.resolve("sigs"))
   }
 
   /** (num_hashes, bands, shingle_size, max_bucket_size) from the index's
@@ -567,16 +567,13 @@ object Dedup {
     * NEXT micro-batch sees them as history, and record the batch as
     * committed.
     *
-    * Restart safety (foreachBatch re-delivers a batch whose commit
-    * didn't reach the streaming checkpoint):
-    *  - a commit marker under `ingest_commits/` short-circuits a
-    *    re-delivered batch whose append fully finished — no work, no
-    *    re-read;
-    *  - the append itself lands as a BATCH-KEYED FILE SET
-    *    ([[appendBatchFileSets]]): deterministic `ingest-<key>-i` file
-    *    names that a re-execution REPLACES instead of duplicating, so
-    *    even a crash between the append and the marker re-converges to
-    *    exactly one copy of the batch's rows.
+    * Restart safety is [[IndexLifecycle.ingestKeyed]]'s (foreachBatch
+    * re-delivers a batch whose commit didn't reach the streaming
+    * checkpoint): a commit marker short-circuits a fully committed
+    * re-delivery, and the append lands as a BATCH-KEYED FILE SET in the
+    * sigs dir and the band dirs that a re-execution REPLACES instead of
+    * duplicating, so even a crash between the append and the marker
+    * re-converges to exactly one copy of the batch's rows.
     *
     * Within-batch duplicates are deliberately NOT matched against each
     * other — the loop's contract is "novel versus history at the
@@ -587,116 +584,23 @@ object Dedup {
   def ingestBatchIntoMinhashIndex(batch: DataFrame, indexPath: String,
                                   batchKey: String, threshold: Double,
                                   textCol: String = "text",
-                                  idCol: String = "doc_id"): Unit = {
-    val marker = s"$indexPath/ingest_commits/$batchKey"
-    if (graft.core.SidecarFs.exists(marker)) return // fully committed
-    // purge any partial keyed append a crashed earlier delivery left
-    // BEFORE matching: the match must never see this batch's own rows
-    // (it would flag every survivor as its own duplicate and drop it)
-    purgeKeyedFiles(indexPath, batchKey)
-    // the index's meta is read once for the match and the append
-    val meta = readMinhashIndexMeta(batch.sparkSession, indexPath)
-    // every action completes inside this call, so the signature caches
-    // the match and append track must not outlive it — one leaked
-    // cache per micro-batch is unbounded over a long-running crawl
-    Caches.scoped(batch.sparkSession) {
-      val dup = matchesIndexed(batch, indexPath, meta, textCol, idCol)
+                                  idCol: String = "doc_id"): Unit =
+    IndexLifecycle.ingestKeyed(batch.sparkSession, indexPath, batchKey,
+        Seq("sigs" -> "", "bands" -> "band=")) { (snap, stage) =>
+      // the index's meta is read once for the match and the append
+      val meta @ (numHashes, bands, shingleSize, maxBucketSize) =
+        readMinhashIndexMeta(batch.sparkSession, indexPath)
+      val dup = matchesIndexed(batch, snap, meta, textCol, idCol)
         .filter(col("est_jaccard") >= threshold)
         .select(col("batch_id")).distinct()
       val survivors = batch.join(dup, batch(idCol) === dup("batch_id"),
         "left_anti")
-      appendBatchFileSets(survivors, indexPath, meta, batchKey, textCol,
-        idCol)
+      val sigs = Caches.track(minhashSignatures(survivors, numHashes,
+        shingleSize, textCol, idCol))
+      bandRows(sigs, bands, numHashes / bands, maxBucketSize)
+        .write.mode("overwrite").partitionBy("band").parquet(s"$stage/bands")
+      sigs.write.mode("overwrite").parquet(s"$stage/sigs")
     }
-    graft.core.SidecarFs.mkdirs(s"$indexPath/ingest_commits")
-    graft.core.SidecarFs.createMarker(marker)
-  }
-
-  /** Remove every live file of `batchKey`'s keyed set (sigs + all band
-    * dirs) — the first step of a (re-)delivery. */
-  private def purgeKeyedFiles(indexPath: String, batchKey: String): Unit = {
-    clearKeyedFiles(IndexManifest.resolve(indexPath, "sigs"), batchKey)
-    val liveBands = IndexManifest.resolve(indexPath, "bands")
-    listDirs(liveBands, "band=").foreach(d =>
-      clearKeyedFiles(s"$liveBands/$d", batchKey))
-  }
-
-  private val KeyedFileRe = "^ingest-(.+)-\\d+\\.parquet$".r
-
-  /** Ingest batch keys with live keyed files in `dirs` but NO commit
-    * marker — an in-flight or crashed delivery. Compaction must refuse
-    * while any exist: absorbing an UNCOMMITTED batch's keyed files into
-    * a consolidated version erases their keyed identity, so the
-    * restart's purge-before-rematch would find nothing to purge, the
-    * re-match would flag every survivor as its own (absorbed) duplicate,
-    * and the batch would silently vanish from the index. */
-  private[llm] def uncommittedIngestKeys(indexPath: String,
-                                         dirs: Seq[String]): Set[String] = {
-    val committed = listDirs(s"$indexPath/ingest_commits", "").toSet
-    dirs.flatMap { d =>
-      graft.core.SidecarFs.listNames(d).collect { case KeyedFileRe(k) => k }
-    }.toSet -- committed
-  }
-
-  /** The interlock shared by every compactor: refuse while uncommitted
-    * ingest batches have live keyed files in `dirs` (see
-    * [[uncommittedIngestKeys]] for why absorbing them is data loss). */
-  private[llm] def requireNoUncommittedIngest(indexPath: String,
-                                              dirs: Seq[String]): Unit = {
-    val inflight = uncommittedIngestKeys(indexPath, dirs)
-    require(inflight.isEmpty,
-      s"refusing to compact $indexPath: uncommitted ingest batches " +
-        s"${inflight.mkString(", ")} have live keyed files — absorbing " +
-        "them would erase the keyed identity their restart recovery " +
-        "depends on. Restart the owning stream to converge, or — if its " +
-        "checkpoint is gone for good — purgeOrphanedIngestBatches first")
-  }
-
-  /** Anchored to the EXACT marker shape the streaming loops mint
-    * ([[graft.streaming.EventStreams]] streamKey: 12 lowercase hex chars
-    * + `-b<batchId>`): a looser `.+-b\d+` would also claim CALLER-chosen
-    * idempotency keys that merely end in `-b<digits>` ("nightly-b2"),
-    * and pruning those breaks direct-API re-delivery — unlike a
-    * Structured Streaming checkpoint, a caller's orchestrator may
-    * re-deliver ANY old batch, and with its marker pruned and its keyed
-    * files compacted away the IVF self-id-excluding re-match would
-    * re-append every vector as a duplicate. */
-  private val MarkerRe = "^([0-9a-f]{12})-b(\\d+)$".r
-
-  /** Prune retired ingest commit markers, keeping only the NEWEST
-    * marker per stream key. Without this, a long-running ingest loop
-    * leaves one empty marker file per micro-batch forever — the
-    * machinery built to fight small-files decay accruing its own
-    * unbounded small-file growth (and `uncommittedIngestKeys` listing
-    * all of them on every compaction check).
-    *
-    * Why newest-per-stream is the exact safe boundary: a marker exists
-    * to short-circuit a RE-DELIVERED batch, and Structured Streaming
-    * only re-delivers the latest batch whose offset commit didn't reach
-    * the checkpoint — the moment the same stream delivered batch N+1,
-    * batch N's commit was durably recorded, so N can never be
-    * re-delivered and its marker is dead weight. Blanket deletion would
-    * NOT be safe: the newest batch can still be re-delivered, and once
-    * compaction has absorbed its keyed files the IVF re-match excludes
-    * self-id pairs, so a markerless re-delivery would re-append its
-    * vectors as duplicates. Markers that don't match the
-    * `<stream>-b<id>` shape (caller-chosen keys) are kept. Runs inside
-    * compaction — the single-maintenance-writer window, so no live
-    * append races the listing. */
-  private[llm] def pruneCommitMarkers(indexPath: String): Unit = {
-    val dir = s"$indexPath/ingest_commits"
-    val parsed = graft.core.SidecarFs.listNames(dir).flatMap {
-      // toLongOption: an id beyond Long range is not a minted marker —
-      // keep it rather than abort the surrounding compaction
-      case MarkerRe(stream, id) => id.toLongOption.map(stream -> _)
-      case _ => None
-    }
-    val newest = parsed.groupBy(_._1).map { case (s, xs) => (s, xs.map(_._2).max) }
-    parsed.foreach { case (stream, id) =>
-      if (id != newest(stream))
-        graft.core.SidecarFs.deleteFile(s"$dir/$stream-b$id")
-    }
-  }
 
   /** Delete the keyed files (and staging) of every UNCOMMITTED ingest
     * batch — the recovery for a stream that is permanently ABANDONED
@@ -711,11 +615,11 @@ object Dedup {
     * even that is convergent — but the stream owns that recovery.
     * Returns the purged keys. */
   def purgeOrphanedIngestBatches(indexPath: String): Set[String] = {
-    val dirs = ingestKeyedDirs(indexPath)
-    val orphans = uncommittedIngestKeys(indexPath, dirs)
+    val dirs = IndexLifecycle.ingestKeyedDirs(Manifest.snapshot(indexPath))
+    val orphans = IndexLifecycle.uncommittedIngestKeys(indexPath, dirs)
     orphans.foreach { k =>
-      dirs.foreach(d => clearKeyedFiles(d, k))
-      graft.core.SidecarFs.deleteTree(s"$indexPath/ingest_staging/$k")
+      dirs.foreach(d => IndexLifecycle.clearKeyedFiles(d, k))
+      SidecarFs.deleteTree(s"$indexPath/ingest_staging/$k")
     }
     orphans
   }
@@ -766,7 +670,7 @@ object Dedup {
     // vs string) must never produce request dirs whose schemas cannot
     // union — that would brick every read path of the index until the
     // dirs were removed by hand. Consumers cast their join side the
-    // same way ([[exceptTombstoned]]/[[unionTombstoned]]).
+    // same way ([[exceptTombstoned]], [[IndexLifecycle.maintain]]).
     val del = ids.select(col(ids.columns.head).cast("string").as("del_id"))
       .distinct()
       .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
@@ -775,7 +679,8 @@ object Dedup {
       // the ceiling counts the UNION with what's already pending, so an
       // idempotent at-least-once re-delivery of the same request (same
       // ids -> same dir) can never double-count itself into a refusal
-      val after = tombstoneIds(spark, indexPath) match {
+      val dirs = tombstoneDirs(indexPath)
+      val after = tombstoneIds(spark, dirs) match {
         case Some(t) => t.unionByName(del).distinct().count()
         case None => del.count()
       }
@@ -785,7 +690,7 @@ object Dedup {
           s"$indexPath; run the hard deleteFrom*Index (or a compaction) " +
           "to consume the standing requests, or route bulk deletions " +
           "there directly")
-      val nDirs = tombstoneDirs(indexPath).size
+      val nDirs = dirs.size
       require(nDirs < MaxPendingTombstoneDirs,
         s"$nDirs standing tombstone request dirs at $indexPath reach " +
           s"the $MaxPendingTombstoneDirs read-path plan ceiling; run " +
@@ -803,10 +708,10 @@ object Dedup {
       // the rename of a complete staging dir), so a re-delivery
       // short-circuits instead of renaming over live content.
       val fin = s"$indexPath/tombstones/req-$key"
-      if (!graft.core.SidecarFs.exists(fin)) {
+      if (!SidecarFs.exists(fin)) {
         val staging = s"$indexPath/tombstones/.staging-req-$key"
         Stored.write(del.coalesce(1), staging)
-        graft.core.SidecarFs.renameOverwrite(staging, fin)
+        SidecarFs.renameOverwrite(staging, fin)
       }
     } finally del.unpersist(blocking = false)
   }
@@ -818,21 +723,20 @@ object Dedup {
     listDirs(s"$indexPath/tombstones", "req-")
       .map(d => s"$indexPath/tombstones/$d")
 
-  /** All pending tombstoned ids as one distinct STRING `del_id` frame,
-    * or None when the index has no pending requests (the common case —
-    * zero extra work on the read path). Dirs are read one by one and
-    * unioned post-cast, so a pre-normalization request dir (r14 wrote
-    * del_id in the caller's type) can never schema-clash a newer one. */
+  /** The tombstoned ids of request `dirs` ([[tombstoneDirs]]) as one
+    * distinct STRING `del_id` frame, or None when there are none (the
+    * common case — zero extra work on the read path). Dirs are read one
+    * by one and unioned post-cast, so a pre-normalization request dir
+    * (r14 wrote del_id in the caller's type) can never schema-clash a
+    * newer one. */
   private[llm] def tombstoneIds(spark: org.apache.spark.sql.SparkSession,
-                                indexPath: String): Option[DataFrame] = {
-    val dirs = tombstoneDirs(indexPath)
+                                dirs: Seq[String]): Option[DataFrame] =
     if (dirs.isEmpty) None
     else Some(dirs
       .map(d => Stored.read(spark, d)
         .select(col("del_id").cast("string").as("del_id")))
       .reduce(_.unionByName(_))
       .distinct())
-  }
 
   /** The read-path filter: anti-join `df` against pending tombstones on
     * `idCol` (broadcast — request-scale by contract), or `df` untouched
@@ -851,7 +755,7 @@ object Dedup {
   private[llm] def exceptTombstoned(spark: org.apache.spark.sql.SparkSession,
                                     indexPath: String, df: DataFrame,
                                     idCol: String): DataFrame =
-    tombstoneIds(spark, indexPath) match {
+    tombstoneIds(spark, tombstoneDirs(indexPath)) match {
       case Some(t) => // the count re-scan is request-dir-sized (KBs)
         val side =
           if (t.count() <= MaxPendingTombstones) broadcast(t) else t
@@ -859,95 +763,8 @@ object Dedup {
       case None => df
     }
 
-  /** The hard-delete composition: the caller's `ids` (first column)
-    * unioned with every pending tombstoned id, distinct, as the
-    * canonical STRING `del_id` — a full-rewrite pass folds all standing
-    * requests into one anti-join. Consumers must cast their own id side
-    * to string in the join (comparing a raw bigint against a string
-    * column would coerce BOTH to double — lossy above 2^53). */
-  private[llm] def unionTombstoned(spark: org.apache.spark.sql.SparkSession,
-                                   indexPath: String,
-                                   ids: DataFrame): DataFrame = {
-    val base = ids.select(col(ids.columns.head).cast("string").as("del_id"))
-    tombstoneIds(spark, indexPath) match {
-      case Some(t) => base.unionByName(t).distinct()
-      case None => base.distinct()
-    }
-  }
-
-  /** Delete consumed request dirs — called by a maintenance pass AFTER
-    * its manifest publish, with the dir list it snapshotted before
-    * reading. */
-  private[llm] def clearTombstones(dirs: Seq[String]): Unit =
-    dirs.foreach(graft.core.SidecarFs.deleteTree)
-
-  /** Every live dir that can hold ingest-keyed files, across all three
-    * index layouts (MinHash: sigs + band dirs; IVF: postings cell dirs;
-    * IVF-PQ: codes + vectors cell dirs). Dirs absent from a layout list
-    * empty. */
-  private[llm] def ingestKeyedDirs(indexPath: String): Seq[String] = {
-    val bands = IndexManifest.resolve(indexPath, "bands")
-    val postings = IndexManifest.resolve(indexPath, "postings")
-    val codes = IndexManifest.resolve(indexPath, "codes")
-    val vectors = IndexManifest.resolve(indexPath, "vectors")
-    Seq(IndexManifest.resolve(indexPath, "sigs")) ++
-      listDirs(bands, "band=").map(d => s"$bands/$d") ++
-      listDirs(postings, "cell=").map(d => s"$postings/$d") ++
-      listDirs(codes, "cell=").map(d => s"$codes/$d") ++
-      listDirs(vectors, "cell=").map(d => s"$vectors/$d")
-  }
-
-  /** Append one batch's rows as an IDEMPOTENT batch-keyed file set: the
-    * rows are written to a staging dir (overwrite — re-execution
-    * replaces it), then moved into the live band/sigs dirs under
-    * DETERMINISTIC names `ingest-<key>-<i>.parquet`. The caller
-    * ([[ingestBatchIntoMinhashIndex]]) purges any prior files of the
-    * same key before matching, so however many times a batch is
-    * re-delivered, the index ends with exactly one copy of its rows.
-    * File moves are local-rename cheap; on object stores they are
-    * copies of the batch's own (delta-sized) data. */
-  private def appendBatchFileSets(survivors: DataFrame, indexPath: String,
-                                  meta: (Int, Int, Int, Int),
-                                  batchKey: String, textCol: String,
-                                  idCol: String): Unit = {
-    val (numHashes, bands, shingleSize, maxBucketSize) = meta
-    val stage = s"$indexPath/ingest_staging/$batchKey"
-    val sigs = Caches.track(
-      minhashSignatures(survivors, numHashes, shingleSize, textCol, idCol))
-    bandRows(sigs, bands, numHashes / bands, maxBucketSize)
-      .write.mode("overwrite").partitionBy("band").parquet(s"$stage/bands")
-    sigs.write.mode("overwrite").parquet(s"$stage/sigs")
-    moveKeyedFiles(s"$stage/sigs", IndexManifest.resolve(indexPath, "sigs"),
-      batchKey)
-    // band files sit one partition-dir deeper; move per band=N dir
-    val liveBands = IndexManifest.resolve(indexPath, "bands")
-    listDirs(s"$stage/bands", "band=").foreach { d =>
-      moveKeyedFiles(s"$stage/bands/$d", s"$liveBands/$d", batchKey)
-    }
-    graft.core.SidecarFs.deleteTree(stage)
-  }
-
   private[llm] def listDirs(root: String, prefix: String): Seq[String] =
-    graft.core.SidecarFs.listNames(root).filter(_.startsWith(prefix))
-
-  private[llm] def clearKeyedFiles(dir: String, batchKey: String): Unit =
-    graft.core.SidecarFs.listNames(dir)
-      .filter(_.startsWith(s"ingest-$batchKey-"))
-      .foreach(f => graft.core.SidecarFs.deleteFile(s"$dir/$f"))
-
-  /** Move the parquet part-files of `srcDir` into `dstDir` under
-    * deterministic `ingest-<key>-<i>.parquet` names (sorted source
-    * order → stable numbering). */
-  private[llm] def moveKeyedFiles(srcDir: String, dstDir: String,
-                             batchKey: String): Unit = {
-    graft.core.SidecarFs.mkdirs(dstDir)
-    val parts = graft.core.SidecarFs.listNames(srcDir)
-      .filter(_.endsWith(".parquet")).sorted
-    parts.zipWithIndex.foreach { case (f, i) =>
-      graft.core.SidecarFs.renameOverwrite(s"$srcDir/$f",
-        s"$dstDir/ingest-$batchKey-$i.parquet")
-    }
-  }
+    SidecarFs.listNames(root).filter(_.startsWith(prefix))
 
   /** COMPACT a persisted MinHash index ([[writeMinhashIndex]]) after many
     * appends: each [[appendToMinhashIndex]] lands one more file set per
@@ -968,51 +785,47 @@ object Dedup {
     * representative survives, as at write time). Cost is one linear
     * pass over the index — the deliberate amortization trade.
     *
-    * Publication is a MANIFEST POINTER write ([[IndexManifest]]): the
-    * consolidated copy lands in a fresh immutable version dir and one
-    * atomic `current` replace makes it live — no rename window with a
-    * missing subdir, object-store expressible, and a reader that
-    * resolved just before the swap finishes against the retained prior
-    * version. */
+    * A maintenance pass ([[IndexLifecycle.maintain]]): pending
+    * tombstones are consumed, and both tiers publish in one manifest
+    * write. */
   def compactMinhashIndex(spark: org.apache.spark.sql.SparkSession,
-                          indexPath: String): Unit = {
-    requireNoUncommittedIngest(indexPath, ingestKeyedDirs(indexPath))
-    // consume pending tombstones: snapshot the request dirs, fold the
-    // ids into the rewrite's filters, clear exactly the snapshot after
-    // publish (a crash in between re-applies idempotent tombstones)
-    val tombDirs = tombstoneDirs(indexPath)
-    val (_, _, _, cap) = readMinhashIndexMeta(spark, indexPath)
-    val w = org.apache.spark.sql.expressions.Window
-      .partitionBy(col("band"), col("bucket"))
-    val bands = exceptTombstoned(spark, indexPath,
-      Stored.read(spark, IndexManifest.resolve(indexPath, "bands"))
-      .select(col("band").cast("int").as("band"), col("bucket"),
-        col("hist_id")), "hist_id")
-      // ONE exchange, not three (r16, guide §2.4 — the bandRows
-      // discipline): the range repartition moves first and co-locates
-      // equal (band, bucket) keys, so the dedup aggregates one-phase
-      // and the hot-bucket window runs exchange-free on the same
-      // shuffle that lays the files out
-      .repartitionByRange(col("band"), col("bucket"))
-      .distinct()
-      .withColumn("bsz", count(lit(1)).over(w))
-      .withColumn("rep", min(col("hist_id")).over(w))
-      .filter(col("bsz") <= cap || col("hist_id") === col("rep"))
-      .select(col("band"), col("bucket"), col("hist_id"))
-      .sortWithinPartitions(col("band"), col("bucket"))
-    val bandsV = IndexManifest.nextVersionDir(indexPath, "bands")
-    Stored.write(bands, s"$indexPath/$bandsV", "band")
-    val sigs = exceptTombstoned(spark, indexPath,
-      Stored.read(spark, IndexManifest.resolve(indexPath, "sigs")), "doc_id")
-      .distinct()
-      .coalesce(math.max(1, spark.sparkContext.defaultParallelism / 4))
-    val sigsV = IndexManifest.nextVersionDir(indexPath, "sigs")
-    Stored.write(sigs, s"$indexPath/$sigsV")
-    IndexManifest.publish(indexPath, "bands", bandsV)
-    IndexManifest.publish(indexPath, "sigs", sigsV)
-    clearTombstones(tombDirs)
-    pruneCommitMarkers(indexPath)
-  }
+                          indexPath: String): Unit =
+    rewriteMinhash(spark, Manifest.snapshot(indexPath), None)
+
+  /** The MinHash maintenance pass: both tiers rewritten without the
+    * pass's deletion set. The compaction (no `ids`) also collapses
+    * duplicate rows and re-applies the global hot-bucket cap; a delete
+    * does neither. */
+  private def rewriteMinhash(spark: org.apache.spark.sql.SparkSession,
+                             snap: Manifest.Snapshot,
+                             ids: Option[DataFrame]): Unit =
+    IndexLifecycle.maintain(spark, snap, ids) { p =>
+      val bands = p.except(p.read("bands")
+        .select(col("band").cast("int").as("band"), col("bucket"),
+          col("hist_id")), "hist_id")
+        // ONE exchange, not three (r16, guide §2.4 — the bandRows
+        // discipline): the range repartition moves first and co-locates
+        // equal (band, bucket) keys, so the dedup aggregates one-phase
+        // and the hot-bucket window runs exchange-free on the same
+        // shuffle that lays the files out
+        .repartitionByRange(col("band"), col("bucket"))
+      val capped = if (ids.nonEmpty) bands else {
+        val (_, _, _, cap) = readMinhashIndexMeta(spark, snap.root)
+        val w = org.apache.spark.sql.expressions.Window
+          .partitionBy(col("band"), col("bucket"))
+        bands.distinct()
+          .withColumn("bsz", count(lit(1)).over(w))
+          .withColumn("rep", min(col("hist_id")).over(w))
+          .filter(col("bsz") <= cap || col("hist_id") === col("rep"))
+          .select(col("band"), col("bucket"), col("hist_id"))
+      }
+      p.write("bands",
+        capped.sortWithinPartitions(col("band"), col("bucket")), "band")
+      val sigs = p.except(p.read("sigs"), "doc_id")
+      p.write("sigs", (if (ids.nonEmpty) sigs else sigs.distinct())
+        .coalesce(math.max(1, spark.sparkContext.defaultParallelism / 4)))
+      true
+    }
 
   /** Max live parquet-file count across one partition level's dirs —
     * the small-files-decay measure both `IfNeeded` compactors read
@@ -1021,7 +834,7 @@ object Dedup {
     val dirs = listDirs(root, prefix)
     if (dirs.isEmpty) 0
     else dirs.map { d =>
-      graft.core.SidecarFs.listNames(s"$root/$d").count(_.endsWith(".parquet"))
+      SidecarFs.listNames(s"$root/$d").count(_.endsWith(".parquet"))
     }.max
   }
 
@@ -1040,15 +853,16 @@ object Dedup {
     // shared trip rule (backlogFilesMax > bar), so the two entry points
     // can never diverge (r16 review). This form also accepts bar 0
     // (force-trip, spec-pinned), which the gauge's micro-ratio cannot.
-    val decayed = backlogFilesMax(indexPath) > maxFilesPerBand
-    if (decayed) compactMinhashIndex(spark, indexPath)
+    val snap = Manifest.snapshot(indexPath)
+    val decayed = backlogFilesMax(snap) > maxFilesPerBand
+    if (decayed) rewriteMinhash(spark, snap, None)
     decayed
   }
 
   /** The one observable both compaction triggers read: max live
     * parquet-file count across the bands tier's band dirs. */
-  private def backlogFilesMax(indexPath: String): Int =
-    maxFilesPerDir(IndexManifest.resolve(indexPath, "bands"), "band=")
+  private def backlogFilesMax(snap: Manifest.Snapshot): Int =
+    maxFilesPerDir(snap.resolve("bands"), "band=")
 
   /** Small-files BACKLOG gauge of a persisted MinHash index — the dedup
     * member of the measured-maintenance family
@@ -1066,15 +880,19 @@ object Dedup {
   def minhashIndexBacklog(spark: org.apache.spark.sql.SparkSession,
                           indexPath: String,
                           maxFilesPerBand: Int = 16): DataFrame = {
-    require(maxFilesPerBand >= 1, "maxFilesPerBand must be >= 1")
     import spark.implicits._
-    val filesMax = backlogFilesMax(indexPath)
-    val pending = tombstoneDirs(indexPath).size
-    Seq((filesMax, maxFilesPerBand,
-        filesMax.toLong * 1000000L / maxFilesPerBand, pending.toLong,
-        filesMax > maxFilesPerBand))
+    Seq(backlog(Manifest.snapshot(indexPath), maxFilesPerBand))
       .toDF("files_max", "files_bar", "backlog_micro",
         "pending_tombstone_batches", "compact")
+  }
+
+  /** [[minhashIndexBacklog]]'s row from the call's snapshot. */
+  private def backlog(snap: Manifest.Snapshot, maxFilesPerBand: Int)
+      : (Int, Int, Long, Long, Boolean) = {
+    require(maxFilesPerBand >= 1, "maxFilesPerBand must be >= 1")
+    val filesMax = backlogFilesMax(snap)
+    (filesMax, maxFilesPerBand, filesMax.toLong * 1000000L / maxFilesPerBand,
+      tombstoneDirs(snap.root).size.toLong, filesMax > maxFilesPerBand)
   }
 
   /** Close the measured-maintenance loop for the MinHash index —
@@ -1090,13 +908,10 @@ object Dedup {
       spark: org.apache.spark.sql.SparkSession, indexPath: String,
       maxFilesPerBand: Int = 16): DataFrame = {
     import spark.implicits._
-    val g = minhashIndexBacklog(spark, indexPath, maxFilesPerBand)
-      .collect().head
-    val trip = g.getAs[Boolean]("compact")
-    if (trip) compactMinhashIndex(spark, indexPath)
-    Seq((g.getAs[Int]("files_max"), g.getAs[Int]("files_bar"),
-        g.getAs[Long]("backlog_micro"),
-        g.getAs[Long]("pending_tombstone_batches"), trip, trip))
+    val snap = Manifest.snapshot(indexPath)
+    val (filesMax, bar, micro, pending, trip) = backlog(snap, maxFilesPerBand)
+    if (trip) rewriteMinhash(spark, snap, None)
+    Seq((filesMax, bar, micro, pending, trip, trip))
       .toDF("files_max", "files_bar", "backlog_micro",
         "pending_tombstone_batches", "compact", "compacted")
   }
@@ -1106,39 +921,18 @@ object Dedup {
     * remove a document's SIGNATURES, not just the corpus row: a banded
     * index otherwise keeps flagging new copies of deleted content
     * against phantom history). Rewrites both tiers without the deleted
-    * ids and publishes through the same atomic manifest-pointer swap as
-    * compaction, so an in-flight probe keeps reading the prior COMPLETE
-    * version and the layout contract (band partition dirs,
-    * range-distributed + bucket-sorted) is preserved.
+    * ids (and every pending tombstone) as one maintenance pass
+    * ([[IndexLifecycle.maintain]]), so an in-flight probe keeps reading
+    * the prior COMPLETE version and the layout contract (band partition
+    * dirs, range-distributed + bucket-sorted) is preserved.
     *
     * Scale shape: `ids` broadcasts into two anti-joins over one full
     * read/rewrite of the index — deletion costs one compaction, so
     * batch requests into one call (the published practice). O(index)
     * I/O, O(ids) driver-free state, no windows. */
   def deleteFromMinhashIndex(spark: org.apache.spark.sql.SparkSession,
-                             indexPath: String, ids: DataFrame): Unit = {
-    requireNoUncommittedIngest(indexPath, ingestKeyedDirs(indexPath))
-    // a full-rewrite pass consumes pending tombstones too (one
-    // maintenance rewrite, every standing request folded in)
-    val tombDirs = tombstoneDirs(indexPath)
-    val del = broadcast(unionTombstoned(spark, indexPath, ids))
-    val bands = Stored.read(spark, IndexManifest.resolve(indexPath, "bands"))
-      .select(col("band").cast("int").as("band"), col("bucket"),
-        col("hist_id"))
-      .join(del, col("hist_id").cast("string") === col("del_id"), "left_anti")
-      .repartitionByRange(col("band"), col("bucket"))
-      .sortWithinPartitions(col("band"), col("bucket"))
-    val bandsV = IndexManifest.nextVersionDir(indexPath, "bands")
-    Stored.write(bands, s"$indexPath/$bandsV", "band")
-    val sigs = Stored.read(spark, IndexManifest.resolve(indexPath, "sigs"))
-      .join(del, col("doc_id").cast("string") === col("del_id"), "left_anti")
-      .coalesce(math.max(1, spark.sparkContext.defaultParallelism / 4))
-    val sigsV = IndexManifest.nextVersionDir(indexPath, "sigs")
-    Stored.write(sigs, s"$indexPath/$sigsV")
-    IndexManifest.publish(indexPath, "bands", bandsV)
-    IndexManifest.publish(indexPath, "sigs", sigsV)
-    clearTombstones(tombDirs)
-  }
+                             indexPath: String, ids: DataFrame): Unit =
+    rewriteMinhash(spark, Manifest.snapshot(indexPath), Some(ids))
 
   /** Incremental dedup against a PERSISTED index ([[writeMinhashIndex]]):
     * signature + banding parameters come from the index's own meta, the
@@ -1150,29 +944,34 @@ object Dedup {
   def incrementalMinhashMatchesIndexed(batch: DataFrame, indexPath: String,
                                        textCol: String = "text",
                                        idCol: String = "doc_id"): DataFrame =
-    matchesIndexed(batch, indexPath,
+    matchesIndexed(batch, Manifest.snapshot(indexPath),
       readMinhashIndexMeta(batch.sparkSession, indexPath), textCol, idCol)
 
-  /** [[incrementalMinhashMatchesIndexed]] with the index's meta already
-    * read (the ingest loop reads it once for the match and the append). */
-  private def matchesIndexed(batch: DataFrame, indexPath: String,
+  /** [[incrementalMinhashMatchesIndexed]] against the call's snapshot,
+    * with the index's meta already read (the ingest loop reads it once
+    * for the match and the append). */
+  private def matchesIndexed(batch: DataFrame, snap: Manifest.Snapshot,
                              meta: (Int, Int, Int, Int), textCol: String,
                              idCol: String): DataFrame = {
-    val spark = batch.sparkSession
     val (numHashes, bands, shingleSize, _) = meta
-    // tombstoned history must not match (takedown during live ingest:
-    // new copies of deleted content are NOVEL again, immediately —
-    // consumption into the tiers happens at the next compaction)
-    val histBand = exceptTombstoned(spark, indexPath,
-      Stored.read(spark, IndexManifest.resolve(indexPath, "bands"))
-      .select(col("band").cast("int").as("band"), col("bucket"),
-        col("hist_id")), "hist_id")
-    val histSigs = exceptTombstoned(spark, indexPath,
-      Stored.read(spark, IndexManifest.resolve(indexPath, "sigs")), "doc_id")
+    val (histBand, histSigs) = historyTiers(batch.sparkSession, snap)
     val batchSigs = Caches.track(
       minhashSignatures(batch, numHashes, shingleSize, textCol, idCol))
     matchBatchBands(histBand, histSigs, batchSigs, numHashes, bands)
   }
+
+  /** The (band, bucket, hist_id) and (doc_id, sig) history tiers of the
+    * snapshot, pending tombstones excluded (takedown during live ingest:
+    * new copies of deleted content are NOVEL again, immediately —
+    * consumption into the tiers happens at the next compaction). */
+  private def historyTiers(spark: org.apache.spark.sql.SparkSession,
+                           snap: Manifest.Snapshot): (DataFrame, DataFrame) =
+    (exceptTombstoned(spark, snap.root,
+        Stored.read(spark, snap.resolve("bands"))
+          .select(col("band").cast("int").as("band"), col("bucket"),
+            col("hist_id")), "hist_id"),
+      exceptTombstoned(spark, snap.root,
+        Stored.read(spark, snap.resolve("sigs")), "doc_id"))
 
   /** STREAMING variant of [[incrementalMinhashMatchesIndexed]] — the
     * ingest front door: new documents arrive as a stream and are matched
@@ -1199,13 +998,8 @@ object Dedup {
     // pending tombstones filter the STATIC sides (resolved at plan
     // time — a stream picks up later tombstones on restart, same as it
     // picks up a new manifest version)
-    val histBand = exceptTombstoned(spark, indexPath,
-      Stored.read(spark, IndexManifest.resolve(indexPath, "bands"))
-      .select(col("band").cast("int").as("band"), col("bucket"),
-        col("hist_id")), "hist_id")
-    val histSigs = exceptTombstoned(spark, indexPath,
-      Stored.read(spark, IndexManifest.resolve(indexPath, "sigs")), "doc_id")
-      .select(col("doc_id").as("hist_id"), col("sig").as("sig2"))
+    val (histBand, sigs) = historyTiers(spark, Manifest.snapshot(indexPath))
+    val histSigs = sigs.select(col("doc_id").as("hist_id"), col("sig").as("sig2"))
     batchStream
       .select(col(idCol).as("batch_id"),
         minhashSignature(col(textCol), numHashes, shingleSize).as("sig1"))

@@ -6,6 +6,8 @@ import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.{LongType, StructType}
 import org.apache.spark.storage.StorageLevel
 
+import graft.core.{Manifest, SidecarFs, Stored}
+
 /** Graph-based approximate nearest neighbours — the published family the
   * IVF/PQ tier deliberately left out, re-expressed in its batch-appropriate
   * form: a k-NN GRAPH built by NN-Descent (Dong, Moses & Li, WWW 2011) and
@@ -400,71 +402,63 @@ object GraphAnn {
     * the raw embeddings), `path/graph` the NN-Descent edges, `path/entry`
     * the one-row md5-argmin entry point (fixed at build time, so a later
     * append can extend the graph without moving the entry). Versioned
-    * through [[IndexManifest]] like every other persisted index. */
+    * through [[IndexLifecycle]] like every other persisted index, and
+    * every tier carries its schema record ([[graft.core.Stored]]). */
   def writeKnnGraphIndex(corpus: DataFrame, path: String, k: Int,
                          rounds: Int, seed: Long = 42L,
                          vecCol: String = "embedding",
                          idCol: String = "vec_id"): Unit = {
-    IndexManifest.reset(path)
+    IndexLifecycle.reset(path)
     val spark = corpus.sparkSession
     // meta FIRST (r14 ADVICE: the old meta-last order left a crashed
     // build searchable but unmaintainable). seed/k/rounds are
     // derivation-free inputs; the shape counts are unknowable until the
-    // data tiers land, so they ride a preliminary -1 that the final
-    // versioned meta write below atomically replaces — a crash between
-    // the two leaves delete (seed present) working and health reporting
-    // rebuild-pressure (unknown anchor ⇒ rebuild), never a throw.
-    writeGraphMeta(spark, path, seed, k, rounds, -1L, -1L,
-      versioned = false)
+    // data tiers land, so they ride a preliminary -1 row in the plain
+    // dir that the final versioned meta write below atomically replaces
+    // — a crash between the two leaves delete (seed present) working and
+    // health reporting rebuild-pressure (unknown anchor ⇒ rebuild),
+    // never a throw.
+    Stored.write(graphMetaDf(spark, seed, k, rounds, -1L, -1L), s"$path/meta")
     // shape counts ride the tier writes as Observations (r16, guide
     // §1.4 discipline: zero extra passes) — the old read-back counts
     // were two additional jobs over files just written
     val obsCodes = org.apache.spark.sql.Observation("knn_graph_codes_n")
-    quantized(corpus, vecCol, idCol)
-      .observe(obsCodes, count(lit(1)).as("n"))
-      .write.mode("overwrite").parquet(s"$path/codes")
+    Stored.write(quantized(corpus, vecCol, idCol)
+      .observe(obsCodes, count(lit(1)).as("n")), s"$path/codes")
     // descend over the codes TIER just written: quantization still runs
     // exactly once (the write above), and the file-backed input is
     // eviction-immune with ZERO extra materialized copies — the
     // nnDescentFromCodes input-stability contract
-    val codes = spark.read.parquet(s"$path/codes")
+    val codes = Stored.read(spark, s"$path/codes")
     val graph = nnDescentFromCodes(codes, k, rounds, seed, idCol)
     val obsGraph = org.apache.spark.sql.Observation("knn_graph_edges_n")
-    graph.observe(obsGraph, count(lit(1)).as("n"))
-      .write.mode("overwrite").parquet(s"$path/graph")
-    codes
-      .orderBy(md5(concat(col("id").cast("string"), lit(s"|$seed"))),
-        col("id"))
-      .limit(1)
-      .select(col("id").as("cand_id"))
-      .coalesce(1).write.mode("overwrite").parquet(s"$path/entry")
+    Stored.write(graph.observe(obsGraph, count(lit(1)).as("n")),
+      s"$path/graph")
+    Stored.write(entryOf(codes, seed), s"$path/entry")
     // final meta with the build-time shape counts, published through
     // the versioned pointer (atomic replace of the preliminary row)
-    writeGraphMeta(spark, path, seed, k, rounds,
-      obsCodes.get("n").asInstanceOf[Long],
-      obsGraph.get("n").asInstanceOf[Long], versioned = true)
+    IndexLifecycle.publishVersion(path, "meta", graphMetaDf(spark, seed, k,
+      rounds, obsCodes.get("n").asInstanceOf[Long],
+      obsGraph.get("n").asInstanceOf[Long]))
   }
 
-  /** One meta row (seed, k, rounds, build_nodes, build_edges).
-    * `versioned = false` writes the plain dir (the pre-data
-    * preliminary row — nothing to replace atomically yet);
-    * `versioned = true` publishes through the [[IndexManifest]]
-    * pointer so the replacement is atomic against readers. */
-  private def writeGraphMeta(spark: SparkSession, path: String,
-                             seed: Long, k: Int, rounds: Int,
-                             nNodes: Long, nEdges: Long,
-                             versioned: Boolean): Unit = {
+  /** The one-row meta tier (seed, k, rounds, build_nodes, build_edges). */
+  private def graphMetaDf(spark: SparkSession, seed: Long, k: Int,
+                          rounds: Int, nNodes: Long, nEdges: Long): DataFrame = {
     import spark.implicits._
-    val df = Seq((seed, k, rounds, nNodes, nEdges))
+    Seq((seed, k, rounds, nNodes, nEdges))
       .toDF("seed", "k", "rounds", "build_nodes", "build_edges")
       .coalesce(1)
-    if (!versioned) df.write.mode("overwrite").parquet(s"$path/meta")
-    else {
-      val v = IndexManifest.nextVersionDir(path, "meta")
-      df.write.mode("overwrite").parquet(s"$path/$v")
-      IndexManifest.publish(path, "meta", v)
-    }
   }
+
+  /** The one-row entry tier: the md5-argmin of `id|seed` over `codes` —
+    * the build rule every maintenance pass re-derives an entry with. */
+  private def entryOf(codes: DataFrame, seed: Long): DataFrame =
+    codes
+      .orderBy(md5(concat(col("id").cast("string"), lit(s"|$seed"))), col("id"))
+      .limit(1)
+      .select(col("id").as("cand_id"))
+      .coalesce(1)
 
   /** The index's build-time meta row (seed, k, rounds, build_nodes,
     * build_edges), or None for an index that predates the meta tier or
@@ -473,11 +467,11 @@ object GraphAnn {
     * index stays maintainable (r14 ADVICE: the r14 shape broke
     * delete/health on every pre-meta index). */
   private[llm] def knnGraphMeta(spark: SparkSession,
-                                indexPath: String): Option[Row] = {
-    val p = IndexManifest.resolve(indexPath, "meta")
-    if (!graft.core.SidecarFs.exists(p)) None
+                                snap: Manifest.Snapshot): Option[Row] = {
+    val p = snap.resolve("meta")
+    if (!SidecarFs.exists(p)) None
     else {
-      val meta = spark.read.parquet(p).collect()
+      val meta = Stored.read(spark, p).collect()
       require(meta.length == 1,
         s"malformed knn-graph index meta at $p")
       Some(meta.head)
@@ -487,11 +481,11 @@ object GraphAnn {
   /** The build seed every maintenance pass re-derives entries with:
     * the meta tier's, or the documented [[writeKnnGraphIndex]] default
     * (42) with a loud warning for pre-meta indexes. */
-  private def graphSeedOf(spark: SparkSession, indexPath: String): Long =
-    knnGraphMeta(spark, indexPath) match {
+  private def graphSeedOf(spark: SparkSession, snap: Manifest.Snapshot): Long =
+    knnGraphMeta(spark, snap) match {
       case Some(m) => m.getAs[Long]("seed")
       case None =>
-        System.err.println(s"[graft] knn-graph index at $indexPath has " +
+        System.err.println(s"[graft] knn-graph index at ${snap.root} has " +
           "no meta tier (pre-meta layout or crashed build): falling " +
           "back to the default build seed 42 — if the index was built " +
           "with a custom seed, rebuild it to restore the meta anchor")
@@ -514,7 +508,7 @@ object GraphAnn {
     * Writes: codes gain the delta by plain parquet append (add-only);
     * the graph — whose affected rows must be REPLACED, not appended —
     * rewrites into a fresh `graph_vN` dir published by one atomic
-    * manifest-pointer write (the [[IndexManifest]] compaction pattern),
+    * manifest-pointer write ([[IndexLifecycle.publishVersion]]),
     * so a concurrent reader keeps a consistent prior version. The
     * rewrite is one linear pass; the re-rank work is bounded by the
     * affected nodes (≤ |delta|·k), never the corpus. */
@@ -523,13 +517,14 @@ object GraphAnn {
                             vecCol: String = "embedding",
                             idCol: String = "vec_id"): Unit = {
     val spark = delta.sparkSession
-    val codes = spark.read.parquet(IndexManifest.resolve(indexPath, "codes"))
-    val graph = spark.read.parquet(IndexManifest.resolve(indexPath, "graph"))
+    val snap = Manifest.snapshot(indexPath)
+    val codes = Stored.read(spark, snap.resolve("codes"))
+    val graph = Stored.read(spark, snap.resolve("graph"))
       .persist(StorageLevel.MEMORY_AND_DISK)
-    val entry = spark.read.parquet(IndexManifest.resolve(indexPath, "entry"))
+    val entry = Stored.read(spark, snap.resolve("entry"))
     // the index's k: from the meta tier (one KB-scale read); only a
     // pre-meta index pays the full-graph max-rank aggregate fallback
-    val k = knnGraphMeta(spark, indexPath) match {
+    val k = knnGraphMeta(spark, snap) match {
       case Some(m) => m.getAs[Int]("k")
       case None => graph.agg(max(col("rk"))).collect().head.getInt(0)
     }
@@ -554,12 +549,10 @@ object GraphAnn {
       .filter(col("rk") <= k)
       .select(col("src"), col("rk"), col("dst"), col("sim_key"))
     val untouched = graph.join(affected, Seq("src"), "left_anti")
-    val graphV = IndexManifest.nextVersionDir(indexPath, "graph")
-    untouched.unionByName(reRanked).unionByName(newOut)
-      .write.mode("overwrite").parquet(s"$indexPath/$graphV")
-    IndexManifest.publish(indexPath, "graph", graphV)
-    dCodes.write.mode("append")
-      .parquet(IndexManifest.resolve(indexPath, "codes"))
+    IndexLifecycle.publishVersion(indexPath, "graph",
+      untouched.unionByName(reRanked).unionByName(newOut))
+    // add-only, with the tier's own encoder: the record stays valid
+    dCodes.write.mode("append").parquet(snap.resolve("codes"))
     graph.unpersist(blocking = false)
     dCodes.unpersist(blocking = false)
     nbrs.unpersist(blocking = false)
@@ -579,9 +572,10 @@ object GraphAnn {
     * out-edges, AND every other node's edge LIST (a dangling dst would
     * keep routing walks toward — and surfacing — removed content).
     * Both per-document tiers rewrite via broadcast anti-joins (edges
-    * drop when EITHER endpoint is deleted) and publish through the
-    * manifest swap; if the entry point itself was deleted, a new one is
-    * re-derived from the surviving codes by the SAME md5-argmin rule —
+    * drop when EITHER endpoint is deleted) in one maintenance pass
+    * ([[IndexLifecycle.maintain]]); if the entry point itself was
+    * deleted, a new one is re-derived from the surviving codes by the
+    * SAME md5-argmin rule —
     * the build seed comes from the index's own meta tier (the no-drift
     * rule every reader and maintainer follows), never from the caller.
     * Surviving nodes whose lists shrank keep their remaining edges —
@@ -591,40 +585,20 @@ object GraphAnn {
     * (DESIGN.md §3). */
   def deleteFromKnnGraphIndex(spark: org.apache.spark.sql.SparkSession,
                               indexPath: String, ids: DataFrame): Unit = {
-    val seed = graphSeedOf(spark, indexPath)
-    Dedup.requireNoUncommittedIngest(indexPath,
-      Dedup.ingestKeyedDirs(indexPath))
-    val tombDirs = Dedup.tombstoneDirs(indexPath) // consumed below
-    val del = broadcast(Dedup.unionTombstoned(spark, indexPath, ids))
-    val codesV = IndexManifest.nextVersionDir(indexPath, "codes")
-    val survivors = spark.read
-      .parquet(IndexManifest.resolve(indexPath, "codes"))
-      .join(del, col("id").cast("string") === col("del_id"), "left_anti")
-      .persist(StorageLevel.MEMORY_AND_DISK)
-    survivors.write.mode("overwrite").parquet(s"$indexPath/$codesV")
-    val graphV = IndexManifest.nextVersionDir(indexPath, "graph")
-    spark.read.parquet(IndexManifest.resolve(indexPath, "graph"))
-      .join(del, col("src").cast("string") === col("del_id"), "left_anti")
-      .join(del, col("dst").cast("string") === col("del_id"), "left_anti")
-      .write.mode("overwrite").parquet(s"$indexPath/$graphV")
-    val entryDeleted = spark.read
-      .parquet(IndexManifest.resolve(indexPath, "entry"))
-      .join(del, col("cand_id").cast("string") === col("del_id"), "left_semi")
-      .limit(1).count() > 0
-    if (entryDeleted) {
-      val entryV = IndexManifest.nextVersionDir(indexPath, "entry")
-      survivors
-        .orderBy(md5(concat(col("id").cast("string"), lit(s"|$seed"))),
-          col("id"))
-        .limit(1)
-        .select(col("id").as("cand_id"))
-        .coalesce(1).write.mode("overwrite").parquet(s"$indexPath/$entryV")
-      IndexManifest.publish(indexPath, "entry", entryV)
+    val snap = Manifest.snapshot(indexPath)
+    val seed = graphSeedOf(spark, snap)
+    IndexLifecycle.maintain(spark, snap, Some(ids)) { p =>
+      val survivors = p.except(p.read("codes"), "id")
+        .persist(StorageLevel.MEMORY_AND_DISK)
+      p.write("codes", survivors)
+      p.write("graph", p.except(p.except(p.read("graph"), "src"), "dst"))
+      val entryDeleted = p.deletion.exists(del => p.read("entry")
+        .join(del, col("cand_id").cast("string") === col("del_id"), "left_semi")
+        .limit(1).count() > 0)
+      if (entryDeleted) p.write("entry", entryOf(survivors, seed))
+      survivors.unpersist(blocking = false)
+      true
     }
-    survivors.unpersist(blocking = false)
-    IndexManifest.publish(indexPath, "codes", codesV)
-    IndexManifest.publish(indexPath, "graph", graphV)
-    Dedup.clearTombstones(tombDirs)
   }
 
   /** Operational HEALTH of a persisted k-NN-graph index — the metric
@@ -651,42 +625,52 @@ object GraphAnn {
     * health_micro, entry_connected, rebuild). */
   def knnGraphIndexHealth(spark: SparkSession, indexPath: String,
                           minHealthMicro: Long = 800000L): DataFrame = {
+    import spark.implicits._
+    val snap = Manifest.snapshot(indexPath)
+    Seq(graphHealth(spark, snap, knnGraphMeta(spark, snap), minHealthMicro))
+      .toDF("build_nodes", "build_edges", "nodes", "edges",
+        "health_micro", "entry_connected", "rebuild")
+  }
+
+  /** Whether the codes and graph tiers exist: a build that crashed
+    * between the preliminary meta and the data tiers left neither. */
+  private def hasDataTiers(snap: Manifest.Snapshot): Boolean =
+    SidecarFs.exists(snap.resolve("codes")) &&
+      SidecarFs.exists(snap.resolve("graph"))
+
+  /** [[knnGraphIndexHealth]]'s row from the call's snapshot and its
+    * already-read meta. */
+  private def graphHealth(spark: SparkSession, snap: Manifest.Snapshot,
+                          meta: Option[Row], minHealthMicro: Long)
+      : (Long, Long, Long, Long, Long, Boolean, Boolean) = {
     require(minHealthMicro >= 0, "minHealthMicro must be >= 0")
     // no meta tier (pre-meta layout) or preliminary -1 counts (a build
     // that crashed between meta and the final count write): the anchor
     // is unknown, which is itself rebuild-pressure — report it
     // (health -1, rebuild) rather than throw (r14 ADVICE)
-    val meta = knnGraphMeta(spark, indexPath)
     val buildNodes = meta.map(_.getAs[Long]("build_nodes")).getOrElse(-1L)
     val buildEdges = meta.map(_.getAs[Long]("build_edges")).getOrElse(-1L)
     // a build that crashed between the preliminary meta and the data
     // tiers left no codes/graph to measure: report (-1, rebuild) — the
     // same report-never-crash degrade as the unknown anchor, and the
     // actuator's tier check turns the trip into a reported no-op
-    if (!(graft.core.SidecarFs.exists(
-          IndexManifest.resolve(indexPath, "codes")) &&
-        graft.core.SidecarFs.exists(
-          IndexManifest.resolve(indexPath, "graph")))) {
-      import spark.implicits._
-      return Seq((buildNodes, buildEdges, -1L, -1L, -1L, false, true))
-        .toDF("build_nodes", "build_edges", "nodes", "edges",
-          "health_micro", "entry_connected", "rebuild")
-    }
-    val codes = spark.read.parquet(IndexManifest.resolve(indexPath, "codes"))
-    val graph = spark.read.parquet(IndexManifest.resolve(indexPath, "graph"))
+    if (!hasDataTiers(snap))
+      return (buildNodes, buildEdges, -1L, -1L, -1L, false, true)
+    val codes = Stored.read(spark, snap.resolve("codes"))
+    val graph = Stored.read(spark, snap.resolve("graph"))
       .persist(StorageLevel.MEMORY_AND_DISK)
     val nNodes = codes.count()
     val nEdges = graph.count()
     // a FULLY-deleted index has an empty entry tier — exactly the
     // total-takedown state the gauge must report (health 0, rebuild),
     // never crash on
-    val entryP = IndexManifest.resolve(indexPath, "entry")
+    val entryP = snap.resolve("entry")
     // entry is written AFTER codes/graph: a crash in that window leaves
     // it missing — same degrade as an empty entry (disconnected ⇒
     // rebuild-pressure), never a throw
     val entryId =
-      if (!graft.core.SidecarFs.exists(entryP)) None
-      else spark.read.parquet(entryP)
+      if (!SidecarFs.exists(entryP)) None
+      else Stored.read(spark, entryP)
         .collect().headOption.map(_.getAs[Long]("cand_id"))
     val entryConnected = entryId.exists(id =>
       graph.filter(col("src") === id).limit(1).count() > 0)
@@ -697,11 +681,8 @@ object GraphAnn {
       else (BigInt(nEdges) * buildNodes * 1000000L /
         (BigInt(nNodes) * buildEdges)).toLong
     val rebuild = healthMicro < minHealthMicro || !entryConnected
-    import spark.implicits._
-    Seq((buildNodes, buildEdges, nNodes, nEdges, healthMicro,
-        entryConnected, rebuild))
-      .toDF("build_nodes", "build_edges", "nodes", "edges",
-        "health_micro", "entry_connected", "rebuild")
+    (buildNodes, buildEdges, nNodes, nEdges, healthMicro, entryConnected,
+      rebuild)
   }
 
   /** Close the measured-rebuild loop for the graph index
@@ -712,10 +693,11 @@ object GraphAnn {
     * NN-Descent over the SURVIVING stored codes (pending tombstones
     * folded out — a logically-deleted vector must not re-enter the
     * graph), re-derive the entry by the build rule, and publish codes +
-    * graph + entry + meta in ONE atomic manifest write. The new meta's
-    * anchor is the rebuilt shape, so health returns to ≈1e6 by
-    * construction. No trip ⇒ strictly a no-op (nothing written,
-    * manifest untouched — spec-pinned).
+    * graph + entry + meta in ONE maintenance pass
+    * ([[IndexLifecycle.maintain]]). The new meta's anchor is the rebuilt
+    * shape, so health returns to ≈1e6 by construction. No trip ⇒
+    * strictly a no-op (nothing written, manifest untouched —
+    * spec-pinned).
     *
     * Build parameters come from the index's own meta; a pre-meta index
     * rebuilds with k inferred from the stored graph's rank column,
@@ -733,89 +715,50 @@ object GraphAnn {
                                       minHealthMicro: Long = 800000L)
       : DataFrame = {
     import spark.implicits._
-    val gauge = knnGraphIndexHealth(spark, indexPath, minHealthMicro)
-      .collect().head
-    val trip = gauge.getAs[Boolean]("rebuild")
-    var rebuilt = trip
+    val snap = Manifest.snapshot(indexPath)
+    val meta = knnGraphMeta(spark, snap) // the gauge's and the rebuild's
+    val (buildNodes, buildEdges, nodes, edges, health, entryConnected, trip) =
+      graphHealth(spark, snap, meta, minHealthMicro)
     // meta-first write discipline means a build that crashed between
     // the preliminary meta and the data tiers leaves rebuild-pressure
     // with nothing to rebuild FROM — report, never crash mid-maintenance
     // (r15 advice; the Similarity actuators apply the same rule)
-    if (trip && !(graft.core.SidecarFs.exists(
-          IndexManifest.resolve(indexPath, "codes")) &&
-        graft.core.SidecarFs.exists(
-          IndexManifest.resolve(indexPath, "graph")))) {
-      rebuilt = false
-      return Seq((gauge.getAs[Long]("build_nodes"),
-          gauge.getAs[Long]("build_edges"), gauge.getAs[Long]("nodes"),
-          gauge.getAs[Long]("edges"), gauge.getAs[Long]("health_micro"),
-          gauge.getAs[Boolean]("entry_connected"), trip, rebuilt))
-        .toDF("build_nodes", "build_edges", "nodes", "edges",
-          "health_micro", "entry_connected", "rebuild", "rebuilt")
-    }
-    if (trip) {
-      Dedup.requireNoUncommittedIngest(indexPath,
-        Dedup.ingestKeyedDirs(indexPath))
-      val tombDirs = Dedup.tombstoneDirs(indexPath) // consumed below
-      val meta = knnGraphMeta(spark, indexPath)
-      val seed = meta.map(_.getAs[Long]("seed")).getOrElse(42L)
-      val storedGraph = spark.read
-        .parquet(IndexManifest.resolve(indexPath, "graph"))
-      val k = meta.map(_.getAs[Int]("k")).getOrElse(
-        // pre-meta index: infer k from the stored ranks; an EMPTY graph
-        // tier (everything hard-deleted) aggregates to null — default,
-        // don't NPE (the r15 review's finding)
-        Option(storedGraph.agg(max(col("rk"))).collect().head.get(0))
-          .map(_.asInstanceOf[Int]).getOrElse(16))
-      val rounds = meta.map(_.getAs[Int]("rounds")).getOrElse(6)
-      // materialize the survivors ONCE as the new (unpublished) codes
-      // version, then build everything downstream from that dir — the
-      // anti-join runs once, and graph/entry/counts read parquet
-      val codesV = IndexManifest.nextVersionDir(indexPath, "codes")
-      Dedup.exceptTombstoned(spark, indexPath,
-          spark.read.parquet(IndexManifest.resolve(indexPath, "codes")),
-          "id")
-        .write.mode("overwrite").parquet(s"$indexPath/$codesV")
-      val survivors = spark.read.parquet(s"$indexPath/$codesV")
-        .persist(StorageLevel.MEMORY_AND_DISK)
-      if (survivors.count() == 0L) {
+    val rebuilt = trip && hasDataTiers(snap) &&
+      IndexLifecycle.maintain(spark, snap) { p =>
+        val seed = meta.map(_.getAs[Long]("seed")).getOrElse(42L)
+        val k = meta.map(_.getAs[Int]("k")).getOrElse(
+          // pre-meta index: infer k from the stored ranks; an EMPTY graph
+          // tier (everything hard-deleted) aggregates to null — default,
+          // don't NPE (the r15 review's finding)
+          Option(p.read("graph").agg(max(col("rk"))).collect().head.get(0))
+            .map(_.asInstanceOf[Int]).getOrElse(16))
+        val rounds = meta.map(_.getAs[Int]("rounds")).getOrElse(6)
+        // materialize the survivors ONCE as the new (unpublished) codes
+        // version, then build everything downstream from that dir — the
+        // anti-join runs once, and graph/entry/counts read parquet
+        val survivors = Stored.read(spark,
+            p.write("codes", p.except(p.read("codes"), "id")))
+          .persist(StorageLevel.MEMORY_AND_DISK)
         // a fully-deleted index has nothing to descend over: report
         // no-op rather than crash mid-maintenance (the health gauge
         // documents this exact state as report-never-crash); the
         // unpublished empty codes_vN is swept by the next publish
-        survivors.unpersist(blocking = false)
-        rebuilt = false
-      } else {
-      val graph = nnDescentFromCodes(survivors, k, rounds, seed)
-      val graphV = IndexManifest.nextVersionDir(indexPath, "graph")
-      val obsGraph = org.apache.spark.sql.Observation(
-        s"knn_rebuild_edges_$graphV")
-      graph.observe(obsGraph, count(lit(1)).as("n"))
-        .write.mode("overwrite").parquet(s"$indexPath/$graphV")
-      val entryV = IndexManifest.nextVersionDir(indexPath, "entry")
-      survivors
-        .orderBy(md5(concat(col("id").cast("string"), lit(s"|$seed"))),
-          col("id"))
-        .limit(1)
-        .select(col("id").as("cand_id"))
-        .coalesce(1).write.mode("overwrite").parquet(s"$indexPath/$entryV")
-      val (nNodes, nEdges) = (survivors.count(),
-        obsGraph.get("n").asInstanceOf[Long])
-      val metaV = IndexManifest.nextVersionDir(indexPath, "meta")
-      Seq((seed, k, rounds, nNodes, nEdges))
-        .toDF("seed", "k", "rounds", "build_nodes", "build_edges")
-        .coalesce(1).write.mode("overwrite").parquet(s"$indexPath/$metaV")
-      IndexManifest.publishAll(indexPath, Map(
-        "codes" -> codesV, "graph" -> graphV,
-        "entry" -> entryV, "meta" -> metaV))
-      Dedup.clearTombstones(tombDirs)
-      survivors.unpersist(blocking = false)
+        try {
+          val nNodes = survivors.count()
+          nNodes > 0L && {
+            val obsGraph = org.apache.spark.sql.Observation(
+              s"knn_rebuild_edges_${java.util.UUID.randomUUID()}")
+            p.write("graph", nnDescentFromCodes(survivors, k, rounds, seed)
+              .observe(obsGraph, count(lit(1)).as("n")))
+            p.write("entry", entryOf(survivors, seed))
+            p.write("meta", graphMetaDf(spark, seed, k, rounds, nNodes,
+              obsGraph.get("n").asInstanceOf[Long]))
+            true
+          }
+        } finally survivors.unpersist(blocking = false)
       }
-    }
-    Seq((gauge.getAs[Long]("build_nodes"), gauge.getAs[Long]("build_edges"),
-        gauge.getAs[Long]("nodes"), gauge.getAs[Long]("edges"),
-        gauge.getAs[Long]("health_micro"),
-        gauge.getAs[Boolean]("entry_connected"), trip, rebuilt))
+    Seq((buildNodes, buildEdges, nodes, edges, health, entryConnected, trip,
+        rebuilt))
       .toDF("build_nodes", "build_edges", "nodes", "edges",
         "health_micro", "entry_connected", "rebuild", "rebuilt")
   }
@@ -826,9 +769,10 @@ object GraphAnn {
                             idCol: String = "vec_id"): DataFrame = {
     import org.apache.spark.sql.expressions.Window
     val spark = queries.sparkSession
-    val codes = spark.read.parquet(IndexManifest.resolve(indexPath, "codes"))
-    val graph = spark.read.parquet(IndexManifest.resolve(indexPath, "graph"))
-    val entry = spark.read.parquet(IndexManifest.resolve(indexPath, "entry"))
+    val snap = Manifest.snapshot(indexPath)
+    val codes = Stored.read(spark, snap.resolve("codes"))
+    val graph = Stored.read(spark, snap.resolve("graph"))
+    val entry = Stored.read(spark, snap.resolve("entry"))
     val raw = beamSearchCore(codes, graph, entry,
       quantized(queries, vecCol, idCol), k, beam, steps)
     // tombstoned nodes (takedown during live ingest) still ROUTE — the
@@ -837,7 +781,7 @@ object GraphAnn {
     // structural cleanup (and tombstone consumption) is
     // deleteFromKnnGraphIndex's; knnGraphIndexHealth stays the
     // rebuild-pressure gauge.
-    Dedup.tombstoneIds(spark, indexPath) match {
+    Dedup.tombstoneIds(spark, Dedup.tombstoneDirs(indexPath)) match {
       case Some(t) =>
         raw.join(broadcast(t), raw("cand_id").cast("string") === t("del_id"),
           "left_anti")

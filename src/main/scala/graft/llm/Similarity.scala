@@ -3,7 +3,7 @@ package graft.llm
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 
-import graft.core.Stored
+import graft.core.{Manifest, SidecarFs, Stored}
 
 /** Similarity search over an `embedding: array<float>` column.
   *
@@ -273,8 +273,8 @@ object Similarity {
     * rows — the k-means contract), collected and then put in cell order
     * on the driver (a distributed sort of nlist rows costs jobs). */
   private def loadCentroids(spark: org.apache.spark.sql.SparkSession,
-                            indexPath: String): Array[Array[Double]] =
-    Stored.read(spark, IndexManifest.resolve(indexPath, "centroids"))
+                            snap: Manifest.Snapshot): Array[Array[Double]] =
+    Stored.read(spark, snap.resolve("centroids"))
       .collect()
       .sortBy(_.getAs[Int]("cell"))
       .map(_.getAs[scala.collection.Seq[Double]]("centroid").toArray)
@@ -333,7 +333,7 @@ object Similarity {
                     trainFraction: Double = 1.0): Unit = {
     val spark = corpus.sparkSession
     import spark.implicits._
-    IndexManifest.reset(path) // a fresh write supersedes any old manifest
+    IndexLifecycle.reset(path) // a fresh write supersedes any old manifest
     val centroids = Clustering.trainCentroids(
       corpus, idCol, vecCol, nlist, trainIters, trainFraction)
     // meta tier (the knnGraphIndexHealth discipline): preliminary row
@@ -345,23 +345,41 @@ object Similarity {
     // via an Observation ON the postings write itself (the d2 column is
     // computed, observed, then dropped before the files land) — ZERO
     // extra passes over the corpus.
-    Stored.write(Seq((nlist, -1L, -1L))
-      .toDF("nlist", "build_n", "build_dist_sum_micro").coalesce(1),
-      s"$path/meta")
+    Stored.write(ivfMetaDf(spark, nlist, -1L, -1L), s"$path/meta")
     Stored.write(centroidsDf(spark, centroids), s"$path/centroids")
-    val obs = org.apache.spark.sql.Observation("ivf_build_drift")
-    Stored.write(assignCells(corpus, centroids, vecCol, idCol)
+    val (buildN, buildSum) = writeAnchored(
+      assignCells(corpus, centroids, vecCol, idCol), centroids,
+      Stored.write(_, s"$path/postings", "cell"))
+    IndexLifecycle.publishVersion(path, "meta",
+      ivfMetaDf(spark, nlist, buildN, buildSum))
+  }
+
+  /** The one-row IVF meta tier: nlist and the drift anchor. */
+  private def ivfMetaDf(spark: org.apache.spark.sql.SparkSession, nlist: Int,
+                        buildN: Long, buildSum: Long): DataFrame = {
+    import spark.implicits._
+    Seq((nlist, buildN, buildSum))
+      .toDF("nlist", "build_n", "build_dist_sum_micro").coalesce(1)
+  }
+
+  /** Hand the cell-assigned `vectors` to `write`, observing the drift
+    * anchor ON that write (the d2 column is computed, observed, then
+    * dropped before the files land — zero extra passes). A plain
+    * partitioned write: repartitionByRange would re-execute the observed
+    * child for range sampling and double the anchor counts (caught by
+    * IndexHealthSpec). Returns (build_n, build_dist_sum_micro). */
+  private def writeAnchored(vectors: DataFrame,
+                            centroids: Array[Array[Double]],
+                            write: DataFrame => Unit): (Long, Long) = {
+    val obs = org.apache.spark.sql.Observation(
+      s"ivf_drift_anchor_${java.util.UUID.randomUUID()}")
+    write(vectors
       .withColumn("d2_micro", assignDistMicroCol(col("c_vec"), centroids))
       .observe(obs, sum(col("d2_micro")).as("s"), count(lit(1)).as("n"))
-      .drop("d2_micro"), s"$path/postings", "cell")
+      .drop("d2_micro"))
     val m = obs.get
-    val buildSum = m("s") match { case null => 0L; case v => v.asInstanceOf[Long] }
-    val buildN = m("n").asInstanceOf[Long]
-    val metaV = IndexManifest.nextVersionDir(path, "meta")
-    Stored.write(Seq((nlist, buildN, buildSum))
-      .toDF("nlist", "build_n", "build_dist_sum_micro").coalesce(1),
-      s"$path/$metaV")
-    IndexManifest.publish(path, "meta", metaV)
+    (m("n").asInstanceOf[Long],
+      m("s") match { case null => 0L; case v => v.asInstanceOf[Long] })
   }
 
   /** Per-row exact integer drift ingredient: the squared distance to
@@ -408,24 +426,24 @@ object Similarity {
                     maxDriftMicro: Long = 1250000L): DataFrame = {
     require(maxDriftMicro >= 0, "maxDriftMicro must be >= 0")
     import spark.implicits._
-    Seq(ivfDrift(spark, indexPath, ivfMetaRow(spark, indexPath),
-        maxDriftMicro))
+    val snap = Manifest.snapshot(indexPath)
+    Seq(ivfDrift(spark, snap, metaRow(spark, snap, "meta"), maxDriftMicro))
       .toDF("build_n", "n", "drift_micro", "rebuild")
   }
 
-  /** The one IVF meta row, manifest-resolved. */
-  private def ivfMetaRow(spark: org.apache.spark.sql.SparkSession,
-                         indexPath: String): org.apache.spark.sql.Row = {
-    val meta = Stored.read(spark, IndexManifest.resolve(indexPath, "meta"))
-      .collect()
-    require(meta.length == 1, s"malformed IVF index meta at $indexPath/meta")
+  /** The one row of meta tier `name` (IVF `meta`, IVF-PQ `pq_meta`). */
+  private def metaRow(spark: org.apache.spark.sql.SparkSession,
+                      snap: Manifest.Snapshot,
+                      name: String): org.apache.spark.sql.Row = {
+    val meta = Stored.read(spark, snap.resolve(name)).collect()
+    require(meta.length == 1, s"malformed index meta at ${snap.root}/$name")
     meta.head
   }
 
   /** [[ivfIndexDrift]]'s (build_n, n, drift_micro, rebuild) from an
     * already-read meta row. */
   private def ivfDrift(spark: org.apache.spark.sql.SparkSession,
-                       indexPath: String, meta: org.apache.spark.sql.Row,
+                       snap: Manifest.Snapshot, meta: org.apache.spark.sql.Row,
                        maxDriftMicro: Long): (Long, Long, Long, Boolean) = {
     val buildN = meta.getAs[Long]("build_n")
     val buildSum = meta.getAs[Long]("build_dist_sum_micro")
@@ -438,10 +456,9 @@ object Similarity {
     // the compaction that will drop them): logically-deleted far-out
     // vectors must not trigger a needless rebuild
     val (curSum, curN) = assignDistMicro(
-      Dedup.exceptTombstoned(spark, indexPath,
-        Stored.read(spark, IndexManifest.resolve(indexPath, "postings")),
-        "cand_id"),
-      loadCentroids(spark, indexPath))
+      Dedup.exceptTombstoned(spark, snap.root,
+        Stored.read(spark, snap.resolve("postings")), "cand_id"),
+      loadCentroids(spark, snap))
     driftRatio(buildN, buildSum, curN, curSum, maxDriftMicro)
   }
 
@@ -470,7 +487,7 @@ object Similarity {
     * postings (pending tombstones folded out first — logically-deleted
     * vectors must not vote on centroids), re-assign every surviving
     * vector, and publish centroids + postings + meta in ONE atomic
-    * manifest write ([[IndexManifest.publishAll]] — a reader resolving
+    * manifest write (an [[IndexLifecycle.maintain]] pass — a reader resolving
     * mid-rebuild must never route new-quantizer cells against old
     * postings). The new meta carries the retrained build anchor, so the
     * gauge returns to ≈1e6 by construction and the next drift episode
@@ -495,66 +512,41 @@ object Similarity {
                                trainFraction: Double = 1.0): DataFrame = {
     require(maxDriftMicro >= 0, "maxDriftMicro must be >= 0")
     import spark.implicits._
-    val meta = ivfMetaRow(spark, indexPath) // the gauge's and the rebuild's
+    val snap = Manifest.snapshot(indexPath)
+    val meta = metaRow(spark, snap, "meta") // the gauge's and the rebuild's
     val (gaugeN, gaugeCurN, gaugeDrift, trip) =
-      ivfDrift(spark, indexPath, meta, maxDriftMicro)
-    def report(rebuilt: Boolean): DataFrame =
-      Seq((gaugeN, gaugeCurN, gaugeDrift, trip, rebuilt))
-        .toDF("build_n", "n", "drift_micro", "rebuild", "rebuilt")
+      ivfDrift(spark, snap, meta, maxDriftMicro)
     // a -1 anchor can mean a build that crashed BEFORE its data tiers
     // landed: the gauge correctly reports rebuild-pressure, but there
     // is nothing to rebuild FROM — report, never crash mid-maintenance
     // (r15 advice; the report-never-crash contract)
-    if (trip && !graft.core.SidecarFs.exists(
-        IndexManifest.resolve(indexPath, "postings")))
-      return report(rebuilt = false)
-    if (trip) {
-      Dedup.requireNoUncommittedIngest(indexPath,
-        Dedup.ingestKeyedDirs(indexPath))
-      val tombDirs = Dedup.tombstoneDirs(indexPath) // consumed below
-      val nlist = meta.getAs[Int]("nlist")
-      val survivors = Dedup.exceptTombstoned(spark, indexPath,
-          Stored.read(spark, IndexManifest.resolve(indexPath, "postings"))
-            .select(col("cand_id"), col("c_vec")), "cand_id")
-        .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-      if (survivors.count() == 0L) {
-        // nothing to retrain from (total takedown): report no-op, never
-        // crash mid-maintenance (the graph-rebuild rule)
-        survivors.unpersist(blocking = false)
-        return report(rebuilt = false)
+    val rebuilt = trip && SidecarFs.exists(snap.resolve("postings")) &&
+      IndexLifecycle.maintain(spark, snap) { p =>
+        val nlist = meta.getAs[Int]("nlist")
+        retrainOn(p.except(p.read("postings")
+            .select(col("cand_id"), col("c_vec")), "cand_id")) { survivors =>
+          val centroids = Clustering.trainCentroids(
+            survivors, "cand_id", "c_vec", nlist, trainIters, trainFraction)
+          p.write("centroids", centroidsDf(spark, centroids))
+          // the re-assignment pass doubles as the NEW build anchor
+          val (buildN, buildSum) = writeAnchored(
+            assignCells(survivors, centroids, "c_vec", "cand_id"), centroids,
+            p.write("postings", _, "cell"))
+          p.write("meta", ivfMetaDf(spark, nlist, buildN, buildSum))
+        }
       }
-      val centroids = Clustering.trainCentroids(
-        survivors, "cand_id", "c_vec", nlist, trainIters, trainFraction)
-      val centV = IndexManifest.nextVersionDir(indexPath, "centroids")
-      Stored.write(centroidsDf(spark, centroids), s"$indexPath/$centV")
-      // re-assignment pass doubles as the NEW build anchor (the
-      // writeIvfIndex Observation trick — zero extra scans)
-      val postV = IndexManifest.nextVersionDir(indexPath, "postings")
-      // plain partitioned write, like writeIvfIndex: repartitionByRange
-      // would re-execute the observed child for range sampling and
-      // double the anchor counts (caught by IndexHealthSpec)
-      val obs = org.apache.spark.sql.Observation(
-        s"ivf_rebuild_drift_$postV")
-      Stored.write(assignCells(survivors, centroids, "c_vec", "cand_id")
-        .withColumn("d2_micro", assignDistMicroCol(col("c_vec"), centroids))
-        .observe(obs, sum(col("d2_micro")).as("s"), count(lit(1)).as("n"))
-        .drop("d2_micro"), s"$indexPath/$postV", "cell")
-      val m = obs.get
-      val buildSum = m("s") match {
-        case null => 0L; case v => v.asInstanceOf[Long]
-      }
-      val buildN = m("n").asInstanceOf[Long]
-      val metaV = IndexManifest.nextVersionDir(indexPath, "meta")
-      Stored.write(Seq((nlist, buildN, buildSum))
-        .toDF("nlist", "build_n", "build_dist_sum_micro").coalesce(1),
-        s"$indexPath/$metaV")
-      IndexManifest.publishAll(indexPath, Map(
-        "centroids" -> centV, "postings" -> postV, "meta" -> metaV))
-      Dedup.clearTombstones(tombDirs)
-      Dedup.pruneCommitMarkers(indexPath)
-      survivors.unpersist(blocking = false)
-    }
-    report(rebuilt = trip)
+    Seq((gaugeN, gaugeCurN, gaugeDrift, trip, rebuilt))
+      .toDF("build_n", "n", "drift_micro", "rebuild", "rebuilt")
+  }
+
+  /** Run a rebuild `body` over the persisted `survivors` (the pass's
+    * surviving raw vectors); false, with nothing written, when there are
+    * none (nothing to retrain from after a total takedown: a reported
+    * no-op, never a mid-maintenance crash). */
+  private def retrainOn(survivors: DataFrame)(body: DataFrame => Unit): Boolean = {
+    val kept = survivors.persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+    try kept.count() > 0L && { body(kept); true }
+    finally kept.unpersist(blocking = false)
   }
 
   /** APPEND new vectors to a persisted IVF index ([[writeIvfIndex]]) —
@@ -569,69 +561,60 @@ object Similarity {
     * incidentally. */
   def appendToIvfIndex(delta: DataFrame, indexPath: String,
                        vecCol: String = "embedding",
-                       idCol: String = "vec_id"): Unit =
-    assignCells(delta, loadCentroids(delta.sparkSession, indexPath),
-        vecCol, idCol)
+                       idCol: String = "vec_id"): Unit = {
+    val snap = Manifest.snapshot(indexPath)
+    assignCells(delta, loadCentroids(delta.sparkSession, snap), vecCol, idCol)
       .write.mode("append").partitionBy("cell")
-      .parquet(IndexManifest.resolve(indexPath, "postings"))
+      .parquet(snap.resolve("postings"))
+  }
 
   /** COMPACT a persisted IVF index after many appends — the same
-    * LSM/small-files decay (and the same manifest-pointer publication,
-    * [[IndexManifest]]) as [[Dedup.compactMinhashIndex]]: each append
-    * lands one more file set per touched cell dir; compaction rewrites
-    * the postings consolidated per cell into a fresh version dir and
-    * publishes it with one atomic pointer write. Centroids are
-    * untouched (KB-scale, never appended to); reader output is
-    * unchanged (spec-pinned). */
+    * LSM/small-files decay (and the same maintenance pass,
+    * [[IndexLifecycle.maintain]]) as [[Dedup.compactMinhashIndex]]: each
+    * append lands one more file set per touched cell dir; compaction
+    * rewrites the postings consolidated per cell into a fresh version
+    * dir and publishes it with one atomic pointer write, consuming
+    * pending tombstones. Centroids are untouched (KB-scale, never
+    * appended to); reader output is unchanged (spec-pinned). */
   def compactIvfIndex(spark: org.apache.spark.sql.SparkSession,
-                      indexPath: String): Unit = {
-    Dedup.requireNoUncommittedIngest(indexPath,
-      Dedup.ingestKeyedDirs(indexPath))
-    val tombDirs = Dedup.tombstoneDirs(indexPath) // consumed below
-    val postings = Dedup.exceptTombstoned(spark, indexPath,
-      Stored.read(spark, IndexManifest.resolve(indexPath, "postings"))
-      .select(col("cell").cast("int").as("cell"), col("cand_id"),
-        col("c_vec"), col("c_norm")), "cand_id")
-      .repartition(col("cell"))
-      .sortWithinPartitions(col("cell"), col("cand_id"))
-    val postingsV = IndexManifest.nextVersionDir(indexPath, "postings")
-    Stored.write(postings, s"$indexPath/$postingsV", "cell")
-    IndexManifest.publish(indexPath, "postings", postingsV)
-    Dedup.clearTombstones(tombDirs)
-    Dedup.pruneCommitMarkers(indexPath)
-  }
+                      indexPath: String): Unit =
+    rewriteIvf(spark, Manifest.snapshot(indexPath), None)
 
   /** Delete vectors from a persisted IVF index — the ANN mirror of
     * [[Dedup.deleteFromMinhashIndex]] (a takedown must remove the
     * POSTINGS, or probes keep surfacing deleted content as neighbors):
     * one broadcast anti-join over a full postings rewrite preserving
-    * the cell layout (partition dirs, cell-clustered + id-sorted; hash
-    * repartition, not range — range SAMPLING re-executes the whole
-    * scan+anti-join child once more, and cell pruning is directory-
-    * level so range order buys nothing, guide §2.4/r17),
-    * published through the same atomic manifest-pointer swap — an
-    * in-flight probe keeps reading the prior COMPLETE version. The
-    * quantizer tiers (centroids/codebooks) are FROZEN model state with
-    * no per-document rows, so they carry nothing to delete. O(index)
-    * I/O = one compaction; batch requests into one call. */
+    * the cell layout ([[rewriteCells]]), published by the same
+    * maintenance pass — an in-flight probe keeps reading the prior
+    * COMPLETE version. The quantizer tiers (centroids/codebooks) are
+    * FROZEN model state with no per-document rows, so they carry nothing
+    * to delete. O(index) I/O = one compaction; batch requests into one
+    * call. */
   def deleteFromIvfIndex(spark: org.apache.spark.sql.SparkSession,
-                         indexPath: String, ids: DataFrame): Unit = {
-    Dedup.requireNoUncommittedIngest(indexPath,
-      Dedup.ingestKeyedDirs(indexPath))
-    val tombDirs = Dedup.tombstoneDirs(indexPath)
-    val del = broadcast(Dedup.unionTombstoned(spark, indexPath, ids))
-    val postings = Stored.read(spark,
-        IndexManifest.resolve(indexPath, "postings"))
-      .select(col("cell").cast("int").as("cell"), col("cand_id"),
-        col("c_vec"), col("c_norm"))
-      .join(del, col("cand_id").cast("string") === col("del_id"), "left_anti")
+                         indexPath: String, ids: DataFrame): Unit =
+    rewriteIvf(spark, Manifest.snapshot(indexPath), Some(ids))
+
+  /** The IVF maintenance pass: the postings without the deletion set. */
+  private def rewriteIvf(spark: org.apache.spark.sql.SparkSession,
+                         snap: Manifest.Snapshot, ids: Option[DataFrame]): Unit =
+    IndexLifecycle.maintain(spark, snap, ids) { p =>
+      rewriteCells(p, "postings", "c_vec")
+      true
+    }
+
+  /** Rewrite cell-partitioned tier `name` — (cell, cand_id, `payload`,
+    * c_norm) rows — without the pass's deletion set, cell-clustered and
+    * id-sorted in its cell partition dirs. Hash repartition, not range:
+    * range SAMPLING re-executes the whole scan+anti-join child once more,
+    * and cell pruning is directory-level, so range order buys nothing
+    * (guide §2.4/r17). */
+  private def rewriteCells(p: IndexLifecycle.Pass, name: String,
+                           payload: String): Unit =
+    p.write(name, p.except(p.read(name)
+        .select(col("cell").cast("int").as("cell"), col("cand_id"),
+          col(payload), col("c_norm")), "cand_id")
       .repartition(col("cell"))
-      .sortWithinPartitions(col("cell"), col("cand_id"))
-    val postingsV = IndexManifest.nextVersionDir(indexPath, "postings")
-    Stored.write(postings, s"$indexPath/$postingsV", "cell")
-    IndexManifest.publish(indexPath, "postings", postingsV)
-    Dedup.clearTombstones(tombDirs)
-  }
+      .sortWithinPartitions(col("cell"), col("cand_id")), "cell")
 
   /** One micro-batch of the CLOSED embedding ingest loop — the ANN
     * mirror of [[Dedup.ingestBatchIntoMinhashIndex]] and the streaming
@@ -641,44 +624,30 @@ object Similarity {
     * the survivors with the FROZEN quantizer so the next micro-batch
     * sees them as history, and record the batch as committed.
     *
-    * Same restart contract as the MinHash loop: a commit marker
-    * short-circuits fully-delivered batches; the append lands as a
-    * batch-keyed file set in the cell=N partition dirs (deterministic
-    * `ingest-<key>-i` names a re-execution replaces), and the batch's
-    * partial files are purged BEFORE matching so a survivor can never
-    * be flagged as its own duplicate. Single maintenance writer. */
+    * Same restart contract as the MinHash loop
+    * ([[IndexLifecycle.ingestKeyed]]): a commit marker short-circuits
+    * fully-delivered batches; the append lands as a batch-keyed file set
+    * in the cell=N partition dirs that a re-execution replaces, and the
+    * batch's partial files are purged BEFORE matching so a survivor can
+    * never be flagged as its own duplicate. Single maintenance writer. */
   def ingestBatchIntoIvfIndex(batch: DataFrame, indexPath: String,
                               batchKey: String, minCos: Double,
                               nprobe: Int = 4,
                               vecCol: String = "embedding",
-                              idCol: String = "vec_id"): Unit = {
-    val marker = s"$indexPath/ingest_commits/$batchKey"
-    if (graft.core.SidecarFs.exists(marker)) return // fully committed
-    val livePostings = IndexManifest.resolve(indexPath, "postings")
-    Dedup.listDirs(livePostings, "cell=").foreach(d =>
-      Dedup.clearKeyedFiles(s"$livePostings/$d", batchKey))
-    // the frozen quantizer, read once for the match and the append
-    val centroids = loadCentroids(batch.sparkSession, indexPath)
-    // scoped: the probe-table cache must not outlive the micro-batch
-    // (same unbounded-crawl argument as the MinHash loop)
-    Caches.scoped(batch.sparkSession) {
-      val dup = ivfTopKWith(batch, indexPath, centroids, k = 1,
+                              idCol: String = "vec_id"): Unit =
+    IndexLifecycle.ingestKeyed(batch.sparkSession, indexPath, batchKey,
+        Seq("postings" -> "cell=")) { (snap, stage) =>
+      // the frozen quantizer, read once for the match and the append
+      val centroids = loadCentroids(batch.sparkSession, snap)
+      val dup = ivfTopKWith(batch, snap, centroids, k = 1,
           nprobe = nprobe, vecCol = vecCol, idCol = idCol)
         .filter(col("cos_sim") >= minCos)
         .select(col("query_id")).distinct()
       val survivors = batch.join(dup, batch(idCol) === dup("query_id"),
         "left_anti")
-      val stage = s"$indexPath/ingest_staging/$batchKey"
       assignCells(survivors, centroids, vecCol, idCol)
-        .write.mode("overwrite").partitionBy("cell").parquet(stage)
-      Dedup.listDirs(stage, "cell=").foreach { d =>
-        Dedup.moveKeyedFiles(s"$stage/$d", s"$livePostings/$d", batchKey)
-      }
-      graft.core.SidecarFs.deleteTree(stage)
+        .write.mode("overwrite").partitionBy("cell").parquet(s"$stage/postings")
     }
-    graft.core.SidecarFs.mkdirs(s"$indexPath/ingest_commits")
-    graft.core.SidecarFs.createMarker(marker)
-  }
 
   /** Write the PERSISTED IVF-PQ index — the production FAISS artifact
     * shape (IVFPQ + refine tier) and the 100 TB memory cut the
@@ -711,7 +680,7 @@ object Similarity {
                       storeVectors: Boolean = true): Unit = {
     val spark = corpus.sparkSession
     import spark.implicits._
-    IndexManifest.reset(path) // a fresh write supersedes any old manifest
+    IndexLifecycle.reset(path) // a fresh write supersedes any old manifest
     val (cells, pq) = trainCoarseAndPq(corpus, nlist, m, ksub, trainIters,
       vecCol, idCol, trainFraction)
     Stored.write(centroidsDf(spark, cells), s"$path/centroids")
@@ -722,29 +691,29 @@ object Similarity {
     // ON the vectors write (zero extra passes). A vectors-less index
     // keeps the -1 sentinel: [[ivfPqIndexDrift]] requires the raw
     // tier anyway (codes alone cannot measure assignment distance).
-    def pqMetaDf(buildN: Long, buildSum: Long) =
-      Seq((pq.m, ksub, pq.dsub, storeVectors, nlist, buildN, buildSum))
-        .toDF("m", "ksub", "dsub", "has_vectors", "nlist",
-          "build_n", "build_dist_sum_micro")
-        .coalesce(1)
-    Stored.write(pqMetaDf(-1L, -1L), s"$path/pq_meta")
+    Stored.write(pqMetaDf(spark, pq, ksub, storeVectors, nlist, -1L, -1L),
+      s"$path/pq_meta")
     Stored.write(encodeIvfPq(corpus, cells, pq, vecCol, idCol).drop("cv"),
       s"$path/codes", "cell")
     if (storeVectors) {
-      val obs = org.apache.spark.sql.Observation("ivfpq_build_drift")
-      Stored.write(assignCells(corpus, cells, vecCol, idCol)
-        .withColumn("d2_micro", assignDistMicroCol(col("c_vec"), cells))
-        .observe(obs, sum(col("d2_micro")).as("s"), count(lit(1)).as("n"))
-        .drop("d2_micro"), s"$path/vectors", "cell")
-      val mm = obs.get
-      val buildSum = mm("s") match {
-        case null => 0L; case v => v.asInstanceOf[Long]
-      }
-      val metaV = IndexManifest.nextVersionDir(path, "pq_meta")
-      Stored.write(pqMetaDf(mm("n").asInstanceOf[Long], buildSum),
-        s"$path/$metaV")
-      IndexManifest.publish(path, "pq_meta", metaV)
+      val (buildN, buildSum) = writeAnchored(
+        assignCells(corpus, cells, vecCol, idCol), cells,
+        Stored.write(_, s"$path/vectors", "cell"))
+      IndexLifecycle.publishVersion(path, "pq_meta",
+        pqMetaDf(spark, pq, ksub, storeVectors, nlist, buildN, buildSum))
     }
+  }
+
+  /** The one-row IVF-PQ meta tier: the PQ shape, whether the refine
+    * tier is stored, nlist and the drift anchor. */
+  private def pqMetaDf(spark: org.apache.spark.sql.SparkSession, pq: Pq,
+                       ksub: Int, hasVectors: Boolean, nlist: Int,
+                       buildN: Long, buildSum: Long): DataFrame = {
+    import spark.implicits._
+    Seq((pq.m, ksub, pq.dsub, hasVectors, nlist, buildN, buildSum))
+      .toDF("m", "ksub", "dsub", "has_vectors", "nlist",
+        "build_n", "build_dist_sum_micro")
+      .coalesce(1)
   }
 
   /** Quantizer-DRIFT gauge of a persisted IVF-PQ index — the third
@@ -764,18 +733,18 @@ object Similarity {
                       maxDriftMicro: Long = 1250000L): DataFrame = {
     require(maxDriftMicro >= 0, "maxDriftMicro must be >= 0")
     import spark.implicits._
-    Seq(ivfPqDrift(spark, indexPath, pqMetaRow(spark, indexPath),
-        maxDriftMicro))
+    val snap = Manifest.snapshot(indexPath)
+    Seq(ivfPqDrift(spark, snap, metaRow(spark, snap, "pq_meta"), maxDriftMicro))
       .toDF("build_n", "n", "drift_micro", "rebuild")
   }
 
   /** [[ivfPqIndexDrift]]'s (build_n, n, drift_micro, rebuild) from an
     * already-read pq_meta row. */
   private def ivfPqDrift(spark: org.apache.spark.sql.SparkSession,
-                         indexPath: String, meta: org.apache.spark.sql.Row,
+                         snap: Manifest.Snapshot, meta: org.apache.spark.sql.Row,
                          maxDriftMicro: Long): (Long, Long, Long, Boolean) = {
     require(meta.getAs[Boolean]("has_vectors"),
-      s"index at $indexPath was written with storeVectors=false — " +
+      s"index at ${snap.root} was written with storeVectors=false — " +
         "the drift gauge measures the raw-vector tier; rebuild the " +
         "index with vectors to make it drift-gaugeable")
     // pq_meta written before the anchor columns existed (pre-r15 layout:
@@ -791,10 +760,9 @@ object Similarity {
         meta.getAs[Long]("build_dist_sum_micro") else -1L
     if (buildN < 0L || buildSum < 0L) return (buildN, -1L, -1L, true)
     val (curSum, curN) = assignDistMicro(
-      Dedup.exceptTombstoned(spark, indexPath,
-        Stored.read(spark, IndexManifest.resolve(indexPath, "vectors")),
-        "cand_id"),
-      loadCentroids(spark, indexPath))
+      Dedup.exceptTombstoned(spark, snap.root,
+        Stored.read(spark, snap.resolve("vectors")), "cand_id"),
+      loadCentroids(spark, snap))
     driftRatio(buildN, buildSum, curN, curSum, maxDriftMicro)
   }
 
@@ -816,96 +784,53 @@ object Similarity {
                                  trainFraction: Double = 1.0): DataFrame = {
     require(maxDriftMicro >= 0, "maxDriftMicro must be >= 0")
     import spark.implicits._
-    val meta = pqMetaRow(spark, indexPath) // the gauge's and the rebuild's
+    val snap = Manifest.snapshot(indexPath)
+    val meta = metaRow(spark, snap, "pq_meta") // the gauge's and the rebuild's
     val (gaugeN, gaugeCurN, gaugeDrift, trip) =
-      ivfPqDrift(spark, indexPath, meta, maxDriftMicro)
-    def report(rebuilt: Boolean): DataFrame =
-      Seq((gaugeN, gaugeCurN, gaugeDrift, trip, rebuilt))
-        .toDF("build_n", "n", "drift_micro", "rebuild", "rebuilt")
+      ivfPqDrift(spark, snap, meta, maxDriftMicro)
     // crashed-before-data-tiers build: rebuild-pressure with nothing to
     // rebuild from — report, never crash (the rebuildIvfIndexIfDrifted
     // rule)
-    if (trip && !graft.core.SidecarFs.exists(
-        IndexManifest.resolve(indexPath, "vectors")))
-      return report(rebuilt = false)
-    if (!trip) return report(rebuilt = false)
-    Dedup.requireNoUncommittedIngest(indexPath,
-      Dedup.ingestKeyedDirs(indexPath))
-    val tombDirs = Dedup.tombstoneDirs(indexPath) // consumed below
-    val m = meta.getAs[Int]("m")
-    val ksub = meta.getAs[Int]("ksub")
-    // pre-r15 pq_meta has no nlist column: infer it from the coarse
-    // quantizer itself (nlist IS the centroid count) instead of
-    // crashing a maintenance pass on an old index (r15 advice)
-    val nlist =
-      if (meta.schema.fieldNames.contains("nlist"))
-        meta.getAs[Int]("nlist")
-      else loadCentroids(spark, indexPath).length
-    val survivors = Dedup.exceptTombstoned(spark, indexPath,
-        Stored.read(spark, IndexManifest.resolve(indexPath, "vectors"))
-          .select(col("cand_id"), col("c_vec")), "cand_id")
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    if (survivors.count() == 0L) {
-      survivors.unpersist(blocking = false)
-      return report(rebuilt = false)
-    }
-    val (cells, pq) = trainCoarseAndPq(survivors, nlist, m, ksub,
-      trainIters, "c_vec", "cand_id", trainFraction)
-    val centV = IndexManifest.nextVersionDir(indexPath, "centroids")
-    Stored.write(centroidsDf(spark, cells), s"$indexPath/$centV")
-    val bookV = IndexManifest.nextVersionDir(indexPath, "codebooks")
-    Stored.write(codebooksDf(spark, pq), s"$indexPath/$bookV")
-    val codesV = IndexManifest.nextVersionDir(indexPath, "codes")
-    Stored.write(encodeIvfPq(survivors, cells, pq, "c_vec", "cand_id")
-      .drop("cv"), s"$indexPath/$codesV", "cell")
-    val vecsV = IndexManifest.nextVersionDir(indexPath, "vectors")
-    val obs = org.apache.spark.sql.Observation(
-      s"ivfpq_rebuild_drift_$vecsV")
-    // plain observed write (the repartitionByRange double-execution
-    // rule above)
-    Stored.write(assignCells(survivors, cells, "c_vec", "cand_id")
-      .withColumn("d2_micro", assignDistMicroCol(col("c_vec"), cells))
-      .observe(obs, sum(col("d2_micro")).as("s"), count(lit(1)).as("n"))
-      .drop("d2_micro"), s"$indexPath/$vecsV", "cell")
-    val mm = obs.get
-    val buildSum = mm("s") match {
-      case null => 0L; case v => v.asInstanceOf[Long]
-    }
-    val metaV = IndexManifest.nextVersionDir(indexPath, "pq_meta")
-    Stored.write(Seq((m, ksub, pq.dsub, true, nlist,
-        mm("n").asInstanceOf[Long], buildSum))
-      .toDF("m", "ksub", "dsub", "has_vectors", "nlist",
-        "build_n", "build_dist_sum_micro").coalesce(1),
-      s"$indexPath/$metaV")
-    IndexManifest.publishAll(indexPath, Map(
-      "centroids" -> centV, "codebooks" -> bookV,
-      "codes" -> codesV, "vectors" -> vecsV, "pq_meta" -> metaV))
-    Dedup.clearTombstones(tombDirs)
-    Dedup.pruneCommitMarkers(indexPath)
-    survivors.unpersist(blocking = false)
-    report(rebuilt = true)
-  }
-
-  /** One pq_meta row, manifest-resolved (a rebuild publishes versioned
-    * meta like every other tier). */
-  private def pqMetaRow(spark: org.apache.spark.sql.SparkSession,
-                        indexPath: String): org.apache.spark.sql.Row = {
-    val meta = Stored.read(spark, IndexManifest.resolve(indexPath, "pq_meta"))
-      .collect()
-    require(meta.length == 1, s"malformed pq_meta at $indexPath/pq_meta")
-    meta.head
+    val rebuilt = trip && SidecarFs.exists(snap.resolve("vectors")) &&
+      IndexLifecycle.maintain(spark, snap) { p =>
+        val m = meta.getAs[Int]("m")
+        val ksub = meta.getAs[Int]("ksub")
+        // pre-r15 pq_meta has no nlist column: infer it from the coarse
+        // quantizer itself (nlist IS the centroid count) instead of
+        // crashing a maintenance pass on an old index (r15 advice)
+        val nlist =
+          if (meta.schema.fieldNames.contains("nlist")) meta.getAs[Int]("nlist")
+          else loadCentroids(spark, snap).length
+        retrainOn(p.except(p.read("vectors")
+            .select(col("cand_id"), col("c_vec")), "cand_id")) { survivors =>
+          val (cells, pq) = trainCoarseAndPq(survivors, nlist, m, ksub,
+            trainIters, "c_vec", "cand_id", trainFraction)
+          p.write("centroids", centroidsDf(spark, cells))
+          p.write("codebooks", codebooksDf(spark, pq))
+          p.write("codes", encodeIvfPq(survivors, cells, pq, "c_vec", "cand_id")
+            .drop("cv"), "cell")
+          // the vectors re-write's Observation is the new anchor
+          val (buildN, buildSum) = writeAnchored(
+            assignCells(survivors, cells, "c_vec", "cand_id"), cells,
+            p.write("vectors", _, "cell"))
+          p.write("pq_meta",
+            pqMetaDf(spark, pq, ksub, hasVectors = true, nlist, buildN, buildSum))
+        }
+      }
+    Seq((gaugeN, gaugeCurN, gaugeDrift, trip, rebuilt))
+      .toDF("build_n", "n", "drift_micro", "rebuild", "rebuilt")
   }
 
   /** (PQ, has_vectors) reconstructed from a persisted index's
     * codebooks + meta — bounded driver state (m×ksub rows, KBs). */
   private def loadPq(spark: org.apache.spark.sql.SparkSession,
-                     indexPath: String): (Pq, Boolean) = {
-    val meta = pqMetaRow(spark, indexPath)
+                     snap: Manifest.Snapshot): (Pq, Boolean) = {
+    val meta = metaRow(spark, snap, "pq_meta")
     val m = meta.getAs[Int]("m")
     val ksub = meta.getAs[Int]("ksub")
     val dsub = meta.getAs[Int]("dsub")
     val books = Array.fill(m)(Array.ofDim[Array[Double]](ksub))
-    Stored.read(spark, IndexManifest.resolve(indexPath, "codebooks"))
+    Stored.read(spark, snap.resolve("codebooks"))
       .collect().foreach { r =>
         books(r.getAs[Int]("subspace"))(r.getAs[Int]("code")) =
           r.getAs[scala.collection.Seq[Double]]("centroid").toArray
@@ -923,15 +848,16 @@ object Similarity {
                          vecCol: String = "embedding",
                          idCol: String = "vec_id"): Unit = {
     val spark = delta.sparkSession
-    val cells = loadCentroids(spark, indexPath)
-    val (pq, hasVectors) = loadPq(spark, indexPath)
+    val snap = Manifest.snapshot(indexPath)
+    val cells = loadCentroids(spark, snap)
+    val (pq, hasVectors) = loadPq(spark, snap)
     encodeIvfPq(delta, cells, pq, vecCol, idCol).drop("cv")
       .write.mode("append").partitionBy("cell")
-      .parquet(IndexManifest.resolve(indexPath, "codes"))
+      .parquet(snap.resolve("codes"))
     if (hasVectors)
       assignCells(delta, cells, vecCol, idCol)
         .write.mode("append").partitionBy("cell")
-        .parquet(IndexManifest.resolve(indexPath, "vectors"))
+        .parquet(snap.resolve("vectors"))
   }
 
   /** One micro-batch of the CLOSED IVF-PQ ingest loop — the
@@ -941,133 +867,70 @@ object Similarity {
     * ADC-only otherwise), DROP vectors whose best match reaches
     * `minCos`, and append the survivors to BOTH tiers (codes always,
     * raw vectors when stored) with the FROZEN quantizer and codebooks.
-    * Restart safety is the shared keyed-file-set machinery: a commit
-    * marker short-circuits fully-delivered batches; appends land under
-    * deterministic `ingest-<key>-i` names per cell dir that a
-    * re-execution REPLACES; the batch's partial files are purged from
-    * both tiers BEFORE matching so a survivor can never be flagged as
-    * its own duplicate. On an ADC-only index `minCos` applies to the
-    * quantized ADC cosine (exact twins still score at the top — the
-    * query's own codes maximize its ADC). Single maintenance writer. */
+    * Restart safety is the shared keyed ingest
+    * ([[IndexLifecycle.ingestKeyed]]) over both tiers' cell dirs. On an
+    * ADC-only index `minCos` applies to the quantized ADC cosine (exact
+    * twins still score at the top — the query's own codes maximize its
+    * ADC). Single maintenance writer. */
   def ingestBatchIntoIvfPqIndex(batch: DataFrame, indexPath: String,
                                 batchKey: String, minCos: Double,
                                 nprobe: Int = 4, refine: Int = 4,
                                 vecCol: String = "embedding",
                                 idCol: String = "vec_id"): Unit = {
     val spark = batch.sparkSession
-    val marker = s"$indexPath/ingest_commits/$batchKey"
-    if (graft.core.SidecarFs.exists(marker)) return // fully committed
-    // the frozen model state, read once for the match and the append
-    val cells = loadCentroids(spark, indexPath)
-    val (pq, hasVectors) = loadPq(spark, indexPath)
-    val liveCodes = IndexManifest.resolve(indexPath, "codes")
-    val liveVecs = IndexManifest.resolve(indexPath, "vectors")
-    Dedup.listDirs(liveCodes, "cell=").foreach(d =>
-      Dedup.clearKeyedFiles(s"$liveCodes/$d", batchKey))
-    if (hasVectors)
-      Dedup.listDirs(liveVecs, "cell=").foreach(d =>
-        Dedup.clearKeyedFiles(s"$liveVecs/$d", batchKey))
-    Caches.scoped(spark) {
-      val dup = ivfPqTopKWith(batch, indexPath, cells, pq, hasVectors,
+    // an ADC-only index has no vectors dir: its purge and move are empty
+    IndexLifecycle.ingestKeyed(spark, indexPath, batchKey,
+        Seq("codes" -> "cell=", "vectors" -> "cell=")) { (snap, stage) =>
+      // the frozen model state, read once for the match and the append
+      val cells = loadCentroids(spark, snap)
+      val (pq, hasVectors) = loadPq(spark, snap)
+      val dup = ivfPqTopKWith(batch, snap, cells, pq, hasVectors,
           k = 1, nprobe = nprobe, refine = refine, vecCol = vecCol,
           idCol = idCol, adcOnly = !hasVectors)
         .filter(col("cos_sim") >= minCos)
         .select(col("query_id")).distinct()
       val survivors = batch.join(dup, batch(idCol) === dup("query_id"),
         "left_anti")
-      val stage = s"$indexPath/ingest_staging/$batchKey"
       encodeIvfPq(survivors, cells, pq, vecCol, idCol).drop("cv")
         .write.mode("overwrite").partitionBy("cell").parquet(s"$stage/codes")
-      Dedup.listDirs(s"$stage/codes", "cell=").foreach { d =>
-        Dedup.moveKeyedFiles(s"$stage/codes/$d", s"$liveCodes/$d", batchKey)
-      }
-      if (hasVectors) {
+      if (hasVectors)
         assignCells(survivors, cells, vecCol, idCol)
           .write.mode("overwrite").partitionBy("cell")
           .parquet(s"$stage/vectors")
-        Dedup.listDirs(s"$stage/vectors", "cell=").foreach { d =>
-          Dedup.moveKeyedFiles(s"$stage/vectors/$d", s"$liveVecs/$d", batchKey)
-        }
-      }
-      graft.core.SidecarFs.deleteTree(stage)
     }
-    graft.core.SidecarFs.mkdirs(s"$indexPath/ingest_commits")
-    graft.core.SidecarFs.createMarker(marker)
   }
 
   /** COMPACT a persisted IVF-PQ index: both tiers consolidate per cell
-    * into fresh version dirs published via [[IndexManifest]] (the
-    * [[compactIvfIndex]] machinery, twice). Shares the MinHash/IVF
-    * compactors' interlock: refuses while uncommitted ingest batches
-    * have live keyed files (absorbing them erases the keyed identity
-    * restart recovery depends on), and prunes retired commit markers
-    * afterwards. */
+    * ([[rewriteCells]]) into fresh version dirs, published together by
+    * one maintenance pass ([[IndexLifecycle.maintain]] — the MinHash/IVF
+    * compactors' interlock, tombstone consumption and commit-marker
+    * pruning). */
   def compactIvfPqIndex(spark: org.apache.spark.sql.SparkSession,
-                        indexPath: String): Unit = {
-    Dedup.requireNoUncommittedIngest(indexPath,
-      Dedup.ingestKeyedDirs(indexPath))
-    val tombDirs = Dedup.tombstoneDirs(indexPath) // consumed below
-    val codes = Dedup.exceptTombstoned(spark, indexPath,
-      Stored.read(spark, IndexManifest.resolve(indexPath, "codes"))
-      .select(col("cell").cast("int").as("cell"), col("cand_id"),
-        col("code"), col("c_norm")), "cand_id")
-      .repartition(col("cell"))
-      .sortWithinPartitions(col("cell"), col("cand_id"))
-    val codesV = IndexManifest.nextVersionDir(indexPath, "codes")
-    Stored.write(codes, s"$indexPath/$codesV", "cell")
-    IndexManifest.publish(indexPath, "codes", codesV)
-    if (pqMetaRow(spark, indexPath).getAs[Boolean]("has_vectors")) {
-      val vecs = Dedup.exceptTombstoned(spark, indexPath,
-        Stored.read(spark, IndexManifest.resolve(indexPath, "vectors"))
-        .select(col("cell").cast("int").as("cell"), col("cand_id"),
-          col("c_vec"), col("c_norm")), "cand_id")
-        .repartition(col("cell"))
-        .sortWithinPartitions(col("cell"), col("cand_id"))
-      val vecsV = IndexManifest.nextVersionDir(indexPath, "vectors")
-      Stored.write(vecs, s"$indexPath/$vecsV", "cell")
-      IndexManifest.publish(indexPath, "vectors", vecsV)
-    }
-    Dedup.clearTombstones(tombDirs)
-    Dedup.pruneCommitMarkers(indexPath)
-  }
+                        indexPath: String): Unit =
+    rewriteIvfPq(spark, Manifest.snapshot(indexPath), None)
 
   /** Delete vectors from a persisted IVF-PQ index — BOTH per-document
     * tiers rewrite (the ADC code postings AND, when stored, the raw
     * refine vectors; a takedown that left either tier would keep
     * surfacing deleted content in one scan mode). Same contract as
     * [[deleteFromIvfIndex]]: broadcast anti-joins, cell layout
-    * preserved, manifest-swap published; codebook/centroid tiers are
-    * frozen model state with nothing per-document. */
+    * preserved, one manifest swap; codebook/centroid tiers are frozen
+    * model state with nothing per-document. */
   def deleteFromIvfPqIndex(spark: org.apache.spark.sql.SparkSession,
-                           indexPath: String, ids: DataFrame): Unit = {
-    Dedup.requireNoUncommittedIngest(indexPath,
-      Dedup.ingestKeyedDirs(indexPath))
-    val tombDirs = Dedup.tombstoneDirs(indexPath)
-    val del = broadcast(Dedup.unionTombstoned(spark, indexPath, ids))
-    val codes = Stored.read(spark, IndexManifest.resolve(indexPath, "codes"))
-      .select(col("cell").cast("int").as("cell"), col("cand_id"),
-        col("code"), col("c_norm"))
-      .join(del, col("cand_id").cast("string") === col("del_id"), "left_anti")
-      .repartition(col("cell"))
-      .sortWithinPartitions(col("cell"), col("cand_id"))
-    val codesV = IndexManifest.nextVersionDir(indexPath, "codes")
-    Stored.write(codes, s"$indexPath/$codesV", "cell")
-    IndexManifest.publish(indexPath, "codes", codesV)
-    if (pqMetaRow(spark, indexPath).getAs[Boolean]("has_vectors")) {
-      val vecs = Stored.read(spark,
-          IndexManifest.resolve(indexPath, "vectors"))
-        .select(col("cell").cast("int").as("cell"), col("cand_id"),
-          col("c_vec"), col("c_norm"))
-        .join(del, col("cand_id").cast("string") === col("del_id"), "left_anti")
-        .repartition(col("cell"))
-        .sortWithinPartitions(col("cell"), col("cand_id"))
-      val vecsV = IndexManifest.nextVersionDir(indexPath, "vectors")
-      Stored.write(vecs, s"$indexPath/$vecsV", "cell")
-      IndexManifest.publish(indexPath, "vectors", vecsV)
-    }
-    Dedup.clearTombstones(tombDirs)
-  }
+                           indexPath: String, ids: DataFrame): Unit =
+    rewriteIvfPq(spark, Manifest.snapshot(indexPath), Some(ids))
 
+  /** The IVF-PQ maintenance pass: codes and, when stored, vectors
+    * without the deletion set. */
+  private def rewriteIvfPq(spark: org.apache.spark.sql.SparkSession,
+                           snap: Manifest.Snapshot,
+                           ids: Option[DataFrame]): Unit =
+    IndexLifecycle.maintain(spark, snap, ids) { p =>
+      rewriteCells(p, "codes", "code")
+      if (metaRow(spark, snap, "pq_meta").getAs[Boolean]("has_vectors"))
+        rewriteCells(p, "vectors", "c_vec")
+      true
+    }
 
   /** The [[compactIvfIndexIfNeeded]] hook for the IVF-PQ index: compact
     * when any CODES cell dir's live parquet-file count exceeds the bar
@@ -1077,9 +940,10 @@ object Similarity {
   def compactIvfPqIndexIfNeeded(spark: org.apache.spark.sql.SparkSession,
                                 indexPath: String,
                                 maxFilesPerCell: Int = 16): Boolean = {
-    val decayed = Dedup.maxFilesPerDir(
-      IndexManifest.resolve(indexPath, "codes"), "cell=") > maxFilesPerCell
-    if (decayed) compactIvfPqIndex(spark, indexPath)
+    val snap = Manifest.snapshot(indexPath)
+    val decayed =
+      Dedup.maxFilesPerDir(snap.resolve("codes"), "cell=") > maxFilesPerCell
+    if (decayed) rewriteIvfPq(spark, snap, None)
     decayed
   }
 
@@ -1107,15 +971,16 @@ object Similarity {
                        idCol: String = "vec_id",
                        adcOnly: Boolean = false): DataFrame = {
     val spark = queries.sparkSession
-    val (pq, hasVectors) = loadPq(spark, indexPath)
-    ivfPqTopKWith(queries, indexPath, loadCentroids(spark, indexPath), pq,
+    val snap = Manifest.snapshot(indexPath)
+    val (pq, hasVectors) = loadPq(spark, snap)
+    ivfPqTopKWith(queries, snap, loadCentroids(spark, snap), pq,
       hasVectors, k, nprobe, refine, vecCol, idCol, adcOnly)
   }
 
-  /** [[ivfPqTopKIndexed]] with the index's model state — centroids,
-    * codebooks, has_vectors — already loaded (the ingest loop loads it
-    * once for the match and the append). */
-  private def ivfPqTopKWith(queries: DataFrame, indexPath: String,
+  /** [[ivfPqTopKIndexed]] against the call's snapshot, with the index's
+    * model state — centroids, codebooks, has_vectors — already loaded
+    * (the ingest loop loads it once for the match and the append). */
+  private def ivfPqTopKWith(queries: DataFrame, snap: Manifest.Snapshot,
                             cells: Array[Array[Double]], pq: Pq,
                             hasVectors: Boolean, k: Int, nprobe: Int,
                             refine: Int, vecCol: String, idCol: String,
@@ -1125,7 +990,7 @@ object Similarity {
     require(nprobe >= 1 && nprobe <= cells.length,
       s"nprobe must be in [1, nlist=${cells.length}], got $nprobe")
     require(hasVectors || adcOnly,
-      s"index at $indexPath was written with storeVectors=false — " +
+      s"index at ${snap.root} was written with storeVectors=false — " +
         "exact re-rank is impossible; query with adcOnly=true")
     val probed = Caches.track( // consumed twice: cell collect + probe join
       ivfPqProbeTable(queries, cells, pq, nprobe, vecCol, idCol))
@@ -1136,9 +1001,8 @@ object Similarity {
     // tombstone filter on the CODES tier only: both scan modes generate
     // candidates from codes, so the refine tier cannot resurface an id
     // filtered here
-    val codes = Dedup.exceptTombstoned(spark, indexPath, pruneToProbed(
-      Stored.read(spark, IndexManifest.resolve(indexPath, "codes"))),
-      "cand_id")
+    val codes = Dedup.exceptTombstoned(spark, snap.root, pruneToProbed(
+      Stored.read(spark, snap.resolve("codes"))), "cand_id")
     if (adcOnly) {
       val w = Window.partitionBy(col("query_id"))
         .orderBy(col("adc").desc, col("cand_id"))
@@ -1152,8 +1016,7 @@ object Similarity {
           round(col("adc"), 4).as("cos_sim"))
     } else {
       val cand = ivfPqCandidates(codes, probed, pq, k * refine)
-      val corpusVecs = pruneToProbed(
-          Stored.read(spark, IndexManifest.resolve(indexPath, "vectors")))
+      val corpusVecs = pruneToProbed(Stored.read(spark, snap.resolve("vectors")))
         .select(col("cand_id").as(idCol), col("c_vec").as(vecCol))
       rerankExact(cand, corpusVecs, queries, k, vecCol, idCol)
     }
@@ -1166,9 +1029,10 @@ object Similarity {
   def compactIvfIndexIfNeeded(spark: org.apache.spark.sql.SparkSession,
                               indexPath: String,
                               maxFilesPerCell: Int = 16): Boolean = {
-    val decayed = Dedup.maxFilesPerDir(
-      IndexManifest.resolve(indexPath, "postings"), "cell=") > maxFilesPerCell
-    if (decayed) compactIvfIndex(spark, indexPath)
+    val snap = Manifest.snapshot(indexPath)
+    val decayed =
+      Dedup.maxFilesPerDir(snap.resolve("postings"), "cell=") > maxFilesPerCell
+    if (decayed) rewriteIvf(spark, snap, None)
     decayed
   }
 
@@ -1183,13 +1047,16 @@ object Similarity {
     * per-query top-k window. */
   def ivfTopKIndexed(queries: DataFrame, indexPath: String, k: Int,
                      nprobe: Int, vecCol: String = "embedding",
-                     idCol: String = "vec_id"): DataFrame =
-    ivfTopKWith(queries, indexPath,
-      loadCentroids(queries.sparkSession, indexPath), k, nprobe, vecCol, idCol)
+                     idCol: String = "vec_id"): DataFrame = {
+    val snap = Manifest.snapshot(indexPath)
+    ivfTopKWith(queries, snap, loadCentroids(queries.sparkSession, snap), k,
+      nprobe, vecCol, idCol)
+  }
 
-  /** [[ivfTopKIndexed]] with the index's centroids already loaded (the
-    * ingest loop loads them once for the match and the append). */
-  private def ivfTopKWith(queries: DataFrame, indexPath: String,
+  /** [[ivfTopKIndexed]] against the call's snapshot, with the index's
+    * centroids already loaded (the ingest loop loads them once for the
+    * match and the append). */
+  private def ivfTopKWith(queries: DataFrame, snap: Manifest.Snapshot,
                           centroids: Array[Array[Double]], k: Int,
                           nprobe: Int, vecCol: String,
                           idCol: String): DataFrame = {
@@ -1202,8 +1069,8 @@ object Similarity {
       .map(_.getInt(0)).sorted // ≤ nlist values
     // pending tombstones (takedown during live ingest) must not
     // surface as neighbours; they leave the tiers at the next compaction
-    val postings = Dedup.exceptTombstoned(spark, indexPath,
-      Stored.read(spark, IndexManifest.resolve(indexPath, "postings"))
+    val postings = Dedup.exceptTombstoned(spark, snap.root,
+      Stored.read(spark, snap.resolve("postings"))
         .filter(col("cell").isin(cells.map(c => c: Any).toSeq: _*)),
       "cand_id")
     rankProbed(postings, probed, k)
@@ -1697,12 +1564,13 @@ object Similarity {
     require(k >= 1 && topN >= 1, s"k/topN must be positive, got $k/$topN")
     // pending tombstones filter BOTH sides: a taken-down vector must
     // neither mine as an anchor nor surface as a mined partner
+    val snaps = Seq(srcIndexPath, tgtIndexPath).distinct
+      .map(p => p -> Manifest.snapshot(p)).toMap
     def postings(path: String): DataFrame =
       Dedup.exceptTombstoned(spark, path,
-        Stored.read(spark, IndexManifest.resolve(path, "postings")),
-        "cand_id")
+        Stored.read(spark, snaps(path).resolve("postings")), "cand_id")
     def knn(queryIdx: String, corpusIdx: String): DataFrame = {
-      val centroids = loadCentroids(spark, corpusIdx)
+      val centroids = loadCentroids(spark, snaps(corpusIdx))
       require(nprobe >= 1 && nprobe <= centroids.length,
         s"nprobe must be in [1, nlist=${centroids.length}], got $nprobe")
       val probed = postings(queryIdx)

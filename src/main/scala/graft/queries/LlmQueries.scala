@@ -2226,9 +2226,7 @@ object LlmQueries {
             math.abs(dir.hashCode)
           graft.core.SidecarFs.deleteTree(root)
           val docs = load(s, dir, "documents").select(col("doc_id"), col("text"))
-          val v1dir = graft.core.Manifest.nextVersionDir(root, "documents")
-          docs.write.mode("overwrite").parquet(s"$root/$v1dir")
-          graft.core.Manifest.publish(root, "documents", v1dir)
+          graft.llm.IndexLifecycle.publishVersion(root, "documents", docs)
           val v2docs = docs
             .filter(col("doc_id") % 101 =!= 0)
             .select(col("doc_id"),
@@ -2237,10 +2235,8 @@ object LlmQueries {
                 .otherwise(col("text")).as("text"))
             .unionByName(docs.filter(col("doc_id") % 103 === 0) // new docs
               .select((col("doc_id") + 1000000).as("doc_id"), col("text")))
-          val v2dir = graft.core.Manifest.nextVersionDir(root, "documents")
-          v2docs.write.mode("overwrite").parquet(s"$root/$v2dir")
           // v1 stays on disk as the retained superseded version
-          graft.core.Manifest.publish(root, "documents", v2dir)
+          graft.llm.IndexLifecycle.publishVersion(root, "documents", v2docs)
           root
         })
         val v1 = s.read.parquet(s"$store/documents_v1") // pinned snapshot

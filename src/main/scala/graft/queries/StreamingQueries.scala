@@ -331,7 +331,7 @@ object StreamingQueries {
         EventStreams.runMinhashIngestLoop(s, streamDir, idx,
           threshold = 0.9999, checkpoint = ckpt)
         val indexed = s.read
-          .parquet(graft.llm.IndexManifest.resolve(idx, "sigs"))
+          .parquet(graft.core.Manifest.resolve(idx, "sigs"))
           .select(col("doc_id"), lit(true).as("survived"))
         b0.unionByName(b1).select(col("doc_id"))
           .join(indexed, Seq("doc_id"), "left")
@@ -386,7 +386,7 @@ object StreamingQueries {
         EventStreams.runIvfIngestLoop(s, streamDir, idx, minCos = 0.999,
           nprobe = 4, checkpoint = ckpt)
         val indexed = s.read
-          .parquet(graft.llm.IndexManifest.resolve(idx, "postings"))
+          .parquet(graft.core.Manifest.resolve(idx, "postings"))
           .select(col("cand_id").as("vec_id"), lit(true).as("survived"))
         b0.unionByName(b1).select(col("vec_id"))
           .join(indexed, Seq("vec_id"), "left")
@@ -442,7 +442,7 @@ object StreamingQueries {
         EventStreams.runIvfPqIngestLoop(s, streamDir, idx, minCos = 0.999,
           nprobe = 4, checkpoint = ckpt)
         val indexed = s.read
-          .parquet(graft.llm.IndexManifest.resolve(idx, "codes"))
+          .parquet(graft.core.Manifest.resolve(idx, "codes"))
           .select(col("cand_id").as("vec_id"), lit(true).as("survived"))
         b0.unionByName(b1).select(col("vec_id"))
           .join(indexed, Seq("vec_id"), "left")
@@ -490,7 +490,7 @@ object StreamingQueries {
           graft.sources.Warc.warcCrawlDedupIngestDir, idx,
           threshold = 0.9999, checkpoint = ckpt)
         val indexed = s.read
-          .parquet(graft.llm.IndexManifest.resolve(idx, "sigs"))
+          .parquet(graft.core.Manifest.resolve(idx, "sigs"))
           .select(col("doc_id").as("record_id"),
             lit(true).as("survived"))
         s.range(0, 24)

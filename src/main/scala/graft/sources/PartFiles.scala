@@ -31,7 +31,7 @@ package graft.sources
   *    observe a cross-generation mix of files for the duration of the
   *    loop — the same single-maintenance-writer contract as the
   *    persisted indexes; workloads that need versioned isolation use
-  *    the [[graft.llm.IndexManifest]] pointer layout instead, at the
+  *    the [[graft.core.Manifest]] pointer layout instead, at the
   *    cost of plain-directory interop (pyarrow/DuckDB read these dirs
   *    directly, which is the point of the container writers).
   */

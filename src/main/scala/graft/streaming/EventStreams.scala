@@ -492,20 +492,31 @@ object EventStreams {
     * the equivalent sequential batch loop. */
   def runMinhashIngestLoop(spark: SparkSession, parquetDir: String,
                            indexPath: String, threshold: Double,
-                           checkpoint: String): Unit = {
-    val schema = spark.read.parquet(parquetDir).schema
-    val stream = spark.readStream.schema(schema)
+                           checkpoint: String): Unit =
+    runKeyedLoop(fileByFile(spark, parquetDir), checkpoint)((df, key) =>
+      graft.llm.Dedup.ingestBatchIntoMinhashIndex(df, indexPath, key,
+        threshold))
+
+  /** A parquet dir as a stream of one file per trigger, so batch
+    * boundaries are deterministic (mtime order). */
+  private def fileByFile(spark: SparkSession, parquetDir: String): DataFrame =
+    spark.readStream.schema(spark.read.parquet(parquetDir).schema)
       .option("maxFilesPerTrigger", "1")
       .parquet(parquetDir)
+
+  /** The one driver of the keyed loops: run `body` on every micro-batch
+    * of `stream` with the batch key `<streamKey>-b<batchId>`, against the
+    * caller's `checkpoint`, until the input available at start is
+    * drained (AvailableNow). */
+  private def runKeyedLoop(stream: DataFrame, checkpoint: String)(
+      body: (DataFrame, String) => Unit): Unit = {
     val sk = streamKey(checkpoint)
-    val q = stream.writeStream
-      .foreachBatch((df: DataFrame, id: Long) =>
-        graft.llm.Dedup.ingestBatchIntoMinhashIndex(
-          df, indexPath, s"$sk-b$id", threshold))
+    stream.writeStream
+      .foreachBatch((df: DataFrame, id: Long) => body(df, s"$sk-b$id"))
       .option("checkpointLocation", checkpoint)
       .trigger(Trigger.AvailableNow())
       .start()
-    q.awaitTermination()
+      .awaitTermination()
   }
 
   /** Stable identity of a streaming ingest RUN, persisted inside the
@@ -560,15 +571,9 @@ object EventStreams {
       .load(warcDir)
     val docs = graft.sources.Warc.decodeSegments(spark)(stream)
       .select(col("record_id").as("doc_id"), col("text"))
-    val sk = streamKey(checkpoint)
-    val q = docs.writeStream
-      .foreachBatch((df: DataFrame, id: Long) =>
-        graft.llm.Dedup.ingestBatchIntoMinhashIndex(
-          df, indexPath, s"$sk-b$id", threshold))
-      .option("checkpointLocation", checkpoint)
-      .trigger(Trigger.AvailableNow())
-      .start()
-    q.awaitTermination()
+    runKeyedLoop(docs, checkpoint)((df, key) =>
+      graft.llm.Dedup.ingestBatchIntoMinhashIndex(df, indexPath, key,
+        threshold))
   }
 
   /** The embedding-side closed ingest loop — same contract as
@@ -580,21 +585,10 @@ object EventStreams {
     * frozen quantizer. Restart/re-delivery semantics identical. */
   def runIvfIngestLoop(spark: SparkSession, parquetDir: String,
                        indexPath: String, minCos: Double, nprobe: Int,
-                       checkpoint: String): Unit = {
-    val schema = spark.read.parquet(parquetDir).schema
-    val stream = spark.readStream.schema(schema)
-      .option("maxFilesPerTrigger", "1")
-      .parquet(parquetDir)
-    val sk = streamKey(checkpoint)
-    val q = stream.writeStream
-      .foreachBatch((df: DataFrame, id: Long) =>
-        graft.llm.Similarity.ingestBatchIntoIvfIndex(
-          df, indexPath, s"$sk-b$id", minCos, nprobe))
-      .option("checkpointLocation", checkpoint)
-      .trigger(Trigger.AvailableNow())
-      .start()
-    q.awaitTermination()
-  }
+                       checkpoint: String): Unit =
+    runKeyedLoop(fileByFile(spark, parquetDir), checkpoint)((df, key) =>
+      graft.llm.Similarity.ingestBatchIntoIvfIndex(df, indexPath, key,
+        minCos, nprobe))
 
   /** The IVF-PQ closed ingest loop — [[runIvfIngestLoop]] for the
     * two-tier PQ artifact
@@ -606,21 +600,10 @@ object EventStreams {
     * Restart/re-delivery semantics identical to the other loops. */
   def runIvfPqIngestLoop(spark: SparkSession, parquetDir: String,
                          indexPath: String, minCos: Double, nprobe: Int,
-                         checkpoint: String): Unit = {
-    val schema = spark.read.parquet(parquetDir).schema
-    val stream = spark.readStream.schema(schema)
-      .option("maxFilesPerTrigger", "1")
-      .parquet(parquetDir)
-    val sk = streamKey(checkpoint)
-    val q = stream.writeStream
-      .foreachBatch((df: DataFrame, id: Long) =>
-        graft.llm.Similarity.ingestBatchIntoIvfPqIndex(
-          df, indexPath, s"$sk-b$id", minCos, nprobe))
-      .option("checkpointLocation", checkpoint)
-      .trigger(Trigger.AvailableNow())
-      .start()
-    q.awaitTermination()
-  }
+                         checkpoint: String): Unit =
+    runKeyedLoop(fileByFile(spark, parquetDir), checkpoint)((df, key) =>
+      graft.llm.Similarity.ingestBatchIntoIvfPqIndex(df, indexPath, key,
+        minCos, nprobe))
 
   /** Continuous WebDataset PUBLISHING — the multimodal crawler's output
     * front door, the write-side mirror of the ingest loops: each
@@ -642,23 +625,12 @@ object EventStreams {
     * listing by contract). */
   def runWebDatasetPublishLoop(spark: SparkSession, parquetDir: String,
                                shardDir: String, shardsPerBatch: Int,
-                               checkpoint: String): Unit = {
-    val schema = spark.read.parquet(parquetDir).schema
-    val stream = spark.readStream.schema(schema)
-      .option("maxFilesPerTrigger", "1")
-      .parquet(parquetDir)
-    val sk = streamKey(checkpoint)
-    val q = stream.writeStream
-      .foreachBatch { (df: DataFrame, id: Long) =>
-        graft.sources.WebDataset.writeShards(
-          df, s"$shardDir/seg_$sk-b$id", shardsPerBatch)
-        ()
-      }
-      .option("checkpointLocation", checkpoint)
-      .trigger(Trigger.AvailableNow())
-      .start()
-    q.awaitTermination()
-  }
+                               checkpoint: String): Unit =
+    runKeyedLoop(fileByFile(spark, parquetDir), checkpoint) { (df, key) =>
+      graft.sources.WebDataset.writeShards(df, s"$shardDir/seg_$key",
+        shardsPerBatch)
+      ()
+    }
 
   /** Append-mode run over a STREAMED binaryFile directory — continuous
     * container ingest (WARC segments landing from a live crawler, media

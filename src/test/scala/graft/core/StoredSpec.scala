@@ -131,7 +131,8 @@ class StoredSpec extends SparkSpec {
     // ... and nothing else in the files that own a field store or an
     // index tier: a new bare read there would bring back one
     // footer-sampling job per dataset opened
-    for (f <- Seq("core/Task.scala", "llm/Dedup.scala", "llm/Similarity.scala")) {
+    for (f <- Seq("core/Task.scala", "llm/Dedup.scala", "llm/Similarity.scala",
+                  "llm/GraphAnn.scala")) {
       val hits = reader.findAllIn(code(s"$main/$f")).toSeq
       assert(hits.isEmpty,
         s"$f reads Parquet outside Stored.read: ${hits.mkString(", ")}")

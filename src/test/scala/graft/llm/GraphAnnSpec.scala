@@ -4,6 +4,7 @@ import org.apache.spark.sql.functions._
 import org.apache.spark.sql.Row
 
 import graft.SparkSpec
+import graft.core.Manifest
 
 /** Ground truth for the graph-ANN tier: exact int quantization, the
   * integer sim key, md5-ring init, NN-Descent convergence on planted
@@ -144,7 +145,7 @@ class GraphAnnSpec extends SparkSpec {
     // the index layout carries all three artifacts plus the build meta
     for (part <- Seq("codes", "graph", "entry", "meta"))
       assert(new java.io.File(
-        IndexManifest.resolve(dir, part)).exists(), part)
+        Manifest.resolve(dir, part)).exists(), part)
     // meta pins the build parameters delete/health re-derive from — the
     // seed is the INDEX's, not a caller argument (a wrong caller seed
     // used to silently re-derive a different entry point). It is
@@ -152,7 +153,7 @@ class GraphAnnSpec extends SparkSpec {
     // a crashed build stays maintainable) and the final counted row
     // published through the manifest pointer — resolve() must see the
     // final one.
-    val meta = spark.read.parquet(IndexManifest.resolve(dir, "meta"))
+    val meta = spark.read.parquet(Manifest.resolve(dir, "meta"))
       .collect()
     assert(meta.length === 1)
     assert(meta.head.getAs[Long]("seed") === 42L)
@@ -186,14 +187,14 @@ class GraphAnnSpec extends SparkSpec {
     val dir = tempDir("knnapp").toString
     GraphAnn.writeKnnGraphIndex(emb, dir, k = 8, rounds = 3)
     val before = spark.read.parquet(
-        graft.llm.IndexManifest.resolve(dir, "graph"))
+        Manifest.resolve(dir, "graph"))
       .collect().map(_.toSeq).toSet
     val queries = emb.filter(col("vec_id") < 5)
     GraphAnn.appendToKnnGraphIndex(
       queries.select((col("vec_id") + 100000).as("vec_id"),
         col("embedding")), dir)
     val after = spark.read.parquet(
-      graft.llm.IndexManifest.resolve(dir, "graph"))
+      Manifest.resolve(dir, "graph"))
     // appended nodes carry full out-lists (k inferred from the index)
     val outDeg = after.filter(col("src") >= 100000)
       .groupBy(col("src")).count().collect()
@@ -215,7 +216,7 @@ class GraphAnnSpec extends SparkSpec {
       .collect().map(_.toSeq).toSet
     assert(untouchedAfter.subsetOf(before))
     // the graph republished as a fresh manifest version
-    assert(graft.llm.IndexManifest.resolve(dir, "graph") !== s"$dir/graph")
+    assert(Manifest.resolve(dir, "graph") !== s"$dir/graph")
   }
 
   test("beam search on sf0.001 embeddings: recall@5 vs quantized " +
@@ -261,16 +262,16 @@ class GraphAnnSpec extends SparkSpec {
     GraphAnn.writeKnnGraphIndex(emb, idx, k = 8, rounds = 3, seed = 42L)
     import SparkSpec.spark.implicits._
     val entryBefore = spark.read
-      .parquet(IndexManifest.resolve(idx, "entry")).head.getLong(0)
+      .parquet(Manifest.resolve(idx, "entry")).head.getLong(0)
     GraphAnn.deleteFromKnnGraphIndex(spark, idx,
       Seq(entryBefore).toDF("vec_id"))
     val entryAfter = spark.read
-      .parquet(IndexManifest.resolve(idx, "entry")).head.getLong(0)
+      .parquet(Manifest.resolve(idx, "entry")).head.getLong(0)
     assert(entryAfter != entryBefore)
     // the deleted node is gone from every tier
-    assert(spark.read.parquet(IndexManifest.resolve(idx, "codes"))
+    assert(spark.read.parquet(Manifest.resolve(idx, "codes"))
       .filter(col("id") === entryBefore).isEmpty)
-    val g = spark.read.parquet(IndexManifest.resolve(idx, "graph"))
+    val g = spark.read.parquet(Manifest.resolve(idx, "graph"))
     assert(g.filter(col("src") === entryBefore
       || col("dst") === entryBefore).isEmpty)
     // search from the re-derived entry still returns ranked results

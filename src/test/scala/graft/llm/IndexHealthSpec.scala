@@ -3,6 +3,7 @@ package graft.llm
 import org.apache.spark.sql.functions._
 
 import graft.SparkSpec
+import graft.core.Manifest
 
 /** The measured-rebuild gauges' ground truth on the IVF side
   * ([[GraphAnnSpec]] pins the graph one): quantizer drift is exactly
@@ -269,7 +270,7 @@ class IndexHealthSpec extends SparkSpec {
     val idx = tempDir("gphrebm-").toString + "/idx"
     GraphAnn.writeKnnGraphIndex(emb(60), idx, k = 4, rounds = 1)
     graft.core.SidecarFs.deleteTree(
-      IndexManifest.resolve(idx, "meta")) // simulate the legacy layout
+      Manifest.resolve(idx, "meta")) // simulate the legacy layout
     val gauge = GraphAnn.knnGraphIndexHealth(spark, idx).collect().head
     assert(gauge.getAs[Long]("health_micro") === -1L) // unknown anchor
     assert(gauge.getAs[Boolean]("rebuild"))
@@ -322,11 +323,11 @@ class IndexHealthSpec extends SparkSpec {
     val idx = tempDir("pqlegacy-").toString + "/idx"
     Similarity.writeIvfPqIndex(emb(200), idx, nlist = 8, m = 8, ksub = 16)
     // regress the published meta to the old 4-column layout
-    val dsub = spark.read.parquet(IndexManifest.resolve(idx, "pq_meta"))
+    val dsub = spark.read.parquet(Manifest.resolve(idx, "pq_meta"))
       .collect().head.getAs[Int]("dsub")
     Seq((8, 16, dsub, true)).toDF("m", "ksub", "dsub", "has_vectors")
       .coalesce(1).write.mode("overwrite")
-      .parquet(IndexManifest.resolve(idx, "pq_meta"))
+      .parquet(Manifest.resolve(idx, "pq_meta"))
     val g = Similarity.ivfPqIndexDrift(spark, idx).collect().head
     assert(g.getAs[Long]("build_n") === -1L)
     assert(g.getAs[Boolean]("rebuild"))
@@ -336,7 +337,7 @@ class IndexHealthSpec extends SparkSpec {
     assert(post.getAs[Long]("drift_micro") === 1000000L)
     assert(!post.getAs[Boolean]("rebuild"))
     // nlist was inferred from the quantizer itself: 8 cells survive
-    assert(spark.read.parquet(IndexManifest.resolve(idx, "centroids"))
+    assert(spark.read.parquet(Manifest.resolve(idx, "centroids"))
       .count() === 8L)
   }
 
@@ -383,7 +384,7 @@ class IndexHealthSpec extends SparkSpec {
       "the rebuild restores the entry") {
     val idx = tempDir("gphentry-").toString + "/idx"
     GraphAnn.writeKnnGraphIndex(emb(50), idx, k = 4, rounds = 1)
-    graft.core.SidecarFs.deleteTree(IndexManifest.resolve(idx, "entry"))
+    graft.core.SidecarFs.deleteTree(Manifest.resolve(idx, "entry"))
     val g = GraphAnn.knnGraphIndexHealth(spark, idx).collect().head
     assert(!g.getAs[Boolean]("entry_connected"))
     assert(g.getAs[Boolean]("rebuild"))

@@ -3,10 +3,11 @@ package graft.llm
 import org.apache.spark.sql.functions._
 
 import graft.SparkSpec
-import graft.core.{SidecarFs, Stored}
+import graft.core.{Manifest, SidecarFs, Stored}
 
 /** Schema records on the persisted-index tiers ([[graft.core.Stored]]):
-  * every tier a write, rebuild, delete or compaction publishes — and
+  * every MinHash, IVF, IVF-PQ and k-NN-graph tier a write, rebuild,
+  * delete or compaction publishes — and
   * every tombstone request — reads back with its record as Spark would
   * infer it, appends and ingests keep the live dir's record valid, a
   * probe and a drift gauge launch fewer jobs than inferring reads cost,
@@ -24,7 +25,7 @@ class IndexSchemaSpec extends SparkSpec {
     .toDF("doc_id", "text")
 
   private def checkTiers(idx: String, tiers: String*): Unit =
-    tiers.foreach(t => assertReadsAsInferred(IndexManifest.resolve(idx, t)))
+    tiers.foreach(t => assertReadsAsInferred(Manifest.resolve(idx, t)))
 
   private val pqTiers =
     Seq("centroids", "codebooks", "pq_meta", "codes", "vectors")
@@ -100,6 +101,28 @@ class IndexSchemaSpec extends SparkSpec {
     checkTiers(idx, "bands", "sigs")
   }
 
+  test("k-NN graph: every tier reads back with its record as Spark " +
+      "infers it, after the write, an append, a delete and a rebuild") {
+    val idx = tempDir("schema-graph-").toString + "/idx"
+    val tiers = Seq("codes", "graph", "entry", "meta")
+    GraphAnn.writeKnnGraphIndex(emb(0, 120), idx, k = 4, rounds = 2)
+    checkTiers(idx, tiers: _*)
+    // the graph is rewritten; codes take an append with their own encoder
+    GraphAnn.appendToKnnGraphIndex(emb(0, 30, shift = 100000L), idx)
+    checkTiers(idx, "codes", "graph")
+    // deleting the entry point makes the delete re-derive it
+    val entry = Stored.read(spark, Manifest.resolve(idx, "entry"))
+      .head.getAs[Long]("cand_id")
+    GraphAnn.deleteFromKnnGraphIndex(spark, idx,
+      Seq(entry, entry + 1L).toDF("vec_id"))
+    assert(Manifest.resolve(idx, "entry") != s"$idx/entry")
+    checkTiers(idx, "codes", "graph", "entry")
+    val reb = GraphAnn.rebuildKnnGraphIndexIfUnhealthy(spark, idx,
+      minHealthMicro = Long.MaxValue).collect().head
+    assert(reb.getAs[Boolean]("rebuilt"))
+    checkTiers(idx, tiers: _*)
+  }
+
   test("a probe and a drift gauge of a fresh IVF-PQ index launch fewer " +
       "jobs than inferring reads cost") {
     val idx = tempDir("schema-jobs-").toString + "/idx"
@@ -149,7 +172,7 @@ class IndexSchemaSpec extends SparkSpec {
     checkTiers(idx, "codes", "vectors")
     for (t <- Seq("centroids", "codebooks", "pq_meta"))
       assert(!SidecarFs.exists(
-        s"${IndexManifest.resolve(idx, t)}/${Stored.SchemaFile}"), t)
+        s"${Manifest.resolve(idx, t)}/${Stored.SchemaFile}"), t)
     val after = probe()
     assert(after.nonEmpty && !after.exists(_._3 == 1L))
   }

@@ -5,6 +5,7 @@ import org.scalacheck.{Gen, Prop, Properties, Test}
 import org.scalacheck.Prop.forAll
 
 import graft.SparkSpec
+import graft.core.Manifest
 
 /** Property-based invariants for the llm operator layer. These spin real
   * Spark jobs per case, so the case counts are deliberately small (the
@@ -173,7 +174,7 @@ object LlmProps extends Properties("graft.llm") {
       Prop(once == twice) :| s"once=$once twice=$twice"
     }
 
-  // -- IndexManifest ---------------------------------------------------------
+  // -- Manifest (index versions) ----------------------------------------------------
 
   /** For ANY interleaving of publishes across logical names, the
     * manifest must keep these invariants (pure filesystem — no Spark):
@@ -194,13 +195,13 @@ object LlmProps extends Properties("graft.llm") {
         Seq("bands", "sigs", "postings").foreach(n =>
           java.nio.file.Files.createDirectories(root.resolve(n)))
         val ok = seq.forall { name =>
-          val v = IndexManifest.nextVersionDir(root.toString, name)
+          val v = Manifest.nextVersionDir(root.toString, name)
           java.nio.file.Files.createDirectories(root.resolve(v))
-          IndexManifest.publish(root.toString, name, v)
+          Manifest.publish(root.toString, name, v)
           prev(name) = last.getOrElse(name, name)
           last(name) = v
           val resolved = Seq("bands", "sigs", "postings").forall { n =>
-            IndexManifest.resolve(root.toString, n) ==
+            Manifest.resolve(root.toString, n) ==
               s"$root/${last.getOrElse(n, n)}"
           }
           val retained = Seq("bands", "sigs", "postings").forall { n =>

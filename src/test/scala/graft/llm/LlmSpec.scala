@@ -3,6 +3,7 @@ package graft.llm
 import org.apache.spark.sql.functions._
 
 import graft.SparkSpec
+import graft.core.Manifest
 
 /** Ground-truth tests for the hash-family LLM operators (MinHash/SimHash/
   * sign-LSH) that the DuckDB oracle cannot express, plus language-ID and
@@ -245,7 +246,7 @@ class LlmSpec extends SparkSpec {
       .collect().map(r => (r.getLong(0), r.getLong(1), r.getDouble(2))).toSet
     def bandFiles() = {
       val s = java.nio.file.Files.walk(
-        java.nio.file.Paths.get(IndexManifest.resolve(idx, "bands")))
+        java.nio.file.Paths.get(Manifest.resolve(idx, "bands")))
       try s.filter(_.toString.endsWith(".parquet")).count()
       finally s.close()
     }
@@ -276,17 +277,17 @@ class LlmSpec extends SparkSpec {
       .collect().filter(_.getDouble(2) >= 0.999)
       .map(r => (r.getLong(0), r.getLong(1))).toSet
     assert(matches().map(_._2) == Set(5L, 12L))
-    val bandsBefore = IndexManifest.resolve(idx, "bands")
+    val bandsBefore = Manifest.resolve(idx, "bands")
     Dedup.deleteFromMinhashIndex(spark, idx, Seq(5L).toDF("doc_id"))
     // deleted doc gone from both tiers; retained twin still flags
     assert(matches().map(_._2) == Set(12L),
       "deleted doc must stop matching; retained docs must not")
-    assert(spark.read.parquet(IndexManifest.resolve(idx, "sigs"))
+    assert(spark.read.parquet(Manifest.resolve(idx, "sigs"))
       .filter(col("doc_id") === 5L).isEmpty)
-    assert(spark.read.parquet(IndexManifest.resolve(idx, "bands"))
+    assert(spark.read.parquet(Manifest.resolve(idx, "bands"))
       .filter(col("hist_id") === 5L).isEmpty)
     // published as a NEW version (snapshot semantics, not in-place)
-    assert(IndexManifest.resolve(idx, "bands") != bandsBefore)
+    assert(Manifest.resolve(idx, "bands") != bandsBefore)
   }
 
   test("compactMinhashIndex re-applies the global hot-bucket cap that " +
@@ -306,7 +307,7 @@ class LlmSpec extends SparkSpec {
     Dedup.appendToMinhashIndex(copies(100L until 103L), idx)
     Dedup.appendToMinhashIndex(copies(200L until 203L), idx)
     def maxBucket() = SparkSpec.spark.read
-      .parquet(IndexManifest.resolve(idx, "bands"))
+      .parquet(Manifest.resolve(idx, "bands"))
       .groupBy("band", "bucket").count()
       .agg(max("count")).collect().head.getLong(0)
     assert(maxBucket() > 3, "appends should have grown a hot bucket")
@@ -315,7 +316,7 @@ class LlmSpec extends SparkSpec {
       s"compaction must restore the write-time cap, got ${maxBucket()}")
     // the bucket-minimum representative (doc 0) must survive the re-cap
     val kept = SparkSpec.spark.read
-      .parquet(IndexManifest.resolve(idx, "bands"))
+      .parquet(Manifest.resolve(idx, "bands"))
       .select("hist_id").distinct().collect().map(_.getLong(0)).toSet
     assert(kept.contains(0L))
   }
@@ -391,7 +392,7 @@ class LlmSpec extends SparkSpec {
       threshold = 0.9999)
     // a crashed delivery: keyed file present, no commit marker
     val bandDir = java.nio.file.Paths.get(
-      IndexManifest.resolve(idx, "bands"), "band=0")
+      Manifest.resolve(idx, "bands"), "band=0")
     val dead = bandDir.resolve("ingest-deadkey-0.parquet")
     java.nio.file.Files.write(dead, Array.emptyByteArray)
     val err = intercept[IllegalArgumentException] {
@@ -406,7 +407,7 @@ class LlmSpec extends SparkSpec {
     assert(Dedup.purgeOrphanedIngestBatches(idx).isEmpty)
     // with only COMMITTED batches, compaction absorbs their file sets
     def sigIds() = SparkSpec.spark.read
-      .parquet(IndexManifest.resolve(idx, "sigs"))
+      .parquet(Manifest.resolve(idx, "sigs"))
       .select("doc_id").collect().map(_.getLong(0)).toSeq
     val before = sigIds().toSet
     Dedup.compactMinhashIndex(SparkSpec.spark, idx)
@@ -510,7 +511,7 @@ class LlmSpec extends SparkSpec {
         r.getDouble(3))).toSet
     def files() = {
       val s = java.nio.file.Files.walk(
-        java.nio.file.Paths.get(IndexManifest.resolve(idx, "postings")))
+        java.nio.file.Paths.get(Manifest.resolve(idx, "postings")))
       try s.filter(_.toString.endsWith(".parquet")).count()
       finally s.close()
     }
@@ -559,8 +560,8 @@ class LlmSpec extends SparkSpec {
         .mapToLong(p => java.nio.file.Files.size(p)).sum()
       finally s.close()
     }
-    val codesBytes = dirBytes(IndexManifest.resolve(idx, "codes"))
-    val vecBytes = dirBytes(IndexManifest.resolve(idx, "vectors"))
+    val codesBytes = dirBytes(Manifest.resolve(idx, "codes"))
+    val vecBytes = dirBytes(Manifest.resolve(idx, "vectors"))
     assert(codesBytes * 3 < vecBytes,
       s"codes tier must be << raw postings: $codesBytes vs $vecBytes")
   }

@@ -1,7 +1,7 @@
 package graft.llm
 
 import graft.SparkSpec
-import graft.core.SidecarFs
+import graft.core.{Manifest, SidecarFs}
 import org.apache.spark.sql.functions._
 
 /** A NON-`file` scheme backed by the local FS, registered as
@@ -67,7 +67,7 @@ class SidecarFsSpec extends SparkSpec {
     assert(SidecarFs.exists(s"$idx/ingest_commits/sk1-b0"))
     // 9005 (twin of 5) dropped; 9300 (novel) appended into the index
     val sigs = SparkSpec.spark.read
-      .parquet(IndexManifest.resolve(idx, "sigs"))
+      .parquet(Manifest.resolve(idx, "sigs"))
       .select("doc_id").collect().map(_.getLong(0)).toSet
     assert(sigs.contains(9300L) && !sigs.contains(9005L))
     // compaction publishes fresh versions through the manifest on the
@@ -100,7 +100,7 @@ class SidecarFsSpec extends SparkSpec {
     Similarity.ingestBatchIntoIvfIndex(batch, idx, "sk2-b0", minCos = 0.99)
     assert(SidecarFs.exists(s"$idx/ingest_commits/sk2-b0"))
     val ids = SparkSpec.spark.read
-      .parquet(IndexManifest.resolve(idx, "postings"))
+      .parquet(Manifest.resolve(idx, "postings"))
       .select("cand_id").collect().map(_.getLong(0)).toSet
     assert(ids.contains(901L) && !ids.contains(900L))
     Similarity.compactIvfIndex(SparkSpec.spark, idx)
@@ -135,7 +135,7 @@ class SidecarFsSpec extends SparkSpec {
         .select("hist_id").collect().map(_.getLong(0)).toSet
       assert(Set(7L, 105L).subsetOf(matched), s"got $matched")
       val sigs = SparkSpec.spark.read
-        .parquet(IndexManifest.resolve(idx, "sigs"))
+        .parquet(Manifest.resolve(idx, "sigs"))
         .select("doc_id").collect().map(_.getLong(0)).toSet
       assert(sigs.contains(9300L) && !sigs.contains(9005L))
     } finally hc.unset("fs.mockfs.impl")
@@ -165,7 +165,7 @@ class SidecarFsSpec extends SparkSpec {
     // batch's rows are in the compacted index exactly once afterwards
     Dedup.ingestBatchIntoMinhashIndex(mk(Seq(502L)), idx, s"$skA-b2", 0.9)
     val n502 = SparkSpec.spark.read
-      .parquet(IndexManifest.resolve(idx, "sigs"))
+      .parquet(Manifest.resolve(idx, "sigs"))
       .filter(col("doc_id") === 502L).count()
     assert(n502 == 1L, s"re-delivered committed batch must be a no-op, got $n502")
   }

@@ -3,7 +3,7 @@ package graft.llm
 import org.apache.spark.sql.functions._
 
 import graft.SparkSpec
-import graft.core.SidecarFs
+import graft.core.{Manifest, SidecarFs}
 
 /** The takedown-during-live-ingest contract (tombstones): a tombstone
   * request (a) registers while an ingest batch is in flight — exactly
@@ -73,9 +73,9 @@ class TombstoneSpec extends SparkSpec {
     SidecarFs.createMarker(s"$idx/ingest_commits/spec-b0")
     Dedup.compactMinhashIndex(spark, idx)
     assert(Dedup.tombstoneDirs(idx).isEmpty, "requests consumed")
-    assert(spark.read.parquet(IndexManifest.resolve(idx, "sigs"))
+    assert(spark.read.parquet(Manifest.resolve(idx, "sigs"))
       .filter(col("doc_id").isin(1L, 2L)).isEmpty)
-    assert(spark.read.parquet(IndexManifest.resolve(idx, "bands"))
+    assert(spark.read.parquet(Manifest.resolve(idx, "bands"))
       .filter(col("hist_id").isin(1L, 2L)).isEmpty)
     val after = Dedup.incrementalMinhashMatchesIndexed(probes, idx)
       .filter(col("est_jaccard") >= 0.9999)
@@ -101,7 +101,7 @@ class TombstoneSpec extends SparkSpec {
     Similarity.deleteFromIvfIndex(spark, idx, Seq(199L).toDF("vec_id"))
     assert(Dedup.tombstoneDirs(idx).isEmpty)
     assert(spark.read
-      .parquet(IndexManifest.resolve(idx, "postings"))
+      .parquet(Manifest.resolve(idx, "postings"))
       .filter(col("cand_id").isin(before.map(x => x: Any).toSeq: _*))
       .isEmpty, "consumed tombstones left the postings tier")
   }
@@ -123,7 +123,7 @@ class TombstoneSpec extends SparkSpec {
     Similarity.compactIvfPqIndex(spark, idx)
     assert(Dedup.tombstoneDirs(idx).isEmpty)
     for (tier <- Seq("codes", "vectors"))
-      assert(spark.read.parquet(IndexManifest.resolve(idx, tier))
+      assert(spark.read.parquet(Manifest.resolve(idx, tier))
         .filter(col("cand_id").isin(hit.map(x => x: Any).toSeq: _*))
         .isEmpty, tier)
   }
@@ -153,7 +153,7 @@ class TombstoneSpec extends SparkSpec {
     // the structural cleanup consumes the standing requests
     GraphAnn.deleteFromKnnGraphIndex(spark, idx, Seq(99L).toDF("vec_id"))
     assert(Dedup.tombstoneDirs(idx).isEmpty)
-    val codes = spark.read.parquet(IndexManifest.resolve(idx, "codes"))
+    val codes = spark.read.parquet(Manifest.resolve(idx, "codes"))
     assert(codes.filter(col("id").isin(top.map(x => x: Any).toSeq: _*))
       .isEmpty, "hard delete must fold tombstoned ids into its rewrite")
   }

@@ -378,7 +378,8 @@ class StreamingSpec extends SparkSpec {
       "batch, equals the sequential batch loop, and re-delivery (with or " +
       "without the commit marker) never duplicates index rows") {
     import SparkSpec.spark.implicits._
-    import graft.llm.{Dedup, IndexManifest}
+    import graft.core.Manifest
+    import graft.llm.Dedup
     // synthesized texts: distinct ids share no vocabulary, so the ONLY
     // possible matches are the planted exact twins
     def mk(ids: Seq[Long], twinOf: Map[Long, Long] = Map.empty) = ids
@@ -422,7 +423,7 @@ class StreamingSpec extends SparkSpec {
     EventStreams.runMinhashIngestLoop(spark, streamDir, streamIdx,
       threshold = 0.9999, checkpoint = ckpt)
     def sigIds(idx: String) = spark.read
-      .parquet(IndexManifest.resolve(idx, "sigs"))
+      .parquet(Manifest.resolve(idx, "sigs"))
       .select("doc_id").collect().map(_.getLong(0)).toSeq
     assert(sigIds(streamIdx).toSet ==
       (0L until 20L).toSet ++ (100L until 120L).toSet,
@@ -460,7 +461,8 @@ class StreamingSpec extends SparkSpec {
       "twins of history AND of earlier survivors drop, re-delivery " +
       "never duplicates postings") {
     import SparkSpec.spark.implicits._
-    import graft.llm.{IndexManifest, Similarity}
+    import graft.core.Manifest
+    import graft.llm.Similarity
     val rnd = new scala.util.Random(53)
     def unit() = {
       val v = Array.fill(64)(rnd.nextGaussian().toFloat)
@@ -500,7 +502,7 @@ class StreamingSpec extends SparkSpec {
     EventStreams.runIvfIngestLoop(spark, streamDir, idx, minCos = 0.999,
       nprobe = 2, checkpoint = ckpt)
     def postedIds() = spark.read
-      .parquet(IndexManifest.resolve(idx, "postings"))
+      .parquet(Manifest.resolve(idx, "postings"))
       .select("cand_id").collect().map(_.getLong(0)).toSeq
     assert(postedIds().toSet ==
       (0L until 30L).toSet ++ (100L until 115L).toSet,
@@ -528,7 +530,8 @@ class StreamingSpec extends SparkSpec {
       "earlier survivors drop, re-delivery never duplicates either tier, " +
       "compaction interlocks on uncommitted batches") {
     import SparkSpec.spark.implicits._
-    import graft.llm.{Dedup, IndexManifest, Similarity}
+    import graft.core.Manifest
+    import graft.llm.{Dedup, Similarity}
     val rnd = new scala.util.Random(59)
     def unit() = {
       val v = Array.fill(64)(rnd.nextGaussian().toFloat)
@@ -566,7 +569,7 @@ class StreamingSpec extends SparkSpec {
     EventStreams.runIvfPqIngestLoop(spark, streamDir, idx, minCos = 0.999,
       nprobe = 2, checkpoint = ckpt)
     def tierIds(tier: String) = spark.read
-      .parquet(IndexManifest.resolve(idx, tier))
+      .parquet(Manifest.resolve(idx, tier))
       .select("cand_id").collect().map(_.getLong(0)).toSeq
     assert(tierIds("codes").toSet ==
       (0L until 30L).toSet ++ (100L until 115L).toSet,
