@@ -1,7 +1,7 @@
 package graft.core
 
 import org.apache.hadoop.conf.Configuration
-import org.apache.hadoop.fs.{FileContext, FileSystem, Options, Path}
+import org.apache.hadoop.fs.{FileContext, FileSystem, Options, Path, RawLocalFileSystem}
 
 /** Driver-side sidecar I/O for the persisted-index lifecycle (manifest
   * pointers, ingest commit markers, keyed-file moves, compaction
@@ -14,16 +14,21 @@ import org.apache.hadoop.fs.{FileContext, FileSystem, Options, Path}
   * session-less unit contexts; scheme-less paths resolve against
   * `fs.defaultFS` exactly like Spark's own reads of the same index.
   *
-  * Atomicity contract (manifest publish / stream-id mint): temp file +
-  * [[renameOverwrite]]. On HDFS and local FS the overwrite rename is
-  * atomic (`FileContext.rename(OVERWRITE)`); on S3A — where rename is
-  * copy+delete and no AbstractFileSystem binding may exist — the
-  * fallback is delete+rename of a single small object, which leaves a
-  * read-absent window but never a torn read (S3 PUTs are atomic
-  * per-object, and every reader treats an absent manifest as
-  * "pre-versioning layout", the safe fallback). One maintenance writer
-  * per index is already the lifecycle's contract, so last-writer-wins
-  * suffices.
+  * Atomicity contract (manifest publish, digests, schema records,
+  * stream-id mint — [[writeStringAtomic]]): temp file + a rename that
+  * replaces the target in one step wherever the store can express it:
+  *  - raw local disk (`file:`, checksumming unwrapped): a plain
+  *    `rename`, i.e. POSIX `rename(2)`, which atomically replaces an
+  *    existing target — a reader opens the old file or the new one;
+  *  - HDFS and any scheme with an AbstractFileSystem binding:
+  *    `FileContext.rename(OVERWRITE)`, atomic on HDFS;
+  *  - S3A-like stores, where rename is copy+delete and no binding may
+  *    exist: delete+rename of a single small object, which leaves a
+  *    read-absent window but never a torn read (S3 PUTs are atomic
+  *    per-object, and every reader treats an absent manifest as
+  *    "pre-versioning layout", the safe fallback).
+  * One writer per target is already the lifecycle's contract, so
+  * last-writer-wins suffices.
   *
   * These are METADATA operations — a handful of round-trips per
   * append/compaction cycle, never per row — so per-call FileSystem
@@ -92,9 +97,15 @@ object SidecarFs {
     }
   }
 
-  /** Write `body` to a same-directory temp file, then swap it live with
-    * [[renameOverwrite]] — the single-pointer-write publication shape
-    * (see the atomicity contract above). */
+  /** Write `body` to a same-directory temp file, then swap it live —
+    * the single-pointer-write publication shape, per scheme as the
+    * atomicity contract above states. On raw local disk the swap is a
+    * plain `rename` (`rename(2)`). [[renameOverwrite]] there goes
+    * through FileContext's OVERWRITE rename, which deletes the target
+    * and then renames (a reader can find the file absent in between)
+    * and costs ~20 ms a write against ~4 ms. The temp file is written
+    * through the raw filesystem, so it has no `.crc` sibling to carry
+    * along. */
   def writeStringAtomic(path: String, body: String): Unit = {
     val p = new Path(path)
     val tmp = new Path(p.getParent, s".${p.getName}.tmp")
@@ -102,12 +113,19 @@ object SidecarFs {
     val out = fs.create(tmp, true)
     try out.write(body.getBytes(java.nio.charset.StandardCharsets.UTF_8))
     finally out.close()
-    renameOverwrite(tmp.toString, path)
+    fs match {
+      case local: RawLocalFileSystem =>
+        if (!local.rename(tmp, p))
+          throw new java.io.IOException(s"rename $tmp -> $path failed")
+      case _ => renameOverwrite(tmp.toString, path)
+    }
   }
 
-  /** Rename `src` over `dst`, replacing it. Atomic where the store can
-    * express it (FileContext OVERWRITE on HDFS/local); delete+rename
-    * fallback where no AbstractFileSystem binding exists. */
+  /** Rename `src` over `dst`, replacing it: FileContext OVERWRITE
+    * (atomic on HDFS; on local disk a delete, then a rename), or
+    * delete+rename where no AbstractFileSystem binding exists. On local
+    * disk the checksumming FileContext also moves `src`'s `.crc`
+    * sibling, so a moved Spark part-file never keeps a stale checksum. */
   def renameOverwrite(src: String, dst: String): Unit = {
     val s = new Path(src)
     val d = new Path(dst)

@@ -205,9 +205,31 @@ final class Task(
   private[core] def fieldDir(field: String, inputId: InputId): HPath =
     new HPath(fieldDataDir(field), s"input_id=${inputId.render}")
 
-  /** Persist the task data: Parquet per persistent field × input (columnar
-    * replacement for dill.gz, repype/task.py:489-534), plus digests and
-    * times.csv.
+  /** Persist the task data as ONE commit: Parquet per persistent field ×
+    * input (columnar replacement for dill.gz, repype/task.py:489-534),
+    * then digests and times.csv.
+    *
+    * Commit order:
+    *  1. on the caller thread, one [[Manifest.snapshot]] of the field
+    *     store; per field a fresh `<field>_vN` dir (numbered from the
+    *     snapshot's one listing) and its in-plan row observation;
+    *  2. every field written CONCURRENTLY, one unit per field — its
+    *     write job plus the `_schema.json` record of each input dir — on
+    *     a pool made for this call (one thread per field, at most
+    *     [[Task.MaxConcurrentFieldWrites]]), each unit carrying the
+    *     caller's Spark local properties, so [[Batch.cancel]]'s job group
+    *     reaches its jobs and metrics.json attributes them to the task;
+    *  3. once every unit has finished, ONE [[Manifest.publishAll]] of all
+    *     fields against the snapshot: a concurrent [[load]] sees every
+    *     field's prior version or every field's new one, never a mix;
+    *  4. `.task.json`, then `.sha.json` — LAST, the completion marker
+    *     [[isPending]] reads — then times.csv.
+    *
+    * Failure contract: when a unit fails, the others still run to their
+    * end, then the first failure is rethrown. Nothing is published and
+    * no digest is written, so the prior versions stay live and the task
+    * stays pending; the orphan version dirs are pruned by the next
+    * publish (the same contract as a crash mid-store).
     *
     * When `batchInputs` (homogeneous per-input configs, SURVEY §1.4), each
     * field is written as ONE distributed job — the per-input plans union'd
@@ -230,16 +252,18 @@ final class Task(
       data.map { case (id, fields) =>
         id -> (stripMarginals(pipeline, fields) - "input_id")
       }
-    val fieldNames = stripped.values.flatMap(_.keys).toSet
+    val fieldNames = stripped.values.flatMap(_.keys).toSeq.distinct.sorted
     // Immutable-version publish (the graft.core.Manifest contract, shared
     // with the persisted-index lifecycle): each field's complete new
-    // dataset lands in a fresh `<field>_vN` dir and goes live via ONE
-    // atomic pointer write — an in-flight load() of a re-running task
-    // keeps reading the prior COMPLETE version (retained one cycle,
+    // dataset lands in a fresh `<field>_vN` dir and all of them go live
+    // via ONE atomic pointer write — an in-flight load() of a re-running
+    // task keeps reading the prior COMPLETE versions (retained one cycle,
     // pruned by the next publish) instead of racing an in-place
     // overwrite; on object stores the overwrite path would not even be
     // atomic per file set.
-    for (field <- fieldNames) {
+    val snap = Manifest.snapshot(dataPath.toString)
+    val versions = fieldNames.map(f => f -> Manifest.nextVersionDir(snap, f)).toMap
+    val units = fieldNames.map { field =>
       // in-plan row observation at the TOP of each stored field's final
       // plan: the count rides the write job (no recount) and lands in
       // metrics.json as rows_out. Top placement matters — a CollectMetrics
@@ -259,33 +283,10 @@ final class Task(
           Metrics.StageRows.register(group, key, obs)
           id -> wrapped
         }
-      val canBatch = batchInputs && perInput.size > 1 &&
-        perInput.keys.forall(_.render.matches("[A-Za-z0-9._-]+")) &&
-        perInput.values.map(_.schema).toSet.size == 1 &&
-        !perInput.values.head.columns.contains("input_id")
-      val vdir = Manifest.nextVersionDir(dataPath.toString, field)
-      val target = new HPath(dataPath, vdir)
-      def inputDir(id: InputId) = new HPath(target, s"input_id=${id.render}")
-      if (canBatch) {
-        import org.apache.spark.sql.functions.lit
-        perInput.toSeq.sortBy(_._1)
-          .map { case (id, df) => df.withColumn("input_id", lit(id.render)) }
-          .reduce(_ unionByName _)
-          .write.mode("overwrite").partitionBy("input_id")
-          .parquet(target.toString)
-        // a 0-row input produces no partition directory — write it
-        // per-input so load()'s per-id existence contract holds; every
-        // input dir gets its own schema record either way
-        for ((id, df) <- perInput) {
-          val dir = inputDir(id).toString
-          if (SidecarFs.exists(dir)) Stored.recordSchema(dir, df.schema)
-          else Stored.write(df, dir)
-        }
-      } else
-        for ((id, df) <- perInput)
-          Stored.write(df, inputDir(id).toString)
-      Manifest.publish(dataPath.toString, field, vdir)
+      () => writeField(new HPath(dataPath, versions(field)), perInput, batchInputs)
     }
+    Task.runAll(spark.sparkContext, units)
+    if (versions.nonEmpty) Manifest.publishAll(snap, versions)
     SidecarFs.writeStringAtomic(digestTaskFilepath.toString,
       Json.canonical(fullSpecWithConfig(config)))
     val hashes = Map(
@@ -300,30 +301,56 @@ final class Task(
     times.save()
   }
 
+  /** One field's unit of [[store]]: its inputs written under the version
+    * dir `target`, one `input_id=<id>` dir each, every one with its
+    * schema record. */
+  private def writeField(target: HPath, perInput: Map[InputId, DataFrame],
+                         batchInputs: Boolean): Unit = {
+    def inputDir(id: InputId) = new HPath(target, s"input_id=${id.render}")
+    val canBatch = batchInputs && perInput.size > 1 &&
+      perInput.keys.forall(_.render.matches("[A-Za-z0-9._-]+")) &&
+      perInput.values.map(_.schema).toSet.size == 1 &&
+      !perInput.values.head.columns.contains("input_id")
+    if (canBatch) {
+      import org.apache.spark.sql.functions.lit
+      perInput.toSeq.sortBy(_._1)
+        .map { case (id, df) => df.withColumn("input_id", lit(id.render)) }
+        .reduce(_ unionByName _)
+        .write.mode("overwrite").partitionBy("input_id")
+        .parquet(target.toString)
+      // a 0-row input produces no partition directory — write it
+      // per-input so load()'s per-id existence contract holds; every
+      // input dir gets its own schema record either way
+      for ((id, df) <- perInput) {
+        val dir = inputDir(id).toString
+        if (SidecarFs.exists(dir)) Stored.recordSchema(dir, df.schema)
+        else Stored.write(df, dir)
+      }
+    } else
+      for ((id, df) <- perInput)
+        Stored.write(df, inputDir(id).toString)
+  }
+
   /** Load the stored task data; validates input-id and field sets vs the
-    * pipeline (repype/task.py:437-471). */
+    * pipeline (repype/task.py:437-471). Every field resolves from ONE
+    * [[Manifest.snapshot]], so a load overlapping a [[store]] pairs no
+    * field's new version with another field's old one. */
   def load(pipeline: Option[Pipeline] = None): Map[InputId, Map[String, DataFrame]] = {
     require(runnable, "not runnable")
     require(SidecarFs.exists(dataPath.toString) || inputIds.isEmpty
       || pipeline.isEmpty || requiredFields(pipeline.get).isEmpty,
       s"no stored data at $dataPath")
-    def storedFieldDirs: Set[String] =
-      Manifest.names(dataPath.toString)
-    val fields: Set[String] = pipeline match {
-      case Some(p) => requiredFields(p)
-      case None => storedFieldDirs
-    }
-    pipeline.foreach { _ =>
-      val stored = storedFieldDirs
-      require(stored == fields,
-        s"Loaded data is inconsistent with the pipeline: $stored != $fields")
-    }
+    val snap = Manifest.snapshot(dataPath.toString)
+    val stored = snap.names
+    val fields = pipeline.fold(stored)(requiredFields)
+    require(stored == fields,
+      s"Loaded data is inconsistent with the pipeline: $stored != $fields")
     inputIds.map { id =>
       id -> fields.map { f =>
-        val dir = fieldDir(f, id)
-        require(SidecarFs.exists(dir.toString),
+        val dir = s"${snap.resolve(f)}/input_id=${id.render}"
+        require(SidecarFs.exists(dir),
           s"Loaded data is inconsistent with task specification: missing $dir")
-        f -> Stored.read(spark, dir.toString)
+        f -> Stored.read(spark, dir)
       }.toMap
     }.toMap
   }
@@ -418,6 +445,37 @@ object Task {
   /** Name of a task dir's field-store child ([[Task.dataPath]]), which
     * task discovery never walks (see [[Batch]]). */
   val DataDir = "data"
+
+  /** Most fields one [[Task.store]] writes at once. */
+  private val MaxConcurrentFieldWrites = 8
+
+  /** Run `units` concurrently on a pool made for this call (one thread
+    * per unit, at most [[MaxConcurrentFieldWrites]]; a single unit runs
+    * on the caller thread), each with the caller's Spark local
+    * properties. Returns once every unit has finished; when any failed,
+    * rethrows the first failure with the others suppressed on it. */
+  private def runAll(sc: org.apache.spark.SparkContext,
+                     units: Seq[() => Unit]): Unit =
+    if (units.size <= 1) units.foreach(_())
+    else {
+      import org.apache.spark.graftshim.GraftSparkInternals
+      // thunks built HERE, so they carry this thread's job group
+      val inherited = units.map(u => GraftSparkInternals.withInheritedLocalProperties(sc)(u()))
+      val pool = java.util.concurrent.Executors.newFixedThreadPool(
+        math.min(units.size, MaxConcurrentFieldWrites))
+      try {
+        val futures = inherited.map(u =>
+          pool.submit(new java.util.concurrent.Callable[Unit] { def call(): Unit = u() }))
+        val failures = futures.flatMap { f =>
+          try { f.get(); None }
+          catch { case e: java.util.concurrent.ExecutionException => Some(e.getCause) }
+        }
+        failures.headOption.foreach { first =>
+          failures.tail.filterNot(_ eq first).foreach(first.addSuppressed)
+          throw first
+        }
+      } finally pool.shutdownNow()
+    }
 }
 
 /** Registry of stage factories — the offline replacement for the

@@ -34,34 +34,36 @@ private[graft] object IndexLifecycle {
     * a fresh write owns all of it. */
   def reset(indexPath: String): Unit = SidecarFs.deleteTree(indexPath)
 
-  /** The fresh version dirs one call writes under `root`, made live
-    * together by [[publish]] — one atomic manifest replace, so a reader
-    * never resolves a mix of this call's tiers and the prior ones. The
-    * superseded version of each tier is retained one publish cycle (the
-    * grace window for a reader that resolved just before the swap) and
-    * pruned by the next. */
-  private final class Versions(root: String) {
+  /** The fresh version dirs one call writes under `snap.root`, made
+    * live together by [[publish]] — one atomic manifest replace against
+    * the call's snapshot, so a reader never resolves a mix of this
+    * call's tiers and the prior ones. The superseded version of each
+    * tier is retained one publish cycle (the grace window for a reader
+    * that resolved just before the swap) and pruned by the next. */
+  private final class Versions(snap: Manifest.Snapshot) {
     private val written = mutable.LinkedHashMap.empty[String, String]
 
     /** Write `df` as a fresh version of tier `name` (through
       * [[graft.core.Stored.write]], so it carries its schema record)
-      * and return its dir. Not live until [[publish]]. */
+      * and return its dir. Not live until [[publish]]. One version per
+      * tier per call. */
     def write(name: String, df: DataFrame, partitionBy: String*): String = {
-      val v = Manifest.nextVersionDir(root, name)
-      Stored.write(df, s"$root/$v", partitionBy: _*)
+      require(!written.contains(name), s"tier $name written twice in one call")
+      val v = Manifest.nextVersionDir(snap, name)
+      Stored.write(df, s"${snap.root}/$v", partitionBy: _*)
       written(name) = v
-      s"$root/$v"
+      s"${snap.root}/$v"
     }
 
     /** Publish every version written so far in one manifest write. */
     def publish(): Unit =
-      if (written.nonEmpty) Manifest.publishAll(root, written.toMap)
+      if (written.nonEmpty) Manifest.publishAll(snap, written.toMap)
   }
 
   /** Write one tier as a fresh version and publish it. */
   def publishVersion(root: String, name: String, df: DataFrame,
                      partitionBy: String*): Unit = {
-    val v = new Versions(root)
+    val v = new Versions(Manifest.snapshot(root))
     v.write(name, df, partitionBy: _*)
     v.publish()
   }
@@ -71,7 +73,7 @@ private[graft] object IndexLifecycle {
   final class Pass private[IndexLifecycle] (val spark: SparkSession,
                                             val snap: Manifest.Snapshot,
                                             val deletion: Option[DataFrame]) {
-    private[IndexLifecycle] val versions = new Versions(snap.root)
+    private[IndexLifecycle] val versions = new Versions(snap)
 
     /** Tier `name` as the snapshot resolves it. */
     def read(name: String): DataFrame = Stored.read(spark, snap.resolve(name))
@@ -106,7 +108,8 @@ private[graft] object IndexLifecycle {
     *     shuffle anti-join past it (a ceiling two racing takedowns can
     *     overshoot);
     *  4. runs `body`, which rewrites tiers through [[Pass.write]];
-    *  5. publishes every tier the body wrote in ONE manifest write;
+    *  5. publishes every tier the body wrote in ONE manifest write,
+    *     against `snap` (no second read of `current`);
     *  6. clears exactly the snapshotted tombstone dirs — a request that
     *     arrived mid-pass survives to the next pass, and a crash between
     *     publish and clear merely re-applies idempotent tombstones.

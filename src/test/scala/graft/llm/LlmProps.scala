@@ -195,9 +195,10 @@ object LlmProps extends Properties("graft.llm") {
         Seq("bands", "sigs", "postings").foreach(n =>
           java.nio.file.Files.createDirectories(root.resolve(n)))
         val ok = seq.forall { name =>
-          val v = Manifest.nextVersionDir(root.toString, name)
+          val snap = Manifest.snapshot(root.toString)
+          val v = Manifest.nextVersionDir(snap, name)
           java.nio.file.Files.createDirectories(root.resolve(v))
-          Manifest.publish(root.toString, name, v)
+          Manifest.publishAll(snap, Map(name -> v))
           prev(name) = last.getOrElse(name, name)
           last(name) = v
           val resolved = Seq("bands", "sigs", "postings").forall { n =>
