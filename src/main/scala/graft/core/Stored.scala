@@ -1,6 +1,7 @@
 package graft.core
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.{DataFrame, Row, SparkSession}
+import org.apache.spark.sql.graftshim.GraftParquet
 import org.apache.spark.sql.types.{ArrayType, DataType, MapType, StructType}
 
 /** The writer/reader pair for the Parquet datasets graft keeps — task
@@ -28,6 +29,14 @@ import org.apache.spark.sql.types.{ArrayType, DataType, MapType, StructType}
   * into a live dir (index ingest) write with the dir's own encoder, so
   * its record stays valid; a record is only ever written for a dataset
   * the same call just wrote in full.
+  *
+  * Bounded state is read on the driver ([[collect]]): the one-row meta
+  * tiers (IVF `meta`, IVF-PQ `pq_meta`, MinHash `meta`, k-NN graph
+  * `meta`), the nlist-row `centroids`, the m×ksub-row `codebooks` and
+  * the graph's one-row `entry`. Every caller already collected these
+  * whole to the driver and put them into plans as literals, so reading
+  * them there adds no size bound; it drops the Spark job each collect
+  * launched, several per index call.
   */
 object Stored {
 
@@ -53,12 +62,26 @@ object Stored {
   /** The dataset at `dir`, read with its schema record when there is
     * one, with Spark's inference otherwise. */
   def read(spark: SparkSession, dir: String): DataFrame =
-    SidecarFs.readString(s"$dir/$SchemaFile") match {
-      case Some(json) =>
-        spark.read.schema(DataType.fromJson(json).asInstanceOf[StructType])
-          .parquet(dir)
+    recorded(dir) match {
+      case Some(schema) => spark.read.schema(schema).parquet(dir)
       case None => spark.read.parquet(dir)
     }
+
+  /** The rows of the dataset at `dir` — the schema and rows of
+    * `read(spark, dir).collect()` — read on the driver from the Parquet
+    * files directly under `dir`, with its schema record and Spark's own
+    * Parquet read support: no job, no broadcast, no session conf change,
+    * nothing persisted. For bounded, unpartitioned state only (see
+    * above). A dir without a record is read by that collect. */
+  def collect(spark: SparkSession, dir: String): Array[Row] =
+    recorded(dir) match {
+      case Some(schema) => GraftParquet.readLocal(spark, dir, schema)
+      case None => read(spark, dir).collect()
+    }
+
+  private def recorded(dir: String): Option[StructType] =
+    SidecarFs.readString(s"$dir/$SchemaFile")
+      .map(DataType.fromJson(_).asInstanceOf[StructType])
 
   private def nullable(t: DataType): DataType = t match {
     case s: StructType => StructType(s.fields.map(f =>

@@ -215,10 +215,11 @@ final class Task(
     *     snapshot's one listing) and its in-plan row observation;
     *  2. every field written CONCURRENTLY, one unit per field — its
     *     write job plus the `_schema.json` record of each input dir — on
-    *     a pool made for this call (one thread per field, at most
-    *     [[Task.MaxConcurrentFieldWrites]]), each unit carrying the
-    *     caller's Spark local properties, so [[Batch.cancel]]'s job group
-    *     reaches its jobs and metrics.json attributes them to the task;
+    *     a pool made for this call ([[Concurrent.runAll]]: one thread
+    *     per field, at most [[Task.MaxConcurrentFieldWrites]]), each unit
+    *     carrying the caller's Spark local properties, so
+    *     [[Batch.cancel]]'s job group reaches its jobs and metrics.json
+    *     attributes them to the task;
     *  3. once every unit has finished, ONE [[Manifest.publishAll]] of all
     *     fields against the snapshot: a concurrent [[load]] sees every
     *     field's prior version or every field's new one, never a mix;
@@ -285,7 +286,7 @@ final class Task(
         }
       () => writeField(new HPath(dataPath, versions(field)), perInput, batchInputs)
     }
-    Task.runAll(spark.sparkContext, units)
+    Concurrent.runAll(spark.sparkContext, units, Task.MaxConcurrentFieldWrites)
     if (versions.nonEmpty) Manifest.publishAll(snap, versions)
     SidecarFs.writeStringAtomic(digestTaskFilepath.toString,
       Json.canonical(fullSpecWithConfig(config)))
@@ -448,34 +449,6 @@ object Task {
 
   /** Most fields one [[Task.store]] writes at once. */
   private val MaxConcurrentFieldWrites = 8
-
-  /** Run `units` concurrently on a pool made for this call (one thread
-    * per unit, at most [[MaxConcurrentFieldWrites]]; a single unit runs
-    * on the caller thread), each with the caller's Spark local
-    * properties. Returns once every unit has finished; when any failed,
-    * rethrows the first failure with the others suppressed on it. */
-  private def runAll(sc: org.apache.spark.SparkContext,
-                     units: Seq[() => Unit]): Unit =
-    if (units.size <= 1) units.foreach(_())
-    else {
-      import org.apache.spark.graftshim.GraftSparkInternals
-      // thunks built HERE, so they carry this thread's job group
-      val inherited = units.map(u => GraftSparkInternals.withInheritedLocalProperties(sc)(u()))
-      val pool = java.util.concurrent.Executors.newFixedThreadPool(
-        math.min(units.size, MaxConcurrentFieldWrites))
-      try {
-        val futures = inherited.map(u =>
-          pool.submit(new java.util.concurrent.Callable[Unit] { def call(): Unit = u() }))
-        val failures = futures.flatMap { f =>
-          try { f.get(); None }
-          catch { case e: java.util.concurrent.ExecutionException => Some(e.getCause) }
-        }
-        failures.headOption.foreach { first =>
-          failures.tail.filterNot(_ eq first).foreach(first.addSuppressed)
-          throw first
-        }
-      } finally pool.shutdownNow()
-    }
 }
 
 /** Registry of stage factories — the offline replacement for the

@@ -110,67 +110,68 @@ object Clustering {
       .select(col(idCol), col(vecCol).cast("array<double>").as("v"))
       .persist(StorageLevel.MEMORY_AND_DISK)
 
-    var centroids: Array[Array[Double]] =
-      cached.orderBy(col(idCol)).limit(k).collect()
-        .map(_.getSeq[Double](1).toArray)
-    require(centroids.length == k,
-      s"need at least $k vectors to seed $k clusters, got ${centroids.length}")
-    val dim = centroids.head.length
-    val exploded = explodedUpdate.getOrElse(dim > WideDimUpdateThreshold)
-    val inertia = new Array[Double](iters)
+    try {
+      var centroids: Array[Array[Double]] =
+        cached.orderBy(col(idCol)).limit(k).collect()
+          .map(_.getSeq[Double](1).toArray)
+      require(centroids.length == k,
+        s"need at least $k vectors to seed $k clusters, got ${centroids.length}")
+      val dim = centroids.head.length
+      val exploded = explodedUpdate.getOrElse(dim > WideDimUpdateThreshold)
+      val inertia = new Array[Double](iters)
 
-    var round = 0
-    while (round < iters) {
-      // min surrogate score is |c|²−2vc; adding |v|² recovers |v−c|², so
-      // the per-cluster sum rides the update aggregate for free
-      val assigned = cached
-        .withColumn("d", centroidScores(col("v"), centroids))
-        .withColumn("cluster",
-          (array_position(col("d"), array_min(col("d"))) - 1).cast("int"))
-      // deep copy: the exploded path mutates inner arrays per (cluster,
-      // dim) row, and sharing them with `centroids` would alias the
-      // lost-cluster keep-previous contract
-      val next = centroids.map(_.clone())
-      if (!exploded) {
-        val meanCols = (0 until dim).map(i =>
-          avg(element_at(col("v"), i + 1)).as(s"m$i"))
-        val sseCol = sum(array_min(col("d")) +
-          VectorExpressions.dotProduct(col("v"), col("v"))).as("sse")
-        val means = assigned
-          .groupBy(col("cluster"))
-          .agg(meanCols.head, (meanCols.tail :+ sseCol): _*)
-          .collect()
-        inertia(round) = means.map(_.getDouble(dim + 1)).sum
-        means.foreach { r =>
-          next(r.getInt(0)) = Array.tabulate(dim)(i => r.getDouble(i + 1))
+      var round = 0
+      while (round < iters) {
+        // min surrogate score is |c|²−2vc; adding |v|² recovers |v−c|², so
+        // the per-cluster sum rides the update aggregate for free
+        val assigned = cached
+          .withColumn("d", centroidScores(col("v"), centroids))
+          .withColumn("cluster",
+            (array_position(col("d"), array_min(col("d"))) - 1).cast("int"))
+        // deep copy: the exploded path mutates inner arrays per (cluster,
+        // dim) row, and sharing them with `centroids` would alias the
+        // lost-cluster keep-previous contract
+        val next = centroids.map(_.clone())
+        if (!exploded) {
+          val meanCols = (0 until dim).map(i =>
+            avg(element_at(col("v"), i + 1)).as(s"m$i"))
+          val sseCol = sum(array_min(col("d")) +
+            VectorExpressions.dotProduct(col("v"), col("v"))).as("sse")
+          val means = assigned
+            .groupBy(col("cluster"))
+            .agg(meanCols.head, (meanCols.tail :+ sseCol): _*)
+            .collect()
+          inertia(round) = means.map(_.getDouble(dim + 1)).sum
+          means.foreach { r =>
+            next(r.getInt(0)) = Array.tabulate(dim)(i => r.getDouble(i + 1))
+          }
+        } else {
+          // wide-dim shape: one narrow (cluster, i, x) row per vector
+          // element, ONE hash aggregate of k·dim groups — expression count
+          // constant in dim, so codegen/planner cost stays flat to d=4096.
+          // The per-row SSE rides the i=0 slot (every vector has one) so
+          // the inertia still needs no second scan.
+          val rows = assigned
+            .select(col("cluster"),
+              (array_min(col("d")) +
+                VectorExpressions.dotProduct(col("v"), col("v"))).as("sse"),
+              posexplode(col("v")).as(Seq("i", "x")))
+            .groupBy(col("cluster"), col("i"))
+            .agg(avg(col("x")).as("m"),
+              sum(when(col("i") === 0, col("sse"))).as("ssepart"))
+            .collect()
+          inertia(round) = rows.iterator
+            .filter(r => r.getInt(1) == 0 && !r.isNullAt(3))
+            .map(_.getDouble(3)).sum
+          rows.foreach { r =>
+            next(r.getInt(0))(r.getInt(1)) = r.getDouble(2)
+          }
         }
-      } else {
-        // wide-dim shape: one narrow (cluster, i, x) row per vector
-        // element, ONE hash aggregate of k·dim groups — expression count
-        // constant in dim, so codegen/planner cost stays flat to d=4096.
-        // The per-row SSE rides the i=0 slot (every vector has one) so
-        // the inertia still needs no second scan.
-        val rows = assigned
-          .select(col("cluster"),
-            (array_min(col("d")) +
-              VectorExpressions.dotProduct(col("v"), col("v"))).as("sse"),
-            posexplode(col("v")).as(Seq("i", "x")))
-          .groupBy(col("cluster"), col("i"))
-          .agg(avg(col("x")).as("m"),
-            sum(when(col("i") === 0, col("sse"))).as("ssepart"))
-          .collect()
-        inertia(round) = rows.iterator
-          .filter(r => r.getInt(1) == 0 && !r.isNullAt(3))
-          .map(_.getDouble(3)).sum
-        rows.foreach { r =>
-          next(r.getInt(0))(r.getInt(1)) = r.getDouble(2)
-        }
+        centroids = next
+        round += 1
       }
-      centroids = next
-      round += 1
-    }
-    cached.unpersist(blocking = false)
-    (centroids, inertia)
+      (centroids, inertia)
+    } finally cached.unpersist(blocking = false)
   }
 
   /** Train all `m` product-quantization subspace codebooks at once: ONE
@@ -195,45 +196,46 @@ object Clustering {
         slice(col("v"), s * dsub + 1, dsub)): _*)).as(Seq("s", "subv")))
       .persist(StorageLevel.MEMORY_AND_DISK)
 
-    // seed: the ksub lowest-id subvectors per subspace, in id order
-    // (drawn from the training sample so every seed id exists in subRows)
-    val seed = subRows
-      .join(broadcast(train.select(col(idCol).as("id"))
-        .orderBy(col("id")).limit(ksub)), "id")
-      .orderBy(col("s"), col("id"))
-      .collect()
-    require(seed.length == m * ksub,
-      s"need at least $ksub vectors to seed $ksub clusters per subspace")
-    val books: Array[Array[Array[Double]]] = Array.tabulate(m, ksub) { (s, c) =>
-      seed(s * ksub + c).getSeq[Double](2).toArray
-    }
-
-    var round = 0
-    while (round < iters) {
-      val bookLit = typedLit(books.map(_.map(_.toSeq).toSeq).toSeq)
-      val normLit = typedLit(books.map(_.map(b => b.map(x => x * x).sum).toSeq).toSeq)
-      val scores = array((0 until ksub).map { c =>
-        element_at(element_at(normLit, col("s") + 1), c + 1) -
-          lit(2.0) * VectorExpressions.dotProduct(col("subv"),
-            element_at(element_at(bookLit, col("s") + 1), c + 1))
-      }: _*)
-      val meanCols = (0 until dsub).map(i =>
-        avg(element_at(col("subv"), i + 1)).as(s"m$i"))
-      val means = subRows
-        .withColumn("d", scores)
-        .withColumn("cluster",
-          (array_position(col("d"), array_min(col("d"))) - 1).cast("int"))
-        .groupBy(col("s"), col("cluster"))
-        .agg(meanCols.head, meanCols.tail: _*)
+    try {
+      // seed: the ksub lowest-id subvectors per subspace, in id order
+      // (drawn from the training sample so every seed id exists in subRows)
+      val seed = subRows
+        .join(broadcast(train.select(col(idCol).as("id"))
+          .orderBy(col("id")).limit(ksub)), "id")
+        .orderBy(col("s"), col("id"))
         .collect()
-      means.foreach { r =>
-        books(r.getInt(0))(r.getInt(1)) =
-          Array.tabulate(dsub)(i => r.getDouble(i + 2))
+      require(seed.length == m * ksub,
+        s"need at least $ksub vectors to seed $ksub clusters per subspace")
+      val books: Array[Array[Array[Double]]] = Array.tabulate(m, ksub) { (s, c) =>
+        seed(s * ksub + c).getSeq[Double](2).toArray
       }
-      round += 1
-    }
-    subRows.unpersist(blocking = false)
-    books.toIndexedSeq
+
+      var round = 0
+      while (round < iters) {
+        val bookLit = typedLit(books.map(_.map(_.toSeq).toSeq).toSeq)
+        val normLit = typedLit(books.map(_.map(b => b.map(x => x * x).sum).toSeq).toSeq)
+        val scores = array((0 until ksub).map { c =>
+          element_at(element_at(normLit, col("s") + 1), c + 1) -
+            lit(2.0) * VectorExpressions.dotProduct(col("subv"),
+              element_at(element_at(bookLit, col("s") + 1), c + 1))
+        }: _*)
+        val meanCols = (0 until dsub).map(i =>
+          avg(element_at(col("subv"), i + 1)).as(s"m$i"))
+        val means = subRows
+          .withColumn("d", scores)
+          .withColumn("cluster",
+            (array_position(col("d"), array_min(col("d"))) - 1).cast("int"))
+          .groupBy(col("s"), col("cluster"))
+          .agg(meanCols.head, meanCols.tail: _*)
+          .collect()
+        means.foreach { r =>
+          books(r.getInt(0))(r.getInt(1)) =
+            Array.tabulate(dsub)(i => r.getDouble(i + 2))
+        }
+        round += 1
+      }
+      books.toIndexedSeq
+    } finally subRows.unpersist(blocking = false)
   }
 
   /** Assign rows of `vecs` to the nearest of the given centroids; returns

@@ -536,11 +536,11 @@ object Dedup {
                            textCol: String = "text",
                            idCol: String = "doc_id"): Unit = {
     val spark = batch.sparkSession
+    val snap = Manifest.snapshot(indexPath)
     val (numHashes, bands, shingleSize, maxBucketSize) =
-      readMinhashIndexMeta(spark, indexPath)
+      readMinhashIndexMeta(spark, snap)
     val sigs = Caches.track(
       minhashSignatures(batch, numHashes, shingleSize, textCol, idCol))
-    val snap = Manifest.snapshot(indexPath)
     bandRows(sigs, bands, numHashes / bands, maxBucketSize)
       .write.mode("append").partitionBy("band")
       .parquet(snap.resolve("bands"))
@@ -548,11 +548,14 @@ object Dedup {
   }
 
   /** (num_hashes, bands, shingle_size, max_bucket_size) from the index's
-    * own meta — the no-drift rule every reader and maintainer follows. */
+    * own meta, as the call's snapshot names it, read on the driver
+    * ([[Stored.collect]], no job) — the no-drift rule every reader and
+    * maintainer follows. */
   private def readMinhashIndexMeta(spark: org.apache.spark.sql.SparkSession,
-                                   indexPath: String): (Int, Int, Int, Int) = {
-    val meta = Stored.read(spark, s"$indexPath/meta").collect()
-    require(meta.length == 1, s"malformed index meta at $indexPath/meta")
+                                   snap: Manifest.Snapshot): (Int, Int, Int, Int) = {
+    val path = snap.resolve("meta")
+    val meta = Stored.collect(spark, path)
+    require(meta.length == 1, s"malformed index meta at $path")
     val rawCap = meta.head.getAs[Int]("max_bucket_size")
     (meta.head.getAs[Int]("num_hashes"), meta.head.getAs[Int]("bands"),
       meta.head.getAs[Int]("shingle_size"),
@@ -589,7 +592,7 @@ object Dedup {
         Seq("sigs" -> "", "bands" -> "band=")) { (snap, stage) =>
       // the index's meta is read once for the match and the append
       val meta @ (numHashes, bands, shingleSize, maxBucketSize) =
-        readMinhashIndexMeta(batch.sparkSession, indexPath)
+        readMinhashIndexMeta(batch.sparkSession, snap)
       val dup = matchesIndexed(batch, snap, meta, textCol, idCol)
         .filter(col("est_jaccard") >= threshold)
         .select(col("batch_id")).distinct()
@@ -810,7 +813,7 @@ object Dedup {
         // shuffle that lays the files out
         .repartitionByRange(col("band"), col("bucket"))
       val capped = if (ids.nonEmpty) bands else {
-        val (_, _, _, cap) = readMinhashIndexMeta(spark, snap.root)
+        val (_, _, _, cap) = readMinhashIndexMeta(spark, snap)
         val w = org.apache.spark.sql.expressions.Window
           .partitionBy(col("band"), col("bucket"))
         bands.distinct()
@@ -943,9 +946,11 @@ object Dedup {
     * [[incrementalMinhashMatches]]: (batch_id, hist_id, est_jaccard). */
   def incrementalMinhashMatchesIndexed(batch: DataFrame, indexPath: String,
                                        textCol: String = "text",
-                                       idCol: String = "doc_id"): DataFrame =
-    matchesIndexed(batch, Manifest.snapshot(indexPath),
-      readMinhashIndexMeta(batch.sparkSession, indexPath), textCol, idCol)
+                                       idCol: String = "doc_id"): DataFrame = {
+    val snap = Manifest.snapshot(indexPath)
+    matchesIndexed(batch, snap, readMinhashIndexMeta(batch.sparkSession, snap),
+      textCol, idCol)
+  }
 
   /** [[incrementalMinhashMatchesIndexed]] against the call's snapshot,
     * with the index's meta already read (the ingest loop reads it once
@@ -992,13 +997,13 @@ object Dedup {
                                      textCol: String = "text",
                                      idCol: String = "doc_id"): DataFrame = {
     val spark = batchStream.sparkSession
-    val (numHashes, bands, shingleSize, _) =
-      readMinhashIndexMeta(spark, indexPath)
+    val snap = Manifest.snapshot(indexPath)
+    val (numHashes, bands, shingleSize, _) = readMinhashIndexMeta(spark, snap)
     val r = numHashes / bands
     // pending tombstones filter the STATIC sides (resolved at plan
     // time — a stream picks up later tombstones on restart, same as it
     // picks up a new manifest version)
-    val (histBand, sigs) = historyTiers(spark, Manifest.snapshot(indexPath))
+    val (histBand, sigs) = historyTiers(spark, snap)
     val histSigs = sigs.select(col("doc_id").as("hist_id"), col("sig").as("sig2"))
     batchStream
       .select(col(idCol).as("batch_id"),

@@ -471,7 +471,7 @@ object GraphAnn {
     val p = snap.resolve("meta")
     if (!SidecarFs.exists(p)) None
     else {
-      val meta = Stored.read(spark, p).collect()
+      val meta = Stored.collect(spark, p)
       require(meta.length == 1,
         s"malformed knn-graph index meta at $p")
       Some(meta.head)
@@ -670,8 +670,8 @@ object GraphAnn {
     // rebuild-pressure), never a throw
     val entryId =
       if (!SidecarFs.exists(entryP)) None
-      else Stored.read(spark, entryP)
-        .collect().headOption.map(_.getAs[Long]("cand_id"))
+      else Stored.collect(spark, entryP)
+        .headOption.map(_.getAs[Long]("cand_id"))
     val entryConnected = entryId.exists(id =>
       graph.filter(col("src") === id).limit(1).count() > 0)
     graph.unpersist(blocking = false)

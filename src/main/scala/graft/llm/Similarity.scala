@@ -3,7 +3,7 @@ package graft.llm
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 
-import graft.core.{Manifest, SidecarFs, Stored}
+import graft.core.{Concurrent, Manifest, SidecarFs, Stored}
 
 /** Similarity search over an `embedding: array<float>` column.
   *
@@ -270,12 +270,12 @@ object Similarity {
   }
 
   /** Centroid table of a persisted index as bounded driver state (nlist
-    * rows — the k-means contract), collected and then put in cell order
-    * on the driver (a distributed sort of nlist rows costs jobs). */
+    * rows — the k-means contract), read on the driver ([[Stored.collect]],
+    * no job) and put in cell order there (a distributed sort of nlist
+    * rows costs jobs). */
   private def loadCentroids(spark: org.apache.spark.sql.SparkSession,
                             snap: Manifest.Snapshot): Array[Array[Double]] =
-    Stored.read(spark, snap.resolve("centroids"))
-      .collect()
+    Stored.collect(spark, snap.resolve("centroids"))
       .sortBy(_.getAs[Int]("cell"))
       .map(_.getAs[scala.collection.Seq[Double]]("centroid").toArray)
 
@@ -431,11 +431,12 @@ object Similarity {
       .toDF("build_n", "n", "drift_micro", "rebuild")
   }
 
-  /** The one row of meta tier `name` (IVF `meta`, IVF-PQ `pq_meta`). */
+  /** The one row of meta tier `name` (IVF `meta`, IVF-PQ `pq_meta`),
+    * read on the driver ([[Stored.collect]], no job). */
   private def metaRow(spark: org.apache.spark.sql.SparkSession,
                       snap: Manifest.Snapshot,
                       name: String): org.apache.spark.sql.Row = {
-    val meta = Stored.read(spark, snap.resolve(name)).collect()
+    val meta = Stored.collect(spark, snap.resolve(name))
     require(meta.length == 1, s"malformed index meta at ${snap.root}/$name")
     meta.head
   }
@@ -822,7 +823,8 @@ object Similarity {
   }
 
   /** (PQ, has_vectors) reconstructed from a persisted index's
-    * codebooks + meta — bounded driver state (m×ksub rows, KBs). */
+    * codebooks + meta — bounded driver state (m×ksub rows, KBs), both
+    * read on the driver ([[Stored.collect]], no job). */
   private def loadPq(spark: org.apache.spark.sql.SparkSession,
                      snap: Manifest.Snapshot): (Pq, Boolean) = {
     val meta = metaRow(spark, snap, "pq_meta")
@@ -830,11 +832,10 @@ object Similarity {
     val ksub = meta.getAs[Int]("ksub")
     val dsub = meta.getAs[Int]("dsub")
     val books = Array.fill(m)(Array.ofDim[Array[Double]](ksub))
-    Stored.read(spark, snap.resolve("codebooks"))
-      .collect().foreach { r =>
-        books(r.getAs[Int]("subspace"))(r.getAs[Int]("code")) =
-          r.getAs[scala.collection.Seq[Double]]("centroid").toArray
-      }
+    Stored.collect(spark, snap.resolve("codebooks")).foreach { r =>
+      books(r.getAs[Int]("subspace"))(r.getAs[Int]("code")) =
+        r.getAs[scala.collection.Seq[Double]]("centroid").toArray
+    }
     (Pq(books.toIndexedSeq, m, dsub), meta.getAs[Boolean]("has_vectors"))
   }
 
@@ -1231,31 +1232,25 @@ object Similarity {
     * is max(coarse, pq) driver round-trips instead of their sum (each
     * round is a small aggregate job; with both loops in flight the
     * scheduler interleaves them). Results are identical to the
-    * sequential order — neither loop reads the other's state. Local
-    * properties (job group / pool) are inherited so Batch-scoped
-    * cancellation still reaches the training jobs. Shared by the
-    * in-memory [[ivfPqTopK]] and the index write [[writeIvfPqIndex]],
-    * so the two paths can never train differently. */
+    * sequential order — neither loop reads the other's state. Both run
+    * through [[Concurrent.runAll]]: each carries the caller's local
+    * properties (job group / pool), so Batch-scoped cancellation still
+    * reaches the training jobs, and when one trainer throws the call
+    * waits for the other to end before rethrowing, so no training job
+    * outlives the call. Shared by the in-memory [[ivfPqTopK]] and the
+    * index write [[writeIvfPqIndex]], so the two paths can never train
+    * differently. */
   private def trainCoarseAndPq(corpus: DataFrame, nlist: Int, m: Int,
                                ksub: Int, trainIters: Int,
                                vecCol: String, idCol: String,
-                               trainFraction: Double): (Array[Array[Double]], Pq) = {
-    import scala.concurrent.{Await, Future}
-    import scala.concurrent.duration.Duration
-    import scala.concurrent.ExecutionContext.Implicits.global
-    import org.apache.spark.graftshim.GraftSparkInternals
-    val sc = corpus.sparkSession.sparkContext
-    // thunks built HERE so the caller thread's properties are what the
-    // pool threads inherit
-    val trainCells = GraftSparkInternals.withInheritedLocalProperties(sc)(
-      Clustering.trainCentroids(
-        corpus, idCol, vecCol, nlist, trainIters, trainFraction))
-    val trainBooks = GraftSparkInternals.withInheritedLocalProperties(sc)(
-      trainPq(corpus, m, ksub, trainIters, vecCol, idCol, trainFraction))
-    val cellsF = Future(trainCells())
-    val pqF = Future(trainBooks())
-    (Await.result(cellsF, Duration.Inf), Await.result(pqF, Duration.Inf))
-  }
+                               trainFraction: Double): (Array[Array[Double]], Pq) =
+    Concurrent.runAll[Any](corpus.sparkSession.sparkContext, Seq(
+      () => Clustering.trainCentroids(
+        corpus, idCol, vecCol, nlist, trainIters, trainFraction),
+      () => trainPq(corpus, m, ksub, trainIters, vecCol, idCol, trainFraction)),
+      maxThreads = 2) match {
+      case Seq(cells: Array[Array[Double]] @unchecked, pq: Pq) => (cells, pq)
+    }
 
   /** (cand_id, cell, code, c_norm, cv) rows of a corpus under a FIXED
     * coarse quantizer + PQ — the one encode implementation behind the

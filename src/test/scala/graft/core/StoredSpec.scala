@@ -11,8 +11,9 @@ import graft.SparkSpec
   * store: every input dir carries a schema record that reads back as
   * Spark would infer it, loading a stored task launches no Spark job, and
   * a store written before records existed still loads — and gains
-  * records at its next publish. The source scan keeps every store read of
-  * the task and index tiers on the one reader. */
+  * records at its next publish. The source scans keep every store read of
+  * the task and index tiers on the one reader, and every collect of a
+  * bounded index tier on its driver-side reader. */
 class StoredSpec extends SparkSpec {
 
   // four fields of assorted shapes: non-nullable columns at the top level
@@ -136,6 +137,53 @@ class StoredSpec extends SparkSpec {
       val hits = reader.findAllIn(code(s"$main/$f")).toSeq
       assert(hits.isEmpty,
         s"$f reads Parquet outside Stored.read: ${hits.mkString(", ")}")
+    }
+  }
+
+  /** The reads in `code` that collect stored index state through Spark:
+    * a `Stored.read(…)` chained into `.collect()` or `.head` (in the
+    * index files every collected dataset is bounded state, which
+    * [[Stored.collect]] reads), or a `read.parquet(…)` so chained whose
+    * argument names a bounded tier (`meta`, `pq_meta`, `centroids`,
+    * `codebooks`, `entry`). */
+  private def boundedCollects(code: String): Seq[String] = {
+    val tier = """"(?:[^"\n]*/)?(?:meta|pq_meta|centroids|codebooks|entry)"""".r
+    val call = ("""(Stored\s*\.\s*read|\bread\s*\.\s*parquet)\s*""" +
+      """\(([^()]*(?:\([^()]*\)[^()]*)*)\)\s*\.\s*(?:collect\s*\(|head\b)""").r
+    call.findAllMatchIn(code).filter(m =>
+      m.group(1).startsWith("Stored") || tier.findFirstIn(m.group(2)).isDefined)
+      .map(_.matched).toSeq
+  }
+
+  test("source scan: no index call collects a bounded tier through a " +
+      "Spark job — Stored.collect reads it on the driver") {
+    // the scan catches the shapes such reads had ...
+    for (bad <- Seq(
+        """Stored.read(spark, s"$indexPath/meta").collect()""",
+        "Stored.read(spark, snap.resolve(\"codebooks\"))\n  .collect()",
+        "Stored.read(spark, snap.resolve(name)).collect()",
+        "Stored.read(spark, entryP)\n  .collect().headOption",
+        """spark.read.parquet(s"$idx/centroids").head"""))
+      assert(boundedCollects(bad).size == 1, bad)
+    // ... and leaves lazy reads and other datasets alone
+    for (ok <- Seq(
+        """val entry = Stored.read(spark, snap.resolve("entry"))""",
+        """Stored.collect(spark, snap.resolve("pq_meta"))""",
+        """spark.read.parquet(modelPath).collect()"""))
+      assert(boundedCollects(ok).isEmpty, ok)
+    val llm = java.nio.file.Paths.get("src/main/scala/graft/llm")
+    val files = {
+      val s = Files.list(llm)
+      try s.toArray.toSeq.map(_.asInstanceOf[java.nio.file.Path])
+        .filter(_.toString.endsWith(".scala"))
+      finally s.close()
+    }
+    assert(files.size > 10)
+    for (f <- files) {
+      val hits = boundedCollects(Files.readString(f)
+        .replaceAll("(?s)/\\*.*?\\*/", "").replaceAll("//[^\n]*", ""))
+      assert(hits.isEmpty,
+        s"$f collects a bounded tier through Spark: ${hits.mkString(", ")}")
     }
   }
 }

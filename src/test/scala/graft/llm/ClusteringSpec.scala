@@ -151,6 +151,26 @@ class ClusteringSpec extends SparkSpec {
     }
   }
 
+  test("a failing concurrent quantizer training ends both trainers and " +
+      "leaves no training copy cached") {
+    import org.apache.spark.graftshim.GraftSparkInternals.drainListenerBus
+    val sc = spark.sparkContext
+    // 6 vectors: too few to seed 10 coarse cells, enough for ksub = 4
+    val corpus = spark.read.parquet(s"$sfDir/embeddings.parquet")
+      .filter(col("vec_id") < 6L)
+    assert(corpus.count() == 6L)
+    val persisted = sc.getPersistentRDDs.keySet
+    val err = intercept[IllegalArgumentException] {
+      Similarity.writeIvfPqIndex(corpus,
+        tempDir("train-fail-").toString + "/idx", nlist = 10, m = 8, ksub = 4)
+    }
+    assert(err.getMessage.contains("to seed 10 clusters"), err.getMessage)
+    drainListenerBus(sc)
+    assert(sc.statusTracker.getActiveJobIds.isEmpty,
+      sc.statusTracker.getActiveJobIds.toSeq)
+    assert(sc.getPersistentRDDs.keySet == persisted)
+  }
+
   test("kmeansWithInertia: Lloyd contraction holds and the sweep converges " +
       "on the blobs") {
     val (assigned, inertia) = Clustering.kmeansWithInertia(

@@ -117,6 +117,35 @@ class IndexLifecycleSpec extends SparkSpec {
     } finally hc.unset("fs.manifestcountfs.impl")
   }
 
+  test("a MinHash index whose meta is a published version probes and " +
+      "ingests with that version") {
+    import graft.core.{Manifest, SidecarFs, Stored}
+    val root = tempDir("mh-meta-version-").toString
+    // `plain` keeps its meta in the plain dir, `versioned` as a published
+    // version: the same calls must see the same index through both
+    val (plain, versioned) = (s"$root/plain", s"$root/versioned")
+    for (idx <- Seq(plain, versioned))
+      Dedup.writeMinhashIndex(docs(0L until 30L), idx, numHashes = 32,
+        bands = 8, shingleSize = 5)
+    val meta = Stored.read(spark, s"$versioned/meta")
+    IndexLifecycle.publishVersion(versioned, "meta",
+      spark.createDataFrame(java.util.Arrays.asList(meta.collect(): _*),
+        meta.schema))
+    assert(Manifest.resolve(versioned, "meta") != s"$versioned/meta")
+    // only a read through the manifest finds the meta now
+    SidecarFs.deleteTree(s"$versioned/meta")
+    def probe(idx: String, ids: Seq[Long]) =
+      Dedup.incrementalMinhashMatchesIndexed(docs(ids), idx).collect()
+        .map(_.toString).sorted.toSeq
+    assert(probe(plain, 0L until 10L).nonEmpty)
+    assert(probe(versioned, 0L until 10L) == probe(plain, 0L until 10L))
+    for (idx <- Seq(plain, versioned))
+      Dedup.ingestBatchIntoMinhashIndex(docs(200L until 210L), idx, "b1",
+        threshold = 0.9)
+    assert(probe(versioned, 195L until 215L) == probe(plain, 195L until 215L))
+    assert(probe(plain, 200L until 210L).nonEmpty)
+  }
+
   test("source scan: only the lifecycle helpers publish, version, " +
       "interlock or move keyed files") {
     val re = ("""\b(Manifest\s*\.\s*(publishAll|publish|nextVersionDir)|""" +

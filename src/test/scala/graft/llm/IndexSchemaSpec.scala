@@ -11,7 +11,8 @@ import graft.core.{Manifest, SidecarFs, Stored}
   * every tombstone request — reads back with its record as Spark would
   * infer it, appends and ingests keep the live dir's record valid, a
   * probe and a drift gauge launch fewer jobs than inferring reads cost,
-  * and an index written before records existed queries identically. */
+  * every bounded tier reads on the driver with no job, and an index
+  * written before records existed queries identically. */
 class IndexSchemaSpec extends SparkSpec {
   import SparkSpec.spark.implicits._
 
@@ -136,6 +137,11 @@ class IndexSchemaSpec extends SparkSpec {
     val (hits, probeJobs) = jobsIn(probe())
     val (gauge, driftJobs) = jobsIn(drift())
     assert(hits.nonEmpty)
+    // a pass that does not trip launches only its gauge's scan
+    val (noTrip, noTripJobs) = jobsIn(Similarity.rebuildIvfPqIndexIfDrifted(
+      spark, idx, maxDriftMicro = Long.MaxValue).collect().head)
+    assert(!noTrip.getAs[Boolean]("rebuilt"))
+    assert(noTripJobs == driftJobs, s"$noTripJobs vs $driftJobs jobs")
     dropSchemaRecords(idx)
     val (legacyHits, legacyProbeJobs) = jobsIn(probe())
     val (legacyGauge, legacyDriftJobs) = jobsIn(drift())
@@ -150,9 +156,64 @@ class IndexSchemaSpec extends SparkSpec {
 
   // measured on SparkSpec's session (local[4], 4 shuffle partitions);
   // the same calls cost 17 and 9 jobs when every tier was read with
-  // inference, centroids were range-sorted and pq_meta read twice
-  private val PinnedProbeJobs = 10
-  private val PinnedDriftJobs = 4
+  // inference, centroids were range-sorted and pq_meta read twice, and
+  // 10 and 4 while the bounded tiers (pq_meta, centroids, codebooks) were
+  // collected through a Spark job each
+  private val PinnedProbeJobs = 7
+  private val PinnedDriftJobs = 2
+
+  test("Stored.collect reads every bounded index tier on the driver as " +
+      "Stored.read(...).collect() does, with no job, broadcast or cache") {
+    val root = tempDir("schema-local-").toString
+    val (ivf, pq, mh, graph) =
+      (s"$root/ivf", s"$root/pq", s"$root/mh", s"$root/graph")
+    Similarity.writeIvfIndex(emb(0, 120), ivf, nlist = 4)
+    Similarity.writeIvfPqIndex(emb(0, 120), pq, nlist = 4, m = 8, ksub = 8)
+    Dedup.writeMinhashIndex(docs(0L until 30L), mh,
+      numHashes = 32, bands = 8, shingleSize = 5)
+    GraphAnn.writeKnnGraphIndex(emb(0, 120), graph, k = 4, rounds = 2)
+    def bounded(): Seq[String] = Seq(
+      ivf -> Seq("centroids", "meta"),
+      pq -> Seq("centroids", "codebooks", "pq_meta"),
+      mh -> Seq("meta"),
+      graph -> Seq("meta", "entry")).flatMap { case (idx, tiers) =>
+        tiers.map(Manifest.resolve(idx, _)) }
+    val sc = spark.sparkContext
+    def readsLikeSpark(dir: String): Unit = {
+      val expected = Stored.read(spark, dir)
+      val persisted = sc.getPersistentRDDs.keySet
+      // broadcast ids are sequential: the second probe's id shows how
+      // many broadcasts were made in between
+      val before = sc.broadcast(0)
+      val (rows, jobs) = jobsIn(Stored.collect(spark, dir))
+      val after = sc.broadcast(0)
+      try {
+        assert(jobs == 0, s"$dir: $jobs jobs")
+        assert(after.id == before.id + 1, s"$dir: a broadcast was made")
+        assert(sc.getPersistentRDDs.keySet == persisted, dir)
+        assert(rows.nonEmpty && rows.forall(_.schema == expected.schema), dir)
+        assert(rows.toSeq == expected.collect().toSeq, dir)
+      } finally { before.destroy(); after.destroy() }
+    }
+    bounded().foreach(readsLikeSpark)
+    // rebuilds publish every bounded tier as a new version
+    assert(Similarity.rebuildIvfIndexIfDrifted(spark, ivf, maxDriftMicro = 0L)
+      .collect().head.getAs[Boolean]("rebuilt"))
+    assert(Similarity.rebuildIvfPqIndexIfDrifted(spark, pq, maxDriftMicro = 0L)
+      .collect().head.getAs[Boolean]("rebuilt"))
+    assert(GraphAnn.rebuildKnnGraphIndexIfUnhealthy(spark, graph,
+      minHealthMicro = Long.MaxValue).collect().head.getAs[Boolean]("rebuilt"))
+    assert(Manifest.resolve(pq, "pq_meta") != s"$pq/pq_meta")
+    bounded().foreach(readsLikeSpark)
+    // the pre-anchor 4-column pq_meta layout
+    val legacy = s"$root/legacy_pq_meta"
+    Stored.write(Seq((8, 8, 4, true)).toDF("m", "ksub", "dsub", "has_vectors")
+      .coalesce(1), legacy)
+    readsLikeSpark(legacy)
+    // a partitioned data tier is refused, not read without its partitions
+    intercept[IllegalArgumentException](
+      Stored.collect(spark, Manifest.resolve(pq, "codes")))
+  }
 
   test("an IVF-PQ index written without records queries identically, " +
       "and its next publish writes records for what it rewrites") {
