@@ -27,6 +27,8 @@ import org.apache.hadoop.fs.{FileContext, FileSystem, Options, Path, RawLocalFil
   *    read-absent window but never a torn read (S3 PUTs are atomic
   *    per-object, and every reader treats an absent manifest as
   *    "pre-versioning layout", the safe fallback).
+  * [[renameOverwrite]] is the same swap for a file or dir the caller
+  * already wrote, and the only place the codebase uses `FileContext`.
   * One writer per target is already the lifecycle's contract, so
   * last-writer-wins suffices.
   *
@@ -100,12 +102,8 @@ object SidecarFs {
   /** Write `body` to a same-directory temp file, then swap it live —
     * the single-pointer-write publication shape, per scheme as the
     * atomicity contract above states. On raw local disk the swap is a
-    * plain `rename` (`rename(2)`). [[renameOverwrite]] there goes
-    * through FileContext's OVERWRITE rename, which deletes the target
-    * and then renames (a reader can find the file absent in between)
-    * and costs ~20 ms a write against ~4 ms. The temp file is written
-    * through the raw filesystem, so it has no `.crc` sibling to carry
-    * along. */
+    * plain `rename` (`rename(2)`); the temp file is written through the
+    * raw filesystem, so it has no `.crc` sibling to carry along. */
   def writeStringAtomic(path: String, body: String): Unit = {
     val p = new Path(path)
     val tmp = new Path(p.getParent, s".${p.getName}.tmp")
@@ -114,33 +112,55 @@ object SidecarFs {
     try out.write(body.getBytes(java.nio.charset.StandardCharsets.UTF_8))
     finally out.close()
     fs match {
-      case local: RawLocalFileSystem =>
-        if (!local.rename(tmp, p))
-          throw new java.io.IOException(s"rename $tmp -> $path failed")
+      case local: RawLocalFileSystem => localRename(local, tmp, p)
       case _ => renameOverwrite(tmp.toString, path)
     }
   }
 
-  /** Rename `src` over `dst`, replacing it: FileContext OVERWRITE
-    * (atomic on HDFS; on local disk a delete, then a rename), or
-    * delete+rename where no AbstractFileSystem binding exists. On local
-    * disk the checksumming FileContext also moves `src`'s `.crc`
-    * sibling, so a moved Spark part-file never keeps a stale checksum. */
+  /** Rename `src` over `dst`, replacing it. The one overwrite-rename of
+    * the codebase (index file moves, tombstone request dirs, container
+    * generation publishes); per scheme:
+    *  - raw local disk (`file:`, checksumming unwrapped): a plain
+    *    `rename`, i.e. POSIX `rename(2)`, which atomically replaces an
+    *    existing file. A file written through the checksumming local
+    *    filesystem (a Spark part file) has a `.crc` sibling: it moves
+    *    with the file, and a target's stale `.crc` is deleted when the
+    *    source has none, so a moved file always reads back with
+    *    checksum verification. A directory moves only onto an absent
+    *    name;
+    *  - HDFS and any scheme with an AbstractFileSystem binding:
+    *    `FileContext.rename(OVERWRITE)`, atomic on HDFS;
+    *  - other stores (s3a et al. ship no binding): delete, then rename —
+    *    a brief window where `dst` is absent, never a partial file. */
   def renameOverwrite(src: String, dst: String): Unit = {
     val s = new Path(src)
     val d = new Path(dst)
-    val fs = fsOf(d)
-    try {
-      val fc = FileContext.getFileContext(fs.getUri, hadoopConf)
-      fc.rename(fs.makeQualified(s), fs.makeQualified(d),
-        Options.Rename.OVERWRITE)
-    } catch {
-      case _: org.apache.hadoop.fs.UnsupportedFileSystemException =>
-        fs.delete(d, false)
-        if (!fs.rename(s, d))
-          throw new java.io.IOException(s"rename $src -> $dst failed")
+    fsOf(d) match {
+      case local: RawLocalFileSystem =>
+        localRename(local, s, d)
+        val (sCrc, dCrc) = (crcOf(s), crcOf(d))
+        if (local.exists(sCrc)) localRename(local, sCrc, dCrc)
+        else local.delete(dCrc, false)
+      case fs =>
+        try {
+          val fc = FileContext.getFileContext(fs.getUri, hadoopConf)
+          fc.rename(fs.makeQualified(s), fs.makeQualified(d),
+            Options.Rename.OVERWRITE)
+        } catch {
+          case _: org.apache.hadoop.fs.UnsupportedFileSystemException =>
+            fs.delete(d, false)
+            if (!fs.rename(s, d))
+              throw new java.io.IOException(s"rename $src -> $dst failed")
+        }
     }
   }
+
+  private def localRename(local: RawLocalFileSystem, s: Path, d: Path): Unit =
+    if (!local.rename(s, d))
+      throw new java.io.IOException(s"rename $s -> $d failed")
+
+  /** The checksumming local filesystem's sibling name for `p`'s `.crc`. */
+  private def crcOf(p: Path): Path = new Path(p.getParent, s".${p.getName}.crc")
 
   /** Child entry NAMES of `dir` (files and subdirs), empty when absent. */
   def listNames(dir: String): Seq[String] = {

@@ -26,23 +26,18 @@ import graft.functions.VectorExpressions
   */
 object Clustering {
 
-  /** Assign each row's `v` (array<double>) to the nearest centroid.
-    * Squared distance |v-c|² is monotone in |c|² − 2·v·c, so the norm
-    * rides as a literal and the dot product stays in whole-stage codegen
-    * ([[graft.functions.DotProductExpr]]). Ties break to the lowest
-    * centroid index (array_position finds the first minimum).
-    */
-  /** Per-row distance-score array to every centroid (the monotone
-    * surrogate |c|² − 2·v·c; the norm rides as a literal, the dot product
-    * is the codegen'd expression). Shared by the k-means assignment and
-    * IVF cell routing ([[graft.llm.Similarity.ivfTopK]]) so the two can
-    * never diverge. */
+  /** Per-row distance-score array to every centroid: the surrogate
+    * |c|² − 2·v·c, monotone in the squared distance |v − c|², so its
+    * argmin is the nearest centroid and ties break to the lowest index
+    * (array_position finds the first minimum). One
+    * [[graft.functions.MatrixScoresExpr]] computes the whole array in a
+    * compiled loop over the centroids, so the generated code does not
+    * grow with their number. Shared by the k-means assignment, IVF cell
+    * routing ([[graft.llm.Similarity.ivfTopK]]), IVF-PQ encoding and the
+    * drift gauge, so none of them can diverge. */
   private[llm] def centroidScores(v: Column,
                                   centroids: Array[Array[Double]]): Column =
-    array(centroids.toSeq.map { c =>
-      lit(c.map(x => x * x).sum) -
-        lit(2.0) * VectorExpressions.dotProduct(v, typedLit(c.toSeq))
-    }: _*)
+    VectorExpressions.l2Scores(v, centroids)
 
   private def assign(df: DataFrame, centroids: Array[Array[Double]]): DataFrame =
     df.withColumn("d", centroidScores(col("v"), centroids))

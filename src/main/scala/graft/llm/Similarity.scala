@@ -1107,7 +1107,10 @@ object Similarity {
 
   /** PQ expressions shared by [[pqTopK]] and [[ivfPqTopK]] — one
     * implementation of encode/LUT/score so the standalone and composed
-    * paths cannot diverge. */
+    * paths cannot diverge. Encoding and the lookup table each score a
+    * subvector against a whole codebook in one
+    * [[graft.functions.MatrixScoresExpr]]: m expressions per row, not
+    * m·ksub dot products over literal codewords. */
   private final case class Pq(codebooks: IndexedSeq[Array[Array[Double]]],
                               m: Int, dsub: Int) {
     private def sub(v: Column, s: Int): Column = slice(v, s * dsub + 1, dsub)
@@ -1121,10 +1124,8 @@ object Similarity {
 
     /** Per-query ADC lookup table: dot of each query subvector against
       * every codebook centroid (m×ksub doubles on the broadcast side). */
-    def lut(qVec: Column): Column = array((0 until m).map { s =>
-      array(codebooks(s).toSeq.map(c =>
-        dot(sub(qVec, s), typedLit(c.toSeq))): _*)
-    }: _*)
+    def lut(qVec: Column): Column = array((0 until m).map(s =>
+      graft.functions.VectorExpressions.dotScores(sub(qVec, s), codebooks(s))): _*)
 
     /** ADC score of a code row: m array lookups, no vector math. */
     def adc(lutCol: Column, codeCol: Column): Column =

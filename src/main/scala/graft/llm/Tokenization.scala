@@ -1,7 +1,9 @@
 package graft.llm
 
-import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.{DataFrame, Row, SparkSession}
 import org.apache.spark.sql.functions._
+
+import graft.core.Stored
 
 /** Distributed BPE (byte-pair-encoding) tokenizer training and encoding —
   * the tokenizer step of a training-data pipeline (the engine already
@@ -368,8 +370,16 @@ object Tokenization {
     * persisted-artifact trio: MinHash index, IVF index, BPE model. */
   def writeBpeModel(docs: DataFrame, textCol: String, path: String,
                     numMerges: Int): Unit =
-    learnBpeMerges(docs, textCol, numMerges)
-      .coalesce(1).write.mode("overwrite").parquet(path)
+    Stored.write(learnBpeMerges(docs, textCol, numMerges)
+      .coalesce(1), path)
+
+  /** A persisted model's rows ([[writeBpeModel]], [[writeUnigramModel]],
+    * [[writeWordpieceModel]]) in rank order. The table is bounded state
+    * every encoder uses whole, so it is read and sorted on the driver
+    * ([[Stored.collect]]); a model written without a schema record reads
+    * through Spark. */
+  private def modelRows(spark: SparkSession, path: String): Seq[Row] =
+    Stored.collect(spark, path).toSeq.sortBy(_.getAs[Number]("rank").longValue)
 
   /** Encode against a persisted model ([[writeBpeModel]]): the merge
     * table loads as bounded driver state (M rows, ordered by rank) and
@@ -377,8 +387,8 @@ object Tokenization {
     * the training corpus. */
   def bpeTokenCountsWithModel(docs: DataFrame, textCol: String,
                               idCol: String, modelPath: String): DataFrame = {
-    val merges = docs.sparkSession.read.parquet(modelPath)
-      .orderBy(col("rank")).collect().map(_.getAs[String]("pair")).toSeq
+    val merges = modelRows(docs.sparkSession, modelPath)
+      .map(_.getAs[String]("pair"))
     bpeTokenCountsPretrained(docs, textCol, idCol, merges)
   }
 
@@ -641,8 +651,8 @@ object Tokenization {
   def writeUnigramModel(docs: DataFrame, textCol: String, path: String,
                         vocabMulti: Int = 24, maxPieceLen: Int = 4,
                         iters: Int = 2, seedMulti: Int = 48): Unit =
-    learnUnigram(docs, textCol, vocabMulti, maxPieceLen, iters, seedMulti)
-      .coalesce(1).write.mode("overwrite").parquet(path)
+    Stored.write(learnUnigram(docs, textCol, vocabMulti, maxPieceLen, iters, seedMulti)
+      .coalesce(1), path)
 
   /** Encode against a persisted model ([[writeUnigramModel]]): the
     * piece table loads as bounded driver state and feeds
@@ -651,9 +661,8 @@ object Tokenization {
   def unigramTokenCountsWithModel(docs: DataFrame, textCol: String,
                                   idCol: String,
                                   modelPath: String): DataFrame = {
-    val rows = docs.sparkSession.read.parquet(modelPath)
-      .orderBy(col("rank")).collect()
-      .map(r => (r.getAs[String]("piece"), r.getAs[Long]("cnt"))).toSeq
+    val rows = modelRows(docs.sparkSession, modelPath)
+      .map(r => (r.getAs[String]("piece"), r.getAs[Long]("cnt")))
     unigramTokenCountsPretrained(docs, textCol, idCol, rows)
   }
 
@@ -1078,8 +1087,8 @@ object Tokenization {
     * [[writeUnigramModel]]). */
   def writeWordpieceModel(docs: DataFrame, textCol: String, path: String,
                           numMerges: Int): Unit =
-    learnWordpieceMerges(docs, textCol, numMerges)
-      .coalesce(1).write.mode("overwrite").parquet(path)
+    Stored.write(learnWordpieceMerges(docs, textCol, numMerges)
+      .coalesce(1), path)
 
   /** Encode against a persisted WordPiece model
     * ([[writeWordpieceModel]]): the merge table loads as bounded driver
@@ -1089,8 +1098,8 @@ object Tokenization {
   def wordpieceTokenCountsWithModel(docs: DataFrame, textCol: String,
                                     idCol: String,
                                     modelPath: String): DataFrame = {
-    val merges = docs.sparkSession.read.parquet(modelPath)
-      .orderBy(col("rank")).collect().map(_.getAs[String]("pair")).toSeq
+    val merges = modelRows(docs.sparkSession, modelPath)
+      .map(_.getAs[String]("pair"))
     wordpieceTokenCountsPretrained(docs, textCol, idCol, merges)
   }
 

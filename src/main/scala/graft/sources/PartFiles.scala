@@ -1,5 +1,7 @@
 package graft.sources
 
+import graft.core.SidecarFs
+
 /** Driver-side overwrite discipline shared by the partition-local
   * container writers (Arrow / Avro / WebDataset / WARC). Each writer
   * task streams its file into a hidden STAGING GENERATION
@@ -13,10 +15,13 @@ package graft.sources
   * The swap's exact atomicity contract (r14 ADVICE — stated precisely
   * rather than over-claimed):
   *
-  *  - PER FILE the swap is atomic: each staged file renames OVER its
-  *    final name in one `FileContext.rename(OVERWRITE)` — a reader
-  *    opening that name sees the old bytes or the new bytes, never a
-  *    missing file and never a partial one.
+  *  - PER FILE the swap is an overwrite-rename
+  *    ([[graft.core.SidecarFs.renameOverwrite]]: `rename(2)` on local
+  *    disk, `FileContext.rename(OVERWRITE)` on HDFS) — a reader opening
+  *    that name sees the old bytes or the new bytes, never a missing
+  *    file and never a partial one. Object stores without an atomic
+  *    rename get delete-then-rename: a brief missing-name window, never
+  *    a partial file.
   *  - ACROSS files it is a driver loop (milliseconds, not job-sized),
   *    not a transaction. The `_GEN` marker bounds the damage: it is
   *    DELETED before the first rename and REWRITTEN (with the
@@ -61,46 +66,16 @@ private[sources] object PartFiles {
     * source of truth — re-deriving them driver-side from a duplicated
     * format string would delete the new generation on any drift between
     * the two sites). */
-  /** Per-file overwrite-rename strategy: `FileContext` where the
-    * scheme has an AbstractFileSystem binding (one ATOMIC
-    * overwrite-rename — no window at all); object-store FileSystems
-    * (s3a et al.) ship none by default, so there the fallback is
-    * delete-then-rename via the plain FileSystem API — a brief
-    * missing-name window (never a partial file) instead of an
-    * `UnsupportedFileSystemException` that fails the whole publish
-    * (r15 advice). The `_GEN` marker already brackets the swap either
-    * way. */
-  private def overwriteRenamer(
-      fs: org.apache.hadoop.fs.FileSystem,
-      conf: org.apache.hadoop.conf.Configuration)
-      : (org.apache.hadoop.fs.Path, org.apache.hadoop.fs.Path) => Unit =
-    try {
-      val fc = org.apache.hadoop.fs.FileContext.getFileContext(
-        fs.getUri, conf)
-      (src, dst) =>
-        fc.rename(src, dst, org.apache.hadoop.fs.Options.Rename.OVERWRITE)
-    } catch {
-      case _: org.apache.hadoop.fs.UnsupportedFileSystemException =>
-        (src, dst) => {
-          fs.delete(dst, false)
-          if (!fs.rename(src, dst))
-            throw new java.io.IOException(s"rename $src -> $dst failed")
-        }
-    }
-
   def publishGeneration(dir: String, prefix: String, suffix: String,
                         names: Seq[String],
                         conf: org.apache.hadoop.conf.Configuration): Unit = {
     val d = new org.apache.hadoop.fs.Path(dir)
     val fs = d.getFileSystem(conf)
-    val rename = overwriteRenamer(fs, conf)
     // entering the swap window: the marker goes first, so a crash
     // anywhere below leaves the window detectably open
     fs.delete(new org.apache.hadoop.fs.Path(dir, MarkerName), false)
     names.foreach { n =>
-      val fin = new org.apache.hadoop.fs.Path(dir, n)
-      val staged = new org.apache.hadoop.fs.Path(stagingDir(dir), n)
-      rename(staged, fin)
+      SidecarFs.renameOverwrite(s"${stagingDir(dir)}/$n", s"$dir/$n")
     }
     val keep = names.toSet
     fs.listStatus(d).foreach { st =>
@@ -117,6 +92,6 @@ private[sources] object PartFiles {
     try out.write(names.sorted.mkString("", "\n", "\n")
       .getBytes(java.nio.charset.StandardCharsets.UTF_8))
     finally out.close()
-    rename(tmp, new org.apache.hadoop.fs.Path(dir, MarkerName))
+    SidecarFs.renameOverwrite(tmp.toString, s"$dir/$MarkerName")
   }
 }

@@ -117,6 +117,39 @@ class StoredSpec extends SparkSpec {
       assertReadsAsInferred(rerun.fieldDir(f, InputId(id)).toString)
   }
 
+  test("tokenizer models read on the driver: the read of a recorded " +
+      "model launches no job, and a model without a record encodes " +
+      "identically") {
+    import graft.llm.Tokenization
+    import SparkSpec.spark.implicits._
+    val text = (Seq.fill(6)("walking") ++ Seq.fill(5)("walked") ++
+      Seq.fill(4)("talking") ++ Seq.fill(3)("talked")).mkString(" ")
+    val docs = Seq((1L, text), (2L, "walker talked walking"))
+      .toDF("doc_id", "text")
+    val root = tempDir("stored-models")
+    val families: Seq[(String, String => Unit, String => DataFrame)] = Seq(
+      ("bpe", Tokenization.writeBpeModel(docs, "text", _, numMerges = 3),
+        Tokenization.bpeTokenCountsWithModel(docs, "text", "doc_id", _)),
+      ("unigram", Tokenization.writeUnigramModel(docs, "text", _,
+          vocabMulti = 8, maxPieceLen = 4, iters = 2),
+        Tokenization.unigramTokenCountsWithModel(docs, "text", "doc_id", _)),
+      ("wordpiece", Tokenization.writeWordpieceModel(docs, "text", _,
+          numMerges = 3),
+        Tokenization.wordpieceTokenCountsWithModel(docs, "text", "doc_id", _)))
+    for ((name, write, counts) <- families) {
+      val model = root.resolve(name).toString
+      write(model)
+      assertReadsAsInferred(model)
+      def rows(df: DataFrame) = df.collect().map(_.toString).sorted.toSeq
+      val (recorded, jobs) = jobsIn(counts(model))
+      assert(jobs == 0, s"$name: reading the model launched $jobs jobs")
+      val expected = rows(recorded)
+      assert(expected.nonEmpty, name)
+      dropSchemaRecords(model)
+      assert(rows(counts(model)) == expected, name)
+    }
+  }
+
   test("source scan: task and index tiers read stored Parquet only " +
       "through Stored.read") {
     // any DataFrameReader use: `read.parquet(…)`, `read.schema(…)`,
@@ -133,7 +166,7 @@ class StoredSpec extends SparkSpec {
     // index tier: a new bare read there would bring back one
     // footer-sampling job per dataset opened
     for (f <- Seq("core/Task.scala", "llm/Dedup.scala", "llm/Similarity.scala",
-                  "llm/GraphAnn.scala")) {
+                  "llm/GraphAnn.scala", "llm/Tokenization.scala")) {
       val hits = reader.findAllIn(code(s"$main/$f")).toSeq
       assert(hits.isEmpty,
         s"$f reads Parquet outside Stored.read: ${hits.mkString(", ")}")

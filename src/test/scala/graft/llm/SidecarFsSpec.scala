@@ -1,7 +1,10 @@
 package graft.llm
 
+import java.nio.file.{Files, Paths}
+
 import graft.SparkSpec
-import graft.core.{Manifest, SidecarFs}
+import graft.core.{Manifest, SidecarFs, Stored}
+import org.apache.hadoop.fs.{FileSystem, Path}
 import org.apache.spark.sql.functions._
 
 /** A NON-`file` scheme backed by the local FS, registered as
@@ -168,5 +171,99 @@ class SidecarFsSpec extends SparkSpec {
       .parquet(Manifest.resolve(idx, "sigs"))
       .filter(col("doc_id") === 502L).count()
     assert(n502 == 1L, s"re-delivered committed batch must be a no-op, got $n502")
+  }
+
+  /** The checksumming local filesystem (Spark's `file:` default): a read
+    * through it verifies the file against its `.crc` sibling, if any. */
+  private def checksummed: FileSystem =
+    FileSystem.getLocal(SparkSpec.spark.sparkContext.hadoopConfiguration)
+
+  private def readVerified(p: String): Array[Byte] = {
+    val in = checksummed.open(new Path(p))
+    try in.readAllBytes() finally in.close()
+  }
+
+  private def crcOf(p: java.nio.file.Path) =
+    p.resolveSibling(s".${p.getFileName}.crc")
+
+  test("renameOverwrite on local disk replaces an existing target and " +
+      "carries the checksum sibling, or drops the target's stale one") {
+    val root = tempDir("graft-rename-")
+    def write(name: String, body: String): Unit = {
+      val out = checksummed.create(new Path(root.resolve(name).toString), true)
+      try out.write(body.getBytes("UTF-8")) finally out.close()
+    }
+    def read(name: String) = new String(readVerified(root.resolve(name).toString), "UTF-8")
+    write("a", "old bytes")
+    write("b", "new, longer bytes")
+    SidecarFs.renameOverwrite(root.resolve("b").toString, root.resolve("a").toString)
+    assert(read("a") == "new, longer bytes")
+    assert(!Files.exists(root.resolve("b")) && !Files.exists(crcOf(root.resolve("b"))))
+    assert(Files.exists(crcOf(root.resolve("a"))))
+    // a source written without a checksum replaces a target that has
+    // one: the target's checksum would no longer match, so it goes
+    Files.writeString(root.resolve("c"), "third")
+    SidecarFs.renameOverwrite(root.resolve("c").toString, root.resolve("a").toString)
+    assert(read("a") == "third")
+    assert(!Files.exists(crcOf(root.resolve("a"))))
+  }
+
+  test("after an IVF-PQ ingest every moved part file reads back through " +
+      "Spark with checksum verification") {
+    val idx = tempDir("graft-pq-moves-").toString + "/idx"
+    val emb = SparkSpec.spark.read.parquet(s"$sfDir/embeddings.parquet")
+      .select(col("vec_id"), col("embedding"))
+    Similarity.writeIvfPqIndex(emb.filter(col("vec_id") < 60), idx,
+      nlist = 4, m = 8, ksub = 8)
+    val batch = emb.filter(col("vec_id") >= 60 && col("vec_id") < 90)
+      .select((col("vec_id") + 100000L).as("vec_id"), col("embedding"))
+    // minCos above 1 keeps every vector: the whole batch is appended
+    Similarity.ingestBatchIntoIvfPqIndex(batch, idx, "b1", minCos = 2.0)
+    for (tier <- Seq("codes", "vectors")) {
+      val moved = {
+        val s = Files.walk(Paths.get(Manifest.resolve(idx, tier)))
+        try s.toArray.toSeq.map(_.asInstanceOf[java.nio.file.Path])
+          .filter(_.getFileName.toString.matches("ingest-b1-\\d+\\.parquet"))
+        finally s.close()
+      }
+      assert(moved.nonEmpty, tier)
+      for (f <- moved) {
+        assert(Files.exists(crcOf(f)), s"$f has no checksum")
+        readVerified(f.toString) // throws ChecksumException on a mismatch
+      }
+      val n = moved.map(f => SparkSpec.spark.read.parquet(f.toString).count()).sum
+      assert(n == 30L, s"$tier: $n rows in the moved files")
+    }
+  }
+
+  test("a tombstone request's staged directory still publishes by rename") {
+    import SparkSpec.spark.implicits._
+    val idx = tempDir("graft-mh-tomb-").toString + "/idx"
+    Dedup.writeMinhashIndex(mk(0L until 10L), idx,
+      numHashes = 32, bands = 8, shingleSize = 5)
+    Dedup.addTombstones(SparkSpec.spark, idx, Seq(3L, 4L).toDF("doc_id"))
+    val reqs = Dedup.tombstoneDirs(idx)
+    assert(reqs.size == 1)
+    assert(SidecarFs.listNames(s"$idx/tombstones") ==
+      Seq(reqs.head.split("/").last), "the staging dir is left behind")
+    assert(Stored.read(SparkSpec.spark, reqs.head).collect()
+      .map(_.getString(0)).toSet == Set("3", "4"))
+  }
+
+  test("source scan: FileContext is used only in core/SidecarFs.scala, " +
+      "the one overwrite-rename") {
+    val main = Paths.get("src/main/scala/graft")
+    val files = {
+      val s = Files.walk(main)
+      try s.toArray.toSeq.map(_.asInstanceOf[java.nio.file.Path])
+        .filter(_.toString.endsWith(".scala"))
+      finally s.close()
+    }
+    val users = files.filter(f => Files.readString(f)
+      .replaceAll("(?s)/\\*.*?\\*/", "").replaceAll("//[^\n]*", "")
+      .contains("FileContext"))
+      .map(main.relativize(_).toString)
+    assert(files.size > 50)
+    assert(users == Seq("core/SidecarFs.scala"), users.mkString(", "))
   }
 }
