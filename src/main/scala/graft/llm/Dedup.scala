@@ -1,7 +1,11 @@
 package graft.llm
 
+import org.apache.commons.codec.digest.DigestUtils
 import org.apache.spark.sql.{Column, DataFrame}
+import org.apache.spark.sql.catalyst.expressions.InSet
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.graftshim.GraftColumn
+import org.apache.spark.unsafe.types.UTF8String
 
 import graft.core.{Manifest, SidecarFs, Stored}
 
@@ -629,17 +633,17 @@ object Dedup {
 
   // ---- tombstones (takedown composed with live ingest) ----------------
 
-  /** Pending-request ceiling: tombstones broadcast into every read until
-    * consumed, so the tier is for request-scale takedowns; a bulk
-    * deletion is one maintenance rewrite away on the hard path. */
+  /** Pending-request ceiling: the pending ids are read onto the driver
+    * and filter every read until consumed, so the tier is for
+    * request-scale takedowns; a bulk deletion is one maintenance rewrite
+    * away on the hard path. */
   private[llm] val MaxPendingTombstones = 100000L
 
-  /** Pending request-DIR ceiling: [[tombstoneIds]] reads dirs one by one
-    * (per-dir casts make mixed-vintage schemas safe), so the read-path
-    * plan is a dirs-wide union — id count alone doesn't bound it
-    * (100k one-id deliveries would be a 100k-way union on every read).
-    * Past this many standing dirs, addTombstones refuses and steers to
-    * the consuming maintenance pass, exactly like the id ceiling. */
+  /** Pending request-DIR ceiling: [[pendingTombstones]] reads dirs one
+    * by one, so id count alone doesn't bound a read's cost (100k one-id
+    * deliveries would be 100k file reads on every read). Past this many
+    * standing dirs, addTombstones refuses and steers to the consuming
+    * maintenance pass, exactly like the id ceiling. */
   private[llm] val MaxPendingTombstoneDirs = 256
 
   /** Register a takedown WITHOUT draining the ingest loop — the
@@ -652,71 +656,82 @@ object Dedup {
     * tombstone is the escape: an APPEND-ONLY request dir under
     * `indexPath/tombstones/` that (a) races nothing — it touches no
     * tier the ingest loop writes, (b) takes effect at the next read —
-    * every indexed search/match entry point anti-joins pending
-    * tombstones before surfacing results, and (c) is CONSUMED by the
-    * next full-rewrite maintenance pass (compaction or hard delete),
-    * which folds the ids into its anti-join and clears exactly the
-    * request dirs it snapshotted — under the same manifest-swap
-    * atomicity, so a crash between publish and clear merely re-applies
-    * idempotent tombstones.
+    * every indexed search/match entry point reads the pending ids on
+    * the driver ([[pendingTombstones]]) and filters them out before
+    * surfacing results, and (c) is CONSUMED by the next full-rewrite
+    * maintenance pass (compaction or hard delete), which folds the ids
+    * into its rewrite and clears exactly the request dirs it
+    * snapshotted — under the same manifest-swap atomicity, so a crash
+    * between publish and clear merely re-applies idempotent tombstones.
     *
     * Idempotence: the request dir is keyed by the md5 of the sorted id
-    * list, so an orchestrator re-delivering the same takedown overwrites
-    * its own request instead of accumulating duplicates. Takedown
-    * batches are human-request-scale by contract (the ids broadcast on
-    * every read until consumed); bulk deletions belong on the hard
-    * path. */
+    * list ([[requestKey]]), so an orchestrator re-delivering the same
+    * takedown finds its own request instead of accumulating duplicates.
+    * Takedown batches are human-request-scale by contract (every read
+    * holds the pending ids as a driver-side set until they are
+    * consumed); bulk deletions belong on the hard path.
+    *
+    * Cost: one bounded collect of the request (past the ceiling it is
+    * refused, so at most `MaxPendingTombstones + 1` ids reach the
+    * driver), the pending ids read on the driver, and one staged write. */
   def addTombstones(spark: org.apache.spark.sql.SparkSession,
                     indexPath: String, ids: DataFrame): Unit = {
-    // del_id is CANONICALLY a string in every request parquet: two
-    // takedown deliveries with different caller id types (int vs long
-    // vs string) must never produce request dirs whose schemas cannot
-    // union — that would brick every read path of the index until the
-    // dirs were removed by hand. Consumers cast their join side the
-    // same way ([[exceptTombstoned]], [[IndexLifecycle.maintain]]).
+    // del_id is CANONICALLY a string in every request parquet, whatever
+    // the caller's id type (int vs long vs string): the request key is
+    // computed over those strings, and every consumer compares the id
+    // cast to string ([[exceptTombstoned]], [[IndexLifecycle.maintain]]).
     val del = ids.select(col(ids.columns.head).cast("string").as("del_id"))
       .distinct()
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    try {
-      if (del.count() == 0L) return // an empty request must not register
-      // the ceiling counts the UNION with what's already pending, so an
-      // idempotent at-least-once re-delivery of the same request (same
-      // ids -> same dir) can never double-count itself into a refusal
-      val dirs = tombstoneDirs(indexPath)
-      val after = tombstoneIds(spark, dirs) match {
-        case Some(t) => t.unionByName(del).distinct().count()
-        case None => del.count()
-      }
-      require(after <= MaxPendingTombstones,
-        s"$after pending tombstoned ids would exceed the " +
-          s"$MaxPendingTombstones read-path broadcast ceiling at " +
-          s"$indexPath; run the hard deleteFrom*Index (or a compaction) " +
-          "to consume the standing requests, or route bulk deletions " +
-          "there directly")
-      val nDirs = dirs.size
-      require(nDirs < MaxPendingTombstoneDirs,
-        s"$nDirs standing tombstone request dirs at $indexPath reach " +
-          s"the $MaxPendingTombstoneDirs read-path plan ceiling; run " +
-          "the hard deleteFrom*Index (or a compaction) to consume them")
-      val key = del
-        .agg(md5(concat_ws(",",
-          sort_array(collect_list(col("del_id").cast("string"))))))
-        .head.getString(0)
-      // staged publish: the distributed write lands in a dot-prefixed
-      // dir tombstoneDirs never lists (a crashed write can therefore
-      // never brick reads with a footerless dir), then one rename makes
-      // the request live — the manifest discipline, request-sized. A
-      // final dir that already exists IS this exact request (the key is
-      // the md5 of the sorted id list, and finals only ever appear via
-      // the rename of a complete staging dir), so a re-delivery
-      // short-circuits instead of renaming over live content.
-      val fin = s"$indexPath/tombstones/req-$key"
-      if (!SidecarFs.exists(fin)) {
-        val staging = s"$indexPath/tombstones/.staging-req-$key"
-        Stored.write(del.coalesce(1), staging)
-        SidecarFs.renameOverwrite(staging, fin)
-      }
-    } finally del.unpersist(blocking = false)
+    val request = del.limit((MaxPendingTombstones + 1).toInt).collect()
+    if (request.isEmpty) return // an empty request must not register
+    val requested = request.iterator.map(_.getString(0)).filter(_ != null)
+      .toSeq
+    // the ceiling counts the UNION with what's already pending, so an
+    // idempotent at-least-once re-delivery of the same request (same
+    // ids -> same dir) can never double-count itself into a refusal
+    val dirs = tombstoneDirs(indexPath)
+    val after =
+      if (request.length > MaxPendingTombstones) request.length.toLong
+      else (pendingTombstones(spark, dirs) ++ requested).size.toLong
+    require(after <= MaxPendingTombstones,
+      s"$after pending tombstoned ids would exceed the " +
+        s"$MaxPendingTombstones read-path ceiling at " +
+        s"$indexPath; run the hard deleteFrom*Index (or a compaction) " +
+        "to consume the standing requests, or route bulk deletions " +
+        "there directly")
+    val nDirs = dirs.size
+    require(nDirs < MaxPendingTombstoneDirs,
+      s"$nDirs standing tombstone request dirs at $indexPath reach " +
+        s"the $MaxPendingTombstoneDirs read-path ceiling; run " +
+        "the hard deleteFrom*Index (or a compaction) to consume them")
+    // staged publish: the write lands in a dot-prefixed dir
+    // tombstoneDirs never lists (a crashed write can therefore never
+    // brick reads with a footerless dir), then one rename makes the
+    // request live — the manifest discipline, request-sized. A final
+    // dir that already exists IS this exact request (the key is the md5
+    // of the sorted id list, and finals only ever appear via the rename
+    // of a complete staging dir), so a re-delivery short-circuits
+    // instead of renaming over live content.
+    val key = requestKey(requested)
+    val fin = s"$indexPath/tombstones/req-$key"
+    if (!SidecarFs.exists(fin)) {
+      val staging = s"$indexPath/tombstones/.staging-req-$key"
+      Stored.write(spark.createDataFrame(
+        java.util.Arrays.asList(request: _*), del.schema).coalesce(1), staging)
+      SidecarFs.renameOverwrite(staging, fin)
+    }
+  }
+
+  /** The request-dir key of a takedown's distinct non-null ids: the
+    * driver-side value of Spark's
+    * `md5(concat_ws(",", sort_array(collect_list(del_id))))` — the ids
+    * sorted by their UTF-8 bytes (unsigned, Spark's string order),
+    * joined by commas, md5 as lowercase hex — so a request dir written
+    * by that expression is found again by its re-delivery. */
+  private[llm] def requestKey(ids: Seq[String]): String = {
+    val sorted = ids.map(UTF8String.fromString).sortWith(_.binaryCompare(_) < 0)
+    DigestUtils.md5Hex(
+      UTF8String.concatWs(UTF8String.fromString(","), sorted: _*).getBytes)
   }
 
   /** Pending tombstone request dirs (absolute paths), snapshot-listed:
@@ -726,44 +741,49 @@ object Dedup {
     listDirs(s"$indexPath/tombstones", "req-")
       .map(d => s"$indexPath/tombstones/$d")
 
-  /** The tombstoned ids of request `dirs` ([[tombstoneDirs]]) as one
-    * distinct STRING `del_id` frame, or None when there are none (the
-    * common case — zero extra work on the read path). Dirs are read one
-    * by one and unioned post-cast, so a pre-normalization request dir
-    * (r14 wrote del_id in the caller's type) can never schema-clash a
-    * newer one. */
-  private[llm] def tombstoneIds(spark: org.apache.spark.sql.SparkSession,
-                                dirs: Seq[String]): Option[DataFrame] =
-    if (dirs.isEmpty) None
-    else Some(dirs
-      .map(d => Stored.read(spark, d)
-        .select(col("del_id").cast("string").as("del_id")))
-      .reduce(_.unionByName(_))
-      .distinct())
+  /** The tombstoned ids of request `dirs` ([[tombstoneDirs]]), read on
+    * the driver ([[Stored.collect]]: no job, no broadcast), nulls
+    * dropped — a null id never matches, as in the anti-join this
+    * replaces. A pre-normalization request dir (r14 wrote `del_id` in
+    * the caller's int or long type, without a schema record) is read by
+    * `Stored.collect`'s fallback and its ids rendered as Spark casts
+    * them to string. Empty when none are pending (the common case). */
+  private[llm] def pendingTombstones(spark: org.apache.spark.sql.SparkSession,
+                                     dirs: Seq[String]): Set[String] =
+    dirs.iterator.flatMap(d => Stored.collect(spark, d))
+      .flatMap(r => Option(r.getAs[Any]("del_id")).map(String.valueOf))
+      .toSet
 
-  /** The read-path filter: anti-join `df` against pending tombstones on
-    * `idCol` (broadcast — request-scale by contract), or `df` untouched
-    * when none are pending. The id comparison casts `idCol` to string,
-    * the canonical request type ([[addTombstones]]).
+  /** The pending tombstoned ids of the index at `indexPath`: one
+    * listing, then [[pendingTombstones]]. A public call reads them once
+    * and filters every tier it reads with the same set. */
+  private[llm] def pendingTombstones(spark: org.apache.spark.sql.SparkSession,
+                                     indexPath: String): Set[String] =
+    pendingTombstones(spark, tombstoneDirs(indexPath))
+
+  /** The read-path filter: `df` without the rows whose `idCol`, cast to
+    * string (the canonical request type, [[addTombstones]]), is in
+    * `tombstoned`; `df` untouched when it is empty. A plain filter
+    * (`id IS NULL OR NOT cast(id AS string) IN set`, planned as an
+    * `InSet` over the driver-side set), so a row with a null id
+    * survives, exactly as in an anti-join.
     *
-    * [[addTombstones]]' ceiling is check-then-act (the union count and
-    * the request write are separate steps), so two CONCURRENT takedown
-    * deliveries with distinct id sets can both pass the check and land
-    * the pending total past [[MaxPendingTombstones]] — takedowns share
-    * the index's single-maintenance-writer contract, but this reader
-    * must not hard-fail if that contract was violated upstream. It
-    * re-verifies the pending count and degrades to a SHUFFLE anti-join
-    * past the ceiling: slower, still correct, and the next compaction
-    * drains the backlog either way. */
-  private[llm] def exceptTombstoned(spark: org.apache.spark.sql.SparkSession,
-                                    indexPath: String, df: DataFrame,
-                                    idCol: String): DataFrame =
-    tombstoneIds(spark, tombstoneDirs(indexPath)) match {
-      case Some(t) => // the count re-scan is request-dir-sized (KBs)
-        val side =
-          if (t.count() <= MaxPendingTombstones) broadcast(t) else t
-        df.join(side, df(idCol).cast("string") === t("del_id"), "left_anti")
-      case None => df
+    * [[addTombstones]]' ceiling is check-then-act, so two CONCURRENT
+    * takedown deliveries with distinct id sets can both pass the check
+    * and land the pending total past [[MaxPendingTombstones]] —
+    * takedowns share the index's single-maintenance-writer contract, but
+    * a reader must not hard-fail if that contract was violated
+    * upstream. The set has no ceiling of its own: past it the filter is
+    * larger, still correct, and the next compaction drains the backlog
+    * either way. */
+  private[llm] def exceptTombstoned(df: DataFrame, idCol: String,
+                                    tombstoned: Set[String]): DataFrame =
+    if (tombstoned.isEmpty) df
+    else { // an InSet directly: `isin` would plan one literal per id
+      val id = col(idCol)
+      df.filter(id.isNull || !GraftColumn.column(InSet(
+        GraftColumn.expression(id.cast("string")),
+        tombstoned.map(UTF8String.fromString))))
     }
 
   private[llm] def listDirs(root: String, prefix: String): Seq[String] =
@@ -960,8 +980,9 @@ object Dedup {
                              idCol: String): DataFrame = {
     val (numHashes, bands, shingleSize, _) = meta
     val (histBand, histSigs) = historyTiers(batch.sparkSession, snap)
-    val batchSigs = Caches.track(
-      minhashSignatures(batch, numHashes, shingleSize, textCol, idCol))
+    // not persisted: its two consumers share one exchange (ReusedExchange)
+    val batchSigs =
+      minhashSignatures(batch, numHashes, shingleSize, textCol, idCol)
     matchBatchBands(histBand, histSigs, batchSigs, numHashes, bands)
   }
 
@@ -970,13 +991,14 @@ object Dedup {
     * new copies of deleted content are NOVEL again, immediately —
     * consumption into the tiers happens at the next compaction). */
   private def historyTiers(spark: org.apache.spark.sql.SparkSession,
-                           snap: Manifest.Snapshot): (DataFrame, DataFrame) =
-    (exceptTombstoned(spark, snap.root,
-        Stored.read(spark, snap.resolve("bands"))
-          .select(col("band").cast("int").as("band"), col("bucket"),
-            col("hist_id")), "hist_id"),
-      exceptTombstoned(spark, snap.root,
-        Stored.read(spark, snap.resolve("sigs")), "doc_id"))
+                           snap: Manifest.Snapshot): (DataFrame, DataFrame) = {
+    val tombstoned = pendingTombstones(spark, snap.root)
+    (exceptTombstoned(Stored.read(spark, snap.resolve("bands"))
+        .select(col("band").cast("int").as("band"), col("bucket"),
+          col("hist_id")), "hist_id", tombstoned),
+      exceptTombstoned(Stored.read(spark, snap.resolve("sigs")), "doc_id",
+        tombstoned))
+  }
 
   /** STREAMING variant of [[incrementalMinhashMatchesIndexed]] — the
     * ingest front door: new documents arrive as a stream and are matched

@@ -592,10 +592,9 @@ object GraphAnn {
         .persist(StorageLevel.MEMORY_AND_DISK)
       p.write("codes", survivors)
       p.write("graph", p.except(p.except(p.read("graph"), "src"), "dst"))
-      val entryDeleted = p.deletion.exists(del => p.read("entry")
-        .join(del, col("cand_id").cast("string") === col("del_id"), "left_semi")
-        .limit(1).count() > 0)
-      if (entryDeleted) p.write("entry", entryOf(survivors, seed))
+      val entryIds = Stored.collect(spark, snap.resolve("entry"))
+        .flatMap(r => Option(r.getAs[Any]("cand_id")).map(String.valueOf))
+      if (p.deletesAny(entryIds)) p.write("entry", entryOf(survivors, seed))
       survivors.unpersist(blocking = false)
       true
     }
@@ -781,15 +780,12 @@ object GraphAnn {
     // structural cleanup (and tombstone consumption) is
     // deleteFromKnnGraphIndex's; knnGraphIndexHealth stays the
     // rebuild-pressure gauge.
-    Dedup.tombstoneIds(spark, Dedup.tombstoneDirs(indexPath)) match {
-      case Some(t) =>
-        raw.join(broadcast(t), raw("cand_id").cast("string") === t("del_id"),
-          "left_anti")
-          .withColumn("rk", row_number().over(Window
-            .partitionBy(col("query_id"))
-            .orderBy(col("sim_key").desc, col("cand_id"))))
-          .select(raw.columns.map(col).toIndexedSeq: _*)
-      case None => raw
-    }
+    val tombstoned = Dedup.pendingTombstones(spark, indexPath)
+    if (tombstoned.isEmpty) raw
+    else Dedup.exceptTombstoned(raw, "cand_id", tombstoned)
+      .withColumn("rk", row_number().over(Window
+        .partitionBy(col("query_id"))
+        .orderBy(col("sim_key").desc, col("cand_id"))))
+      .select(raw.columns.map(col).toIndexedSeq: _*)
   }
 }

@@ -69,10 +69,13 @@ private[graft] object IndexLifecycle {
   }
 
   /** What a maintenance pass body sees: the call's snapshot, its
-    * deletion set and the versions it writes. */
+    * deletion set — the caller's ids (a broadcast `del_id` frame, hard
+    * deletes only) and the snapshotted tombstoned ids (a driver-side
+    * set) — and the versions it writes. */
   final class Pass private[IndexLifecycle] (val spark: SparkSession,
                                             val snap: Manifest.Snapshot,
-                                            val deletion: Option[DataFrame]) {
+                                            ids: Option[DataFrame],
+                                            tombstoned: Set[String]) {
     private[IndexLifecycle] val versions = new Versions(snap)
 
     /** Tier `name` as the snapshot resolves it. */
@@ -80,11 +83,15 @@ private[graft] object IndexLifecycle {
 
     /** `df` without the rows whose `idCol` is in the deletion set (the id
       * compared as a string, the tombstone request type). */
-    def except(df: DataFrame, idCol: String): DataFrame = deletion match {
-      case Some(d) =>
-        df.join(d, col(idCol).cast("string") === col("del_id"), "left_anti")
-      case None => df
-    }
+    def except(df: DataFrame, idCol: String): DataFrame =
+      Dedup.exceptTombstoned(ids.fold(df)(d =>
+          df.join(d, col(idCol).cast("string") === col("del_id"), "left_anti")),
+        idCol, tombstoned)
+
+    /** Whether the deletion set holds any of the (string) ids `of`. */
+    def deletesAny(of: Seq[String]): Boolean =
+      of.exists(tombstoned) || (of.nonEmpty && ids.exists(d =>
+        !d.filter(col("del_id").isin(of: _*)).isEmpty))
 
     /** Write tier `name` as a fresh version, published when the pass
       * completes. */
@@ -101,12 +108,12 @@ private[graft] object IndexLifecycle {
     *     depends on (see [[uncommittedIngestKeys]]);
     *  2. snapshots the pending tombstone request dirs before reading
     *     anything;
-    *  3. builds the deletion set ONCE: with caller `ids` (a hard delete)
-    *     the ids (first column) ∪ the snapshotted tombstones, broadcast;
-    *     without (compaction, rebuild) the snapshotted tombstones alone,
-    *     broadcast while within [[Dedup.MaxPendingTombstones]] and a
-    *     shuffle anti-join past it (a ceiling two racing takedowns can
-    *     overshoot);
+    *  3. builds the deletion set ONCE: the snapshotted tombstones are
+    *     read on the driver ([[Dedup.pendingTombstones]]: no job, no
+    *     count, no broadcast) and filter every tier as a set, past
+    *     [[Dedup.MaxPendingTombstones]] too (a ceiling two racing
+    *     takedowns can overshoot); caller `ids` (a hard delete, first
+    *     column) add a broadcast anti-join;
     *  4. runs `body`, which rewrites tiers through [[Pass.write]];
     *  5. publishes every tier the body wrote in ONE manifest write,
     *     against `snap` (no second read of `current`);
@@ -128,15 +135,10 @@ private[graft] object IndexLifecycle {
     val root = snap.root
     requireNoUncommittedIngest(root, ingestKeyedDirs(snap))
     val tombDirs = Dedup.tombstoneDirs(root)
-    val pending = Dedup.tombstoneIds(spark, tombDirs)
-    val deletion = ids match {
-      case Some(i) =>
-        val base = i.select(col(i.columns.head).cast("string").as("del_id"))
-        Some(broadcast(pending.fold(base)(base.unionByName).distinct()))
-      case None => pending.map(t =>
-        if (t.count() <= Dedup.MaxPendingTombstones) broadcast(t) else t)
-    }
-    val pass = new Pass(spark, snap, deletion)
+    val pass = new Pass(spark, snap,
+      ids.map(i => broadcast(
+        i.select(col(i.columns.head).cast("string").as("del_id")))),
+      Dedup.pendingTombstones(spark, tombDirs))
     val done = body(pass)
     if (done) {
       pass.versions.publish()

@@ -457,8 +457,8 @@ object Similarity {
     // the compaction that will drop them): logically-deleted far-out
     // vectors must not trigger a needless rebuild
     val (curSum, curN) = assignDistMicro(
-      Dedup.exceptTombstoned(spark, snap.root,
-        Stored.read(spark, snap.resolve("postings")), "cand_id"),
+      Dedup.exceptTombstoned(Stored.read(spark, snap.resolve("postings")),
+        "cand_id", Dedup.pendingTombstones(spark, snap.root)),
       loadCentroids(spark, snap))
     driftRatio(buildN, buildSum, curN, curSum, maxDriftMicro)
   }
@@ -761,8 +761,8 @@ object Similarity {
         meta.getAs[Long]("build_dist_sum_micro") else -1L
     if (buildN < 0L || buildSum < 0L) return (buildN, -1L, -1L, true)
     val (curSum, curN) = assignDistMicro(
-      Dedup.exceptTombstoned(spark, snap.root,
-        Stored.read(spark, snap.resolve("vectors")), "cand_id"),
+      Dedup.exceptTombstoned(Stored.read(spark, snap.resolve("vectors")),
+        "cand_id", Dedup.pendingTombstones(spark, snap.root)),
       loadCentroids(spark, snap))
     driftRatio(buildN, buildSum, curN, curSum, maxDriftMicro)
   }
@@ -1002,8 +1002,9 @@ object Similarity {
     // tombstone filter on the CODES tier only: both scan modes generate
     // candidates from codes, so the refine tier cannot resurface an id
     // filtered here
-    val codes = Dedup.exceptTombstoned(spark, snap.root, pruneToProbed(
-      Stored.read(spark, snap.resolve("codes"))), "cand_id")
+    val codes = Dedup.exceptTombstoned(
+      pruneToProbed(Stored.read(spark, snap.resolve("codes"))), "cand_id",
+      Dedup.pendingTombstones(spark, snap.root))
     if (adcOnly) {
       val w = Window.partitionBy(col("query_id"))
         .orderBy(col("adc").desc, col("cand_id"))
@@ -1070,10 +1071,10 @@ object Similarity {
       .map(_.getInt(0)).sorted // ≤ nlist values
     // pending tombstones (takedown during live ingest) must not
     // surface as neighbours; they leave the tiers at the next compaction
-    val postings = Dedup.exceptTombstoned(spark, snap.root,
+    val postings = Dedup.exceptTombstoned(
       Stored.read(spark, snap.resolve("postings"))
         .filter(col("cell").isin(cells.map(c => c: Any).toSeq: _*)),
-      "cand_id")
+      "cand_id", Dedup.pendingTombstones(spark, snap.root))
     rankProbed(postings, probed, k)
   }
 
@@ -1562,9 +1563,11 @@ object Similarity {
     // neither mine as an anchor nor surface as a mined partner
     val snaps = Seq(srcIndexPath, tgtIndexPath).distinct
       .map(p => p -> Manifest.snapshot(p)).toMap
+    val tombstoned = snaps.keys
+      .map(p => p -> Dedup.pendingTombstones(spark, p)).toMap
     def postings(path: String): DataFrame =
-      Dedup.exceptTombstoned(spark, path,
-        Stored.read(spark, snaps(path).resolve("postings")), "cand_id")
+      Dedup.exceptTombstoned(Stored.read(spark, snaps(path).resolve("postings")),
+        "cand_id", tombstoned(path))
     def knn(queryIdx: String, corpusIdx: String): DataFrame = {
       val centroids = loadCentroids(spark, snaps(corpusIdx))
       require(nprobe >= 1 && nprobe <= centroids.length,

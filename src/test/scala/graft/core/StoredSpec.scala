@@ -204,6 +204,15 @@ class StoredSpec extends SparkSpec {
         """Stored.collect(spark, snap.resolve("pq_meta"))""",
         """spark.read.parquet(modelPath).collect()"""))
       assert(boundedCollects(ok).isEmpty, ok)
+    for ((f, code) <- llmSources) {
+      val hits = boundedCollects(code)
+      assert(hits.isEmpty,
+        s"$f collects a bounded tier through Spark: ${hits.mkString(", ")}")
+    }
+  }
+
+  /** Every `graft/llm` source file with its comments stripped. */
+  private lazy val llmSources: Seq[(java.nio.file.Path, String)] = {
     val llm = java.nio.file.Paths.get("src/main/scala/graft/llm")
     val files = {
       val s = Files.list(llm)
@@ -212,11 +221,71 @@ class StoredSpec extends SparkSpec {
       finally s.close()
     }
     assert(files.size > 10)
-    for (f <- files) {
-      val hits = boundedCollects(Files.readString(f)
-        .replaceAll("(?s)/\\*.*?\\*/", "").replaceAll("//[^\n]*", ""))
+    files.map(f => f -> Files.readString(f)
+      .replaceAll("(?s)/\\*.*?\\*/", "").replaceAll("//[^\n]*", ""))
+  }
+
+  /** The places in `code` that count or broadcast a tombstone set: a
+    * `.count()` (after any call chain) or a `broadcast(` applied to a
+    * tombstone read (`tombstoneIds(…)`, the Spark-side reader the
+    * driver-side `pendingTombstones(…)` replaced, or `pendingTombstones(…)`
+    * itself) or to a name bound from one — `val x = read(…)`,
+    * `read(…) match { case Some(x) =>`, or a lambda `x.map(y =>` over
+    * such a name. */
+  private def tombstoneSetUses(code: String): Seq[String] = {
+    val args = """\((?:[^()]|\([^()]*\))*\)"""
+    val read = s"""\\b(?:tombstoneIds|pendingTombstones)\\s*$args"""
+    val bound = (s"""(?:\\bval\\s+(\\w+)\\s*=\\s*[\\w.]*)?$read""" +
+      s"""(?:\\s*match\\s*\\{\\s*case\\s+Some\\s*\\(\\s*(\\w+)\\s*\\))?""").r
+    val names = bound.findAllMatchIn(code)
+      .flatMap(_.subgroups.filter(_ != null)).toSet
+    val params = names.flatMap(n =>
+      s"""\\b$n\\s*\\.\\s*\\w+\\s*\\(\\s*(\\w+)\\s*=>""".r
+        .findAllMatchIn(code).map(_.group(1)))
+    val set = ((names ++ params).map(n => s"\\b$n\\b") + read).mkString("|")
+    val chain = s"""(?:\\s*\\.\\s*\\w+\\s*(?:$args)?)*"""
+    (s"(?:$set)$chain\\s*\\.\\s*count\\s*\\(\\s*\\)".r.findAllIn(code) ++
+      s"\\bbroadcast\\s*\\(\\s*(?:$set)".r.findAllIn(code)).toSeq
+  }
+
+  test("source scan: no index call counts or broadcasts a tombstone set — " +
+      "the pending ids are a driver-side set") {
+    // the scan catches the shapes the Spark-side reads had ...
+    for ((bad, n) <- Seq(
+        """tombstoneIds(spark, tombstoneDirs(indexPath)) match {
+          |  case Some(t) =>
+          |    val side =
+          |      if (t.count() <= MaxPendingTombstones) broadcast(t) else t""" -> 2,
+        """val after = tombstoneIds(spark, dirs) match {
+          |  case Some(t) => t.unionByName(del).distinct().count()""" -> 1,
+        """val pending = Dedup.tombstoneIds(spark, tombDirs)
+          |Some(broadcast(pending.fold(base)(base.unionByName).distinct()))
+          |case None => pending.map(t =>
+          |  if (t.count() <= Dedup.MaxPendingTombstones) broadcast(t) else t)""" -> 3,
+        """Dedup.tombstoneIds(spark, Dedup.tombstoneDirs(indexPath)) match {
+          |  case Some(t) =>
+          |    raw.join(broadcast(t), raw("cand_id").cast("string")""" -> 1,
+        """broadcast(pendingTombstones(spark, dirs).toSeq.toDF())""" -> 1))
+      assert(tombstoneSetUses(bad.stripMargin).size == n, bad)
+    // ... and leaves the driver-side set and other frames alone
+    for (ok <- Seq(
+        """val tombstoned = pendingTombstones(spark, snap.root)
+          |if (tombstoned.isEmpty) raw
+          |else exceptTombstoned(raw, "cand_id", tombstoned)""",
+        """(pendingTombstones(spark, dirs) ++ requested).size.toLong""",
+        """ids.map(i => broadcast(i.select(col("del_id"))))""",
+        """if (del.count() == 0L) return"""))
+      assert(tombstoneSetUses(ok.stripMargin).isEmpty, ok)
+    val code = llmSources.toMap.map { case (f, c) => f.getFileName.toString -> c }
+    // the driver-side reader is the only one, and every index reads it
+    assert(llmSources.forall(!_._2.contains("tombstoneIds")))
+    for (f <- Seq("Dedup.scala", "IndexLifecycle.scala", "Similarity.scala",
+                  "GraphAnn.scala"))
+      assert(code(f).contains("pendingTombstones("), f)
+    for ((f, c) <- llmSources) {
+      val hits = tombstoneSetUses(c)
       assert(hits.isEmpty,
-        s"$f collects a bounded tier through Spark: ${hits.mkString(", ")}")
+        s"$f counts or broadcasts a tombstone set: ${hits.mkString(", ")}")
     }
   }
 }

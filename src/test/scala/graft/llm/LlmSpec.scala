@@ -261,6 +261,32 @@ class LlmSpec extends SparkSpec {
       s"compaction must shrink the file count ($filesBefore -> ${bandFiles()})")
   }
 
+  test("an indexed MinHash probe persists nothing: the batch signatures' " +
+      "two consumers share one exchange, and matches equal the " +
+      "from-scratch path's") {
+    import SparkSpec.spark.implicits._
+    def mk(ids: Seq[Long]) = ids
+      .map(i => (i, s"document number $i with some repeated filler words $i"))
+      .toDF("doc_id", "text")
+    val idx = tempDir("graft-mh-probe-").toString + "/idx"
+    val history = mk(0L until 30L)
+    Dedup.writeMinhashIndex(history, idx,
+      numHashes = 32, bands = 8, shingleSize = 5)
+    val probe = mk(Seq(5L, 12L, 40L))
+      .select((col("doc_id") + 9000).as("doc_id"), col("text"))
+    val sc = spark.sparkContext
+    val persisted = sc.getPersistentRDDs.keySet
+    val df = Dedup.incrementalMinhashMatchesIndexed(probe, idx)
+    val got = df.collect().map(_.toString).sorted.toSeq
+    assert(sc.getPersistentRDDs.keySet == persisted)
+    val p = df.queryExecution.executedPlan.toString
+    assert(p.contains("ReusedExchange"), p)
+    assert(got.nonEmpty && got == Dedup.incrementalMinhashMatches(history,
+      probe, numHashes = 32, bands = 8, shingleSize = 5)
+      .collect().map(_.toString).sorted.toSeq)
+    Caches.release()
+  }
+
   test("deleteFromMinhashIndex removes a doc's signatures from BOTH " +
       "tiers, publishes a new version, and leaves every other doc's " +
       "reader output untouched") {

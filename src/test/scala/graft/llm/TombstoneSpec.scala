@@ -171,6 +171,130 @@ class TombstoneSpec extends SparkSpec {
     assert(Dedup.tombstoneDirs(idx).isEmpty, "nothing may land on refusal")
   }
 
+  /** The request key as the tombstone writer once computed it in Spark:
+    * md5 of the sorted, comma-joined distinct ids cast to string. */
+  private def sparkKey(ids: org.apache.spark.sql.DataFrame): String =
+    ids.select(col(ids.columns.head).cast("string").as("del_id")).distinct()
+      .agg(md5(concat_ws(",", sort_array(collect_list(col("del_id"))))))
+      .head.getString(0)
+
+  private def files(dir: String): Seq[String] =
+    SidecarFs.listNames(dir).sorted
+
+  test("the driver request key equals Spark's md5 expression: non-ASCII " +
+      "ids, byte order against UTF-16 order, int/long/string callers") {
+    // U+1F600 is a surrogate pair in UTF-16 (D83D DE00 < FFFD) but sorts
+    // AFTER U+FFFD by UTF-8 bytes (F0 9F … > EF BF BD); "10" < "2" too
+    val texts = Seq("\uFFFD", "\uD83D\uDE00", "\u00E9", "\u65E5\u672C", "\u00DF",
+      "Z", "10", "2")
+    assert("\uD83D\uDE00" < "\uFFFD", "UTF-16 order puts U+1F600 first")
+    assert(Dedup.requestKey(texts) === sparkKey(texts.toDF("id")))
+    assert(Dedup.requestKey(texts.reverse) === Dedup.requestKey(texts))
+    val ints = Seq(10, 2, 3, 2)
+    val callers = Seq(ints.toDF("id"), ints.map(_.toLong).toDF("id"),
+      ints.map(_.toString).toDF("id"))
+    // one takedown delivered with three caller types: one key, Spark's,
+    // and every delivery finds the first one's request dir
+    val idx = tempDir("tomb-key-").toString + "/idx"
+    for (c <- callers) {
+      assert(Dedup.requestKey(Seq("10", "2", "3")) === sparkKey(c))
+      Dedup.addTombstones(spark, idx, c)
+      assert(Dedup.tombstoneDirs(idx) ===
+        Seq(s"$idx/tombstones/req-${sparkKey(c)}"))
+    }
+  }
+
+  test("re-delivering a request whose dir the Spark-side writer made " +
+      "short-circuits: no second dir, the first untouched") {
+    val idx = tempDir("tomb-redeliver-").toString + "/idx"
+    val ids = Seq(7L, 3L, 11L).toDF("doc_id")
+    val fin = s"$idx/tombstones/req-${sparkKey(ids)}"
+    graft.core.Stored.write(
+      ids.select(col("doc_id").cast("string").as("del_id")).coalesce(1), fin)
+    val before = files(fin)
+    Dedup.addTombstones(spark, idx, Seq("11", "3", "7").toDF("id"))
+    assert(Dedup.tombstoneDirs(idx) === Seq(fin))
+    assert(files(fin) === before)
+    assert(SidecarFs.listNames(s"$idx/tombstones") === Seq(fin.split('/').last))
+  }
+
+  test("an r14-style request dir (no schema record, bigint del_id) " +
+      "filters exactly like a current request") {
+    val idx = tempDir("tomb-r14-").toString + "/idx"
+    Similarity.writeIvfIndex(emb(200), idx, nlist = 8)
+    def probe() = Similarity.ivfTopKIndexed(emb(5), idx, k = 5, nprobe = 8)
+      .collect().sortBy(_.toString).toSeq
+    val hit = probe().map(_.getAs[Long]("cand_id")).distinct
+    val r14 = s"$idx/tombstones/req-r14"
+    hit.toDF("del_id").coalesce(1).write.parquet(r14)
+    assert(!SidecarFs.exists(s"$r14/${graft.core.Stored.SchemaFile}"))
+    assert(Dedup.pendingTombstones(spark, idx) === hit.map(_.toString).toSet)
+    val legacy = probe()
+    SidecarFs.deleteTree(r14)
+    Dedup.addTombstones(spark, idx, hit.toDF("vec_id"))
+    assert(probe() === legacy)
+    assert(legacy.nonEmpty &&
+      legacy.map(_.getAs[Long]("cand_id")).intersect(hit).isEmpty, legacy)
+  }
+
+  test("a request that contains a null registers as before: keyed by its " +
+      "non-null ids, the null stored, and null ids are never filtered") {
+    val idx = tempDir("tomb-null-").toString + "/idx"
+    val withNull = Seq(Some(5L), None, Some(1L)).toDF("doc_id")
+    Dedup.addTombstones(spark, idx, withNull)
+    val dir = s"$idx/tombstones/req-${sparkKey(withNull)}"
+    assert(Dedup.tombstoneDirs(idx) === Seq(dir))
+    assert(graft.core.Stored.read(spark, dir).collect().map(_.getString(0))
+      .toSeq.sortBy(Option(_)) === Seq(null, "1", "5"))
+    assert(Dedup.pendingTombstones(spark, idx) === Set("1", "5"))
+    // a null-only request registers too (its key is md5 of "")
+    val onlyNull = Seq(Option.empty[Long]).toDF("doc_id")
+    Dedup.addTombstones(spark, idx, onlyNull)
+    assert(Dedup.tombstoneDirs(idx).toSet ===
+      Set(dir, s"$idx/tombstones/req-${sparkKey(onlyNull)}"))
+    // the read filter keeps a null id, as the anti-join it replaced did
+    val rows = Dedup.exceptTombstoned(
+        Seq(Some(1L), None, Some(2L), Some(5L)).toDF("id"), "id",
+        Dedup.pendingTombstones(spark, idx))
+      .collect().map(r => Option(r.get(0))).toSeq
+    assert(rows.sortBy(_.toString) === Seq(None, Some(2L)).sortBy(_.toString))
+  }
+
+  test("request dirs that together exceed the pending ceiling (a broken " +
+      "single-writer contract) still filter correctly") {
+    val idx = tempDir("tomb-over-").toString + "/idx"
+    Similarity.writeIvfIndex(emb(50), idx, nlist = 4)
+    // two hand-planted requests: every vec_id from 10 up is tombstoned
+    val half = Dedup.MaxPendingTombstones / 2 + 1
+    for ((lo, name) <- Seq((10L, "a"), (10L + half, "b")))
+      graft.core.Stored.write(spark.range(lo, lo + half)
+        .select(col("id").cast("string").as("del_id")).coalesce(1),
+        s"$idx/tombstones/req-$name")
+    assert(Dedup.pendingTombstones(spark, idx).size > Dedup.MaxPendingTombstones)
+    val hits = Similarity.ivfTopKIndexed(emb(50), idx, k = 5, nprobe = 4)
+      .select(col("query_id"), col("cand_id")).collect()
+      .map(r => (r.getLong(0), r.getLong(1)))
+    assert(hits.nonEmpty)
+    assert(hits.forall(_._2 < 10L), hits.toSeq)
+  }
+
+  test("a pending request adds no Spark job to a MinHash or IVF probe") {
+    val root = tempDir("tomb-jobs-").toString
+    val (mh, ivf) = (s"$root/mh", s"$root/ivf")
+    Dedup.writeMinhashIndex(docs(100), mh, numHashes = 32, bands = 8,
+      shingleSize = 5)
+    Similarity.writeIvfIndex(emb(100), ivf, nlist = 4)
+    def jobs(): (Int, Int) = (
+      jobsIn(Dedup.incrementalMinhashMatchesIndexed(docs(5), mh).collect())._2,
+      jobsIn(Similarity.ivfTopKIndexed(emb(5), ivf, k = 5, nprobe = 4)
+        .collect())._2)
+    jobs() // warm
+    val none = jobs()
+    Dedup.addTombstones(spark, mh, Seq(1L, 2L).toDF("doc_id"))
+    Dedup.addTombstones(spark, ivf, Seq(1L, 2L).toDF("vec_id"))
+    assert(jobs() === none)
+  }
+
   test("health gauge survives a TOTAL takedown: health 0, rebuild, no crash") {
     val idx = tempDir("tomb-total-").toString + "/idx"
     val corpus = emb(40)

@@ -267,10 +267,11 @@ class QueryPlanShapeSpec extends SparkSpec {
     spark.catalog.clearCache()
   }
 
-  test("round-14 tombstone read filter is a BROADCAST anti-join on every " +
-      "indexed probe path") {
-    // pending tombstones are request-scale by contract; the read-path
-    // filter must never shuffle the index to apply them
+  test("round-14 tombstone read filter never shuffles the index: the " +
+      "cand_id predicate sits in a broadcast-scale probe plan") {
+    // pending tombstones are request-scale by contract and read on the
+    // driver; the read-path filter must never shuffle the index to apply
+    // them, and it must be in the plan
     import SparkSpec.spark.implicits._
     val idx = tempDir("planshape-tomb-").toString + "/idx"
     val emb = spark.read.parquet(s"$sfDir/embeddings.parquet")
@@ -282,14 +283,13 @@ class QueryPlanShapeSpec extends SparkSpec {
       emb.filter(org.apache.spark.sql.functions.col("vec_id") < 3),
       idx, k = 3, nprobe = 4)
     val p = df.queryExecution.executedPlan.toString
-    assert(p.contains("LeftAnti"), s"no anti-join in plan:\n$p")
+    assert("""cast\(cand_id#\d+L? as string\) INSET""".r.findFirstIn(p)
+      .isDefined, s"no cand_id tombstone predicate in plan:\n$p")
     // the whole probe plan is broadcast-scale: ANY sort-merge or
-    // shuffled-hash join here means either the tombstone filter or the
-    // probe join fell off the broadcast path
+    // shuffled-hash join here means the probe join fell off the
+    // broadcast path
     assert(!p.contains("SortMergeJoin") && !p.contains("ShuffledHashJoin"),
       s"tombstone/probe join fell to a shuffle join:\n$p")
-    assert(p.contains("BroadcastHashJoin"),
-      s"expected broadcast anti-join:\n$p")
     graft.llm.Caches.release()
     spark.catalog.clearCache()
   }
