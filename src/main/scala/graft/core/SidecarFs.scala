@@ -333,12 +333,6 @@ object SidecarFs {
     fsOf(p).mkdirs(p)
   }
 
-  /** Create (or truncate) an empty file — the commit-marker write. */
-  def createMarker(path: String): Unit = {
-    val p = new Path(path)
-    fsOf(p).create(p, true).close()
-  }
-
   /** Delete a single file if present (false when absent). */
   def deleteFile(path: String): Boolean = {
     val p = new Path(path)

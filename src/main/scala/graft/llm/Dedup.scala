@@ -607,6 +607,7 @@ object Dedup {
       bandRows(sigs, bands, numHashes / bands, maxBucketSize)
         .write.mode("overwrite").partitionBy("band").parquet(s"$stage/bands")
       sigs.write.mode("overwrite").parquet(s"$stage/sigs")
+      "" // the MinHash index keeps no gauge: an empty marker
     }
 
   /** Delete the keyed files (and staging) of every UNCOMMITTED ingest

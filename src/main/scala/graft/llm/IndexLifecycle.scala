@@ -165,7 +165,9 @@ private[graft] object IndexLifecycle {
     *  - The staged part-files move into the live partition dirs under
     *    deterministic `ingest-<batchKey>-<i>.parquet` names, which a
     *    re-execution REPLACES instead of duplicating; then the marker is
-    *    written.
+    *    written, whole or not at all, with the body `stage` returns (the
+    *    batch's gauge delta for IVF and IVF-PQ, see
+    *    [[keyedMarkerBodies]]; empty for the other indexes).
     *
     * So however many times a batch is re-delivered, the index ends with
     * exactly one copy of its rows. Appends keep the tier's own encoder,
@@ -173,7 +175,7 @@ private[graft] object IndexLifecycle {
     * writer: a stream's ingest must not race a concurrent pass. */
   def ingestKeyed(spark: SparkSession, indexPath: String, batchKey: String,
                   tiers: Seq[(String, String)])(
-      stage: (Manifest.Snapshot, String) => Unit): Unit = {
+      stage: (Manifest.Snapshot, String) => String): Unit = {
     val marker = s"$indexPath/ingest_commits/$batchKey"
     if (SidecarFs.exists(marker)) return // fully committed
     val snap = Manifest.snapshot(indexPath)
@@ -186,7 +188,7 @@ private[graft] object IndexLifecycle {
       parts(live, prefix).foreach(p => clearKeyedFiles(live + p, batchKey))
     }
     val stageDir = s"$indexPath/ingest_staging/$batchKey"
-    Caches.scoped(spark)(stage(snap, stageDir))
+    val body = Caches.scoped(spark)(stage(snap, stageDir))
     tiers.foreach { case (name, prefix) =>
       val (staged, live) = (s"$stageDir/$name", snap.resolve(name))
       parts(staged, prefix).foreach(p =>
@@ -194,7 +196,7 @@ private[graft] object IndexLifecycle {
     }
     SidecarFs.deleteTree(stageDir)
     SidecarFs.mkdirs(s"$indexPath/ingest_commits")
-    SidecarFs.createMarker(marker)
+    SidecarFs.writeStringAtomic(marker, body)
   }
 
   /** Move the parquet part-files of `srcDir` into `dstDir` under
@@ -240,12 +242,27 @@ private[graft] object IndexLifecycle {
     * re-match would flag every survivor as its own (absorbed) duplicate,
     * and the batch would silently vanish from the index. */
   private[llm] def uncommittedIngestKeys(indexPath: String,
-                                         dirs: Seq[String]): Set[String] = {
-    val committed = Dedup.listDirs(s"$indexPath/ingest_commits", "").toSet
+                                         dirs: Seq[String]): Set[String] =
+    keyedBatches(dirs) --
+      Dedup.listDirs(s"$indexPath/ingest_commits", "").toSet
+
+  /** The commit-marker body of each ingest batch with live keyed files
+    * in `dirs`; None when one of them has no marker (uncommitted). A
+    * keyed file lands in a live dir only after the last full write of
+    * that dir, so a full write's record plus these bodies cover every
+    * file in it. */
+  private[llm] def keyedMarkerBodies(indexPath: String,
+                                     dirs: Seq[String]): Option[Seq[String]] = {
+    val bodies = keyedBatches(dirs).toSeq
+      .map(k => SidecarFs.readString(s"$indexPath/ingest_commits/$k"))
+    if (bodies.contains(None)) None else Some(bodies.flatten)
+  }
+
+  /** Keys of the ingest batches with keyed files in `dirs`. */
+  private def keyedBatches(dirs: Seq[String]): Set[String] =
     dirs.flatMap { d =>
       SidecarFs.listNames(d).collect { case KeyedFileRe(k) => k }
-    }.toSet -- committed
-  }
+    }.toSet
 
   private def requireNoUncommittedIngest(indexPath: String,
                                          dirs: Seq[String]): Unit = {
@@ -271,7 +288,7 @@ private[graft] object IndexLifecycle {
 
   /** Prune retired ingest commit markers, keeping only the NEWEST
     * marker per stream key. Without this, a long-running ingest loop
-    * leaves one empty marker file per micro-batch forever — the
+    * leaves one marker file per micro-batch forever — the
     * machinery built to fight small-files decay accruing its own
     * unbounded small-file growth (and `uncommittedIngestKeys` listing
     * all of them on every pass).

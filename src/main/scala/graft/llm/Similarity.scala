@@ -3,7 +3,7 @@ package graft.llm
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 
-import graft.core.{Concurrent, Manifest, SidecarFs, Stored}
+import graft.core.{Concurrent, Json, Manifest, SidecarFs, Stored}
 
 /** Similarity search over an `embedding: array<float>` column.
   *
@@ -345,41 +345,81 @@ object Similarity {
     // via an Observation ON the postings write itself (the d2 column is
     // computed, observed, then dropped before the files land) — ZERO
     // extra passes over the corpus.
-    Stored.write(ivfMetaDf(spark, nlist, -1L, -1L), s"$path/meta")
+    Stored.write(ivfMetaDf(spark, nlist, GaugeSums(-1L, -1L)), s"$path/meta")
     Stored.write(centroidsDf(spark, centroids), s"$path/centroids")
-    val (buildN, buildSum) = writeAnchored(
-      assignCells(corpus, centroids, vecCol, idCol), centroids,
-      Stored.write(_, s"$path/postings", "cell"))
-    IndexLifecycle.publishVersion(path, "meta",
-      ivfMetaDf(spark, nlist, buildN, buildSum))
+    val postings = s"$path/postings"
+    val built = writeGauged(assignCells(corpus, centroids, vecCol, idCol),
+      centroids) { df => Stored.write(df, postings, "cell"); postings }
+    IndexLifecycle.publishVersion(path, "meta", ivfMetaDf(spark, nlist, built))
   }
 
   /** The one-row IVF meta tier: nlist and the drift anchor. */
   private def ivfMetaDf(spark: org.apache.spark.sql.SparkSession, nlist: Int,
-                        buildN: Long, buildSum: Long): DataFrame = {
+                        anchor: GaugeSums): DataFrame = {
     import spark.implicits._
-    Seq((nlist, buildN, buildSum))
+    Seq((nlist, anchor.n, anchor.sum))
       .toDF("nlist", "build_n", "build_dist_sum_micro").coalesce(1)
   }
 
-  /** Hand the cell-assigned `vectors` to `write`, observing the drift
-    * anchor ON that write (the d2 column is computed, observed, then
-    * dropped before the files land — zero extra passes). A plain
-    * partitioned write: repartitionByRange would re-execute the observed
-    * child for range sampling and double the anchor counts (caught by
-    * IndexHealthSpec). Returns (build_n, build_dist_sum_micro). */
-  private def writeAnchored(vectors: DataFrame,
-                            centroids: Array[Array[Double]],
-                            write: DataFrame => Unit): (Long, Long) = {
+  /** The drift gauge's inputs over a set of gauge-tier rows: their
+    * count and the sum of their [[assignDistMicroCol]]. Exact integers,
+    * so the sums of disjoint row sets add up to the sums of their union,
+    * in any order: a maintained sum equals a recomputed one bit for
+    * bit. */
+  private[llm] final case class GaugeSums(n: Long, sum: Long) {
+    def +(o: GaugeSums): GaugeSums = GaugeSums(n + o.n, sum + o.sum)
+    def json: String = Json.canonical(Map("n" -> n, "d2_micro_sum" -> sum))
+  }
+
+  private[llm] object GaugeSums {
+    /** The sums a [[GaugeSums.json]] body holds; None for any other body
+      * (empty, partial, or from another writer). */
+    def parse(body: String): Option[GaugeSums] =
+      scala.util.Try(Json.parseJson(body)).toOption.flatMap { m =>
+        (m.get("n"), m.get("d2_micro_sum")) match {
+          case (Some(n: Long), Some(s: Long)) => Some(GaugeSums(n, s))
+          case _ => None
+        }
+      }
+  }
+
+  /** Name of the gauge record inside a gauge-tier dir (IVF `postings`,
+    * IVF-PQ `vectors`): the [[GaugeSums]] of the rows its last full
+    * write wrote. A plain append deletes it first; keyed ingests add
+    * their deltas in their commit markers instead (see
+    * [[maintainedSums]]). */
+  private[llm] val GaugeFile = "_gauge.json"
+
+  /** Hand the cell-assigned `vectors` to `write`, observing their
+    * [[GaugeSums]] ON that write (the d2 column is computed, observed,
+    * then dropped before the files land — zero extra passes). A plain
+    * or hash-partitioned write: repartitionByRange would re-execute the
+    * observed child for range sampling and double the counts (caught by
+    * IndexHealthSpec). Returns `write`'s result and the sums. */
+  private def observeSums[A](vectors: DataFrame,
+                             centroids: Array[Array[Double]])(
+      write: DataFrame => A): (A, GaugeSums) = {
     val obs = org.apache.spark.sql.Observation(
-      s"ivf_drift_anchor_${java.util.UUID.randomUUID()}")
-    write(vectors
+      s"ivf_gauge_${java.util.UUID.randomUUID()}")
+    val a = write(vectors
       .withColumn("d2_micro", assignDistMicroCol(col("c_vec"), centroids))
       .observe(obs, sum(col("d2_micro")).as("s"), count(lit(1)).as("n"))
       .drop("d2_micro"))
     val m = obs.get
-    (m("n").asInstanceOf[Long],
-      m("s") match { case null => 0L; case v => v.asInstanceOf[Long] })
+    (a, GaugeSums(m("n").asInstanceOf[Long],
+      m("s") match { case null => 0L; case v => v.asInstanceOf[Long] }))
+  }
+
+  /** A FULL write of a gauge tier: [[observeSums]] over `write`, which
+    * returns the dir it wrote, then the sums recorded in that dir's
+    * [[GaugeFile]] — before the caller publishes it, like its schema
+    * record. Returns the sums (a build's drift anchor). */
+  private def writeGauged(vectors: DataFrame,
+                          centroids: Array[Array[Double]])(
+      write: DataFrame => String): GaugeSums = {
+    val (dir, sums) = observeSums(vectors, centroids)(write)
+    SidecarFs.writeStringAtomic(s"$dir/$GaugeFile", sums.json)
+    sums
   }
 
   /** Per-row exact integer drift ingredient: the squared distance to
@@ -393,12 +433,33 @@ object Similarity {
         array_min(Clustering.centroidScores(vec, centroids))) * lit(1e6)
       + lit(0.5)).cast("long")
 
+  /** The [[GaugeSums]] of `postings`, by a scan. */
   private def assignDistMicro(postings: DataFrame,
-                              centroids: Array[Array[Double]]): (Long, Long) = {
+                              centroids: Array[Array[Double]]): GaugeSums = {
     val r = postings
       .select(assignDistMicroCol(col("c_vec"), centroids).as("d2_micro"))
       .agg(sum(col("d2_micro")), count(lit(1))).collect().head
-    (if (r.isNullAt(0)) 0L else r.getLong(0), r.getLong(1))
+    GaugeSums(r.getLong(1), if (r.isNullAt(0)) 0L else r.getLong(0))
+  }
+
+  /** The [[GaugeSums]] of gauge tier `tier` as the index maintains them,
+    * read on the driver with no job: the live dir's [[GaugeFile]] plus
+    * the delta in the commit marker of each keyed ingest batch with
+    * files in its cell dirs ([[IndexLifecycle.keyedMarkerBodies]]).
+    * None unless they provably cover every live file: the dir has no
+    * record (a plain append deleted it, or the index predates records),
+    * or a keyed batch has no marker (uncommitted) or a marker without a
+    * whole delta (written before markers carried one). */
+  private def maintainedSums(snap: Manifest.Snapshot,
+                             tier: String): Option[GaugeSums] = {
+    val live = snap.resolve(tier)
+    for {
+      base <- SidecarFs.readString(s"$live/$GaugeFile").flatMap(GaugeSums.parse)
+      bodies <- IndexLifecycle.keyedMarkerBodies(snap.root,
+        Dedup.listDirs(live, "cell=").map(d => s"$live/$d"))
+      deltas = bodies.flatMap(GaugeSums.parse)
+      if deltas.length == bodies.length
+    } yield deltas.foldLeft(base)(_ + _)
   }
 
   /** Quantizer-DRIFT gauge of a persisted IVF index — the IVF member of
@@ -418,16 +479,26 @@ object Similarity {
     * `maxDriftMicro` (default 1 250 000 = mean distance 25% over
     * build). A zero build mean (every vector ON a centroid: nlist ≥ n
     * degenerate fixtures) reports 1e6 when still exact and trips
-    * otherwise. Cost: one linear postings scan — run it after each
-    * append window, next to compactIvfIndexIfNeeded. Returns one row:
+    * otherwise. Cost: driver reads and no job while the index maintains
+    * its sums ([[maintainedSums]]: no pending tombstone, no plain append
+    * since the last full postings write, every ingest batch committed);
+    * one linear postings scan otherwise. Run it after each append
+    * window, next to compactIvfIndexIfNeeded. Returns one row:
     * (build_n, n, drift_micro, rebuild). */
   def ivfIndexDrift(spark: org.apache.spark.sql.SparkSession,
                     indexPath: String,
-                    maxDriftMicro: Long = 1250000L): DataFrame = {
+                    maxDriftMicro: Long = 1250000L): DataFrame =
+    driftRow(spark, indexPath, "meta", "postings", maxDriftMicro)
+
+  /** A drift gauge's one-row frame: (build_n, n, drift_micro, rebuild)
+    * of gauge tier `tier` against meta tier `metaTier`'s anchor. */
+  private def driftRow(spark: org.apache.spark.sql.SparkSession,
+                       indexPath: String, metaTier: String, tier: String,
+                       maxDriftMicro: Long): DataFrame = {
     require(maxDriftMicro >= 0, "maxDriftMicro must be >= 0")
     import spark.implicits._
     val snap = Manifest.snapshot(indexPath)
-    Seq(ivfDrift(spark, snap, metaRow(spark, snap, "meta"), maxDriftMicro))
+    Seq(drift(spark, snap, metaRow(spark, snap, metaTier), tier, maxDriftMicro))
       .toDF("build_n", "n", "drift_micro", "rebuild")
   }
 
@@ -441,26 +512,38 @@ object Similarity {
     meta.head
   }
 
-  /** [[ivfIndexDrift]]'s (build_n, n, drift_micro, rebuild) from an
-    * already-read meta row. */
-  private def ivfDrift(spark: org.apache.spark.sql.SparkSession,
-                       snap: Manifest.Snapshot, meta: org.apache.spark.sql.Row,
-                       maxDriftMicro: Long): (Long, Long, Long, Boolean) = {
-    val buildN = meta.getAs[Long]("build_n")
-    val buildSum = meta.getAs[Long]("build_dist_sum_micro")
-    // preliminary meta = a build that crashed before its anchor write:
-    // the anchor is unknown, which is itself rebuild-pressure — report
-    // (-1, rebuild) rather than divide by a sentinel (the graph-index
-    // rule); the rebuild actuator restores the anchor
+  /** The drift gauge of both flavours — (build_n, n, drift_micro,
+    * rebuild) of gauge tier `tier` (IVF `postings`, IVF-PQ `vectors`)
+    * from an already-read meta row. */
+  private def drift(spark: org.apache.spark.sql.SparkSession,
+                    snap: Manifest.Snapshot, meta: org.apache.spark.sql.Row,
+                    tier: String,
+                    maxDriftMicro: Long): (Long, Long, Long, Boolean) = {
+    val fields = meta.schema.fieldNames.toSet
+    require(!fields("has_vectors") || meta.getAs[Boolean]("has_vectors"),
+      s"index at ${snap.root} was written with storeVectors=false — " +
+        "the drift gauge measures the raw-vector tier; rebuild the " +
+        "index with vectors to make it drift-gaugeable")
+    // a preliminary meta (a build that crashed before its anchor write)
+    // or a pq_meta written before the anchor columns existed (pre-r15
+    // layout: m/ksub/dsub/has_vectors only) has no anchor, which is
+    // itself rebuild-pressure — report (-1, rebuild) rather than divide
+    // by a sentinel or crash on a getAs (the graph-index rule); the
+    // rebuild actuator restores the anchor
+    def anchor(f: String): Long = if (fields(f)) meta.getAs[Long](f) else -1L
+    val (buildN, buildSum) = (anchor("build_n"), anchor("build_dist_sum_micro"))
     if (buildN < 0L || buildSum < 0L) return (buildN, -1L, -1L, true)
     // pending tombstones are excluded like every read path (and like
     // the compaction that will drop them): logically-deleted far-out
-    // vectors must not trigger a needless rebuild
-    val (curSum, curN) = assignDistMicro(
-      Dedup.exceptTombstoned(Stored.read(spark, snap.resolve("postings")),
-        "cand_id", Dedup.pendingTombstones(spark, snap.root)),
-      loadCentroids(spark, snap))
-    driftRatio(buildN, buildSum, curN, curSum, maxDriftMicro)
+    // vectors must not trigger a needless rebuild. The maintained sums
+    // cannot subtract them, so a pending tombstone means a scan.
+    val tombstoned = Dedup.pendingTombstones(spark, snap.root)
+    val cur = (if (tombstoned.isEmpty) maintainedSums(snap, tier) else None)
+      .getOrElse(assignDistMicro(
+        Dedup.exceptTombstoned(Stored.read(spark, snap.resolve(tier)),
+          "cand_id", tombstoned),
+        loadCentroids(spark, snap)))
+    driftRatio(buildN, buildSum, cur.n, cur.sum, maxDriftMicro)
   }
 
   /** The drift gauges' shared arithmetic: (build_n, n, drift_micro,
@@ -495,8 +578,9 @@ object Similarity {
     * measures against the NEW quantizer. No trip ⇒ strictly a no-op
     * (nothing written, manifest untouched — spec-pinned).
     *
-    * Scale shape: one drift gauge pass + `trainIters` Lloyd scans over
-    * the (optionally `trainFraction`-sampled) survivors + one linear
+    * Scale shape: the drift gauge (no job while maintained) +
+    * `trainIters` Lloyd scans over the (optionally
+    * `trainFraction`-sampled) survivors + one linear
     * re-assignment write — the same cost as the original
     * [[writeIvfIndex]] over the current corpus, which is the floor for
     * any rebuild. Single maintenance writer, like every other
@@ -516,7 +600,7 @@ object Similarity {
     val snap = Manifest.snapshot(indexPath)
     val meta = metaRow(spark, snap, "meta") // the gauge's and the rebuild's
     val (gaugeN, gaugeCurN, gaugeDrift, trip) =
-      ivfDrift(spark, snap, meta, maxDriftMicro)
+      drift(spark, snap, meta, "postings", maxDriftMicro)
     // a -1 anchor can mean a build that crashed BEFORE its data tiers
     // landed: the gauge correctly reports rebuild-pressure, but there
     // is nothing to rebuild FROM — report, never crash mid-maintenance
@@ -530,10 +614,10 @@ object Similarity {
             survivors, "cand_id", "c_vec", nlist, trainIters, trainFraction)
           p.write("centroids", centroidsDf(spark, centroids))
           // the re-assignment pass doubles as the NEW build anchor
-          val (buildN, buildSum) = writeAnchored(
-            assignCells(survivors, centroids, "c_vec", "cand_id"), centroids,
-            p.write("postings", _, "cell"))
-          p.write("meta", ivfMetaDf(spark, nlist, buildN, buildSum))
+          val built = writeGauged(
+            assignCells(survivors, centroids, "c_vec", "cand_id"),
+            centroids)(p.write("postings", _, "cell"))
+          p.write("meta", ivfMetaDf(spark, nlist, built))
         }
       }
     Seq((gaugeN, gaugeCurN, gaugeDrift, trip, rebuilt))
@@ -564,9 +648,19 @@ object Similarity {
                        vecCol: String = "embedding",
                        idCol: String = "vec_id"): Unit = {
     val snap = Manifest.snapshot(indexPath)
-    assignCells(delta, loadCentroids(delta.sparkSession, snap), vecCol, idCol)
-      .write.mode("append").partitionBy("cell")
-      .parquet(snap.resolve("postings"))
+    val centroids = loadCentroids(delta.sparkSession, snap)
+    val postings = invalidateGauge(snap, "postings")
+    assignCells(delta, centroids, vecCol, idCol)
+      .write.mode("append").partitionBy("cell").parquet(postings)
+  }
+
+  /** Delete the [[GaugeFile]] of gauge tier `tier`'s live dir — before a
+    * plain append writes a file into it, so a crash mid-append leaves
+    * the gauge on its scan, never on a stale sum. Returns the dir. */
+  private def invalidateGauge(snap: Manifest.Snapshot, tier: String): String = {
+    val dir = snap.resolve(tier)
+    SidecarFs.deleteFile(s"$dir/$GaugeFile")
+    dir
   }
 
   /** COMPACT a persisted IVF index after many appends — the same
@@ -599,7 +693,7 @@ object Similarity {
   private def rewriteIvf(spark: org.apache.spark.sql.SparkSession,
                          snap: Manifest.Snapshot, ids: Option[DataFrame]): Unit =
     IndexLifecycle.maintain(spark, snap, ids) { p =>
-      rewriteCells(p, "postings", "c_vec")
+      rewriteCells(p, "postings", "c_vec", Some(loadCentroids(spark, snap)))
       true
     }
 
@@ -608,14 +702,23 @@ object Similarity {
     * id-sorted in its cell partition dirs. Hash repartition, not range:
     * range SAMPLING re-executes the whole scan+anti-join child once more,
     * and cell pruning is directory-level, so range order buys nothing
-    * (guide §2.4/r17). */
+    * (guide §2.4/r17). A gauge tier (`centroids` given) records the
+    * [[GaugeSums]] of exactly the rows it keeps, observed before the
+    * repartition ([[writeGauged]]). */
   private def rewriteCells(p: IndexLifecycle.Pass, name: String,
-                           payload: String): Unit =
-    p.write(name, p.except(p.read(name)
+                           payload: String,
+                           centroids: Option[Array[Array[Double]]] = None): Unit = {
+    val kept = p.except(p.read(name)
         .select(col("cell").cast("int").as("cell"), col("cand_id"),
           col(payload), col("c_norm")), "cand_id")
-      .repartition(col("cell"))
-      .sortWithinPartitions(col("cell"), col("cand_id")), "cell")
+    def write(df: DataFrame): String = p.write(name,
+      df.repartition(col("cell"))
+        .sortWithinPartitions(col("cell"), col("cand_id")), "cell")
+    centroids match {
+      case Some(c) => writeGauged(kept, c)(write)
+      case None => write(kept)
+    }
+  }
 
   /** One micro-batch of the CLOSED embedding ingest loop — the ANN
     * mirror of [[Dedup.ingestBatchIntoMinhashIndex]] and the streaming
@@ -646,8 +749,11 @@ object Similarity {
         .select(col("query_id")).distinct()
       val survivors = batch.join(dup, batch(idCol) === dup("query_id"),
         "left_anti")
-      assignCells(survivors, centroids, vecCol, idCol)
-        .write.mode("overwrite").partitionBy("cell").parquet(s"$stage/postings")
+      // the batch's gauge delta, observed on its staged write, is its
+      // commit marker's body
+      observeSums(assignCells(survivors, centroids, vecCol, idCol), centroids)(
+        _.write.mode("overwrite").partitionBy("cell").parquet(s"$stage/postings")
+      )._2.json
     }
 
   /** Write the PERSISTED IVF-PQ index — the production FAISS artifact
@@ -692,16 +798,16 @@ object Similarity {
     // ON the vectors write (zero extra passes). A vectors-less index
     // keeps the -1 sentinel: [[ivfPqIndexDrift]] requires the raw
     // tier anyway (codes alone cannot measure assignment distance).
-    Stored.write(pqMetaDf(spark, pq, ksub, storeVectors, nlist, -1L, -1L),
-      s"$path/pq_meta")
+    Stored.write(pqMetaDf(spark, pq, ksub, storeVectors, nlist,
+      GaugeSums(-1L, -1L)), s"$path/pq_meta")
     Stored.write(encodeIvfPq(corpus, cells, pq, vecCol, idCol).drop("cv"),
       s"$path/codes", "cell")
     if (storeVectors) {
-      val (buildN, buildSum) = writeAnchored(
-        assignCells(corpus, cells, vecCol, idCol), cells,
-        Stored.write(_, s"$path/vectors", "cell"))
+      val vectors = s"$path/vectors"
+      val built = writeGauged(assignCells(corpus, cells, vecCol, idCol),
+        cells) { df => Stored.write(df, vectors, "cell"); vectors }
       IndexLifecycle.publishVersion(path, "pq_meta",
-        pqMetaDf(spark, pq, ksub, storeVectors, nlist, buildN, buildSum))
+        pqMetaDf(spark, pq, ksub, storeVectors, nlist, built))
     }
   }
 
@@ -709,9 +815,9 @@ object Similarity {
     * tier is stored, nlist and the drift anchor. */
   private def pqMetaDf(spark: org.apache.spark.sql.SparkSession, pq: Pq,
                        ksub: Int, hasVectors: Boolean, nlist: Int,
-                       buildN: Long, buildSum: Long): DataFrame = {
+                       anchor: GaugeSums): DataFrame = {
     import spark.implicits._
-    Seq((pq.m, ksub, pq.dsub, hasVectors, nlist, buildN, buildSum))
+    Seq((pq.m, ksub, pq.dsub, hasVectors, nlist, anchor.n, anchor.sum))
       .toDF("m", "ksub", "dsub", "has_vectors", "nlist",
         "build_n", "build_dist_sum_micro")
       .coalesce(1)
@@ -727,45 +833,14 @@ object Similarity {
     * cannot carry it — m small ints per row say nothing about distance
     * to the coarse centroid). Requires `storeVectors=true` (refused
     * loudly otherwise); a preliminary/crashed-build anchor reports
-    * (-1, rebuild) — the actuator restores it. Cost: one linear
-    * vectors-tier scan. Returns (build_n, n, drift_micro, rebuild). */
+    * (-1, rebuild) — the actuator restores it. Cost: as
+    * [[ivfIndexDrift]]'s, over the vectors tier — no job while the
+    * index maintains its sums, one linear scan otherwise. Returns
+    * (build_n, n, drift_micro, rebuild). */
   def ivfPqIndexDrift(spark: org.apache.spark.sql.SparkSession,
                       indexPath: String,
-                      maxDriftMicro: Long = 1250000L): DataFrame = {
-    require(maxDriftMicro >= 0, "maxDriftMicro must be >= 0")
-    import spark.implicits._
-    val snap = Manifest.snapshot(indexPath)
-    Seq(ivfPqDrift(spark, snap, metaRow(spark, snap, "pq_meta"), maxDriftMicro))
-      .toDF("build_n", "n", "drift_micro", "rebuild")
-  }
-
-  /** [[ivfPqIndexDrift]]'s (build_n, n, drift_micro, rebuild) from an
-    * already-read pq_meta row. */
-  private def ivfPqDrift(spark: org.apache.spark.sql.SparkSession,
-                         snap: Manifest.Snapshot, meta: org.apache.spark.sql.Row,
-                         maxDriftMicro: Long): (Long, Long, Long, Boolean) = {
-    require(meta.getAs[Boolean]("has_vectors"),
-      s"index at ${snap.root} was written with storeVectors=false — " +
-        "the drift gauge measures the raw-vector tier; rebuild the " +
-        "index with vectors to make it drift-gaugeable")
-    // pq_meta written before the anchor columns existed (pre-r15 layout:
-    // m/ksub/dsub/has_vectors only) degrades to the -1 sentinel — the
-    // knnGraphMeta pre-meta rule, NOT a getAs crash (r15 advice): an
-    // unknown anchor is itself rebuild-pressure, and the actuator
-    // restores it
-    val fields = meta.schema.fieldNames.toSet
-    val buildN =
-      if (fields("build_n")) meta.getAs[Long]("build_n") else -1L
-    val buildSum =
-      if (fields("build_dist_sum_micro"))
-        meta.getAs[Long]("build_dist_sum_micro") else -1L
-    if (buildN < 0L || buildSum < 0L) return (buildN, -1L, -1L, true)
-    val (curSum, curN) = assignDistMicro(
-      Dedup.exceptTombstoned(Stored.read(spark, snap.resolve("vectors")),
-        "cand_id", Dedup.pendingTombstones(spark, snap.root)),
-      loadCentroids(spark, snap))
-    driftRatio(buildN, buildSum, curN, curSum, maxDriftMicro)
-  }
+                      maxDriftMicro: Long = 1250000L): DataFrame =
+    driftRow(spark, indexPath, "pq_meta", "vectors", maxDriftMicro)
 
   /** Close the measured-rebuild loop for IVF-PQ — the third actuator
     * ([[rebuildIvfIndexIfDrifted]] / [[GraphAnn.rebuildKnnGraphIndexIfUnhealthy]]):
@@ -788,7 +863,7 @@ object Similarity {
     val snap = Manifest.snapshot(indexPath)
     val meta = metaRow(spark, snap, "pq_meta") // the gauge's and the rebuild's
     val (gaugeN, gaugeCurN, gaugeDrift, trip) =
-      ivfPqDrift(spark, snap, meta, maxDriftMicro)
+      drift(spark, snap, meta, "vectors", maxDriftMicro)
     // crashed-before-data-tiers build: rebuild-pressure with nothing to
     // rebuild from — report, never crash (the rebuildIvfIndexIfDrifted
     // rule)
@@ -811,11 +886,11 @@ object Similarity {
           p.write("codes", encodeIvfPq(survivors, cells, pq, "c_vec", "cand_id")
             .drop("cv"), "cell")
           // the vectors re-write's Observation is the new anchor
-          val (buildN, buildSum) = writeAnchored(
-            assignCells(survivors, cells, "c_vec", "cand_id"), cells,
-            p.write("vectors", _, "cell"))
+          val built = writeGauged(
+            assignCells(survivors, cells, "c_vec", "cand_id"),
+            cells)(p.write("vectors", _, "cell"))
           p.write("pq_meta",
-            pqMetaDf(spark, pq, ksub, hasVectors = true, nlist, buildN, buildSum))
+            pqMetaDf(spark, pq, ksub, hasVectors = true, nlist, built))
         }
       }
     Seq((gaugeN, gaugeCurN, gaugeDrift, trip, rebuilt))
@@ -852,13 +927,13 @@ object Similarity {
     val snap = Manifest.snapshot(indexPath)
     val cells = loadCentroids(spark, snap)
     val (pq, hasVectors) = loadPq(spark, snap)
+    val vectors = invalidateGauge(snap, "vectors")
     encodeIvfPq(delta, cells, pq, vecCol, idCol).drop("cv")
       .write.mode("append").partitionBy("cell")
       .parquet(snap.resolve("codes"))
     if (hasVectors)
       assignCells(delta, cells, vecCol, idCol)
-        .write.mode("append").partitionBy("cell")
-        .parquet(snap.resolve("vectors"))
+        .write.mode("append").partitionBy("cell").parquet(vectors)
   }
 
   /** One micro-batch of the CLOSED IVF-PQ ingest loop — the
@@ -894,10 +969,12 @@ object Similarity {
         "left_anti")
       encodeIvfPq(survivors, cells, pq, vecCol, idCol).drop("cv")
         .write.mode("overwrite").partitionBy("cell").parquet(s"$stage/codes")
+      // the gauge delta of the staged vectors is the marker's body
       if (hasVectors)
-        assignCells(survivors, cells, vecCol, idCol)
-          .write.mode("overwrite").partitionBy("cell")
-          .parquet(s"$stage/vectors")
+        observeSums(assignCells(survivors, cells, vecCol, idCol), cells)(
+          _.write.mode("overwrite").partitionBy("cell")
+            .parquet(s"$stage/vectors"))._2.json
+      else ""
     }
   }
 
@@ -929,7 +1006,7 @@ object Similarity {
     IndexLifecycle.maintain(spark, snap, ids) { p =>
       rewriteCells(p, "codes", "code")
       if (metaRow(spark, snap, "pq_meta").getAs[Boolean]("has_vectors"))
-        rewriteCells(p, "vectors", "c_vec")
+        rewriteCells(p, "vectors", "c_vec", Some(loadCentroids(spark, snap)))
       true
     }
 

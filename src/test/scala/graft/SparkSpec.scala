@@ -76,9 +76,13 @@ abstract class SparkSpec extends AnyFunSuite {
 
   /** Delete every schema record under `root`: the layout of a store
     * written before records existed. */
-  def dropSchemaRecords(root: String): Unit = {
+  def dropSchemaRecords(root: String): Unit =
+    dropFilesNamed(root, graft.core.Stored.SchemaFile)
+
+  /** Delete every file named `name` under `root`. */
+  def dropFilesNamed(root: String, name: String): Unit = {
     val s = java.nio.file.Files.walk(java.nio.file.Paths.get(root))
-    try s.filter(_.getFileName.toString == graft.core.Stored.SchemaFile)
+    try s.filter(_.getFileName.toString == name)
       .forEach(p => java.nio.file.Files.delete(p))
     finally s.close()
   }

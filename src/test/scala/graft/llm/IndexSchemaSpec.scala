@@ -137,18 +137,21 @@ class IndexSchemaSpec extends SparkSpec {
     val (hits, probeJobs) = jobsIn(probe())
     val (gauge, driftJobs) = jobsIn(drift())
     assert(hits.nonEmpty)
-    // a pass that does not trip launches only its gauge's scan
+    // a pass that does not trip launches no more than its gauge: none
+    // while the index maintains the gauge's sums
     val (noTrip, noTripJobs) = jobsIn(Similarity.rebuildIvfPqIndexIfDrifted(
       spark, idx, maxDriftMicro = Long.MaxValue).collect().head)
     assert(!noTrip.getAs[Boolean]("rebuilt"))
     assert(noTripJobs == driftJobs, s"$noTripJobs vs $driftJobs jobs")
+    // an index written before schema and gauge records existed
     dropSchemaRecords(idx)
+    dropFilesNamed(idx, Similarity.GaugeFile)
     val (legacyHits, legacyProbeJobs) = jobsIn(probe())
     val (legacyGauge, legacyDriftJobs) = jobsIn(drift())
     assert(legacyHits == hits && legacyGauge == gauge)
     // the tiers a probe opens (centroids, pq_meta, codebooks, codes,
-    // vectors) and the ones a gauge opens (pq_meta, vectors, centroids)
-    // each cost an inference job without a record
+    // vectors) each cost an inference job without a record; a gauge
+    // without a gauge record scans the vectors tier
     assert(probeJobs < legacyProbeJobs, s"$probeJobs vs $legacyProbeJobs")
     assert(driftJobs < legacyDriftJobs, s"$driftJobs vs $legacyDriftJobs")
     assert((probeJobs, driftJobs) == ((PinnedProbeJobs, PinnedDriftJobs)))
@@ -156,11 +159,12 @@ class IndexSchemaSpec extends SparkSpec {
 
   // measured on SparkSpec's session (local[4], 4 shuffle partitions);
   // the same calls cost 17 and 9 jobs when every tier was read with
-  // inference, centroids were range-sorted and pq_meta read twice, and
-  // 10 and 4 while the bounded tiers (pq_meta, centroids, codebooks) were
-  // collected through a Spark job each
+  // inference, centroids were range-sorted and pq_meta read twice, 10
+  // and 4 while the bounded tiers (pq_meta, centroids, codebooks) were
+  // collected through a Spark job each, and 7 and 2 while the gauge
+  // scanned the vectors tier on every call
   private val PinnedProbeJobs = 7
-  private val PinnedDriftJobs = 2
+  private val PinnedDriftJobs = 0
 
   test("Stored.collect reads every bounded index tier on the driver as " +
       "Stored.read(...).collect() does, with no job, broadcast or cache") {

@@ -38,8 +38,8 @@ class SidecarFsSpec extends SparkSpec {
     SidecarFs.writeStringAtomic(s"$root/m", "a=2\n") // overwrite-swap
     assert(SidecarFs.readString(s"$root/m").contains("a=2\n"))
     SidecarFs.mkdirs(s"$root/d")
-    SidecarFs.createMarker(s"$root/d/k1")
-    SidecarFs.createMarker(s"$root/d/k2")
+    SidecarFs.writeStringAtomic(s"$root/d/k1", "")
+    SidecarFs.writeStringAtomic(s"$root/d/k2", "")
     assert(SidecarFs.listNames(s"$root/d").toSet == Set("k1", "k2"))
     assert(SidecarFs.deleteFile(s"$root/d/k1"))
     assert(SidecarFs.listNames(s"$root/d") == Seq("k2"))

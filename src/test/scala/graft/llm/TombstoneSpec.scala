@@ -70,7 +70,7 @@ class TombstoneSpec extends SparkSpec {
     // stream converges (marker restored) -> compaction consumes: the
     // ids leave BOTH tiers and the request dir clears
     SidecarFs.mkdirs(s"$idx/ingest_commits")
-    SidecarFs.createMarker(s"$idx/ingest_commits/spec-b0")
+    SidecarFs.writeStringAtomic(s"$idx/ingest_commits/spec-b0", "")
     Dedup.compactMinhashIndex(spark, idx)
     assert(Dedup.tombstoneDirs(idx).isEmpty, "requests consumed")
     assert(spark.read.parquet(Manifest.resolve(idx, "sigs"))
